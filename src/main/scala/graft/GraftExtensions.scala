@@ -14,7 +14,12 @@ import org.apache.spark.sql.SparkSessionExtensions
   * TIMESTAMP(NANOS) parquet additionally needs
   * `--conf spark.sql.legacy.parquet.nanosAsLong=true` on the submit
   * line (Spark 4 errors on that type otherwise —
-  * `Sessions.ensureConfigured` sets it for the programmatic path). */
+  * `Sessions.ensureConfigured` sets it for the programmatic path).
+  * Nor can they set static confs: the submit line also needs
+  * `--conf spark.sql.codegen.cache.maxEntries=<N>`
+  * ([[Sessions.CodegenCacheEntries]]), or every repeated query shape
+  * recompiles once the JVM has generated more than Spark's default 100
+  * classes (`Sessions.build` sets it for the programmatic path). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => plans.TopKStrategy)

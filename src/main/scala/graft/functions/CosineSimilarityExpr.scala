@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -219,9 +220,19 @@ object Functions {
     ("packed_intersect", classOf[PackedIntersectVals],
       exprs => PackedIntersectVals(exprs(0), exprs(1))))
 
-  def registerAll(spark: SparkSession): Unit =
+  /** Binds every name in [[specs]] on the session, skipping a name the
+    * session's registry already binds to the same builder. Every
+    * declared query calls this (via `Sessions.ensureConfigured`), so
+    * without the check each call re-registered all of them and logged a
+    * "replaced a previously registered function" warning per name. The
+    * check is on the builder, not the name: Spark 4.1 ships a built-in
+    * `theta_sketch_agg`, which must still be replaced by ours on a fresh
+    * session. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     specs.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

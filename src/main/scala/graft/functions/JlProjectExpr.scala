@@ -35,7 +35,9 @@ import org.apache.spark.sql.types._
   * Input: embedding `array<float>` (or `array<double>`), length d=64.
   * Output: `struct<ys: array<bigint>, xq: bigint>`; null for a null
   * input, nulls inside the array or a wrong-width vector never occur
-  * in the corpus but yield null output (defensive, like pq_argmin). */
+  * in the corpus but yield null output (defensive, like pq_argmin).
+  * So does an element whose micro-int terms are not finite (NaN, ±Inf,
+  * or a double too large to square): they have no BIGINT value. */
 object JlOps {
   val K = 16
   val D = 64
@@ -64,8 +66,11 @@ object JlOps {
     while (i < D) {
       if (v.isNullAt(i)) return null
       val x: Double = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      m(i) = r9(x * 1e9)
-      q(i) = r9(x * x * 1e9)
+      val mx = x * 1e9
+      val qx = x * x * 1e9
+      if (!java.lang.Double.isFinite(mx) || !java.lang.Double.isFinite(qx)) return null
+      m(i) = r9(mx)
+      q(i) = r9(qx)
       i += 1
     }
     val ys = new Array[Any](K)

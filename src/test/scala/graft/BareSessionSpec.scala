@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver contract must hold on a SparkSession built WITHOUT any
@@ -23,5 +24,23 @@ class BareSessionSpec extends AnyFunSuite {
     assert(SparkEntry.queries("q_similarity_topk")(bare, "/root/testdata/sf0.001").count() > 0)
     // needs TopKStrategy
     assert(SparkEntry.queries("q_topk_per_key")(bare, "/root/testdata/sf0.001").count() > 0)
+  }
+
+  test("ensureConfigured binds each native function once, over Spark's built-ins") {
+    val bare = SparkSpec.session.newSession()
+    val registry = bare.sessionState.functionRegistry
+    def bound = functions.Functions.specs.map { case (name, _, builder) =>
+      val id = FunctionIdentifier(name)
+      assert(registry.lookupFunctionBuilder(id).contains(builder), name)
+      registry.lookupFunction(id).get
+    }
+    // Spark 4.1 ships its own theta_sketch_agg; ours must replace it
+    assert(registry.functionExists(FunctionIdentifier("theta_sketch_agg")))
+    Sessions.ensureConfigured(bare)
+    val first = bound
+    Sessions.ensureConfigured(bare)
+    // a re-registration would store a fresh ExpressionInfo (and log a
+    // "replaced a previously registered function" warning)
+    first.zip(bound).foreach { case (a, b) => assert(a eq b, a.getName) }
   }
 }

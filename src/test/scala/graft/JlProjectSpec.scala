@@ -50,6 +50,33 @@ class JlProjectSpec extends SparkSpec {
     }
   }
 
+  test("jl_project returns null for NaN and ±Inf elements, codegen and interpreted") {
+    // the odd element comes from a column, so nothing constant-folds
+    // and each mode really evaluates the expression on a task
+    val bad = Seq("NaN", "Infinity", "-Infinity")
+    def run(mode: String, elem: String): Seq[org.apache.spark.sql.Row] = {
+      val conf = Seq("spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try spark.range(bad.size + 1)
+        .withColumn("x", element_at(typedLit(bad :+ "0.25"), col("id").cast("int") + 1))
+        .select(col("id"), call_function("jl_project", expr(
+          s"CAST(transform(sequence(0, 63), i -> IF(i = 5, CAST(x AS DOUBLE), 0.5D)) AS $elem)"))
+          .as("r"))
+        .orderBy("id").collect().toSeq
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    for (elem <- Seq("ARRAY<DOUBLE>", "ARRAY<FLOAT>")) {
+      val byMode = Seq("CODEGEN_ONLY", "NO_CODEGEN").map(m => m -> run(m, elem))
+      byMode.foreach { case (mode, rows) =>
+        bad.indices.foreach(i =>
+          assert(rows(i).isNullAt(1), s"${bad(i)} in $elem under $mode"))
+        assert(!rows(bad.size).isNullAt(1), s"finite $elem under $mode")
+      }
+      assert(byMode(0)._2 == byMode(1)._2, s"$elem: modes disagree")
+    }
+  }
+
   test("jl_project is null-safe on malformed input") {
     val df = spark.sql(
       "SELECT jl_project(CAST(array(1.0) AS ARRAY<DOUBLE>)) AS r")
