@@ -14,11 +14,14 @@ package graft
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: graft.PlanDump <outDir> <suffix> q_name [q_name ...]")
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

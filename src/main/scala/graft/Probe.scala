@@ -4,21 +4,24 @@ import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Dev-loop scale probe: run one registered query end-to-end (noop
-  * sink, two passes like Bench) and report wall time plus the
+/** Dev-loop scale probe: run one or more registered queries end-to-end
+  * (noop sink, two passes each like Bench) and report wall time plus the
   * cluster-facing costs the wall clock hides — shuffle bytes
   * read/written, spilled bytes, and per-task peak execution memory.
   * These are the numbers that decide "would this survive 100×":
   * a plan can look fast at one SF while its shuffle volume or per-task
   * memory is the thing growing super-linearly.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.Probe q_name
-  * Prints one JSON line per pass.
+  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.Probe q_name [q_name ...]
+  * Prints one JSON line per query and pass; the names run in order in
+  * one JVM.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: graft.Probe q_name [q_name ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -50,7 +53,7 @@ object Probe {
       override def onJobEnd(
           j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         if (jobDetail) {
-          val t0 = jobStartNs.getOrDefault(j.jobId, 0L)
+          val t0 = jobStartNs.remove(j.jobId)
           System.err.println(f"PROBEJOB id=${j.jobId} " +
             f"ms=${(System.nanoTime() - t0) / 1e6}%.0f")
         }

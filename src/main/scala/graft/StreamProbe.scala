@@ -9,7 +9,9 @@ object StreamProbe {
     val name = args.headOption.getOrElse("q_stream_session")
     val reps = if (args.length > 1) args(1).toInt else 3
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.build("local[32]", 32)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
     sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })

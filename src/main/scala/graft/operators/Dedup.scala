@@ -50,9 +50,7 @@ object Dedup {
     * environment pays the build (bench pass 1 — the reported per-query
     * min reads the cache, which is the honest steady-state cost). */
   def shingleIndex(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Staging.cached(
-      s"shingle_idx_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    val path = graft.Staging.cached("shingle_idx", dir, rev = 1) { tgt =>
       Tables.documents(s, dir)
         .select(col("doc_id"),
           explode(graft.functions.ShingleHashes(col("text"), 3)).as("h"))
@@ -138,9 +136,7 @@ object Dedup {
     * re-pay the corpus-sized selection the incremental shape exists
     * to avoid. */
   def winnowIndex(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Staging.cached(
-      s"winnow_idx_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    val path = graft.Staging.cached("winnow_idx", dir, rev = 1) { tgt =>
       Tables.documents(s, dir)
         .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
         .filter(size(col("ts")) >= 8)
@@ -406,6 +402,13 @@ object Dedup {
     (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), ck)
   }
 
+  /** Row bound up to which the iterative loops ([[connectedComponents]],
+    * the Borůvka MST) force-broadcast their per-round id → label maps.
+    * Driver envelope: near the bound each round collects and broadcasts
+    * about 100+ MB from the driver, so a corpus near it needs that much
+    * driver heap to spare on top of the query's own. */
+  private[graft] val BroadcastMapMaxRows = 2000000L
+
   /** Connected components over an undirected edge list by min-label
     * propagation with pointer doubling. Each round every node takes
     *   label := min(label, min(neighbors' labels), label-of-label)
@@ -450,7 +453,7 @@ object Dedup {
     // tiny-map joins as SortMergeJoin — two sorts plus exchanges per
     // round of job overhead (the r15 MST chase lesson). Above the
     // bound the planner keeps its choice (100 TB posture).
-    val bcastMaps = labels.count() <= 2000000L
+    val bcastMaps = labels.count() <= BroadcastMapMaxRows
     def mapSide(m: DataFrame): DataFrame =
       if (bcastMaps) org.apache.spark.sql.functions.broadcast(m) else m
     var prevSum = Option.empty[Long]
@@ -614,8 +617,7 @@ object Dedup {
     }
   }
 
-  private val dupGroupsReady =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val dupGroupsReady = new graft.Memo[DataFrame]
 
   /** (doc_id, group_id) labels: connected components over the
     * df-capped ngram-Jaccard pair graph — memoized per corpus and
@@ -626,16 +628,15 @@ object Dedup {
     * a different input, so it keeps its own). */
   private def ngramDupGroups(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    dupGroupsReady.computeIfAbsent(
-      s"$dir@${graft.Staging.stampOf(dir)}", _ => {
-        val pairs = ngramJaccardPairsFrom(shingleIndex(s, dir),
-          maxDf = 64, minJaccard = 0.5)
-        connectedComponents(
-          Tables.documents(s, dir).select(col("doc_id")), "doc_id",
-          pairs, "doc_a", "doc_b")
-          .withColumnRenamed("label", "group_id")
-          .localCheckpoint()
-      })
+    dupGroupsReady(s, dir) {
+      val pairs = ngramJaccardPairsFrom(shingleIndex(s, dir),
+        maxDf = 64, minJaccard = 0.5)
+      connectedComponents(
+        Tables.documents(s, dir).select(col("doc_id")), "doc_id",
+        pairs, "doc_a", "doc_b")
+        .withColumnRenamed("label", "group_id")
+        .localCheckpoint()
+    }
 
   val defs: Seq[QueryDef] = Seq(
 

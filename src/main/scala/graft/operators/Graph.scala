@@ -49,9 +49,7 @@ object Graph {
     // shingle index): PageRank and label propagation both start here,
     // and a real pipeline materializes its edge list rather than
     // re-deriving it from the fact table on every algorithm run
-    val path = graft.Staging.cached(
-      s"bipartite_edges_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    val path = graft.Staging.cached("bipartite_edges", dir, rev = 1) { tgt =>
       val pairs = Tables.lineitem(s, dir)
         .select(col("l_suppkey").cast("long").as("sk"),
           col("l_partkey").cast("long").as("pk"))
@@ -68,9 +66,7 @@ object Graph {
     * distinct is the expensive derivation, paid at first use only. */
   private[graft] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame = {
-    val path = graft.Staging.cached(
-      s"copurchase_edges_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    val path = graft.Staging.cached("copurchase_edges", dir, rev = 1) { tgt =>
       val op = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"),
           col("l_partkey").cast("long").as("pk"))
@@ -655,9 +651,7 @@ object Graph {
         // staged once per corpus — the basket self-join is the
         // expensive derivation, same staging discipline as the
         // unweighted edge list (measured: 5.0 → 3.0 s at sf0.1)
-        val wuPath = graft.Staging.cached(
-          s"copurchase_weighted_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val wuPath = graft.Staging.cached("copurchase_weighted", dir, rev = 1) { tgt =>
           val op = Tables.lineitem(s, dir)
             .select(col("l_orderkey").as("ok"),
               col("l_partkey").cast("long").as("pk"))
@@ -1072,7 +1066,7 @@ object Graph {
             // list per round, measured the dominant round cost at the
             // 10× probe). Above the bound (a 100 TB round-1 map can be
             // |V| rows) fall back to the planner's choice.
-            val bcastMap = picksCnt <= 2000000L
+            val bcastMap = picksCnt <= Dedup.BroadcastMapMaxRows
             def mapSide(m: DataFrame): DataFrame =
               if (bcastMap) broadcast(m) else m
             // break the 2-cycles (q∘q = id ⇔ both sides picked the

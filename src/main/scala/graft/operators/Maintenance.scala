@@ -124,9 +124,7 @@ object Maintenance {
   private[graft] def txnRoot(s: org.apache.spark.sql.SparkSession,
                              dir: String): String = {
     val (c1, c2) = ("1998-01-01", "2000-01-01")
-    graft.Staging.cached(
-      s"txnlog_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 2) { tgt =>
+    graft.Staging.cached("txnlog", dir, rev = 2) { tgt =>
       import java.nio.file.{Files, FileAlreadyExistsException, Paths}
       val log = Paths.get(tgt, "_log")
       Files.createDirectories(log)
@@ -200,9 +198,7 @@ object Maintenance {
   private[graft] def restoreRoot(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String = {
     val base = txnRoot(s, dir)
-    graft.Staging.cached(
-      s"txnrestore_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    graft.Staging.cached("txnrestore", dir, rev = 1) { tgt =>
       import java.nio.file.{Files, Paths}
       val log = Paths.get(tgt, "_log")
       Files.createDirectories(log)
@@ -247,9 +243,7 @@ object Maintenance {
   private def branchRoot(s: org.apache.spark.sql.SparkSession,
                          dir: String): String = {
     val (c1, c2) = ("1998-01-01", "2000-01-01")
-    graft.Staging.cached(
-      s"txnbranch_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    graft.Staging.cached("txnbranch", dir, rev = 1) { tgt =>
       import java.nio.file.{Files, Paths}
       val refs = Paths.get(tgt, "_refs")
       Files.createDirectories(refs)
@@ -321,9 +315,7 @@ object Maintenance {
     * protocol as txnRoot. */
   private[graft] def checkpointRoot(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
-    graft.Staging.cached(
-      s"txncp_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    graft.Staging.cached("txncp", dir, rev = 1) { tgt =>
       import java.nio.file.{Files, Paths}
       val log = Paths.get(tgt, "_log")
       Files.createDirectories(log)
@@ -438,9 +430,7 @@ object Maintenance {
     QueryDef(
       "q_compact_files",
       (s, dir) => {
-        val landing = graft.Staging.cached(
-          s"compact_landing_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val landing = graft.Staging.cached("compact_landing", dir, rev = 1) { tgt =>
           Tables.documents(s, dir).repartition(16)
             .write.mode("overwrite").partitionBy("source").parquet(tgt)
         }
@@ -477,9 +467,7 @@ object Maintenance {
     QueryDef(
       "q_schema_evolve",
       (s, dir) => {
-        val landing = graft.Staging.cached(
-          s"evolve_landing_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val landing = graft.Staging.cached("evolve_landing", dir, rev = 1) { tgt =>
           val e = Tables.events(s, dir)
           e.filter(col("event_id") % 2 === 0)
             .select(col("event_id"), col("value"))
@@ -524,9 +512,7 @@ object Maintenance {
         val nBuckets = 16
         def bucket(c: org.apache.spark.sql.Column) =
           pmod(xxhash64(c, lit(7L)), lit(nBuckets.toLong))
-        val landing = graft.Staging.cached(
-          s"purge_landing_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val landing = graft.Staging.cached("purge_landing", dir, rev = 1) { tgt =>
           Tables.events(s, dir)
             .withColumn("ub", bucket(col("user_id")))
             .write.mode("overwrite").partitionBy("ub").parquet(tgt)
@@ -599,9 +585,7 @@ object Maintenance {
         val nBuckets = 16
         def bucket(c: org.apache.spark.sql.Column) =
           pmod(xxhash64(c, lit(7L)), lit(nBuckets.toLong))
-        val landing = graft.Staging.cached(
-          s"purge_landing_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val landing = graft.Staging.cached("purge_landing", dir, rev = 1) { tgt =>
           Tables.events(s, dir)
             .withColumn("ub", bucket(col("user_id")))
             .write.mode("overwrite").partitionBy("ub").parquet(tgt)
@@ -709,9 +693,7 @@ object Maintenance {
     QueryDef(
       "q_manifest_prune",
       (s, dir) => {
-        val layout = graft.Staging.cached(
-          s"manifest_layout_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val layout = graft.Staging.cached("manifest_layout", dir, rev = 1) { tgt =>
           Tables.lineitem(s, dir)
             .repartitionByRange(24, col("l_shipdate"))
             .sortWithinPartitions(col("l_shipdate"))
@@ -773,9 +755,7 @@ object Maintenance {
     QueryDef(
       "q_manifest_bloom",
       (s, dir) => {
-        val layout = graft.Staging.cached(
-          s"manifest_layout_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val layout = graft.Staging.cached("manifest_layout", dir, rev = 1) { tgt =>
           Tables.lineitem(s, dir)
             .repartitionByRange(24, col("l_shipdate"))
             .sortWithinPartitions(col("l_shipdate"))
@@ -997,9 +977,7 @@ object Maintenance {
           df.groupBy(col("event_type"), col("ts").cast("date").as("day"))
             .agg(count(lit(1)).as("n"),
               sum(round(col("value") * 100).cast("long")).as("cents"))
-        val mv = graft.Staging.cached(
-          s"incragg_mv_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val mv = graft.Staging.cached("incragg_mv", dir, rev = 1) { tgt =>
           partials(Tables.events(s, dir).filter(col("ts") < cutoff))
             .write.mode("overwrite").parquet(tgt)
         }
@@ -1446,9 +1424,7 @@ object Maintenance {
     QueryDef(
       "q_partition_evolve",
       (s, dir) => {
-        val landing = graft.Staging.cached(
-          s"pevolve_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val landing = graft.Staging.cached("pevolve", dir, rev = 1) { tgt =>
           val ev = Tables.events(s, dir)
             .withColumn("day",
               date_format(col("ts"), "yyyyMMdd").cast("int"))
@@ -1601,9 +1577,7 @@ object Maintenance {
       "q_merge_into",
       (s, dir) => {
         // target table: exact-cents orders partitioned by order month
-        val landing = graft.Staging.cached(
-          s"merge_landing_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val landing = graft.Staging.cached("merge_landing", dir, rev = 1) { tgt =>
           Tables.orders(s, dir)
             .select(col("o_orderkey"), col("o_custkey"),
               col("o_orderstatus").as("status"),

@@ -293,9 +293,7 @@ object Multimodal {
   private def phashed(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val pngDir = graft.Staging.cached(
-      s"grad_png_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    val pngDir = graft.Staging.cached("grad_png", dir, rev = 1) { tgt =>
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(tgt))
       Tables.documents(s, dir).select(col("doc_id")).as[Long]
@@ -316,9 +314,7 @@ object Multimodal {
     // recipe's rev), not re-derived from dir+stamp — otherwise bumping
     // grad_png's rev would leave a stale phash cache serving hashes of
     // the old corpus
-    val hashDir = graft.Staging.cached(
-      s"grad_phash_${graft.Staging.keyOf(pngDir)}",
-      rev = 1) { tgt =>
+    val hashDir = graft.Staging.cached("grad_phash", pngDir, rev = 1) { tgt =>
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(pngDir)
@@ -541,9 +537,7 @@ object Multimodal {
     * function of doc_id) — built once per source tree and shared by the
     * decode and resize queries. */
   def pngCorpus(s: SparkSession, dir: String): String =
-    graft.Staging.cached(
-      s"png_docs_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt =>
+    graft.Staging.cached("png_docs", dir, rev = 1) { tgt =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tgt))
       import s.implicits._
       Tables.documents(s, dir).select(col("doc_id")).as[Long]
@@ -598,9 +592,7 @@ object Multimodal {
         // staging artifact of this harness (a real media lake already has
         // its files) — re-creating them each run would make the bench
         // measure file creation instead of the read
-        val out = graft.Staging.cached(
-          s"binfile_mod10_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val out = graft.Staging.cached("binfile_mod10", dir, rev = 1) { tgt =>
           Tables.documents(s, dir)
             .filter(col("doc_id") % 10 === 0)
             .select(col("doc_id"), col("text"))
@@ -719,9 +711,7 @@ object Multimodal {
       "q_multimodal_framesample",
       (s, dir) => {
         import s.implicits._
-        val clipDir = graft.Staging.cached(
-          s"clip_docs_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val clipDir = graft.Staging.cached("clip_docs", dir, rev = 1) { tgt =>
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tgt))
           Tables.documents(s, dir).select(col("doc_id")).as[Long]
             .filter(_ % 5 == 0)
@@ -775,9 +765,7 @@ object Multimodal {
       "q_multimodal_audio",
       (s, dir) => {
         import s.implicits._
-        val wavDir = graft.Staging.cached(
-          s"wav_docs_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val wavDir = graft.Staging.cached("wav_docs", dir, rev = 1) { tgt =>
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tgt))
           Tables.documents(s, dir).select(col("doc_id")).as[Long]
             .filter(_ % 4 == 1)
@@ -872,9 +860,7 @@ object Multimodal {
     QueryDef(
       "q_multimodal_jpeg",
       (s, dir) => {
-        val jpegDir = graft.Staging.cached(
-          s"jpeg_docs_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val jpegDir = graft.Staging.cached("jpeg_docs", dir, rev = 1) { tgt =>
           java.nio.file.Files.createDirectories(
             java.nio.file.Paths.get(tgt))
           import s.implicits._

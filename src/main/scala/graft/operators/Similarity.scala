@@ -112,8 +112,7 @@ object Similarity {
     * embeddings sit well above this floor. */
   val PqM = 16; val PqD = 4; val PqK = 256
 
-  private val pqReady =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  private val pqReady = new graft.Memo[(DataFrame, DataFrame)]
 
   /** PQ train + encode, memoized per corpus (q_embed_pq reports it,
     * q_similarity_pqadc searches with it — one Lloyd per JVM per dir).
@@ -129,7 +128,7 @@ object Similarity {
     * the first K vectors by id (bounded K-row driver collect, the
     * capped-vocab discipline). */
   def pqModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqReady.computeIfAbsent(s"$dir@${graft.Staging.stampOf(dir)}", _ => {
+    pqReady(s, dir) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -207,7 +206,7 @@ object Similarity {
           col("best").getField("sqerr").as("sqerr"))
         .localCheckpoint()
       (cents, coded)
-    })
+    }
 
   /** Corpus exploded to one row per (table, bucket) — the ANN index.
     * Every row also carries `lsh_sig`, the vector's FULL per-table
@@ -527,8 +526,7 @@ object Similarity {
       .select(col(idCol), col("cell_id"))
   }
 
-  private val ivfadcIdxReady =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  private val ivfadcIdxReady = new graft.Memo[(DataFrame, DataFrame)]
 
   /** IVF-ADC coarse index, memoized per corpus (the pqModel pattern):
     * (trained centroids, per-vector soft cell assignment — AdcAssignK
@@ -539,7 +537,7 @@ object Similarity {
     * family's dominant cost at probe scale — one build per JVM per
     * corpus. */
   def ivfadcIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfadcIdxReady.computeIfAbsent(s"$dir@${graft.Staging.stampOf(dir)}", _ => {
+    ivfadcIdxReady(s, dir) {
       val e = Tables.embeddings(s, dir)
       val n = e.count()
       val nCells = ivfCellsFor(n)
@@ -558,7 +556,7 @@ object Similarity {
            softAssignToCentroids(e, "vec_id", "embedding", coarse, AdcAssignK))
         .localCheckpoint()
       (coarse, assigned)
-    })
+    }
 
   /** The IVF-ADC retrieval pipeline for an arbitrary bounded query
     * slice — q_similarity_ivfadc runs it with `vec_id < 5`; the
@@ -738,8 +736,7 @@ object Similarity {
     * above it the cell-bounded candidate pipeline takes over. */
   val ClusterBruteMaxN = 10000L
 
-  private val semProbesReady =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val semProbesReady = new graft.Memo[DataFrame]
 
   /** The 4-probe cell assignment (vec_id, cell_id, probe_rank, psig)
     * over the √n-cell trained quantizer — memoized per corpus and
@@ -750,24 +747,22 @@ object Similarity {
     * scratch (r15). psig is the sorted probed-cell set that powers
     * emit-once candidate dedup at the smallest shared cell. */
   def semanticProbes(s: SparkSession, dir: String): DataFrame =
-    semProbesReady.computeIfAbsent(
-      s"$dir@${graft.Staging.stampOf(dir)}", _ => {
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("embedding"))
-        val n = e.count()
-        val wSig = Window.partitionBy(col("vec_id"))
-        ivfProbeAssign(e, "vec_id", "embedding",
-            nCells = ivfCellsFor(n), trainIters = 2, nProbe = 4,
-            corpusN = n)
-          .withColumn("psig",
-            sort_array(collect_list(col("cell_id")).over(wSig)))
-          .select(col("vec_id"), col("cell_id"), col("probe_rank"),
-            col("psig"))
-          .localCheckpoint()
-      })
+    semProbesReady(s, dir) {
+      val e = Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding"))
+      val n = e.count()
+      val wSig = Window.partitionBy(col("vec_id"))
+      ivfProbeAssign(e, "vec_id", "embedding",
+          nCells = ivfCellsFor(n), trainIters = 2, nProbe = 4,
+          corpusN = n)
+        .withColumn("psig",
+          sort_array(collect_list(col("cell_id")).over(wSig)))
+        .select(col("vec_id"), col("cell_id"), col("probe_rank"),
+          col("psig"))
+        .localCheckpoint()
+    }
 
-  private val clusterGroupsReady =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val clusterGroupsReady = new graft.Memo[DataFrame]
 
   /** Per-vector cluster assignment (vec_id, cluster_id) — the CC half
     * of [[embedClustersPlan]], exposed so the spec can force the cells
@@ -781,9 +776,9 @@ object Similarity {
     * tasks — job-count-bound, 2 MB of shuffle). */
   def embedClusterGroups(s: SparkSession, dir: String,
                          bruteMax: Long = ClusterBruteMaxN): DataFrame =
-    clusterGroupsReady.computeIfAbsent(
-      s"$dir@${graft.Staging.stampOf(dir)}#$bruteMax",
-      _ => embedClusterGroupsUncached(s, dir, bruteMax).localCheckpoint())
+    clusterGroupsReady(s, dir, bruteMax.toString) {
+      embedClusterGroupsUncached(s, dir, bruteMax).localCheckpoint()
+    }
 
   private def embedClusterGroupsUncached(s: SparkSession, dir: String,
                          bruteMax: Long): DataFrame = {
@@ -1509,9 +1504,7 @@ object Similarity {
       (s, dir) => {
         val isBatch = pmod(col("vec_id"), lit(5L)) === 0L
         val e = Tables.embeddings(s, dir)
-        val standing = graft.Staging.cached(
-          s"ivfstand_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val standing = graft.Staging.cached("ivfstand", dir, rev = 1) { tgt =>
           val corpus = e.filter(!isBatch)
             .select(col("vec_id"), col("embedding"))
           val n = corpus.count()

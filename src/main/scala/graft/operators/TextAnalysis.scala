@@ -84,8 +84,7 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  private val qualityReady = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
+  private val qualityReady = new graft.Memo[org.apache.spark.sql.DataFrame]
 
   /** The trained-and-scored quality corpus shared by q_quality_train
     * (report), q_quality_auc and q_quality_calibration (evaluation):
@@ -96,7 +95,7 @@ object TextAnalysis {
   private[operators] def qualityScored(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    qualityReady.computeIfAbsent(s"$dir@${graft.Staging.stampOf(dir)}", _ => {
+    qualityReady(s, dir) {
       val eta = 2.0
       val rounds = 12
       val stop = Seq("the", "a", "of", "and", "to", "in", "is")
@@ -155,7 +154,7 @@ object TextAnalysis {
       }
       feats.select(col("doc_id"), col("y"), sig(z(w)).as("sg"))
         .localCheckpoint()
-    })
+    }
 
   /** The DuckDB twin of [[qualityScored]]: WITH-clause prefix ending in
     * a `scored` CTE of (doc_id, y, sg) — shared by the three quality
@@ -381,9 +380,7 @@ object TextAnalysis {
     * the round-trip is bit-identical to the live plan. */
   private[graft] def tfIndexPath(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String =
-    graft.Staging.cached(
-      s"tf_idx_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 2) { tgt =>
+    graft.Staging.cached("tf_idx", dir, rev = 2) { tgt =>
       // rev 2 (r15): the artifact also carries the document length
       // dl = Σ_term tf — an exact integer derivation of the tf rows
       // themselves. Every BM25-shaped consumer needs dl per posting

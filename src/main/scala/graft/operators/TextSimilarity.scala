@@ -37,9 +37,7 @@ object TextSimilarity {
     // integers — identical on both engines, and parquet round-trips
     // doubles bit-exactly.
     val tfIdxPath = TextAnalysis.tfIndexPath(s, dir)
-    val weightsPath = graft.Staging.cached(
-      s"tfidf_w_${graft.Staging.keyOf(tfIdxPath)}",
-      rev = 1) { tgt =>
+    val weightsPath = graft.Staging.cached("tfidf_w", tfIdxPath, rev = 1) { tgt =>
       val tf = tfAll.getOrElse(s.read.parquet(tfIdxPath))
       val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val nDocs = Tables.documents(s, dir).agg(count(lit(1)).as("n_docs"))

@@ -197,9 +197,7 @@ object TierA {
     QueryDef(
       "q_scan_rescue",
       (s, dir) => {
-        val path = graft.Staging.cached(
-          s"rescue_json_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val path = graft.Staging.cached("rescue_json", dir, rev = 1) { tgt =>
           Tables.documents(s, dir)
             .select(when(pmod(col("doc_id"), lit(17L)) === 3L,
               // truncated mid-object: unparseable, deterministic

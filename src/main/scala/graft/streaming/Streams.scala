@@ -44,9 +44,8 @@ object Streams {
   def stageAndStream(s: SparkSession, df: DataFrame, name: String,
                      schema: StructType, dir: String,
                      options: Map[String, String] = Map.empty): DataFrame = {
-    val path = graft.Staging.cached(
-      s"${name}_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 1) { tgt => df.write.mode("overwrite").json(tgt) }
+    val path = graft.Staging.cached(name, dir, rev = 1) { tgt =>
+      df.write.mode("overwrite").json(tgt) }
     s.readStream.schema(schema).options(options).json(path)
   }
 
@@ -61,9 +60,8 @@ object Streams {
                             schema: StructType, dir: String,
                             options: Map[String, String] = Map.empty,
                             rev: Int = 1): DataFrame = {
-    val path = graft.Staging.cached(
-      s"${name}_pq_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = rev) { tgt => df.write.mode("overwrite").parquet(tgt) }
+    val path = graft.Staging.cached(s"${name}_pq", dir, rev) { tgt =>
+      df.write.mode("overwrite").parquet(tgt) }
     s.readStream.schema(schema).options(options).parquet(path)
   }
 
@@ -158,9 +156,7 @@ object Streams {
     * increasing mtimes in range order. Range slice k = part-fileNNNN k
     * (range partition i is written by task i). */
   private def sessionFeedPath(s: SparkSession, dir: String): String =
-    graft.Staging.cached(
-      s"q_stream_session_pq_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-      rev = 3) { tgt =>
+    graft.Staging.cached("q_stream_session_pq", dir, rev = 3) { tgt =>
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"),
           unix_micros(col("ts")).as("ts_us"))
@@ -381,9 +377,7 @@ object Streams {
         val uniq = sinkSeq.incrementAndGet()
         val outDir = graft.Staging.dir(s"stream_dedup_idx_out_$uniq")
         val isBatchDoc = pmod(col("doc_id"), lit(5L)) === 0L
-        val path = graft.Staging.cached(
-          s"q_stream_dedup_idx_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val path = graft.Staging.cached("q_stream_dedup_idx", dir, rev = 1) { tgt =>
           Tables.documents(s, dir).filter(isBatchDoc)
             .select(col("doc_id"), col("text"))
             .repartitionByRange(3, col("doc_id"))
@@ -570,9 +564,7 @@ object Streams {
     QueryDef(
       "q_stream_late_drop",
       (s, dir) => {
-        val path = graft.Staging.cached(
-          s"q_stream_late_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 2) { tgt =>
+        val path = graft.Staging.cached("q_stream_late", dir, rev = 2) { tgt =>
           val src = Tables.events(s, dir)
             .select(col("event_id"), col("event_type"), col("value"),
               unix_micros(col("ts")).as("ts_us"))
@@ -683,9 +675,7 @@ object Streams {
     QueryDef(
       "q_stream_join",
       (s, dir) => {
-        val path = graft.Staging.cached(
-          s"q_stream_join_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val path = graft.Staging.cached("q_stream_join", dir, rev = 1) { tgt =>
           Tables.events(s, dir)
             // only the two joined types can contribute — staging the rest
             // would just be dead IO through both stream reads
@@ -742,9 +732,7 @@ object Streams {
     QueryDef(
       "q_stream_join_outer",
       (s, dir) => {
-        val path = graft.Staging.cached(
-          s"q_stream_join_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val path = graft.Staging.cached("q_stream_join", dir, rev = 1) { tgt =>
           Tables.events(s, dir)
             .filter(col("event_type").isin("purchase", "click"))
             .select(col("event_id"), col("user_id"), col("event_type"),
@@ -814,9 +802,7 @@ object Streams {
         // input drops are a pure function of the source dir — staged
         // once and reused; the sink + checkpoint are the operator under
         // test and stay unique per run
-        val in = graft.Staging.cached(
-          s"q_stream_cron_in_${graft.Staging.keyOf(dir)}_${graft.Staging.stampOf(dir)}",
-          rev = 1) { tgt =>
+        val in = graft.Staging.cached("q_stream_cron_in", dir, rev = 1) { tgt =>
             Tables.events(s, dir)
               .select(col("event_id"), col("event_type"), col("value"),
                 unix_micros(col("ts")).as("ts_us"))

@@ -13,36 +13,48 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("Staging.cached builds once per key and atomically publishes") {
-    val key = s"spec_cache_${System.nanoTime()}"
+    import java.nio.file.Files
+    // a fresh source dir: its path makes every key below unique
+    val src = Files.createTempDirectory(
+      java.nio.file.Paths.get(Staging.root), "spec_cache_src_")
+    Files.write(src.resolve("input.txt"), "v1".getBytes)
+    val dir = src.toString
+    def keyed(name: String) = Staging.cacheRoot.resolve(
+      s"${name}_${Staging.keyOf(dir)}_${Staging.stampOf(dir)}_r1")
     var builds = 0
-    def stage(): String = Staging.cached(key, rev = 1) { tgt =>
+    def stage(): String = Staging.cached("spec_cache", dir, rev = 1) { tgt =>
       builds += 1
       val p = java.nio.file.Paths.get(tgt, "data.txt")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, "payload".getBytes)
+      Files.createDirectories(p.getParent)
+      Files.write(p, "payload".getBytes)
     }
     val a = stage()
     val b = stage()
     assert(a == b)
     assert(builds == 1, "second call must reuse the staged dir")
     assert(new java.io.File(a, "data.txt").exists())
+    // the key is derived from (name, dir, stamp, rev) and published
+    // under the one cache root
+    assert(java.nio.file.Paths.get(a) == keyed("spec_cache"))
+    assert(Files.isDirectory(keyed("spec_cache")))
     // a failed build must not publish the keyed dir
-    val badKey = s"spec_cache_bad_${System.nanoTime()}"
     intercept[RuntimeException] {
-      Staging.cached(badKey, rev = 1) { _ => throw new RuntimeException("boom") }
+      Staging.cached("spec_cache_bad", dir, rev = 1) { _ => throw new RuntimeException("boom") }
     }
-    assert(!new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_cache_v2/${badKey}_r1").exists())
+    assert(!Files.exists(keyed("spec_cache_bad")))
     // ...and must not leak its _build_* temp dir into the cache root
     // (delta-based: another JVM's in-flight build may legitimately exist)
-    def buildDirs() = Option(new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_cache_v2").listFiles())
-      .getOrElse(Array.empty).filter(_.getName.startsWith("_build_")).map(_.getName).toSet
+    def buildDirs() = Staging.cacheRoot.toFile.listFiles()
+      .filter(_.getName.startsWith("_build_")).map(_.getName).toSet
     val before = buildDirs()
     intercept[RuntimeException] {
-      Staging.cached(s"${badKey}2", rev = 1) { _ => throw new RuntimeException("boom") }
+      Staging.cached("spec_cache_bad2", dir, rev = 1) { _ => throw new RuntimeException("boom") }
     }
     assert((buildDirs() -- before).isEmpty)
+    // new data in the source dir means a new key and a fresh build
+    Files.write(src.resolve("input.txt"), "v2, longer".getBytes)
+    val c = stage()
+    assert(builds == 2 && c != a && java.nio.file.Paths.get(c) == keyed("spec_cache"))
   }
 
   test("100TB layout recipe: range-partition + sort-within + partitionBy write") {
@@ -97,8 +109,8 @@ class LayoutSpec extends SparkSpec {
         .filter(f => f.isDirectory && f.getName.startsWith("source="))
     // the landing key was already staged by the query above, so the
     // no-op build lambda never runs — this just resolves the keyed path
-    val landing = new java.io.File(Staging.cached(
-      s"compact_landing_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1)(_ => ()))
+    val landing = new java.io.File(
+      Staging.cached("compact_landing", sf, rev = 1)(_ => ()))
     val out = new java.io.File(Staging.dir("q_compact_files"))
     val (landDirs, outDirs) = (partDirs(landing), partDirs(out))
     assert(landDirs.nonEmpty && outDirs.length == landDirs.length)
@@ -110,8 +122,8 @@ class LayoutSpec extends SparkSpec {
 
   test("q_purge_rewrite: untouched buckets pass through byte-identical; tombstones gone") {
     q("q_purge_rewrite").collect()
-    val landing = new java.io.File(Staging.cached(
-      s"purge_landing_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1)(_ => ()))
+    val landing = new java.io.File(
+      Staging.cached("purge_landing", sf, rev = 1)(_ => ()))
     val out = new java.io.File(Staging.dir("q_purge_rewrite"))
     def buckets(root: java.io.File): Map[String, java.io.File] =
       Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -139,8 +151,8 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("q_purge_dv: zero data files rewritten; vectors account for every tombstoned row") {
-    val landing = new java.io.File(Staging.cached(
-      s"purge_landing_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1)(_ => ()))
+    val landing = new java.io.File(
+      Staging.cached("purge_landing", sf, rev = 1)(_ => ()))
     def snapshot(root: java.io.File): Map[String, (Long, Long)] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory)
@@ -295,8 +307,7 @@ class LayoutSpec extends SparkSpec {
     // the losing writer's manifest must record the REBASE: version 2
     // committed by B on attempt 2 — proof the put-if-absent conflict
     // path actually ran, not just a happy-path append
-    val root = Staging.cached(
-      s"txnlog_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 2) {
+    val root = Staging.cached("txnlog", sf, rev = 2) {
       _ => fail("txn log must already be staged by the query run")
     }
     val log = spark.read.json(s"$root/_log")
@@ -331,8 +342,7 @@ class LayoutSpec extends SparkSpec {
     assert(rows(3)._5 != rows(1)._5)
     // metadata-only: every file the restore adds was committed BEFORE —
     // the restore writes zero data bytes
-    val logRoot = Staging.cached(
-      s"txnrestore_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1) {
+    val logRoot = Staging.cached("txnrestore", sf, rev = 1) {
       _ => fail("restore log must already be staged by the query run")
     }
     val log = spark.read.json(s"$logRoot/_log")
@@ -359,8 +369,7 @@ class LayoutSpec extends SparkSpec {
   test("vacuum reclaims only files no retained version needs; log survives") {
     // run on a COPY of the staged table — the cached original serves
     // the query test above and future JVMs
-    val src = java.nio.file.Paths.get(Staging.cached(
-      s"txnlog_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 2) {
+    val src = java.nio.file.Paths.get(Staging.cached("txnlog", sf, rev = 2) {
       _ => fail("txn log must already be staged")
     })
     val copy = java.nio.file.Files.createTempDirectory("vacuum_spec_")
@@ -564,8 +573,7 @@ class LayoutSpec extends SparkSpec {
     assert(byKey(("hot", 1L)) == byKey(("main", 1L)),
       "hot staged the same logical slice as main v1")
     // ...which is exactly why its merge must have been REFUSED
-    val root = Staging.cached(
-      s"txnbranch_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1) {
+    val root = Staging.cached("txnbranch", sf, rev = 1) {
       _ => fail("branch log must already be staged by the query run")
     }
     val refused = java.nio.file.Files.readString(
@@ -586,9 +594,8 @@ class LayoutSpec extends SparkSpec {
     val rows = q("q_manifest_bloom").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // the query itself ran the manifest build; replay its probe here
-    val layout = Staging.cached(
-      s"manifest_layout_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}",
-      rev = 1) { _ => fail("layout must already be staged") }
+    val layout = Staging.cached("manifest_layout", sf, rev = 1) {
+      _ => fail("layout must already be staged") }
     val lay = spark.read.parquet(layout)
     val b = lay.agg(count(lit(1)), min(col("l_orderkey")),
       max(col("l_orderkey"))).head()
@@ -636,8 +643,8 @@ class LayoutSpec extends SparkSpec {
 
   test("q_merge_into: untouched months pass through byte-identical; merge semantics hold") {
     val rows = q("q_merge_into").collect()
-    val landing = new java.io.File(Staging.cached(
-      s"merge_landing_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1)(_ => ()))
+    val landing = new java.io.File(
+      Staging.cached("merge_landing", sf, rev = 1)(_ => ()))
     val out = new java.io.File(Staging.dir("q_merge_into"))
     def months(root: java.io.File): Map[String, java.io.File] =
       Option(root.listFiles()).getOrElse(Array.empty[java.io.File])

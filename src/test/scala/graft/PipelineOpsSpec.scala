@@ -56,8 +56,7 @@ class PipelineOpsSpec extends SparkSpec {
     // partials. Read the staged base MV itself (already built by the
     // query run above — the build lambda must not fire) and check the
     // boundary day appears on each side of the cutoff.
-    val mvPath = Staging.cached(
-      s"incragg_mv_${Staging.keyOf(sf)}_${Staging.stampOf(sf)}", rev = 1) {
+    val mvPath = Staging.cached("incragg_mv", sf, rev = 1) {
       _ => fail("base MV must already be staged by the query run")
     }
     val base = spark.read.parquet(mvPath)
