@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.QueryDef
@@ -19,10 +24,16 @@ import graft.QueryDef
   * approximated by its Normal(1000, √1000) limit via Box-Muller on two
   * hash-uniforms — same mean/variance/dtype, documented delta.
   *
-  * Scale: `spark.range` is an embarrassingly parallel source (no input,
-  * no shuffle); generation fuses into whole-stage codegen with whatever
-  * consumes it, exactly like Dask's blockwise fusion of
-  * generate→partial-agg (SURVEY §4).
+  * Scale: the source is one `(lo, hi)` row per day, one partition per
+  * day ([[DayBounds]]), exploded into `sequence(lo, hi - 1)`: it is
+  * embarrassingly parallel (no input, no shuffle), and generation fuses
+  * into whole-stage codegen with whatever consumes it, like Dask's
+  * blockwise fusion of generate→partial-agg (SURVEY §4).
+  *
+  * Rule: no size (`days`, `rows`) may appear as a literal in generated
+  * code; sizes travel as data. `spark.range` broke it: `RangeExec`
+  * inlines `numElements` and `numSlices`, so every new file size meant a
+  * Janino compile and a cold JIT on the reference's per-file path.
   */
 object Timeseries {
 
@@ -34,6 +45,27 @@ object Timeseries {
     "Xavier", "Yvonne", "Zelda")
 
   private val TwoPow64 = math.pow(2.0, 64)
+
+  /** One `(lo, hi)` row per day: day `d`'s ids `[d·rows/n, (d+1)·rows/n)`,
+    * as `Range` splits `rows` over `n` slices. An empty day yields no row
+    * (`sequence(5, 4)` would count down), and each day's `hi - lo` rows
+    * count as its task's input records, as `RangeExec`'s did. */
+  private final class DayBounds(sc: SparkContext, rows: Long, n: Int)
+      extends RDD[InternalRow](sc, Nil) {
+    override protected def getPartitions: Array[Partition] =
+      Array.tabulate[Partition](n)(Day(_))
+    override def compute(day: Partition, ctx: TaskContext): Iterator[InternalRow] = {
+      val lo = day.index * rows / n
+      val hi = (day.index + 1) * rows / n
+      if (lo >= hi) Iterator.empty
+      else {
+        GraftBridge.countInputRecords(ctx, hi - lo)
+        Iterator.single(InternalRow(lo, hi))
+      }
+    }
+  }
+
+  private final case class Day(index: Int) extends Partition
 
   /** uniform in [0,1) from a salted row hash */
   private def u01(idCol: org.apache.spark.sql.Column, salt: Int) =
@@ -50,7 +82,12 @@ object Timeseries {
   def generate(spark: SparkSession, start: String, days: Int,
                freqSeconds: Int = 1): DataFrame = {
     val rows = days.toLong * 86400L / freqSeconds
-    val base = spark.range(0, rows, 1, math.max(1, days))
+    val bounds = LogicalRDD(
+      Seq("lo", "hi").map(AttributeReference(_, LongType, nullable = false)()),
+      new DayBounds(spark.sparkContext, rows, math.max(1, days)))(
+      spark.asInstanceOf[classic.SparkSession])
+    val base = GraftBridge.ofRows(spark, bounds)
+      .select(explode(sequence(col("lo"), col("hi") - 1)).as("id"))
     val id = col("id")
     // Box-Muller: z ~ N(0,1) from two hash-uniforms; u1 nudged into (0,1]
     val u1 = u01(id, 101) + lit(1e-12)

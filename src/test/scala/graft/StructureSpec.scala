@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-tree guards: what identifies a cached artifact is decided in
   * `Staging.scala` alone ([[Staging.cached]] and [[Memo]]), so no other
   * main source builds a cache key from `keyOf`/`stampOf`, and no
-  * operator rolls its own memo map. */
+  * operator rolls its own memo map. Spark internals (`private[spark]`,
+  * `private[sql]`) are reached from one reviewed file, `GraftBridge.scala`. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -41,5 +42,17 @@ class StructureSpec extends AnyFunSuite {
     assert(Files.isDirectory(ops))
     val hits = offenders(ops, "ConcurrentHashMap")
     if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+  }
+
+  test("only GraftBridge.scala lives in Spark's package tree") {
+    val sparkPkg = main.resolve("org/apache/spark")
+    assert(Files.isRegularFile(sparkPkg.resolve("sql/GraftBridge.scala")))
+    val walk = Files.walk(sparkPkg)
+    val others =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => main.relativize(p).toString)
+        .filter(_ != "org/apache/spark/sql/GraftBridge.scala").toList
+      finally walk.close()
+    if (others.nonEmpty) fail(others.mkString("\n", "\n", ""))
   }
 }

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.sources.Timeseries
 
@@ -63,5 +69,78 @@ class TimeseriesSpec extends SparkSpec {
     val first2 = ts.select(col("timestamp").cast("long")).orderBy(col("timestamp"))
       .limit(2).collect().map(_.getLong(0))
     assert(first2(1) - first2(0) == 1L)
+  }
+
+  /** The generator's row index, recovered from its timestamp. */
+  private def rowIds(start: String, days: Int, freqSeconds: Int) = {
+    val t0 = java.time.Instant.parse(s"${start}T00:00:00Z").getEpochSecond
+    Timeseries.generate(spark, start, days, freqSeconds)
+      .select(((col("timestamp").cast("long") - t0) / freqSeconds).cast("long").as("i"))
+  }
+
+  test("split parity with Range: exact ids, one partition per day, empty days empty") {
+    val rows = 3L * 86400 / 7
+    val ids = rowIds("2024-01-01", 3, 7)
+    assert(ids.rdd.getNumPartitions == 3)
+    val got = ids.collect().map(_.getLong(0))
+    assert(got.length == rows && got.distinct.length == got.length)
+    assert(got.sorted.toSeq == (0L until rows))
+    // day d holds [d·rows/3, (d+1)·rows/3), as spark.range(0, rows, 1, 3)
+    val perDay = ids.groupBy(spark_partition_id().as("p"))
+      .agg(min(col("i")), max(col("i")), count(lit(1))).orderBy("p").collect()
+    assert(perDay.map(r => (r.getInt(0), r.getLong(1), r.getLong(2) + 1, r.getLong(3))).toSeq ==
+      (0 until 3).map { d =>
+        val (lo, hi) = (d * rows / 3, (d + 1) * rows / 3)
+        (d, lo, hi, hi - lo)
+      })
+    // rows = 1 over 3 days: days 0 and 1 are empty, not sequence(0, -1)
+    val one = rowIds("2024-01-01", 3, 200000)
+    assert(one.rdd.getNumPartitions == 3)
+    assert(one.collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  test("generated rows count as input records") {
+    // only this test's job counts: earlier jobs' events may still be queued
+    val read = new AtomicLong
+    val done = new CountDownLatch(1)
+    val mine = ConcurrentHashMap.newKeySet[Int]()
+    var jobId = -1
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec") == "records") {
+          jobId = e.jobId
+          e.stageIds.foreach(mine.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (mine.contains(e.stageId) && e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == jobId) done.countDown()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setLocalProperty("graft.spec", "records")
+    try {
+      Timeseries.generate(spark, "2024-01-01", days = 3)
+        .write.format("noop").mode("overwrite").save()
+      assert(done.await(60, TimeUnit.SECONDS), "no job end seen")
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.spec", null)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    assert(read.get == 3L * 86400)
+  }
+
+  test("generated code does not depend on the size: new day counts compile nothing") {
+    def run(days: Int): Unit = {
+      spark.conf.set("graft.referenceScale.days", days.toString)
+      try q("q_reference_scale").collect()
+      finally spark.conf.unset("graft.referenceScale.days")
+    }
+    run(2) // warm-up: compiles the plan's classes once
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(3)
+    run(5)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"$compiled classes compiled for new day counts")
   }
 }
