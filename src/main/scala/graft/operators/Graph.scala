@@ -1054,8 +1054,6 @@ object Graph {
           if (picksCnt == 0L) done = true
           else {
             val edgeCnt = eComp.count()
-            if (sys.env.contains("GRAFT_MST_DEBUG"))
-              System.err.println(s"MSTDBG round=$round picks=$picksCnt edges=$edgeCnt")
             forest += picks.select(col("u"), col("v"), col("w")).distinct()
             // the one-hop maps and the contraction map are
             // ≤ picksCnt rows — once that is DRIVER-KNOWN bounded,
@@ -1066,9 +1064,7 @@ object Graph {
             // list per round, measured the dominant round cost at the
             // 10× probe). Above the bound (a 100 TB round-1 map can be
             // |V| rows) fall back to the planner's choice.
-            val bcastMap = picksCnt <= Dedup.BroadcastMapMaxRows
-            def mapSide(m: DataFrame): DataFrame =
-              if (bcastMap) broadcast(m) else m
+            val mapSide = Dedup.boundedBroadcast(picksCnt)
             // break the 2-cycles (q∘q = id ⇔ both sides picked the
             // same edge — each merge tree's unique global-min edge):
             // the smaller id becomes the root
@@ -1122,8 +1118,6 @@ object Graph {
                 .first().getInt(0) == 0
               p = pm.select(col("c"), col("np").as("p"))
             }
-            if (sys.env.contains("GRAFT_MST_DEBUG"))
-              System.err.println(s"MSTDBG round=$round jumps=$jumps")
             // relabel the surviving edges with the contraction map —
             // p is |components|-sized (mapSide-broadcast under the
             // driver-known picksCnt bound, planner's choice above it)

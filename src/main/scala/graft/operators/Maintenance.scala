@@ -24,10 +24,9 @@ object Maintenance {
     * (the oracled exemplar — the sf0.01 gate corpus is 60k rows);
     * above it the identical pass swaps in approx_count_distinct and
     * the N× Expand row multiplier disappears. The corpus-size-driven
-    * auto-switch discipline of ivfCellsFor/ClusterBruteMaxN. Env
-    * override is dev-loop A/B tooling (SCALEPROBE protocol). */
-  val NdvExactMaxN: Long = sys.env.get("SPARK_GRAFT_NDV_EXACT_MAX")
-    .map(_.toLong).getOrElse(100000L)
+    * auto-switch discipline of ivfCellsFor/ClusterBruteMaxN. To A/B
+    * the switch, pass `tableStatsPlan(exactMax =)`. */
+  val NdvExactMaxN: Long = 100000L
 
   /** q_table_stats body — see the QueryDef comment. `exactMax` is the
     * NDV switch, parameterized so the spec can force the approx path

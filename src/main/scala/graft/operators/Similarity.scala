@@ -79,19 +79,17 @@ object Similarity {
     * 0.65 matches what the 4-table design actually delivered at 10×
     * (measured 39/60). The OR-table recall lever is the repo's own
     * multi-table SimHash precedent; the clamp is the adcNProbeFor
-    * precedent. Env override is dev-loop A/B tooling (SCALEPROBE
-    * protocol); LlmOpsSpec pins the derivation. */
-  def tablesFor(planes: Int): Int =
-    sys.env.get("SPARK_GRAFT_LSH_TABLES").flatMap(_.toIntOption)
-      .getOrElse {
-        val anchors = Seq((0.91, 0.95), (0.74, 0.65))
-        val derived = anchors.map { case (cos, r) =>
-          val p = 1.0 - math.acos(cos) / math.Pi
-          val pk = math.pow(p, planes)
-          math.ceil(math.log1p(-r) / math.log1p(-pk)).toInt
-        }.max
-        math.max(4, derived)
-      }
+    * precedent. To A/B a table count, pass `annCandidates(nTables =)`;
+    * LlmOpsSpec pins the derivation. */
+  def tablesFor(planes: Int): Int = {
+    val anchors = Seq((0.91, 0.95), (0.74, 0.65))
+    val derived = anchors.map { case (cos, r) =>
+      val p = 1.0 - math.acos(cos) / math.Pi
+      val pk = math.pow(p, planes)
+      math.ceil(math.log1p(-r) / math.log1p(-pk)).toInt
+    }.max
+    math.max(4, derived)
+  }
 
   /** IVF cell count anchored at the tuned 32-cells-at-2k-vectors shape
     * and grown with √n (the classic IVF balance: assignment costs
@@ -318,12 +316,11 @@ object Similarity {
     * [[HierarchicalNProbeSuper]] = 8 is the retuned probe count
     * (round-6's 5 cost 8% relative recall; 8 of ~√nCells supers keeps
     * the pruning gentle). `hierarchical = true` still forces the
-    * two-level path explicitly (requires nCells > 64 either way).
+    * two-level path explicitly (requires nCells > 64 either way); to
+    * A/B the switch, pass `ivfProbeAssign(hierarchical =)`.
     * Measured: SCALEPROBE.md round 8 (10× A/B + 100× switch-on row
     * with recall). */
-  val HierarchicalAutoN: Long = sys.env.get("SPARK_GRAFT_IVF_HIER_N")
-    .map(_.toLong).getOrElse(100000L) // env override is dev-loop A/B
-                                      // tooling (SCALEPROBE protocol)
+  val HierarchicalAutoN: Long = 100000L
   val HierarchicalNProbeSuper = 8
 
   /** IVF-ADC exact-refine shortlist size (the faiss IndexRefineFlat
@@ -331,16 +328,13 @@ object Similarity {
     * the top `AdcRefineR` per query are re-ranked by EXACT float
     * cosine — the engine touches floats for ≤ R rows per query, not
     * the corpus (at 100 TB: R random reads against the disk-resident
-    * vectors, the standard production architecture). 0 disables
-    * (pure-ADC ranking) — the env override is dev-loop A/B tooling
-    * (SCALEPROBE protocol). Chosen over OPQ rotation on measured
-    * grounds: this corpus's covariance spectrum is near-flat
-    * (top/median eigenvalue 1.35, per-subspace variances already
-    * balanced 0.060-0.064), so a rotation has nothing to balance —
-    * recall moved 0.64 → 0.92 with refine (SCALEPROBE r10), which no
-    * rotation can match on isotropic data. */
-  val AdcRefineR: Int = sys.env.get("SPARK_GRAFT_ADC_REFINE")
-    .map(_.toInt).getOrElse(50)
+    * vectors, the standard production architecture). Chosen over OPQ
+    * rotation on measured grounds: this corpus's covariance spectrum
+    * is near-flat (top/median eigenvalue 1.35, per-subspace variances
+    * already balanced 0.060-0.064), so a rotation has nothing to
+    * balance — recall moved 0.64 → 0.92 with refine (SCALEPROBE r10),
+    * which no rotation can match on isotropic data. */
+  val AdcRefineR: Int = 50
 
   /** IVF-ADC query-side probe count — SCALE-AWARE (r12 verdict item
     * 2). With refine in place, PROBE MISSES are the residual recall
@@ -366,11 +360,8 @@ object Similarity {
     * stamps are bit-identical to r11/r12. Per-query candidate volume
     * is fraction·n — linear with a 5-query constant; the bounded
     * query slice is what makes constant-fraction affordable here.
-    * The env override is dev-loop A/B tooling (SCALEPROBE protocol);
     * LlmOpsSpec pins the derivation. */
-  def adcNProbeFor(nCells: Int): Int =
-    sys.env.get("SPARK_GRAFT_ADC_NPROBE").flatMap(_.toIntOption)
-      .getOrElse(math.max(16, (nCells + 1) / 2))
+  def adcNProbeFor(nCells: Int): Int = math.max(16, (nCells + 1) / 2)
 
   /** IVF-ADC corpus-side assignment fan-out (r13 verdict item 2): how
     * many nearest cells each CORPUS vector is indexed under
@@ -383,10 +374,8 @@ object Similarity {
     * Measured A/B vs K=1 (SCALEPROBE r14): see the r14 section for
     * the recall@10 ladder and wall at sf0.1/30×/100× — candidate
     * volume is bounded by the query slice, so the cost rides the
-    * n·nCells assignment pass that dominates either way. The env
-    * override is dev-loop A/B tooling (SCALEPROBE protocol). */
-  val AdcAssignK: Int = sys.env.get("SPARK_GRAFT_ADC_ASSIGN_K")
-    .flatMap(_.toIntOption).getOrElse(2)
+    * n·nCells assignment pass that dominates either way. */
+  val AdcAssignK: Int = 2
 
   def ivfProbeAssign(vectors: DataFrame, idCol: String, vecCol: String,
                      nCells: Int, trainIters: Int, nProbe: Int,
@@ -549,12 +538,8 @@ object Similarity {
       // 64-double embedding — at 100× a fused nProbe-deep probe table
       // would have checkpointed ~15 GB for ranks nobody reads)
       val assigned =
-        (if (AdcAssignK <= 1)
-           assignToCentroids(e, "vec_id", "embedding", coarse)
-             .select(col("vec_id"), col("cell_id"))
-         else
-           softAssignToCentroids(e, "vec_id", "embedding", coarse, AdcAssignK))
-        .localCheckpoint()
+        softAssignToCentroids(e, "vec_id", "embedding", coarse, AdcAssignK)
+          .localCheckpoint()
       (coarse, assigned)
     }
 
@@ -588,9 +573,8 @@ object Similarity {
     // under soft assignment a (query, corpus) pair can meet in up to
     // AdcAssignK probed cells — dedup before scoring (bounded: the
     // distinct state is |queries| × fraction × n narrow id-pairs, a
-    // bounded-query-slice budget by contract; at K=1 a pair meets at
-    // most once and the exchange is skipped)
-    val cand = if (AdcAssignK <= 1) cand0 else cand0.distinct()
+    // bounded-query-slice budget by contract)
+    val cand = cand0.distinct()
     val (cents, coded) = pqModel(s, dir)
     val dot = (a: Column, b: Column) =>
       aggregate(zip_with(a, b, (x, y) => x * y),
@@ -627,38 +611,31 @@ object Similarity {
         round(col("dadc") / (col("vn") * col("qn")), 6).as("score"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("nid"))
-    if (AdcRefineR <= 0)
-      scored.withColumn("rnk", row_number().over(w).cast(LongType))
-        .filter(col("rnk") <= 10)
-        .select(col("qid"), col("rnk"), col("nid"), col("score"))
-        .orderBy(col("qid"), col("rnk"))
-    else {
-      // EXACT-REFINE stage (faiss IndexRefineFlat; r10): the ADC
-      // top-R shortlist per query is re-ranked by exact float
-      // cosine — floats are read for ≤ R rows per query only, so
-      // the codes-only corpus scan above stays the cost shape and
-      // recall recovers to the IVF candidate recall (code
-      // quantization stops being a ranking loss term). See
-      // AdcRefineR for the measured on/off A/B.
-      val short = scored
-        .withColumn("rnk0", row_number().over(w))
-        .filter(col("rnk0") <= AdcRefineR)
-        .select(col("qid"), col("nid"))
-      val w2 = Window.partitionBy(col("qid"))
-        .orderBy(col("score").desc, col("nid"))
-      short
-        .join(e.select(col("vec_id").as("nid"),
-          col("embedding").as("nv")), "nid")
-        .join(broadcast(e.filter(isQuery)
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"))), "qid")
-        .withColumn("score",
-          round(VectorFns.cosineFast(col("qv"), col("nv")), 6))
-        .withColumn("rnk", row_number().over(w2).cast(LongType))
-        .filter(col("rnk") <= 10)
-        .select(col("qid"), col("rnk"), col("nid"), col("score"))
-        .orderBy(col("qid"), col("rnk"))
-    }
+    // EXACT-REFINE stage (faiss IndexRefineFlat; r10): the ADC
+    // top-R shortlist per query is re-ranked by exact float
+    // cosine — floats are read for ≤ R rows per query only, so
+    // the codes-only corpus scan above stays the cost shape and
+    // recall recovers to the IVF candidate recall (code
+    // quantization stops being a ranking loss term). See
+    // AdcRefineR for the measured on/off A/B.
+    val short = scored
+      .withColumn("rnk0", row_number().over(w))
+      .filter(col("rnk0") <= AdcRefineR)
+      .select(col("qid"), col("nid"))
+    val w2 = Window.partitionBy(col("qid"))
+      .orderBy(col("score").desc, col("nid"))
+    short
+      .join(e.select(col("vec_id").as("nid"),
+        col("embedding").as("nv")), "nid")
+      .join(broadcast(e.filter(isQuery)
+        .select(col("vec_id").as("qid"),
+          col("embedding").as("qv"))), "qid")
+      .withColumn("score",
+        round(VectorFns.cosineFast(col("qv"), col("nv")), 6))
+      .withColumn("rnk", row_number().over(w2).cast(LongType))
+      .filter(col("rnk") <= 10)
+      .select(col("qid"), col("rnk"), col("nid"), col("score"))
+      .orderBy(col("qid"), col("rnk"))
   }
 
   /** IVF-style index: assign every vector to its single nearest centroid.
@@ -1357,39 +1334,32 @@ object Similarity {
             round(col("dadc") / (col("vn") * col("qn")), 6).as("score"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-        if (AdcRefineR <= 0)
-          scored.withColumn("rnk", row_number().over(w).cast("long"))
-            .filter(col("rnk") <= 10)
-            .select(col("qid"), col("rnk"), col("nid"), col("score"))
-            .orderBy(col("qid"), col("rnk"))
-        else {
-          // EXACT-REFINE stage (faiss IndexRefineFlat — the same move
-          // that took ivf_adc 0.64 → 0.84; r11 verdict item 4): the
-          // full-corpus ADC ranking keeps only code-quantization as its
-          // loss term, so re-ranking the ADC top-R by exact cosine
-          // removes it — floats are read for ≤ R rows per query while
-          // the corpus scan stays codes-only. Measured at sf0.1:
-          // recall@10 0.74 (pure ADC) → with refine, see SCALEPROBE r12.
-          val eRaw = Tables.embeddings(s, dir)
-          val short = scored
-            .withColumn("rnk0", row_number().over(w))
-            .filter(col("rnk0") <= AdcRefineR)
-            .select(col("qid"), col("nid"))
-          val w2 = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-          short
-            .join(eRaw.select(col("vec_id").as("nid"),
-              col("embedding").as("nv")), "nid")
-            .join(broadcast(eRaw.filter(isQuery)
-              .select(col("vec_id").as("qid"),
-                col("embedding").as("qv"))), "qid")
-            .withColumn("score",
-              round(VectorFns.cosineFast(col("qv"), col("nv")), 6))
-            .withColumn("rnk", row_number().over(w2).cast("long"))
-            .filter(col("rnk") <= 10)
-            .select(col("qid"), col("rnk"), col("nid"), col("score"))
-            .orderBy(col("qid"), col("rnk"))
-        }
+        // EXACT-REFINE stage (faiss IndexRefineFlat — the same move
+        // that took ivf_adc 0.64 → 0.84; r11 verdict item 4): the
+        // full-corpus ADC ranking keeps only code-quantization as its
+        // loss term, so re-ranking the ADC top-R by exact cosine
+        // removes it — floats are read for ≤ R rows per query while
+        // the corpus scan stays codes-only. Measured at sf0.1:
+        // recall@10 0.74 (pure ADC) → with refine, see SCALEPROBE r12.
+        val eRaw = Tables.embeddings(s, dir)
+        val short = scored
+          .withColumn("rnk0", row_number().over(w))
+          .filter(col("rnk0") <= AdcRefineR)
+          .select(col("qid"), col("nid"))
+        val w2 = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
+        short
+          .join(eRaw.select(col("vec_id").as("nid"),
+            col("embedding").as("nv")), "nid")
+          .join(broadcast(eRaw.filter(isQuery)
+            .select(col("vec_id").as("qid"),
+              col("embedding").as("qv"))), "qid")
+          .withColumn("score",
+            round(VectorFns.cosineFast(col("qv"), col("nv")), 6))
+          .withColumn("rnk", row_number().over(w2).cast("long"))
+          .filter(col("rnk") <= 10)
+          .select(col("qid"), col("rnk"), col("nid"), col("score"))
+          .orderBy(col("qid"), col("rnk"))
       },
       None
     ),

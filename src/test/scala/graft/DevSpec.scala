@@ -1,0 +1,48 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[Dev]] rejects a bad command line with its usage text before it
+  * builds a session. Deliberately not a [[SparkSpec]]: the test JVM
+  * shares one session, and a session built or stopped here would break
+  * the other specs. */
+class DevSpec extends AnyFunSuite {
+
+  private def rejected(args: String*): Unit = {
+    val default = SparkSession.getDefaultSession
+    val active = SparkSession.getActiveSession
+    val e = intercept[IllegalArgumentException](Dev.main(args.toArray))
+    assert(e.getMessage.contains(Dev.Usage))
+    assert(SparkSession.getDefaultSession == default)
+    assert(SparkSession.getActiveSession == active)
+    default.foreach(s => assert(!s.sparkContext.isStopped))
+  }
+
+  test("no mode is rejected") { rejected() }
+
+  test("an unknown mode is rejected") { rejected("profile", "q_tpch_q1") }
+
+  test("probe with no query names is rejected") { rejected("probe") }
+
+  test("plan with fewer than three arguments is rejected") {
+    rejected("plan")
+    rejected("plan", "out")
+    rejected("plan", "out", "before")
+  }
+
+  test("recall takes no arguments") { rejected("recall", "q_tpch_q1") }
+
+  test("an unregistered query name is rejected") {
+    rejected("probe", "q_tpch_q1", "q_no_such_query")
+    rejected("plan", "out", "before", "q_no_such_query")
+  }
+
+  test("each mode parses its arguments") {
+    assert(Dev.parse(Seq("probe", "q_tpch_q1", "q_tpch_q3")) ==
+      Dev.Mode.Probe(Seq("q_tpch_q1", "q_tpch_q3")))
+    assert(Dev.parse(Seq("plan", "out", "before", "q_tpch_q1")) ==
+      Dev.Mode.Plan("out", "before", Seq("q_tpch_q1")))
+    assert(Dev.parse(Seq("recall")) == Dev.Mode.Recall)
+  }
+}

@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Staging.scala` alone ([[Staging.cached]] and [[Memo]]), so no other
   * main source builds a cache key from `keyOf`/`stampOf`, and no
   * operator rolls its own memo map. Spark internals (`private[spark]`,
-  * `private[sql]`) are reached from one reviewed file, `GraftBridge.scala`. */
+  * `private[sql]`) are reached from one reviewed file, `GraftBridge.scala`.
+  * The command-line entry points are `Bench` and `Verify` (the driver
+  * contract) and `Dev` (the dev loop), and no operator reads the
+  * process environment, so a query's answer cannot vary by host. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -41,6 +44,17 @@ class StructureSpec extends AnyFunSuite {
     val ops = main.resolve("graft/operators")
     assert(Files.isDirectory(ops))
     val hits = offenders(ops, "ConcurrentHashMap")
+    if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+  }
+
+  test("the only mains are Bench, Verify and Dev") {
+    val hits = offenders(main, "def main(",
+      except = Set("Bench.scala", "Verify.scala", "Dev.scala"))
+    if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+  }
+
+  test("operators read nothing from the environment") {
+    val hits = offenders(main.resolve("graft/operators"), "sys.env")
     if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
   }
 
