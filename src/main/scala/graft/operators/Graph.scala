@@ -107,9 +107,9 @@ object Graph {
       .otherwise(concat(lit("p"), ((c - 1) / 2).cast("long")))
 
   /** 4 synchronous min-label-propagation rounds over the bipartite
-    * graph → (node, lbl) long pairs. Shared by q_graph_labelprop (the
-    * report) and q_graph_modularity (community quality). See
-    * q_graph_labelprop's Scaladoc for the per-round scale shape. */
+    * graph → (node, lbl) long pairs, for q_graph_labelprop's report.
+    * q_graph_modularity does not use it: it scores the brand partition.
+    * See q_graph_labelprop's Scaladoc for the per-round scale shape. */
   private def labelPropLabels(s: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame = {
     val rounds = 4

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    through the public DataFrame API — the standard technique for
   *    out-of-tree Spark operator libraries;
   *  - the `private[spark]` input-record counter, so rows that
-  *    [[graft.sources.Timeseries.generate]] makes from its per-day bounds
-  *    count as records read, as `RangeExec`'s did. That generator cannot
+  *    [[graft.sources.Timeseries.generate]] makes from its chunked
+  *    per-core slice bounds count as records read, as `RangeExec`'s did
+  *    (one count per slice, not per chunk). That generator cannot
   *    be `spark.range` (its sizes would be compiled into the code), and
   *    without the count its rows would vanish from every task's
   *    `inputMetrics.recordsRead`, the figure throughput is measured by;

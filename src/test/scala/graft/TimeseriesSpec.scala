@@ -3,9 +3,12 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.sources.Timeseries
 
@@ -20,9 +23,14 @@ class TimeseriesSpec extends SparkSpec {
     assert(ts.schema("x").dataType.typeName == "double")
   }
 
-  test("one row per second, one partition per day") {
+  /** Slices `spark.range` splits into by default: the leaf parallelism,
+    * 4 in the shared `local[4]` session. */
+  private lazy val slices = spark.range(0, 10).rdd.getNumPartitions
+
+  test("one row per second, one partition per core") {
+    assert(slices == 4)
     assert(ts.count() == 86400L)
-    assert(Timeseries.generate(spark, "2024-01-01", 3).rdd.getNumPartitions == 3)
+    assert(Timeseries.generate(spark, "2024-01-01", 3).rdd.getNumPartitions == slices)
   }
 
   test("deterministic: same params give identical data") {
@@ -78,25 +86,31 @@ class TimeseriesSpec extends SparkSpec {
       .select(((col("timestamp").cast("long") - t0) / freqSeconds).cast("long").as("i"))
   }
 
-  test("split parity with Range: exact ids, one partition per day, empty days empty") {
-    val rows = 3L * 86400 / 7
-    val ids = rowIds("2024-01-01", 3, 7)
-    assert(ids.rdd.getNumPartitions == 3)
-    val got = ids.collect().map(_.getLong(0))
-    assert(got.length == rows && got.distinct.length == got.length)
-    assert(got.sorted.toSeq == (0L until rows))
-    // day d holds [d·rows/3, (d+1)·rows/3), as spark.range(0, rows, 1, 3)
-    val perDay = ids.groupBy(spark_partition_id().as("p"))
+  /** Per non-empty partition: (partition, min id, max id, id count). */
+  private def perSlice(ids: org.apache.spark.sql.DataFrame) =
+    ids.groupBy(spark_partition_id().as("p"))
       .agg(min(col("i")), max(col("i")), count(lit(1))).orderBy("p").collect()
-    assert(perDay.map(r => (r.getInt(0), r.getLong(1), r.getLong(2) + 1, r.getLong(3))).toSeq ==
-      (0 until 3).map { d =>
-        val (lo, hi) = (d * rows / 3, (d + 1) * rows / 3)
-        (d, lo, hi, hi - lo)
-      })
-    // rows = 1 over 3 days: days 0 and 1 are empty, not sequence(0, -1)
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+
+  test("split parity with Range: exact ids, one partition per core, exact chunk edges, empty slices empty") {
+    for ((days, freq) <- Seq((3, 1), (3, 7))) {
+      val rows = days * 86400L / freq
+      val ids = rowIds("2024-01-01", days, freq)
+      assert(ids.rdd.getNumPartitions == slices)
+      val got = ids.collect().map(_.getLong(0))
+      assert(got.length == rows && got.distinct.length == got.length)
+      assert(got.sorted.toSeq == (0L until rows))
+      // slice p holds what spark.range(0, rows, 1, p) puts in partition p
+      val range = spark.range(0, rows, 1, slices).select(col("id").as("i"))
+      assert(perSlice(ids) == perSlice(range))
+    }
+    // 64,800 ids per slice at 1 s: each slice spans chunk edges
+    assert(3 * 86400L / slices > Timeseries.ChunkIds)
+    // rows = 1 over 4 slices: slices 0-2 are empty, not sequence(0, -1)
     val one = rowIds("2024-01-01", 3, 200000)
-    assert(one.rdd.getNumPartitions == 3)
+    assert(one.rdd.getNumPartitions == slices)
     assert(one.collect().map(_.getLong(0)).toSeq == Seq(0L))
+    assert(perSlice(one) == Seq((slices - 1, 0L, 0L, 1L)))
   }
 
   test("generated rows count as input records") {
@@ -128,6 +142,37 @@ class TimeseriesSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(l)
     }
     assert(read.get == 3L * 86400)
+  }
+
+  test("q_reference_scale runs one generator task per core at any file size") {
+    // per stage of this test's jobs: (tasks, records read); only the
+    // generator stage reads input records, shuffle reads count apart
+    val mine = ConcurrentHashMap.newKeySet[Int]()
+    val stages = new ConcurrentHashMap[Int, (Int, Long)]()
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec") == "slices")
+          mine.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        if (mine.contains(i.stageId))
+          stages.put(i.stageId, (i.numTasks, i.taskMetrics.inputMetrics.recordsRead))
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try for (days <- Seq(3, 24, 48)) {
+      stages.clear()
+      spark.conf.set("graft.referenceScale.days", days.toString)
+      spark.sparkContext.setLocalProperty("graft.spec", "slices")
+      try q("q_reference_scale").collect()
+      finally {
+        spark.sparkContext.setLocalProperty("graft.spec", null)
+        spark.conf.unset("graft.referenceScale.days")
+      }
+      GraftBridge.drainListenerBus(spark)
+      val generator = stages.values.asScala.filter(_._2 > 0).toSeq
+      assert(generator == Seq((slices, days * 86400L)), s"$days days: $stages")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("generated code does not depend on the size: new day counts compile nothing") {
