@@ -92,7 +92,7 @@ class TimeseriesSpec extends SparkSpec {
       .agg(min(col("i")), max(col("i")), count(lit(1))).orderBy("p").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
 
-  test("split parity with Range: exact ids, one partition per core, exact chunk edges, empty slices empty") {
+  test("split parity with Range: exact ids, per-core slices, chunk edges, empty slices") {
     for ((days, freq) <- Seq((3, 1), (3, 7))) {
       val rows = days * 86400L / freq
       val ids = rowIds("2024-01-01", days, freq)
