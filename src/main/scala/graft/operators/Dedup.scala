@@ -561,13 +561,7 @@ object Dedup {
 
   /** q_dedup_embedding body — the exact cosine ground truth.
     *
-    * ≤ cap: the n²/2 brute pair scan (norms precomputed once per
-    * VECTOR; one multiply-add per element via dot_product —
-    * bit-identical to cosine_sim since the norm fold order is
-    * unchanged). The raw prefilter before round() is exact-semantics-
-    * preserving: round() is BigDecimal-based and dominates when applied
-    * to every pair, and any pair whose rounded value reaches 0.45 has
-    * raw >= 0.4499995.
+    * ≤ cap: the n²/2 brute pair scan ([[Similarity.bruteNearDups]]).
     *
     * > cap: exact pairs TOUCHING the anchor set only — the bounded
     * anchor side broadcasts (≤ cap rows of 64 floats ≈ 0.6 MB) and the
@@ -586,38 +580,20 @@ object Dedup {
     val e = Tables.embeddings(s, dir)
       .withColumn("nrm", VectorFns.l2Norm(col("embedding")))
     val n = e.count()
-    if (n <= anchorCap) {
-      val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-        col("nrm").as("na"))
-      val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-        col("nrm").as("nb"))
-      a.join(b, col("vec_a") < col("vec_b"))
-        .withColumn("cos_raw",
-          VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
-        .filter(col("cos_raw") >= 0.4499)
-        .withColumn("cos", round(col("cos_raw"), 6))
-        .filter(col("cos") >= 0.45)
-        .select(col("vec_a"), col("vec_b"), col("cos"))
-        .orderBy(col("vec_a"), col("vec_b"))
-    } else {
+    val pairs = if (n <= anchorCap) Similarity.bruteNearDups(e) else {
       val anc = e.filter(isEmbedAnchor(col("vec_id"), n, anchorCap))
         .select(col("vec_id").as("aid"), col("embedding").as("ea"),
           col("nrm").as("na"))
       val corp = e.select(col("vec_id").as("bid"), col("embedding").as("eb"),
         col("nrm").as("nb"),
         isEmbedAnchor(col("vec_id"), n, anchorCap).as("b_anch"))
-      corp.join(broadcast(anc),
+      Similarity.nearDupCos(corp.join(broadcast(anc),
           col("aid") =!= col("bid") &&
-            (col("aid") < col("bid") || !col("b_anch")))
-        .withColumn("cos_raw",
-          VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
-        .filter(col("cos_raw") >= 0.4499)
-        .withColumn("cos", round(col("cos_raw"), 6))
-        .filter(col("cos") >= 0.45)
+            (col("aid") < col("bid") || !col("b_anch"))))
         .select(least(col("aid"), col("bid")).as("vec_a"),
           greatest(col("aid"), col("bid")).as("vec_b"), col("cos"))
-        .orderBy(col("vec_a"), col("vec_b"))
     }
+    pairs.orderBy(col("vec_a"), col("vec_b"))
   }
 
   private val dupGroupsReady = new graft.Memo[DataFrame]
@@ -821,21 +797,7 @@ object Dedup {
         val cands = Similarity.annCandidates(e, "vec_id", "embedding")
           .filter(col("qid") < col("nid"))
           .select(col("qid").as("vec_a"), col("nid").as("vec_b"))
-        // shuffle_hash: SMJ would sort the pair stream while it carries
-        // the first-attached vector (wide rows, all-core spill at the
-        // 30× probe); SHJ builds on the narrow vector relation and
-        // streams the wide side
-        cands
-          .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-            col("nrm").as("na")).hint("shuffle_hash"), "vec_a")
-          .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-            col("nrm").as("nb")).hint("shuffle_hash"), "vec_b")
-          .withColumn("cos_raw",
-            VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
-          .filter(col("cos_raw") >= 0.4499)
-          .withColumn("cos", round(col("cos_raw"), 6))
-          .filter(col("cos") >= 0.45)
-          .select(col("vec_a"), col("vec_b"), col("cos"))
+        Similarity.nearDupPairs(cands, e)
           .orderBy(col("vec_a"), col("vec_b"))
       },
       None
@@ -899,31 +861,10 @@ object Dedup {
         val probes = Similarity.semanticProbes(s, dir)
         val assigned = probes.filter(col("probe_rank") === 1L)
           .select(col("vec_id"), col("cell_id"))
-        // emit-once (the 30×-probe lesson applied at birth): a pair
-        // sharing several probed cells is kept only at the SMALLEST
-        // shared cell — array_intersect of two sorted sigs is sorted,
-        // so element 1 is that cell. Cuts the duplicate meetings (≤
-        // nProbe per pair) BEFORE the vector attach and cosine, with
-        // the emitted pair set provably unchanged (LlmOpsSpec pins
-        // equality to the naive distinct formulation).
-        val cand = probes
-          .select(col("cell_id"), col("vec_id").as("vec_a"), col("psig").as("asig"))
-          .join(probes.select(col("cell_id"), col("vec_id").as("vec_b"),
-            col("psig").as("bsig")), Seq("cell_id"))
-          .filter(col("vec_a") < col("vec_b"))
-          .filter(element_at(array_intersect(col("asig"), col("bsig")), 1) ===
-            col("cell_id"))
-          .select(col("vec_a"), col("vec_b"))
-        val ev = e.select(col("vec_id"), col("embedding"), col("nrm"))
-        val dropped = cand
-          .join(ev.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-            col("nrm").as("na")).hint("shuffle_hash"), "vec_a")
-          .join(ev.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-            col("nrm").as("nb")).hint("shuffle_hash"), "vec_b")
-          .withColumn("cos_raw",
-            VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
-          .filter(col("cos_raw") >= 0.4499)
-          .filter(round(col("cos_raw"), 6) >= 0.45)
+        // emit-once (the 30×-probe lesson applied at birth,
+        // [[Similarity.cellPairs]]): each pair once, at its smallest
+        // shared cell, BEFORE the vector attach and cosine
+        val dropped = Similarity.nearDupPairs(Similarity.cellPairs(probes), e)
           .select(col("vec_b").as("vec_id"))
           .distinct()
         assigned

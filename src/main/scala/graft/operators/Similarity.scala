@@ -225,16 +225,17 @@ object Similarity {
   /** Spherical-k-means centroids trained with `iters` Lloyd rounds, run
     * entirely as DataFrame aggregates — fully deterministic: seeds are
     * the `nCells` lowest-id vectors, iteration count is fixed, and every
-    * step is hash-partitioning-invariant arithmetic.
+    * step is hash-partitioning-invariant arithmetic. `iters` = 0 returns
+    * the seeds themselves.
     *
     * Each round is two bounded shuffles: (1) nearest-centroid assignment
-    * — broadcast the tiny centroid table, map-side `max(struct)` argmax,
-    * exchange carries ONE row per vector; (2) new centroids — posexplode
-    * + partial-combined `avg` per (cell, position), exchange carries
-    * nCells × dim partial sums per partition, not vectors. Cells that
-    * lose all members keep their previous centroid (left-join coalesce).
-    * Cosine ranks against a mean equal ranks against the normalized
-    * mean, so no explicit re-normalization step is needed.
+    * ([[assignToCentroids]]: exchange carries ONE row per vector); (2)
+    * new centroids — posexplode + partial-combined `avg` per (cell,
+    * position), exchange carries nCells × dim partial sums per
+    * partition, not vectors. Cells that lose all members keep their
+    * previous centroid (left-join coalesce). Cosine ranks against a mean
+    * equal ranks against the normalized mean, so no explicit
+    * re-normalization step is needed.
     *
     * The training set is capped at `trainRowsPerCell · nCells` rows via
     * a deterministic hash sample: Lloyd rounds cost |train| · nCells
@@ -257,13 +258,7 @@ object Similarity {
     var cents = pts.orderBy(col("vid")).limit(nCells)
       .select(col("vid").as("cell_id"), col("v").as("cent"))
     for (_ <- 1 to iters) {
-      val assigned = pts.crossJoin(broadcast(cents))
-        .withColumn("sim", VectorFns.cosineFast(col("v"), col("cent")))
-        .groupBy(col("vid"))
-        .agg(first(col("v")).as("v"),
-          max(struct(col("sim"), (-col("cell_id")).as("neg_cell"))).as("best"))
-        .select(col("v"), (-col("best.neg_cell")).as("cell_id"))
-      val means = assigned
+      val means = assignToCentroids(pts, "vid", "v", cents)
         .select(col("cell_id"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell_id"), col("pos"))
         .agg(avg(col("x")).as("m"))
@@ -277,26 +272,11 @@ object Similarity {
     cents
   }
 
-  /** Centroid table: `trainIters` = 0 seeds from the corpus itself (the
-    * `nCells` lowest-id vectors — cheap, reproducible); > 0 refines the
-    * seeds with that many deterministic Lloyd rounds
-    * ([[trainCentroids]]), giving data-adaptive Voronoi cells. */
-  private def centroids(vectors: DataFrame, idCol: String, vecCol: String,
-                        nCells: Int, trainIters: Int,
-                        corpusN: Long = -1L): DataFrame =
-    if (trainIters > 0)
-      trainCentroids(vectors, idCol, vecCol, nCells, trainIters, corpusN)
-    else vectors.orderBy(col(idCol)).limit(nCells)
-      .select(col(idCol).as("cell_id"), col(vecCol).as("cent"))
-
   /** One row per (vector, probed cell): each vector's `nProbe` nearest
-    * centroids ranked by cosine (`probe_rank` 1 = primary cell). The IVF
-    * search knob: index rows live in their primary cell only; queries
-    * scan their `nProbe` nearest cells, trading candidate volume
-    * linearly for recall. The ranking is the row_number top-k idiom,
-    * which RewriteRowNumberTopK lowers to the bounded TopKPerKey
-    * operator — the exchange carries ≤ nProbe rows per vector per input
-    * partition, never the n × nCells cross product.
+    * trained centroids ([[nearestCells]], `probe_rank` 1 = primary
+    * cell). The IVF search knob: index rows live in their primary cell
+    * only; queries scan their `nProbe` nearest cells, trading candidate
+    * volume linearly for recall.
     *
     * The coarse quantizer is CORPUS-SIZE-DRIVEN: below
     * [[HierarchicalAutoN]] vectors the assignment ranks every centroid
@@ -363,18 +343,20 @@ object Similarity {
     * LlmOpsSpec pins the derivation. */
   def adcNProbeFor(nCells: Int): Int = math.max(16, (nCells + 1) / 2)
 
-  /** IVF-ADC corpus-side assignment fan-out (r13 verdict item 2): how
-    * many nearest cells each CORPUS vector is indexed under
-    * ([[softAssignToCentroids]]; 1 = classic primary-cell IVF). With
-    * the probe policy holding the probed cell fraction at ~1/2, the
-    * residual recall loss is the partner's primary cell landing in the
-    * unprobed half — P ≈ 1/2 per pair under top-1 assignment, ≈ 1/4
-    * under top-2 (both of its two home cells must miss, and cell
-    * membership is near-independent for a near-isotropic corpus).
-    * Measured A/B vs K=1 (SCALEPROBE r14): see the r14 section for
-    * the recall@10 ladder and wall at sf0.1/30×/100× — candidate
-    * volume is bounded by the query slice, so the cost rides the
-    * n·nCells assignment pass that dominates either way. */
+  /** IVF-ADC corpus-side assignment fan-out (r13 verdict item 2): each
+    * CORPUS vector is indexed under its `AdcAssignK` nearest cells
+    * ([[nearestCells]]; 1 = classic primary-cell IVF) — the faiss
+    * "multiple assignment" lever. With the probe policy holding the
+    * probed cell fraction at ~1/2, the residual recall loss is the
+    * partner's primary cell landing in the unprobed half — P ≈ 1/2 per
+    * pair under top-1 assignment, ≈ 1/4 under top-2 (both of its two
+    * home cells must miss, and cell membership is near-independent for
+    * a near-isotropic corpus). Candidate volume scales ×k and a pair
+    * can meet in up to k cells, so [[ivfadcTopk]] dedups its
+    * candidates (bounded: the query slice is 5 ids). Measured A/B vs
+    * K=1 (SCALEPROBE r14): see the r14 section for the recall@10
+    * ladder and wall at sf0.1/30×/100× — the cost rides the n·nCells
+    * assignment pass that dominates either way. */
   val AdcAssignK: Int = 2
 
   def ivfProbeAssign(vectors: DataFrame, idCol: String, vecCol: String,
@@ -392,15 +374,15 @@ object Similarity {
     // production callers (nProbe ≤ 8 vs reachable ~90 at 320 cells)
     // never trip this — no behavior change (IvfGuardSpec pins both
     // sides of the boundary).
-    val nSuperBound = math.max(2, math.ceil(math.sqrt(nCells.toDouble)).toInt)
-    val reachable = nProbeSuper.toLong * (nCells.toLong / nSuperBound)
+    val nSuper = math.max(2, math.ceil(math.sqrt(nCells.toDouble)).toInt)
+    val reachable = nProbeSuper.toLong * (nCells.toLong / nSuper)
     val useHier = (hierarchical ||
       (corpusN >= HierarchicalAutoN && nCells > 64)) && nProbe <= reachable
-    val cents = centroids(vectors, idCol, vecCol, nCells, trainIters, corpusN)
-    val w = Window.partitionBy(col(idCol)).orderBy(col("sim").desc, col("cell_id"))
+    val cents = trainCentroids(vectors, idCol, vecCol, nCells, trainIters,
+      corpusN)
     if (!useHier || nCells <= 64) {
       // flat ranking: exact nProbe-nearest cells
-      probeAssignToCentroids(vectors, idCol, vecCol, cents, nProbe)
+      nearestCells(vectors, idCol, vecCol, cents, nProbe)
     } else {
       // Two-level coarse quantizer (the IMI/IVF-tree shape): cluster
       // the CENTROIDS into ~√nCells super-cells (tiny second k-means
@@ -417,9 +399,8 @@ object Similarity {
       // gets silently fewer probes — a BOUNDED query slice that wants
       // a constant probed FRACTION (q_similarity_ivfadc's
       // adcNProbeFor) must rank flat against the trained centroids
-      // (probeAssignToCentroids) instead of passing a large nProbe
-      // here.
-      val nSuper = nSuperBound // one formula with the guard above
+      // ([[nearestCells]]) instead of passing a large nProbe here.
+      //
       // pin the trained centroids ONCE: three lazy consumers follow
       // (super-training, the cell→super map, the probe chain), and each
       // broadcast would otherwise re-run the full Lloyd lineage
@@ -432,115 +413,250 @@ object Similarity {
         .select(col("cell_id").as("super_id"), col("cent").as("scent"))
       // each centroid's home super-cell: nCells × nSuper rows, map-side
       // argmax — one row per centroid out
-      val cellToSuper = centsP.crossJoin(broadcast(superCents))
-        .withColumn("ssim", VectorFns.cosineFast(col("cent"), col("scent")))
-        .groupBy(col("cell_id"))
-        .agg(first(col("cent")).as("cent"),
-          max(struct(col("ssim"), (-col("super_id")).as("neg"))).as("best"))
-        .select(col("cell_id"), col("cent"), (-col("best.neg")).as("super_id"))
-      val ws = Window.partitionBy(col(idCol))
-        .orderBy(col("ssim").desc, col("super_id"))
-      vectors.crossJoin(broadcast(superCents))
-        .withColumn("ssim", VectorFns.cosineFast(col(vecCol), col("scent")))
-        .withColumn("srank", row_number().over(ws))
-        .filter(col("srank") <= nProbeSuper)
+      val cellToSuper = assignToCentroids(centsP, "cell_id", "cent",
+        superCents, cell = "super_id", cent = "scent")
+      val supers = nearestCells(vectors, idCol, vecCol, superCents,
+          nProbeSuper, cell = "super_id", cent = "scent")
         .select(col(idCol), col(vecCol), col("super_id"))
-        .join(broadcast(cellToSuper), "super_id")
-        .withColumn("sim", VectorFns.cosineFast(col(vecCol), col("cent")))
-        .withColumn("probe_rank", row_number().over(w).cast(LongType))
-        .filter(col("probe_rank") <= nProbe)
-        .select(col(idCol), col(vecCol), col("cell_id"), col("probe_rank"))
+      nearestCells(supers, idCol, vecCol, cellToSuper, nProbe,
+        on = Seq("super_id"))
     }
   }
 
-  /** Flat probe-ranking against a GIVEN centroid table: every vector's
-    * nProbe nearest cells by exact cosine (ties to the lowest cell id).
-    * The probed half of the train/add split — shared by
-    * [[ivfProbeAssign]]'s flat branch and the incremental-index query
-    * so a probe-window or tie-break retune applies to both. */
-  def probeAssignToCentroids(vectors: DataFrame, idCol: String,
-                             vecCol: String, cents: DataFrame,
-                             nProbe: Int): DataFrame = {
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("sim").desc, col("cell_id"))
-    vectors.crossJoin(broadcast(cents))
-      .withColumn("sim", VectorFns.cosineFast(col(vecCol), col("cent")))
-      .withColumn("probe_rank", row_number().over(w).cast(LongType))
-      .filter(col("probe_rank") <= nProbe)
-      .select(col(idCol), col(vecCol), col("cell_id"), col("probe_rank"))
-  }
+  // ---- Shared search stages ----------------------------------------
+  //
+  // Every embedding query composes these: the cell argmax and cell
+  // ranking, the emit-once cell candidate join, the near-dup cosine
+  // rule with its vector attach, the exact re-rank top-k and the ADC
+  // scorer. A retune or a tie-break fix lands in one place.
 
-  /** Primary-cell assignment against a GIVEN centroid table — the faiss
-    * `add` half of the train/add split, and the kernel the incremental
-    * index-maintenance path reuses (new arrivals are assigned to the
-    * STANDING centroids, never retrained against). argmax via
-    * max(struct(sim, -cell_id)): lexicographic struct max == best sim
-    * with ties to the lowest cell id. Unlike a row_number window (which
-    * would shuffle all n·nCells joined rows, vectors included), the
-    * aggregate partial-combines map-side — the exchange carries one row
-    * per vector regardless of nCells. */
+  /** Each vector's nearest cell — the faiss `add` half of the
+    * train/add split, the Lloyd assignment step and the two-level
+    * quantizer's cell→super map. argmax via max(struct(sim, -cell)):
+    * lexicographic struct max == best cosine with ties to the lowest
+    * cell id. Unlike a row_number window (which would shuffle all
+    * n·nCells joined rows, vectors included), the aggregate
+    * partial-combines map-side — the exchange carries one row per
+    * vector regardless of nCells. Returns (idCol, vecCol, cell). */
   def assignToCentroids(vectors: DataFrame, idCol: String, vecCol: String,
-                        cents: DataFrame): DataFrame =
+                        cents: DataFrame, cell: String = "cell_id",
+                        cent: String = "cent"): DataFrame =
     vectors.crossJoin(broadcast(cents))
-      .withColumn("sim", VectorFns.cosineFast(col(vecCol), col("cent")))
+      .withColumn("sim", VectorFns.cosineFast(col(vecCol), col(cent)))
       .groupBy(col(idCol))
       .agg(
         first(col(vecCol)).as(vecCol),
-        max(struct(col("sim"), (-col("cell_id")).as("neg_cell"))).as("best"))
-      .select(col(idCol), col(vecCol), (-col("best.neg_cell")).as("cell_id"))
+        max(struct(col("sim"), (-col(cell)).as("neg_cell"))).as("best"))
+      .select(col(idCol), col(vecCol), (-col("best.neg_cell")).as(cell))
 
-  /** Corpus-side soft-assignment fan-out for IVF-ADC (r13 verdict item
-    * 2): each corpus vector lives in its `k` nearest cells instead of
-    * its primary cell only, so a query probing a constant fraction of
-    * cells stops missing partners whose PRIMARY cell fell in the
-    * unprobed half while their second-nearest did not — the faiss
-    * "multiple assignment" lever. Candidate volume scales ×k (bounded:
-    * the ivfadc query slice is 5 ids), and a (query, corpus) pair can
-    * now meet in up to k cells, so the candidate join must dedup
-    * (bounded distinct — see [[ivfadcTopk]]). See [[AdcAssignK]] for
-    * the measured A/B that set the default. */
-  def softAssignToCentroids(vectors: DataFrame, idCol: String,
-                            vecCol: String, cents: DataFrame,
-                            k: Int): DataFrame = {
+  /** Each vector's `k` nearest cells by exact cosine, ranked 1..k in
+    * `probe_rank` (ties to the lowest cell id): the IVF probe ranking,
+    * the IVF-ADC corpus fan-out ([[AdcAssignK]]) and both levels of the
+    * two-level quantizer. The ranking is the row_number top-k idiom,
+    * which RewriteRowNumberTopK lowers to the bounded TopKPerKey
+    * operator — the exchange carries ≤ k rows per vector per input
+    * partition, never the n × nCells cross product; a caller that
+    * selects away `vecCol` gets the narrow (id, cell, sim) exchange
+    * from column pruning. The centroid table broadcasts; `on` joins it
+    * on those columns instead of crossing it (the second level: only
+    * the cells of each vector's probed supers). Returns (idCol, vecCol,
+    * cell, probe_rank). */
+  def nearestCells(vectors: DataFrame, idCol: String, vecCol: String,
+                   cents: DataFrame, k: Int, cell: String = "cell_id",
+                   cent: String = "cent",
+                   on: Seq[String] = Nil): DataFrame = {
     val w = Window.partitionBy(col(idCol))
-      .orderBy(col("sim").desc, col("cell_id"))
-    vectors.crossJoin(broadcast(cents))
-      .withColumn("sim", VectorFns.cosineFast(col(vecCol), col("cent")))
-      // narrow BEFORE ranking: the TopKPerKey exchange carries ≤k
-      // 24-byte (id, cell, sim) rows per vector per input partition,
-      // never the 64-double embedding (the fused-probe-table lesson)
-      .select(col(idCol), col("cell_id"), col("sim"))
-      .withColumn("soft_rank", row_number().over(w).cast(LongType))
-      .filter(col("soft_rank") <= k)
-      .select(col(idCol), col("cell_id"))
+      .orderBy(col("sim").desc, col(cell))
+    val joined =
+      if (on.isEmpty) vectors.crossJoin(broadcast(cents))
+      else vectors.join(broadcast(cents), on)
+    joined
+      .withColumn("sim", VectorFns.cosineFast(col(vecCol), col(cent)))
+      .withColumn("probe_rank", row_number().over(w).cast(LongType))
+      .filter(col("probe_rank") <= k)
+      .select(col(idCol), col(vecCol), col(cell), col("probe_rank"))
   }
 
-  private val ivfadcIdxReady = new graft.Memo[(DataFrame, DataFrame)]
+  /** Candidate id-pairs (vec_a < vec_b) sharing a probed cell, each
+    * emitted ONCE: a pair sharing several probed cells is kept only at
+    * the SMALLEST shared cell — array_intersect of two sorted `psig`s
+    * is sorted, so element 1 is that cell. Cuts the duplicate meetings
+    * (≤ nProbe per pair) before any vector attach or cosine, with the
+    * emitted pair set equal to the naive distinct (LlmOpsSpec pins it).
+    * `probes` rows carry (vec_id, cell_id, psig) — see
+    * [[semanticProbes]]. */
+  def cellPairs(probes: DataFrame): DataFrame =
+    probes
+      .select(col("cell_id"), col("vec_id").as("vec_a"), col("psig").as("asig"))
+      .join(probes.select(col("cell_id"), col("vec_id").as("vec_b"),
+        col("psig").as("bsig")), Seq("cell_id"))
+      .filter(col("vec_a") < col("vec_b"))
+      .filter(element_at(array_intersect(col("asig"), col("bsig")), 1) ===
+        col("cell_id"))
+      .select(col("vec_a"), col("vec_b"))
+
+  /** The near-dup rule every embedding dedup and the cluster graph
+    * share: round(cos, 6) ≥ 0.45, over pairs carrying vectors `ea`/`eb`
+    * and their norms `na`/`nb`. Norms are precomputed once per VECTOR;
+    * one multiply-add per element via dot_product — bit-identical to
+    * cosine_sim since the norm fold order is unchanged. The raw
+    * prefilter before round() is exact-semantics-preserving: round()
+    * is BigDecimal-based and dominates when applied to every pair, and
+    * any pair whose rounded value reaches 0.45 has raw ≥ 0.4499995.
+    * Adds `cos`. */
+  def nearDupCos(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("cos_raw",
+        VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .filter(col("cos_raw") >= 0.4499) // exact superset prefilter
+      .withColumn("cos", round(col("cos_raw"), 6))
+      .filter(col("cos") >= 0.45)
+
+  /** One side of a pair: (vec_x, ex, nx) from `vecs` (vec_id,
+    * embedding, nrm), for side x = "a" or "b". */
+  private def pairSide(vecs: DataFrame, x: String): DataFrame =
+    vecs.select(col("vec_id").as(s"vec_$x"), col("embedding").as(s"e$x"),
+      col("nrm").as(s"n$x"))
+
+  /** Every near-dup (vec_a < vec_b, cos) of `vecs` (vec_id, embedding,
+    * nrm) by the exact n²/2 pair scan — the oracled reference form. */
+  def bruteNearDups(vecs: DataFrame): DataFrame =
+    nearDupCos(pairSide(vecs, "a")
+        .join(pairSide(vecs, "b"), col("vec_a") < col("vec_b")))
+      .select(col("vec_a"), col("vec_b"), col("cos"))
+
+  /** Near-dup (vec_a, vec_b, cos) from candidate id-pairs (vec_a,
+    * vec_b): both vectors re-attach from `vecs` (vec_id, embedding, nrm)
+    * via shuffle-hash joins, then [[nearDupCos]]. A sort-merge join
+    * would SORT the pair stream while it carries the first-attached
+    * vector (wide rows, all-core spill at the 30× probe); a shuffled
+    * hash join builds on the narrow vector relation and streams the
+    * wide side. */
+  def nearDupPairs(ids: DataFrame, vecs: DataFrame): DataFrame =
+    nearDupCos(ids
+      .join(pairSide(vecs, "a").hint("shuffle_hash"), "vec_a")
+      .join(pairSide(vecs, "b").hint("shuffle_hash"), "vec_b"))
+      .select(col("vec_a"), col("vec_b"), col("cos"))
+
+  /** The exact re-rank: cosine of each candidate (qid, nid) pair's
+    * attached vectors `qvec`/`nvec`, rounded 6 dp, and the `k` best per
+    * query by (score desc, nid) — the rounded total order every oracle
+    * replays. The output keeps only (qid, rnk, nid, score, keep…), so
+    * column pruning narrows the ranked rows to those columns: the top-k
+    * never orders rows still carrying vectors. The row_number filter
+    * lowers to TopKPerKey. Unordered. */
+  def exactTopk(pairs: DataFrame, k: Int, score: String = "cos",
+                keep: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col(score).desc, col("nid"))
+    pairs
+      .withColumn(score,
+        round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
+      .withColumn("rnk", row_number().over(w).cast(LongType))
+      .filter(col("rnk") <= k)
+      .select(Seq(col("qid"), col("rnk"), col("nid"), col(score)) ++
+        keep.map(c => col(c)): _*)
+  }
+
+  /** ADC search over the PQ codes ([[pqModel]]) for a bounded query
+    * slice `isQuery`, then the exact refine. Each query builds a lookup
+    * table of per-subspace dot products against the codebook (|queries|
+    * × M × K rows, broadcast); approximate cosine is a table-lookup sum
+    * over a vector's M codes, divided by the reconstructed norm
+    * (per-vector Σ|cent|², query-independent) and the query norm — the
+    * scan touches codes, never floats. `cand` names the (qid, nid)
+    * pairs to score (IVF-ADC's probed candidates); without it every
+    * coded vector scores against every query but itself (the PQ-ADC
+    * full scan).
+    * EXACT-REFINE stage (faiss IndexRefineFlat; r10): the ADC top
+    * [[AdcRefineR]] per query are re-ranked by exact cosine
+    * ([[exactTopk]]) — floats are read for ≤ R rows per query, so code
+    * quantization stops being a ranking loss term. Returns the top 10
+    * (qid, rnk, nid, score) ordered by (qid, rnk). */
+  private def adcTopk(s: SparkSession, dir: String, isQuery: Column,
+                      cand: Option[DataFrame]): DataFrame = {
+    val (cents, coded) = pqModel(s, dir)
+    val dot = (a: Column, b: Column) =>
+      aggregate(zip_with(a, b, (x, y) => x * y),
+        lit(0.0), (acc, d) => acc + d)
+    val sumSq = (a: Column) =>
+      aggregate(transform(a, x => x * x), lit(0.0), (acc, d) => acc + d)
+    val e = Tables.embeddings(s, dir)
+    val ev = e.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("v"))
+    val queries = ev.filter(isQuery)
+      .select(col("vec_id").as("qid"), col("v"),
+        sqrt(sumSq(col("v"))).as("qn"))
+    val qsubs = queries.select(col("qid"), posexplode(array(
+      (0 until PqM).map(m => slice(col("v"), m * PqD + 1, PqD)): _*))
+      .as(Seq("sub", "qsv")))
+    val lut = qsubs.join(broadcast(cents), "sub")
+      .select(col("qid").as("lqid"), col("sub").as("lsub"), col("cell"),
+        dot(col("qsv"), col("cent")).as("part"))
+    val centN = cents.select(col("sub"), col("cell"),
+      sumSq(col("cent")).as("cn2"))
+    val vnorm = coded
+      .join(broadcast(centN),
+        coded("sub") === centN("sub") && col("code") === col("cell"))
+      .groupBy(col("vec_id")).agg(sqrt(sum(col("cn2"))).as("vn"))
+    val codes = coded.withColumnRenamed("vec_id", "nid")
+    val onCode = col("sub") === col("lsub") && col("code") === col("cell")
+    val hits = cand match {
+      case Some(c) => c.join(codes, "nid")
+        .join(broadcast(lut), col("qid") === col("lqid") && onCode)
+      case None => codes
+        .join(broadcast(lut), onCode && col("nid") =!= col("lqid"))
+        .withColumnRenamed("lqid", "qid")
+    }
+    val scored = hits
+      .groupBy(col("qid"), col("nid")).agg(sum(col("part")).as("dadc"))
+      .join(vnorm.withColumnRenamed("vec_id", "nid"), "nid")
+      .join(broadcast(queries.select(col("qid"), col("qn"))), "qid")
+      .select(col("qid"), col("nid"),
+        round(col("dadc") / (col("vn") * col("qn")), 6).as("score"))
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("score").desc, col("nid"))
+    val short = scored
+      .withColumn("rnk0", row_number().over(w))
+      .filter(col("rnk0") <= AdcRefineR)
+      .select(col("qid"), col("nid"))
+    exactTopk(short
+        .join(e.select(col("vec_id").as("nid"), col("embedding").as("nvec")),
+          "nid")
+        .join(broadcast(e.filter(isQuery)
+          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))), "qid"),
+        k = 10, score = "score")
+      .orderBy(col("qid"), col("rnk"))
+  }
+
+  private val ivfadcIdxReady = new graft.Memo[(DataFrame, DataFrame, Int)]
 
   /** IVF-ADC coarse index, memoized per corpus (the pqModel pattern):
     * (trained centroids, per-vector soft cell assignment — AdcAssignK
-    * rows per vector). Memoization exists because TWO consumers run
-    * the identical build per bench pass (q_similarity_ivfadc's 5-query
-    * slice and the planted-tier recall stamp's sampled-query slice,
-    * r13 verdict item 6) and the n·nCells assignment pass is the
-    * family's dominant cost at probe scale — one build per JVM per
-    * corpus. */
-  def ivfadcIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    * rows of (vec_id, cell_id) per vector, the cell count). Memoization
+    * exists because TWO consumers run the identical build per bench
+    * pass (q_similarity_ivfadc's 5-query slice and the planted-tier
+    * recall stamp's sampled-query slice, r13 verdict item 6) and the
+    * n·nCells assignment pass is the family's dominant cost at probe
+    * scale — one build per JVM per corpus; the cell count rides along
+    * so no search recounts the corpus. */
+  def ivfadcIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, Int) =
     ivfadcIdxReady(s, dir) {
       val e = Tables.embeddings(s, dir)
       val n = e.count()
       val nCells = ivfCellsFor(n)
       val coarse = trainCentroids(e, "vec_id", "embedding",
         nCells, iters = 3, corpusN = n).localCheckpoint()
-      // CORPUS side: each vector in its AdcAssignK nearest cells via
-      // the narrow bounded top-k (the exchange and the checkpoint
-      // carry AdcAssignK (id, cell) rows per vector, never the
-      // 64-double embedding — at 100× a fused nProbe-deep probe table
-      // would have checkpointed ~15 GB for ranks nobody reads)
+      // CORPUS side: each vector in its AdcAssignK nearest cells; the
+      // exchange and the checkpoint carry AdcAssignK (id, cell) rows
+      // per vector, never the 64-double embedding — at 100× a fused
+      // nProbe-deep probe table would have checkpointed ~15 GB for
+      // ranks nobody reads
       val assigned =
-        softAssignToCentroids(e, "vec_id", "embedding", coarse, AdcAssignK)
+        nearestCells(e, "vec_id", "embedding", coarse, AdcAssignK)
+          .select(col("vec_id"), col("cell_id"))
           .localCheckpoint()
-      (coarse, assigned)
+      (coarse, assigned, nCells)
     }
 
   /** The IVF-ADC retrieval pipeline for an arbitrary bounded query
@@ -560,91 +676,22 @@ object Similarity {
   def ivfadcTopk(s: SparkSession, dir: String,
                  isQuery: Column): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val nCells = ivfCellsFor(e.count())
-    val (coarse, assigned) = ivfadcIndex(s, dir)
-    val qprobes = probeAssignToCentroids(e.filter(isQuery),
+    val (coarse, assigned, nCells) = ivfadcIndex(s, dir)
+    val qprobes = nearestCells(e.filter(isQuery),
       "vec_id", "embedding", coarse, adcNProbeFor(nCells))
-    val cand0 = qprobes
+    // under soft assignment a (query, corpus) pair can meet in up to
+    // AdcAssignK probed cells — dedup before scoring (bounded: the
+    // distinct state is |queries| × fraction × n narrow id-pairs, a
+    // bounded-query-slice budget by contract)
+    val cand = qprobes
       .select(col("cell_id"), col("vec_id").as("qid"))
       .join(assigned
         .select(col("cell_id"), col("vec_id").as("nid")), Seq("cell_id"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"))
-    // under soft assignment a (query, corpus) pair can meet in up to
-    // AdcAssignK probed cells — dedup before scoring (bounded: the
-    // distinct state is |queries| × fraction × n narrow id-pairs, a
-    // bounded-query-slice budget by contract)
-    val cand = cand0.distinct()
-    val (cents, coded) = pqModel(s, dir)
-    val dot = (a: Column, b: Column) =>
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0), (acc, d) => acc + d)
-    val sumSq = (a: Column) =>
-      aggregate(transform(a, x => x * x), lit(0.0), (acc, d) => acc + d)
-    val ev = e.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val queries = ev.filter(isQuery)
-      .select(col("vec_id").as("qid"), col("v"),
-        sqrt(sumSq(col("v"))).as("qn"))
-    val qsubs = queries.select(col("qid"), posexplode(array(
-      (0 until PqM).map(m => slice(col("v"), m * PqD + 1, PqD)): _*))
-      .as(Seq("sub", "qsv")))
-    val lut = qsubs.join(broadcast(cents), "sub")
-      .select(col("qid"), col("sub"), col("cell"),
-        dot(col("qsv"), col("cent")).as("part"))
-    val centN = cents.select(col("sub"), col("cell"),
-      sumSq(col("cent")).as("cn2"))
-    val vnorm = coded
-      .join(broadcast(centN),
-        coded("sub") === centN("sub") && col("code") === col("cell"))
-      .groupBy(col("vec_id")).agg(sqrt(sum(col("cn2"))).as("vn"))
-    val scored = cand
-      .join(coded.withColumnRenamed("vec_id", "nid"), "nid")
-      .join(broadcast(lut.select(col("qid").as("lqid"),
-        col("sub").as("lsub"), col("cell"), col("part"))),
-        col("qid") === col("lqid") && col("sub") === col("lsub") &&
-          col("code") === col("cell"))
-      .groupBy(col("qid"), col("nid")).agg(sum(col("part")).as("dadc"))
-      .join(vnorm.withColumnRenamed("vec_id", "nid"), "nid")
-      .join(broadcast(queries.select(col("qid"), col("qn"))), "qid")
-      .select(col("qid"), col("nid"),
-        round(col("dadc") / (col("vn") * col("qn")), 6).as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    // EXACT-REFINE stage (faiss IndexRefineFlat; r10): the ADC
-    // top-R shortlist per query is re-ranked by exact float
-    // cosine — floats are read for ≤ R rows per query only, so
-    // the codes-only corpus scan above stays the cost shape and
-    // recall recovers to the IVF candidate recall (code
-    // quantization stops being a ranking loss term). See
-    // AdcRefineR for the measured on/off A/B.
-    val short = scored
-      .withColumn("rnk0", row_number().over(w))
-      .filter(col("rnk0") <= AdcRefineR)
-      .select(col("qid"), col("nid"))
-    val w2 = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    short
-      .join(e.select(col("vec_id").as("nid"),
-        col("embedding").as("nv")), "nid")
-      .join(broadcast(e.filter(isQuery)
-        .select(col("vec_id").as("qid"),
-          col("embedding").as("qv"))), "qid")
-      .withColumn("score",
-        round(VectorFns.cosineFast(col("qv"), col("nv")), 6))
-      .withColumn("rnk", row_number().over(w2).cast(LongType))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("rnk"), col("nid"), col("score"))
-      .orderBy(col("qid"), col("rnk"))
+      .distinct()
+    adcTopk(s, dir, isQuery, Some(cand))
   }
-
-  /** IVF-style index: assign every vector to its single nearest centroid.
-    * Search probes only the query's cell, so the pair work drops from n²
-    * to ~Σ cell². */
-  def ivfAssign(vectors: DataFrame, idCol: String, vecCol: String,
-                nCells: Int, trainIters: Int = 0): DataFrame =
-    assignToCentroids(vectors, idCol, vecCol,
-      centroids(vectors, idCol, vecCol, nCells, trainIters))
 
   /** Candidate id-pairs sharing ≥1 LSH bucket — ids only, so the bucket
     * self-join never carries vectors. Shared by the ANN search and the
@@ -692,20 +739,6 @@ object Similarity {
       .filter(col("qid") =!= col("nid"))
       .filter(emitOnce)
       .select(col("qid"), col("nid"))
-  }
-
-  private def topkBrute(s: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val queries = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val corpus = e.select(col("vec_id").as("nid"), col("embedding").as("nvec"))
-    val scored = corpus.join(broadcast(queries), col("qid") =!= col("nid"))
-      .withColumn("cos", round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("nid"), col("cos"))
-      .orderBy(col("qid"), col("rnk"))
   }
 
   /** Brute pair-scan ceiling for [[embedClustersPlan]]: below it the
@@ -762,47 +795,12 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
       .withColumn("nrm", VectorFns.l2Norm(col("embedding")))
     val n = e.count()
-    val pairs = if (n < bruteMax) {
-      val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-        col("nrm").as("na"))
-      val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-        col("nrm").as("nb"))
-      a.join(b, col("vec_a") < col("vec_b"))
-        .withColumn("cos_raw",
-          VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
-        .filter(col("cos_raw") >= 0.4499) // exact superset prefilter
-        .filter(round(col("cos_raw"), 6) >= 0.45)
-        .select(col("vec_a"), col("vec_b"))
-    } else {
-      // multi-probe cell candidates with emit-once dedup at the
-      // smallest shared cell — q_dedup_semantic's pipeline (see the
-      // 30×-probe rationale there); vectors re-attach via
-      // shuffle-hash joins so no sort ever carries a wide row. The
-      // probe table itself is the shared memoized artifact
-      // (semanticProbes — identical quantizer/params as the dedup).
-      val probes = semanticProbes(s, dir)
-        .select(col("vec_id"), col("cell_id"), col("psig"))
-      val cand = probes
-        .select(col("cell_id"), col("vec_id").as("vec_a"),
-          col("psig").as("asig"))
-        .join(probes.select(col("cell_id"), col("vec_id").as("vec_b"),
-          col("psig").as("bsig")), Seq("cell_id"))
-        .filter(col("vec_a") < col("vec_b"))
-        .filter(element_at(array_intersect(col("asig"), col("bsig")), 1) ===
-          col("cell_id"))
-        .select(col("vec_a"), col("vec_b"))
-      val ev = e.select(col("vec_id"), col("embedding"), col("nrm"))
-      cand
-        .join(ev.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-          col("nrm").as("na")).hint("shuffle_hash"), "vec_a")
-        .join(ev.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-          col("nrm").as("nb")).hint("shuffle_hash"), "vec_b")
-        .withColumn("cos_raw",
-          VectorFns.dotFast(col("ea"), col("eb")) / (col("na") * col("nb")))
-        .filter(col("cos_raw") >= 0.4499)
-        .filter(round(col("cos_raw"), 6) >= 0.45)
-        .select(col("vec_a"), col("vec_b"))
-    }
+    // above bruteMax: q_dedup_semantic's candidates — the shared
+    // memoized probe table (semanticProbes — identical quantizer/params
+    // as the dedup), emit-once cell pairs, shuffle-hash vector attach
+    val pairs = (if (n < bruteMax) bruteNearDups(e)
+      else nearDupPairs(cellPairs(semanticProbes(s, dir)), e))
+      .select(col("vec_a"), col("vec_b"))
     Dedup.connectedComponents(
       e.select(col("vec_id")), "vec_id", pairs, "vec_a", "vec_b")
       .withColumnRenamed("label", "cluster_id")
@@ -838,7 +836,14 @@ object Similarity {
     // double-precision formula (NOT list_cosine_similarity: float32).
     QueryDef(
       "q_similarity_topk",
-      (s, dir) => topkBrute(s, dir, nQueries = 5, k = 10),
+      (s, dir) => {
+        val e = Tables.embeddings(s, dir)
+        val queries = e.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        exactTopk(e.select(col("vec_id").as("nid"), col("embedding").as("nvec"))
+            .join(broadcast(queries), col("qid") =!= col("nid")), k = 10)
+          .orderBy(col("qid"), col("rnk"))
+      },
       Some(
         s"""WITH scored AS (
            |  SELECT q.vec_id AS qid, c.vec_id AS nid,
@@ -876,14 +881,9 @@ object Similarity {
             col("label").as("q_label"))
         val corpus = e.select(col("vec_id").as("nid"),
           col("embedding").as("nvec"), col("label").as("n_label"))
-        val scored = corpus.join(broadcast(anchors),
-            col("qid") =!= col("nid") && col("q_label") =!= col("n_label"))
-          .withColumn("cos",
-            round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("nid"))
-        scored.withColumn("rnk", row_number().over(w).cast(LongType))
-          .filter(col("rnk") <= 4)
+        exactTopk(corpus.join(broadcast(anchors),
+            col("qid") =!= col("nid") && col("q_label") =!= col("n_label")),
+            k = 4, keep = Seq("q_label", "n_label"))
           .select(col("qid"), col("rnk"), col("nid"), col("cos"),
             col("q_label").cast(LongType).as("q_label"),
             col("n_label").cast(LongType).as("n_label"))
@@ -1008,20 +1008,11 @@ object Similarity {
         // rows) — measured as all-core spill at the 30× probe; a
         // shuffled hash join builds on the (narrow) vector relation and
         // STREAMS the wide side
-        val withVecs = cands
-          .join(e.select(col("vec_id").as("nid"),
-            col("embedding").as("nvec")).hint("shuffle_hash"), "nid")
-          .join(e.select(col("vec_id").as("qid"),
-            col("embedding").as("qvec")).hint("shuffle_hash"), "qid")
-        val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-        withVecs
-          .withColumn("cos", round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
-          // narrow BEFORE ranking: the top-k sort must order (qid, nid,
-          // cos) 24-byte rows, not rows still carrying both vectors
-          .select(col("qid"), col("nid"), col("cos"))
-          .withColumn("rnk", row_number().over(w).cast(LongType))
-          .filter(col("rnk") <= 3)
-          .select(col("qid"), col("rnk"), col("nid"), col("cos"))
+        exactTopk(cands
+            .join(e.select(col("vec_id").as("nid"),
+              col("embedding").as("nvec")).hint("shuffle_hash"), "nid")
+            .join(e.select(col("vec_id").as("qid"),
+              col("embedding").as("qvec")).hint("shuffle_hash"), "qid"), k = 3)
           .orderBy(col("qid"), col("rnk"))
       },
       None
@@ -1288,79 +1279,13 @@ object Similarity {
     // the in-memory scan is 8 bytes/vector). Reconstructed-norm
     // correction (per-vector Σ|cent|², query-independent) makes the
     // score a proper approximate cosine rather than a raw dot.
-    // No oracle (codebooks are Spark-trained); the bench stamps
-    // dropped-pair recall vs the exact brute pairs and LlmOpsSpec
-    // floors it.
+    // The ADC top-R is re-ranked by exact cosine ([[adcTopk]]; pure
+    // ADC measured recall@10 0.74 at sf0.1, SCALEPROBE r12 has the
+    // refined number). No oracle (codebooks are Spark-trained); the
+    // bench stamps recall vs the exact top-10 and LlmOpsSpec floors it.
     QueryDef(
       "q_similarity_pqadc",
-      (s, dir) => {
-        // the bounded query slice, defined ONCE — the lut build and the
-        // refine join share it (the r10 ivfadc ADVICE: divergent copies
-        // silently drop shortlist rows)
-        val isQuery = col("vec_id") < 5
-        val (cents, coded) = pqModel(s, dir)
-        val dot = (a: org.apache.spark.sql.Column,
-                   b: org.apache.spark.sql.Column) =>
-          aggregate(zip_with(a, b, (x, y) => x * y),
-            lit(0.0), (acc, d) => acc + d)
-        val sumSq = (a: org.apache.spark.sql.Column) =>
-          aggregate(transform(a, x => x * x), lit(0.0), (acc, d) => acc + d)
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("v"))
-        val queries = e.filter(isQuery)
-          .select(col("vec_id").as("qid"), col("v"),
-            sqrt(sumSq(col("v"))).as("qn"))
-        val qsubs = queries.select(col("qid"), posexplode(array(
-          (0 until PqM).map(m => slice(col("v"), m * PqD + 1, PqD)): _*))
-          .as(Seq("sub", "qsv")))
-        val lut = qsubs.join(broadcast(cents), "sub")
-          .select(col("qid"), col("sub"), col("cell"),
-            dot(col("qsv"), col("cent")).as("part"))
-        val centN = cents.select(col("sub"), col("cell"),
-          sumSq(col("cent")).as("cn2"))
-        val vnorm = coded
-          .join(broadcast(centN),
-            coded("sub") === centN("sub") && col("code") === col("cell"))
-          .groupBy(col("vec_id")).agg(sqrt(sum(col("cn2"))).as("vn"))
-        val scored = coded
-          .join(broadcast(lut),
-            coded("sub") === lut("sub") && col("code") === col("cell"))
-          .groupBy(col("qid"), col("vec_id")).agg(sum(col("part")).as("dadc"))
-          .join(vnorm, "vec_id")
-          .join(broadcast(queries.select(col("qid"), col("qn"))), "qid")
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id").as("nid"),
-            round(col("dadc") / (col("vn") * col("qn")), 6).as("score"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-        // EXACT-REFINE stage (faiss IndexRefineFlat — the same move
-        // that took ivf_adc 0.64 → 0.84; r11 verdict item 4): the
-        // full-corpus ADC ranking keeps only code-quantization as its
-        // loss term, so re-ranking the ADC top-R by exact cosine
-        // removes it — floats are read for ≤ R rows per query while
-        // the corpus scan stays codes-only. Measured at sf0.1:
-        // recall@10 0.74 (pure ADC) → with refine, see SCALEPROBE r12.
-        val eRaw = Tables.embeddings(s, dir)
-        val short = scored
-          .withColumn("rnk0", row_number().over(w))
-          .filter(col("rnk0") <= AdcRefineR)
-          .select(col("qid"), col("nid"))
-        val w2 = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-        short
-          .join(eRaw.select(col("vec_id").as("nid"),
-            col("embedding").as("nv")), "nid")
-          .join(broadcast(eRaw.filter(isQuery)
-            .select(col("vec_id").as("qid"),
-              col("embedding").as("qv"))), "qid")
-          .withColumn("score",
-            round(VectorFns.cosineFast(col("qv"), col("nv")), 6))
-          .withColumn("rnk", row_number().over(w2).cast("long"))
-          .filter(col("rnk") <= 10)
-          .select(col("qid"), col("rnk"), col("nid"), col("score"))
-          .orderBy(col("qid"), col("rnk"))
-      },
+      (s, dir) => adcTopk(s, dir, col("vec_id") < 5, cand = None),
       None
     ),
 
@@ -1410,13 +1335,8 @@ object Similarity {
         val b = probed.filter(col("probe_rank") === 1)
           .select(col("cell_id"), col("vec_id").as("nid"),
             col("embedding").as("nvec"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-        a.join(b, Seq("cell_id"))
-          .filter(col("qid") =!= col("nid"))
-          .withColumn("cos", round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
-          .withColumn("rnk", row_number().over(w).cast(LongType))
-          .filter(col("rnk") <= 3)
-          .select(col("qid"), col("rnk"), col("nid"), col("cos"))
+        exactTopk(a.join(b, Seq("cell_id")).filter(col("qid") =!= col("nid")),
+            k = 3)
           .orderBy(col("qid"), col("rnk"))
       },
       None
@@ -1490,20 +1410,12 @@ object Similarity {
         val index = s.read.parquet(s"$standing/assign")
         val batch = e.filter(isBatch)
           .select(col("vec_id"), col("embedding"))
-        val probes = probeAssignToCentroids(batch, "vec_id", "embedding",
-            cents, nProbe = 6)
+        val probes = nearestCells(batch, "vec_id", "embedding", cents, 6)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
             col("cell_id"))
-        val wq = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("nid"))
-        probes
-          .join(index.select(col("cell_id"), col("vec_id").as("nid"),
-            col("embedding").as("nvec")), Seq("cell_id"))
-          .withColumn("cos",
-            round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
-          .withColumn("rnk", row_number().over(wq).cast(LongType))
-          .filter(col("rnk") <= 3)
-          .select(col("qid"), col("rnk"), col("nid"), col("cos"))
+        exactTopk(probes.join(index.select(col("cell_id"),
+            col("vec_id").as("nid"), col("embedding").as("nvec")),
+            Seq("cell_id")), k = 3)
           .orderBy(col("qid"), col("rnk"))
       },
       None
@@ -1543,15 +1455,9 @@ object Similarity {
         // relevant-set size per query label (self excluded below)
         val labelCounts = e.groupBy(col("label").as("qlabel"))
           .agg(count(lit(1)).as("lc"))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("nid"))
-        val top10 = corpus.join(broadcast(queries), col("qid") =!= col("nid"))
-          .withColumn("cos",
-            round(VectorFns.cosineFast(col("qvec"), col("nvec")), 6))
-          .select(col("qid"), col("qlabel"), col("nid"), col("nlabel"),
-            col("cos"))
-          .withColumn("rnk", row_number().over(w).cast(LongType))
-          .filter(col("rnk") <= 10)
+        val top10 = exactTopk(
+          corpus.join(broadcast(queries), col("qid") =!= col("nid")),
+          k = 10, keep = Seq("qlabel", "nlabel"))
         val rel = col("nlabel") === col("qlabel")
         val dcgTerm = round(lit(1e6) / log2(col("rnk") + 1)).cast(LongType)
         top10

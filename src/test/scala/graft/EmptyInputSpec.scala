@@ -43,8 +43,9 @@ class EmptyInputSpec extends SparkSpec {
   test("ANN / IVF index builders tolerate an empty corpus") {
     assert(operators.Similarity.annCandidates(
       emptyEmb, "vec_id", "embedding").count() == 0)
-    assert(operators.Similarity.ivfAssign(
-      emptyEmb, "vec_id", "embedding", nCells = 8).count() == 0)
+    assert(operators.Similarity.assignToCentroids(
+      emptyEmb, "vec_id", "embedding", operators.Similarity.trainCentroids(
+        emptyEmb, "vec_id", "embedding", nCells = 8, iters = 0)).count() == 0)
     assert(operators.Similarity.ivfProbeAssign(
       emptyEmb, "vec_id", "embedding", nCells = 8, trainIters = 2,
       nProbe = 3, corpusN = 0L).count() == 0)

@@ -579,17 +579,13 @@ class LlmOpsSpec extends SparkSpec {
         .over(Window.partitionBy(col("vec_id")))))
       .select(col("vec_id"), col("cell_id"), col("psig"))
       .localCheckpoint()
-    val joined = probes
-      .select(col("cell_id"), col("vec_id").as("vec_a"), col("psig").as("asig"))
-      .join(probes.select(col("cell_id"), col("vec_id").as("vec_b"),
-        col("psig").as("bsig")), Seq("cell_id"))
-      .filter(col("vec_a") < col("vec_b"))
-    val emitOnce = joined
-      .filter(element_at(array_intersect(col("asig"), col("bsig")), 1) ===
-        col("cell_id"))
-      .select(col("vec_a"), col("vec_b"))
+    val emitOnce = Similarity.cellPairs(probes)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val naive = joined.select(col("vec_a"), col("vec_b"))
+    val naive = probes.select(col("cell_id"), col("vec_id").as("vec_a"))
+      .join(probes.select(col("cell_id"), col("vec_id").as("vec_b")),
+        Seq("cell_id"))
+      .filter(col("vec_a") < col("vec_b"))
+      .select(col("vec_a"), col("vec_b"))
       .dropDuplicates("vec_a", "vec_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(emitOnce.length == emitOnce.toSet.size, "duplicate emissions")
@@ -687,8 +683,9 @@ class LlmOpsSpec extends SparkSpec {
     val e = sources.Tables.embeddings(spark, sf)
     val cents = Similarity.trainCentroids(e, "vec_id", "embedding",
       nCells = 32, iters = 2, corpusN = e.count()).localCheckpoint()
-    val soft = Similarity.softAssignToCentroids(
+    val soft = Similarity.nearestCells(
         e, "vec_id", "embedding", cents, k = 2)
+      .select(col("vec_id"), col("cell_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val byId = soft.groupBy(_._1)
     assert(byId.size == e.count())
@@ -764,7 +761,9 @@ class LlmOpsSpec extends SparkSpec {
 
   test("ivf: assigns every vector to exactly one cell; recall sane on strong pairs") {
     val e = sources.Tables.embeddings(spark, sf)
-    val assigned = operators.Similarity.ivfAssign(e, "vec_id", "embedding", 16)
+    val assigned = operators.Similarity.assignToCentroids(e, "vec_id",
+      "embedding", operators.Similarity.trainCentroids(e, "vec_id",
+        "embedding", nCells = 16, iters = 0))
     assert(assigned.count() == e.count())
     assert(assigned.select(col("cell_id")).distinct().count() <= 16)
     val r = recalls("ivf")
@@ -801,8 +800,9 @@ class LlmOpsSpec extends SparkSpec {
     // default of 8 probes nearly every super, so agreement can only
     // sit at or above the 5-probe measurement — floor just under it
     // so a pruning regression fails)
-    val flatPrimary = Similarity.ivfAssign(e, "vec_id", "embedding",
-      nCells, trainIters = 2)
+    val flatPrimary = Similarity.assignToCentroids(e, "vec_id", "embedding",
+      Similarity.trainCentroids(e, "vec_id", "embedding", nCells,
+        iters = 2, corpusN = n))
       .select(col("vec_id"), col("cell_id")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val agree = hier.filter(_.getLong(2) == 1L)

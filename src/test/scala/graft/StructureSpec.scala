@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `private[sql]`) are reached from one reviewed file, `GraftBridge.scala`.
   * The command-line entry points are `Bench` and `Verify` (the driver
   * contract) and `Dev` (the dev loop), and no operator reads the
-  * process environment, so a query's answer cannot vary by host. */
+  * process environment, so a query's answer cannot vary by host. The
+  * embedding near-dup rule is defined once (`Similarity.nearDupCos`),
+  * so its prefilter literal appears in one line of code. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -51,6 +53,15 @@ class StructureSpec extends AnyFunSuite {
     val hits = offenders(main, "def main(",
       except = Set("Bench.scala", "Verify.scala", "Dev.scala"))
     if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+  }
+
+  test("the near-dup prefilter literal 0.4499 is written in one place") {
+    val hits = offenders(main, "0.4499").filterNot { h =>
+      val code = h.split(": ", 2)(1)
+      code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
+    }
+    if (hits.size != 1)
+      fail(s"${hits.size} code lines hold it:" + hits.mkString("\n", "\n", ""))
   }
 
   test("operators read nothing from the environment") {
