@@ -95,6 +95,11 @@ object Dev {
     } finally spark.stop()
   }
 
+  /** `bytes` in MB with three decimals, so a sub-MB shuffle does not
+    * read 0. */
+  private[graft] def mb(bytes: Long): String =
+    "%.3f".formatLocal(java.util.Locale.ROOT, bytes / 1048576.0)
+
   private def probe(spark: SparkSession, sfDir: String,
                     names: Seq[String]): Unit = {
     val shufW = new LongAdder; val shufR = new LongAdder
@@ -158,12 +163,12 @@ object Dev {
         // once every event of this pass has been delivered
         GraftBridge.drainListenerBus(spark)
         println(f"""{"query":"$name","pass":$pass,"sec":$sec%.3f,""" +
-          s""""shuffle_write_mb":${shufW.sum() / 1048576},""" +
-          s""""shuffle_read_mb":${shufR.sum() / 1048576},""" +
-          s""""spill_disk_mb":${spillD.sum() / 1048576},""" +
-          s""""spill_mem_mb":${spillM.sum() / 1048576},""" +
+          s""""shuffle_write_mb":${mb(shufW.sum())},""" +
+          s""""shuffle_read_mb":${mb(shufR.sum())},""" +
+          s""""spill_disk_mb":${mb(spillD.sum())},""" +
+          s""""spill_mem_mb":${mb(spillM.sum())},""" +
           s""""jobs":${jobs.sum()},"tasks":${tasks.sum()},""" +
-          s""""peak_task_mem_mb":${peakMem.get() / 1048576}}""")
+          s""""peak_task_mem_mb":${mb(peakMem.get())}}""")
       }
     }
   }

@@ -7,11 +7,19 @@ import graft.{QueryDef, ScaledShuffle}
 import graft.sources.Tables
 
 /** Iterative graph analytics over relationship edges derived from the
-  * fact tables. Connected components (dup clusters) live in Dedup; this
-  * module adds the other canonical iterative-propagation shape: fixed-
-  * iteration PageRank over the bipartite supplier↔part co-occurrence
-  * graph (reference capability surface: arbitrary distributed-DataFrame
-  * compute — `layer/python/dask_processing.py:11-12`).
+  * fact tables (reference capability surface: arbitrary distributed-
+  * DataFrame compute — `layer/python/dask_processing.py:11-12`).
+  * Connected components (dup clusters) live in Dedup. Two graphs:
+  *
+  *  - the bipartite supplier↔part graph ([[edgeList]]): PageRank, label
+  *    propagation, HITS;
+  *  - the part CO-PURCHASE graph, built from a few shared pieces that
+  *    every co-purchase query composes, never copies: [[coPurchaseEdges]]
+  *    (the one staged basket self-join — distinct u < v pairs with their
+  *    shared-order count), [[bothWays]] (both directed rows of every
+  *    edge), [[adjacency]] (sorted neighbor arrays), [[jaccardTop20]]
+  *    (the packed edge-Jaccard kernel) and [[hubSeed]] (the bfs/sssp
+  *    start table at the hub part).
   *
   * Scale shape (the part that must survive 100 TB): each iteration is
   * ONE shuffle of the edge list by source plus one aggregation by
@@ -21,7 +29,7 @@ import graft.sources.Tables
   * vector (|V| rows, ≪ |E|); the plan never grows with iteration count
   * (each round starts from a materialized rank table, the same lineage
   * cut as the connected-components loop in Dedup). Iteration count is
-  * FIXED (5), not convergence-polled — no per-round driver round-trips
+  * FIXED, not convergence-polled — no per-round driver round-trips
   * beyond the checkpoint barrier itself.
   */
 object Graph {
@@ -61,12 +69,14 @@ object Graph {
     s.read.parquet(path)
   }
 
-  /** Co-purchase edges (two parts sharing an order, u < v), staged once
-    * per corpus — consumed by triangle counting; the basket self-join +
-    * distinct is the expensive derivation, paid at first use only. */
+  /** The co-purchase graph, staged once per corpus: every distinct pair
+    * of parts sharing an order (u < v) with `shared`, the number of
+    * orders they share. The basket self-join is the expensive
+    * derivation, paid at first use only; queries that need no weight
+    * never read the `shared` column. */
   private[graft] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame = {
-    val path = graft.Staging.cached("copurchase_edges", dir, rev = 1) { tgt =>
+    val path = graft.Staging.cached("copurchase_edges", dir, rev = 2) { tgt =>
       val op = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"),
           col("l_partkey").cast("long").as("pk"))
@@ -74,10 +84,70 @@ object Graph {
       op.select(col("ok"), col("pk").as("u"))
         .join(op.select(col("ok"), col("pk").as("v")), Seq("ok"))
         .where(col("u") < col("v"))
-        .select(col("u"), col("v")).distinct()
+        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("shared"))
         .write.mode("overwrite").parquet(tgt)
     }
     s.read.parquet(path)
+  }
+
+  /** Both directed rows (src, dst, carry..) of every undirected (u, v)
+    * edge. */
+  private def bothWays(und: DataFrame, carry: String*): DataFrame = {
+    val rest = carry.map(col)
+    und.select(col("u").as("src") +: col("v").as("dst") +: rest: _*)
+      .unionAll(und.select(col("v").as("src") +: col("u").as("dst") +: rest: _*))
+  }
+
+  /** Sorted adjacency (node, nbrs, deg) of the undirected edges `und`.
+    * The degree is read off the array after the aggregate, so the
+    * partial-aggregate shuffle carries the neighbor lists only. */
+  private def adjacency(und: DataFrame): DataFrame =
+    bothWays(und).groupBy(col("src").as("node"))
+      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+      .withColumn("deg", size(col("nbrs")).cast(LongType))
+
+  /** The bfs/sssp start table: one row (node, dist = 0) for the hub
+    * part of the directed `edges` — highest degree, min id on ties, one
+    * bounded scalar. One partition, not one per core: every round scans
+    * the distance table, and its empty partitions would each cost a
+    * task per scan. */
+  private def hubSeed(s: org.apache.spark.sql.SparkSession,
+                      edges: DataFrame): DataFrame = {
+    val hub = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .orderBy(col("d").desc, col("src")).limit(1)
+      .head().getLong(0)
+    s.range(0, 1, 1, 1).select(lit(hub).as("node"), lit(0L).as("dist"))
+      .localCheckpoint()
+  }
+
+  /** The edge-Jaccard kernel of q_graph_jaccard (whole graph) and
+    * q_graph_jaccard_capped (hub-pruned edges): the 20 best edges of
+    * `und` with ≥ 3 common neighbors. The adjacency is built in-session
+    * (measured: reading it back as a staged array-column parquet costs
+    * MORE than the rebuild — array decode dominates). Neighbor lists
+    * are VARINT-DELTA-PACKED before the double attach (see
+    * q_graph_triangles — the ~3-5× shuffle-byte cut that brings the
+    * 100× probe inside single-box scratch); degrees ride as their own
+    * column since the packed form has no O(1) size. PackedArraySpec
+    * pins count identity vs size(array_intersect). */
+  private def jaccardTop20(und: DataFrame): DataFrame = {
+    val adj = adjacency(und).select(col("node"), col("deg"),
+      graft.functions.PackedFns.packSorted(col("nbrs")).as("pb"))
+    und
+      .join(adj.select(col("node").as("u"), col("deg").as("du"),
+        col("pb").as("nu")), "u")
+      .join(adj.select(col("node").as("v"), col("deg").as("dv"),
+        col("pb").as("nv")), "v")
+      .select(col("u"), col("v"),
+        graft.functions.PackedFns.packedIntersectCount(
+          col("nu"), col("nv")).as("c"),
+        col("du"), col("dv"))
+      .where(col("c") >= 3)
+      .select(col("u"), col("v"), col("c"),
+        round(col("c").cast("double") /
+          (col("du") + col("dv") - col("c")), 6).as("jaccard"))
+      .orderBy(col("jaccard").desc, col("u"), col("v"))
+      .limit(20)
   }
 
   /** Partition posture for the CO-PURCHASE INTERSECT family (jaccard /
@@ -202,12 +272,7 @@ object Graph {
             .localCheckpoint(eager = false)
         }
         ranks
-          .select(
-            when(col("node") % 2 === 0,
-              concat(lit("s"), (col("node") / 2).cast("long").cast("string")))
-              .otherwise(
-                concat(lit("p"), ((col("node") - 1) / 2).cast("long").cast("string")))
-              .as("node"),
+          .select(disp(col("node")).as("node"),
             round(col("pr") * n, 6).as("pr_norm"))
           .orderBy(col("node"))
       },
@@ -295,10 +360,7 @@ object Graph {
     QueryDef(
       "q_graph_modularity",
       (s, dir) => {
-        val und = coPurchaseEdges(s, dir)
-        val edges = und.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-          .localCheckpoint()
+        val edges = bothWays(coPurchaseEdges(s, dir)).localCheckpoint()
         val labels = Tables.part(s, dir)
           .select(col("p_partkey").cast("long").as("node"),
             col("p_brand").as("lbl"))
@@ -389,9 +451,8 @@ object Graph {
         // orientation join both scan the materialized parquet instead
         // of re-running the basket self-join + distinct per consumer
         val edges = coPurchaseEdges(s, dir)
-        val deg = edges.select(col("u").as("node"))
-          .unionAll(edges.select(col("v").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("d"))
+        val deg = bothWays(edges)
+          .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
         val lowFirst = col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v"))
         val ori = edges
@@ -478,9 +539,7 @@ object Graph {
       "q_graph_kcore",
       (s, dir) => {
         val rounds = 4
-        val und = coPurchaseEdges(s, dir)
-        def edges0 = und.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
+        val edges0 = bothWays(coPurchaseEdges(s, dir))
         // The ITERATED state is the |V|-row degree table, never the
         // edge list: peeling only needs degrees, and the degree of a
         // survivor after a peel is its old degree minus its edges into
@@ -554,46 +613,35 @@ object Graph {
 
     // 4-hop BFS distances from the hub part (highest co-purchase
     // degree, min-id tie-break) — the reachability/shortest-path shape
-    // as bounded frontier expansion. Each round joins the CURRENT
-    // distance table (≤|reached| rows, the only moving side) into the
-    // edge list once and min-merges — identical per-round traffic to
-    // label propagation; the distance table is checkpointed per round
-    // so the plan stays O(1). Fixed 4 rounds = the hard-cost-ceiling
-    // semantics; unreached nodes simply don't appear (no sentinel
-    // infinities to shuffle).
+    // as bounded frontier expansion. Each round joins the newest layer
+    // of the distance table (the only moving side) into the edge list
+    // once — the label-propagation traffic class; the distance table
+    // is the one state table, checkpointed once per round so the plan
+    // stays O(1). Fixed 4 rounds = the hard-cost-ceiling semantics;
+    // unreached nodes simply don't appear (no sentinel infinities to
+    // shuffle).
     QueryDef(
       "q_graph_bfs",
       (s, dir) => {
         val rounds = 4
-        val und = coPurchaseEdges(s, dir)
-        val edges = und.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-          .localCheckpoint()
-        val seed = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .orderBy(col("d").desc, col("src")).limit(1)
-          .head().getLong(0)
+        val edges = bothWays(coPurchaseEdges(s, dir)).localCheckpoint()
         // FRONTIER-only expansion: each round joins the edges against
-        // the newly-reached layer, not the whole distance table — on a
-        // dense graph the reached set saturates by round 2 and the
-        // naive reached×edges join re-shuffles everything every round
-        // (measured 3.6 s → 3.1 s at sf0.1; the win grows with the
-        // graph since saturated rounds ship an EMPTY frontier).
-        // Unweighted BFS layers ≡ the min-merge, so the oracle's
-        // min-merge unroll is unchanged.
-        var reached = s.range(1)
-          .select(lit(seed).as("node"), lit(0L).as("dist"))
-          .localCheckpoint()
-        var frontier = reached
+        // the layer reached last round (dist = r − 1), not the whole
+        // distance table — on a dense graph the reached set saturates
+        // by round 2 and the naive reached×edges join re-shuffles
+        // everything every round (measured 3.6 s → 3.1 s at sf0.1; the
+        // win grows with the graph since saturated rounds ship an EMPTY
+        // frontier). Unweighted BFS layers ≡ the min-merge, so the
+        // oracle's min-merge unroll is unchanged.
+        var reached = hubSeed(s, edges)
         for (r <- 1 to rounds) {
-          val cand = edges
-            .join(frontier.select(col("node").as("src")), "src")
+          val newf = edges
+            .join(reached.where(col("dist") === r - 1)
+              .select(col("node").as("src")), "src")
             .select(col("dst").as("node")).distinct()
-          val newf = cand
             .join(reached.select(col("node")), Seq("node"), "left_anti")
             .withColumn("dist", lit(r.toLong))
-            .localCheckpoint()
           reached = reached.unionAll(newf).localCheckpoint()
-          frontier = newf
         }
         reached.select(col("node").as("part"), col("dist"))
           .orderBy(col("part"))
@@ -641,39 +689,16 @@ object Graph {
     // Scale shape: each round is one |reached|-row join into the edge
     // list + a min-aggregate, the labelprop traffic class; the dist
     // table is checkpointed per round. Edge weights derive from the
-    // NON-distinct shared-order counts — one extra basket-pair
-    // aggregate over the staged pair base.
+    // shared-order counts the staged co-purchase graph already carries,
+    // so this query pays no basket self-join of its own.
     QueryDef(
       "q_graph_sssp",
       (s, dir) => {
         val rounds = 4
-        // weighted pairs (shared-order count per co-purchased pair)
-        // staged once per corpus — the basket self-join is the
-        // expensive derivation, same staging discipline as the
-        // unweighted edge list (measured: 5.0 → 3.0 s at sf0.1)
-        val wuPath = graft.Staging.cached("copurchase_weighted", dir, rev = 1) { tgt =>
-          val op = Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("ok"),
-              col("l_partkey").cast("long").as("pk"))
-            .distinct()
-          op.select(col("ok"), col("pk").as("u"))
-            .join(op.select(col("ok"), col("pk").as("v")), Seq("ok"))
-            .where(col("u") < col("v"))
-            .groupBy(col("u"), col("v")).agg(count(lit(1)).as("shared"))
-            .write.mode("overwrite").parquet(tgt)
-        }
-        val wu = s.read.parquet(wuPath)
-        val edges = wu.select(col("u").as("src"), col("v").as("dst"),
-            (lit(11) - least(col("shared"), lit(10L))).as("w"))
-          .unionAll(wu.select(col("v").as("src"), col("u").as("dst"),
-            (lit(11) - least(col("shared"), lit(10L))).as("w")))
+        val edges = bothWays(coPurchaseEdges(s, dir)
+          .withColumn("w", lit(11) - least(col("shared"), lit(10L))), "w")
           .localCheckpoint()
-        val seed = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .orderBy(col("d").desc, col("src")).limit(1)
-          .head().getLong(0)
-        var dist = s.range(1)
-          .select(lit(seed).as("node"), lit(0L).as("dist"))
-          .localCheckpoint()
+        var dist = hubSeed(s, edges)
         for (_ <- 1 to rounds) {
           val relaxed = edges
             .join(dist.select(col("node").as("src"),
@@ -732,47 +757,13 @@ object Graph {
     //
     // Scale shape: the q_graph_triangles discipline — per-node sorted
     // neighbor arrays attach to each edge row and the intersection
-    // runs INSIDE a projection (array_intersect), so no wedge is ever
-    // materialized into a shuffle; the only shuffled relations are
-    // |E| edges and |V| adjacency rows, and the top-20 is
-    // TakeOrderedAndProject.
+    // runs INSIDE a projection (the packed merge-scan count), so no
+    // wedge is ever materialized into a shuffle; the only shuffled
+    // relations are |E| edges and |V| adjacency rows, and the top-20
+    // is TakeOrderedAndProject.
     QueryDef(
       "q_graph_jaccard",
-      (s, dir) => {
-        val und = coPurchaseEdges(s, dir)
-        // adjacency built in-session (measured: reading it back as a
-        // staged array-column parquet costs MORE than the rebuild —
-        // array decode dominates; the staged form loses ~1 s/run).
-        // Neighbor lists are VARINT-DELTA-PACKED before the double
-        // attach (see q_graph_triangles — the same ~3-5× shuffle-byte
-        // cut that brings the 100× probe inside single-box scratch);
-        // degrees ride as their own column since the packed form has
-        // no O(1) size. PackedArraySpec pins count identity vs
-        // size(array_intersect), so c/du/dv — and the oracle — are
-        // bit-unchanged.
-        val adj = und.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-          .groupBy(col("src"))
-          .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-          .select(col("src"),
-            size(col("nbrs")).cast(org.apache.spark.sql.types.LongType).as("d"),
-            graft.functions.PackedFns.packSorted(col("nbrs")).as("pb"))
-        und
-          .join(adj.select(col("src").as("u"), col("d").as("du"),
-            col("pb").as("nu")), "u")
-          .join(adj.select(col("src").as("v"), col("d").as("dv"),
-            col("pb").as("nv")), "v")
-          .select(col("u"), col("v"),
-            graft.functions.PackedFns.packedIntersectCount(
-              col("nu"), col("nv")).as("c"),
-            col("du"), col("dv"))
-          .where(col("c") >= 3)
-          .select(col("u"), col("v"), col("c"),
-            round(col("c").cast("double") /
-              (col("du") + col("dv") - col("c")), 6).as("jaccard"))
-          .orderBy(col("jaccard").desc, col("u"), col("v"))
-          .limit(20)
-      },
+      (s, dir) => jaccardTop20(coPurchaseEdges(s, dir)),
       Some(
         """WITH op AS (
           |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
@@ -822,38 +813,14 @@ object Graph {
       "q_graph_jaccard_capped",
       (s, dir) => {
         val und = coPurchaseEdges(s, dir)
-        val adjAll = und.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-        val deg = adjAll.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        val deg = bothWays(und).groupBy(col("src")).agg(count(lit(1)).as("d"))
         val cap = deg.agg(
           floor(expr("percentile(d, 0.99)")).cast(LongType).as("cap"))
         val keep = deg.crossJoin(broadcast(cap))
           .where(col("d") <= col("cap")).select(col("src").as("node"))
-        val ek = und
+        jaccardTop20(und
           .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        // packed attach, as in q_graph_jaccard (same byte-economy cut)
-        val adjK = ek.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(ek.select(col("v").as("src"), col("u").as("dst")))
-          .groupBy(col("src"))
-          .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-          .select(col("src"), size(col("nbrs")).cast(LongType).as("d"),
-            graft.functions.PackedFns.packSorted(col("nbrs")).as("pb"))
-        ek
-          .join(adjK.select(col("src").as("u"), col("d").as("du"),
-            col("pb").as("nu")), "u")
-          .join(adjK.select(col("src").as("v"), col("d").as("dv"),
-            col("pb").as("nv")), "v")
-          .select(col("u"), col("v"),
-            graft.functions.PackedFns.packedIntersectCount(
-              col("nu"), col("nv")).as("c"),
-            col("du"), col("dv"))
-          .where(col("c") >= 3)
-          .select(col("u"), col("v"), col("c"),
-            round(col("c").cast("double") /
-              (col("du") + col("dv") - col("c")), 6).as("jaccard"))
-          .orderBy(col("jaccard").desc, col("u"), col("v"))
-          .limit(20)
+          .join(keep.select(col("node").as("v")), Seq("v"), "left_semi"))
       },
       Some(
         """WITH op AS (
@@ -1181,22 +1148,16 @@ object Graph {
     // Scale shape: the loop state is the |V|-row walk table, advanced
     // per hop by ONE equi-join against the staged adjacency table —
     // cost is hops × |V|, linear in the graph, never materializing
-    // paths beyond the walk length. The adjacency build
-    // (sort_array(collect_list)) is the jaccard representation; its
-    // hub-array caveat (a power-law hub's array must fit a row) and
-    // the degree-cap lever documented there apply unchanged. The walk
-    // chain is linear (each state consumed exactly once), so no
-    // per-round checkpoint is needed — only the 4-times-consumed
-    // adjacency is staged.
+    // paths beyond the walk length. The adjacency is the one the
+    // Jaccard kernel builds; its hub-array caveat (a power-law hub's
+    // array must fit a row) and the degree-cap lever documented there
+    // apply unchanged. The walk chain is linear (each state consumed
+    // exactly once), so no per-round checkpoint is needed — only the
+    // 4-times-consumed adjacency is staged.
     QueryDef(
       "q_graph_walks",
       (s, dir) => {
-        val e = coPurchaseEdges(s, dir)
-        val und = e.select(col("u").as("node"), col("v").as("dst"))
-          .unionAll(e.select(col("v").as("node"), col("u").as("dst")))
-        val adj = und.groupBy(col("node"))
-          .agg(sort_array(collect_list(col("dst"))).as("nbrs"),
-            count(lit(1)).as("deg"))
+        val adj = adjacency(coPurchaseEdges(s, dir))
           .localCheckpoint() // consumed by the seed and all 4 hops
         var w = adj.select(col("node").as("start"),
           col("node").as("cur"), col("node").cast("string").as("path"))

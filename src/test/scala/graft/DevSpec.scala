@@ -45,4 +45,10 @@ class DevSpec extends AnyFunSuite {
       Dev.Mode.Plan("out", "before", Seq("q_tpch_q1")))
     assert(Dev.parse(Seq("recall")) == Dev.Mode.Recall)
   }
+
+  test("probe prints megabytes with three decimals") {
+    assert(Dev.mb(524288L) == "0.500")
+    assert(Dev.mb(0L) == "0.000")
+    assert(Dev.mb(3L * 1048576) == "3.000")
+  }
 }

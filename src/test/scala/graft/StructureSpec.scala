@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract) and `Dev` (the dev loop), and no operator reads the
   * process environment, so a query's answer cannot vary by host. The
   * embedding near-dup rule is defined once (`Similarity.nearDupCos`),
-  * so its prefilter literal appears in one line of code. */
+  * so its prefilter literal appears in one line of code. The co-purchase
+  * graph is derived once (`Graph.coPurchaseEdges`) and symmetrized in one
+  * place (`Graph.bothWays`). */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -62,6 +64,29 @@ class StructureSpec extends AnyFunSuite {
     }
     if (hits.size != 1)
       fail(s"${hits.size} code lines hold it:" + hits.mkString("\n", "\n", ""))
+  }
+
+  /** Graph.scala's code lines (comment lines dropped), newline-joined. */
+  private lazy val graphCode: String =
+    Files.readAllLines(main.resolve("graft/operators/Graph.scala")).asScala
+      .filterNot { l =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }.mkString("\n")
+
+  test("Graph.scala writes the basket self-join once") {
+    val selfJoin = """Seq\("ok"\)\)\s*\.where\(col\("u"\) < col\("v"\)\)""".r
+    assert(selfJoin.findAllIn(graphCode).size == 1)
+  }
+
+  test("Graph.scala writes the both-ways unionAll only inside bothWays") {
+    val swapped = """\.unionAll\(\s*\w+\.select\(\s*col\("v"\)""".r
+    val hits = swapped.findAllMatchIn(graphCode).map(_.start).toList
+    val from = graphCode.indexOf("def bothWays(")
+    val to = graphCode.indexOf("def ", from + 1)
+    assert(from >= 0 && to > from)
+    assert(hits.size == 1 && hits.head > from && hits.head < to,
+      s"${hits.size} both-ways unions, expected one, inside bothWays")
   }
 
   test("operators read nothing from the environment") {

@@ -2,17 +2,26 @@
 """Local emulation of the driver's t2 correctness gate.
 
 Usage:
-  python3 tools/local_check.py [sfDir] [outDir] [--no-run] [query ...]
+  python3 tools/local_check.py [sfDir] [outDir] [--no-run]
+                               [--against otherOutDir] [query ...]
 
 Runs `graft.Verify <sfDir> <outDir>` via sbt (unless --no-run), then for
 every query with an oracle: executes the oracle SQL in DuckDB over views
 named after the test tables, reads the Spark result parquet, sorts
 columns by name and rows by value, and compares cell-by-cell.
 
+With --against, every query dumped in outDir (oracled or not) is
+compared the same way with its dump in otherOutDir instead of the
+oracle, and column types must match exactly: the check that two builds
+give the same answers. Parquet footers list encodings in hash order, so
+two dumps of the same rows need not be byte-identical.
+
 This is dev tooling only — the engine itself is pure Scala/Spark.
 """
+import glob
 import json
 import math
+import os
 import subprocess
 import sys
 
@@ -75,9 +84,53 @@ def cells_equal(a, b):
         return False
 
 
+def diff(a, b, type_rule, labels):
+    """Failure messages for result `b` against the reference result `a`
+    (each as fetch_sorted returns it); empty when they match."""
+    (acols, atypes, arows), (bcols, btypes, brows) = a, b
+    la, lb = labels
+    if [c.lower() for c in acols] != [c.lower() for c in bcols]:
+        return [f"columns differ {la}={acols} {lb}={bcols}"]
+    twarn = [f"col {c} type: {r}" for c, at, bt in zip(acols, atypes, btypes)
+             for r in [type_rule(at, bt)] if r]
+    if twarn:
+        return twarn
+    if len(arows) != len(brows):
+        return [f"rowcount {la}={len(arows)} {lb}={len(brows)}"]
+    for i, (arow, brow) in enumerate(zip(sorted(arows, key=repr),
+                                         sorted(brows, key=repr))):
+        for c, (x, y) in enumerate(zip(arow, brow)):
+            if not cells_equal(x, y):
+                return [f"row {i} col {acols[c]}: {la}={x!r} {lb}={y!r}"]
+    return []
+
+
+def oracle_type_rule(ot, st):
+    r = type_mismatch(ot, st)
+    return r and (f"{r} (driver hash is width-sensitive; "
+                  f"CAST the oracle column)")
+
+
+def exact_type_rule(at, bt):
+    return None if at == bt else f"{at} vs {bt}"
+
+
+def dump(con, out_dir, name):
+    return fetch_sorted(
+        con, f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
+
+
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    no_run = "--no-run" in sys.argv
+    argv = sys.argv[1:]
+    against = None
+    if "--against" in argv:
+        i = argv.index("--against")
+        if i + 1 >= len(argv):
+            sys.exit("--against needs the other Verify output directory")
+        against = argv[i + 1]
+        del argv[i:i + 2]
+    args = [a for a in argv if not a.startswith("--")]
+    no_run = "--no-run" in argv
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     out_dir = args[1] if len(args) > 1 else "/tmp/verify_out"
     only = set(args[2:])
@@ -92,58 +145,46 @@ def main():
             sys.stderr.write(r.stderr[-3000:])
             sys.exit(1)
 
-    with open(f"{out_dir}/oracle_sql.json") as f:
-        oracles = json.load(f)
-
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    if against:
+        def dumped(d):
+            return {q for q in os.listdir(d)
+                    if glob.glob(f"{d}/{q}/*.parquet")}
+        # a query dumped on one side only fails as an exec error
+        names = sorted(dumped(out_dir) | dumped(against))
+
+        def pair(name):
+            return dump(con, against, name), dump(con, out_dir, name)
+        rule, labels = exact_type_rule, ("other", "this")
+    else:
+        with open(f"{out_dir}/oracle_sql.json") as f:
+            oracles = json.load(f)
+        names = sorted(oracles)
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                        f"read_parquet('{sf_dir}/{t}.parquet')")
+
+        def pair(name):
+            return fetch_sorted(con, oracles[name]), dump(con, out_dir, name)
+        rule, labels = oracle_type_rule, ("oracle", "spark")
 
     n_pass = n_fail = 0
-    for name, sql in sorted(oracles.items()):
+    for name in names:
         if only and name not in only:
             continue
         try:
-            ocols, otypes, orows = fetch_sorted(con, sql)
-            scols, stypes, srows = fetch_sorted(
-                con, f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
+            a, b = pair(name)
         except Exception as ex:
             print(f"FAIL {name}: exec error: {str(ex)[:300]}")
             n_fail += 1
             continue
-        if [c.lower() for c in ocols] != [c.lower() for c in scols]:
-            print(f"FAIL {name}: columns differ oracle={ocols} spark={scols}")
-            n_fail += 1
-            continue
-        twarn = [(c, r) for c, ot, st in zip(ocols, otypes, stypes)
-                 for r in [type_mismatch(ot, st)] if r]
-        if twarn:
-            for c, r in twarn:
-                print(f"FAIL {name}: col {c} type: {r} (driver hash is "
-                      f"width-sensitive; CAST the oracle column)")
-            n_fail += 1
-            continue
-        if len(orows) != len(srows):
-            print(f"FAIL {name}: rowcount oracle={len(orows)} spark={len(srows)}")
-            n_fail += 1
-            continue
-        bad = None
-        o_sorted = sorted(orows, key=repr)
-        s_sorted = sorted(srows, key=repr)
-        for i, (orow, srow) in enumerate(zip(o_sorted, s_sorted)):
-            for c, (a, b) in enumerate(zip(orow, srow)):
-                if not cells_equal(a, b):
-                    bad = (i, ocols[c], a, b)
-                    break
-            if bad:
-                break
+        bad = diff(a, b, rule, labels)
+        for msg in bad:
+            print(f"FAIL {name}: {msg}")
         if bad:
-            i, c, a, b = bad
-            print(f"FAIL {name}: row {i} col {c}: oracle={a!r} spark={b!r}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(orows)} rows)")
+            print(f"PASS {name} ({len(a[2])} rows)")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
