@@ -31,12 +31,7 @@ object Bench {
     // a failed pass-1 must fall back to a fresh run, never read a
     // previous bench's (possibly different-SF) results.
     val dumpDir = java.nio.file.Paths.get("target/bench_recall")
-    if (java.nio.file.Files.exists(dumpDir)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dumpDir).sorted(
-        java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    Staging.deleteTree(dumpDir)
 
     // staged-corpus build seconds attributed to the query whose run
     // triggered them (r12 verdict item 8): a one-time Staging.cached

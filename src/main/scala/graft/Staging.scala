@@ -10,12 +10,30 @@ object Staging {
     // staged copies of the test tables are hundreds of MB per run at
     // sf0.1 — clean the whole tree up when the JVM exits
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }))
+      try deleteTree(p) catch { case _: Throwable => () }))
     p.toString
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. The
+    * walk is closed even when a delete throws. */
+  def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
+
+  /** Copy the tree at `src` to `dst` file by file (bytes unchanged, never
+    * decoded); an existing target file fails the copy. The walk is
+    * closed even when a copy throws. */
+  def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    val walk = Files.walk(src)
+    try walk.forEach { f =>
+      val t = dst.resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+    } finally walk.close()
   }
 
   def dir(name: String): String = s"$root/$name"
@@ -34,11 +52,7 @@ object Staging {
     if (java.nio.file.Files.isWritable(shm)) {
       val p = java.nio.file.Files.createTempDirectory(shm, "graft_fast_")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }))
+        try deleteTree(p) catch { case _: Throwable => () }))
       p.toString
     } else root
   }
@@ -92,10 +106,6 @@ object Staging {
   def cached(name: String, dir: String, rev: Int)(
       build: String => Unit): String = synchronized {
     import java.nio.file.{Files, StandardCopyOption}
-    def deleteTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
     Files.createDirectories(cacheRoot)
     // reap orphaned build dirs from crashed/killed JVMs: a live build's
     // tmp dir is freshly created, so anything older than an hour is dead

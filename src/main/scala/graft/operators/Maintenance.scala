@@ -16,6 +16,14 @@ import graft.sources.Tables
   * The standard maintenance pass rewrites each partition directory
   * into few, sized files — and must prove it lost and duplicated
   * nothing while doing so.
+  *
+  * The transaction-log queries (q_snapshot_txn / _cdc / _restore /
+  * _branch / _checkpoint here, q_stream_txn_sink / q_stream_cdc_apply
+  * in `Streams`) are built from [[TxnLog]], the one owner of the log's
+  * manifest format, put-if-absent commit, reader and live-set fold.
+  * This object stages their tables (`txnRoot`, `restoreRoot`,
+  * `branchRoot`, `checkpointRoot` over `writeOrders` slices) and reads
+  * a version through `snapshot`; it never writes or parses a manifest.
   */
 object Maintenance {
 
@@ -77,43 +85,36 @@ object Maintenance {
     * version still resolves — exactly the documented
     * transaction-log trade. The log itself is never touched: history
     * metadata outlives the reclaimed data files. Returns the deleted
-    * entry names. Pure JVM (the manifest fold is the same
-    * adds/removes fold the reader uses). */
+    * entry names. Pure JVM ([[TxnLog.read]] + [[TxnLog.liveAt]]). */
   def vacuumTxnLog(root: String, keepFrom: Long): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val log = Paths.get(root, "_log")
-    val arr = """"(adds|removes)":\[([^\]]*)\]""".r
-    val ver = """"version":(\d+)""".r
-    val manifests = listDir(log)
-      .filter(_.getFileName.toString.endsWith(".json"))
-      .map(Files.readString(_))
-      .map { body =>
-        val v = ver.findFirstMatchIn(body).get.group(1).toLong
-        val m = arr.findAllMatchIn(body)
-          .map(x => x.group(1) -> x.group(2).split(",").toSeq
-            .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty)).toMap
-        (v, m.getOrElse("adds", Nil), m.getOrElse("removes", Nil))
-      }.sortBy(_._1)
-    val liveAt = manifests.map(_._1).map { v =>
-      manifests.filter(_._1 <= v)
-        .foldLeft(Seq.empty[String]) { case (acc, (_, adds, rms)) =>
-          acc.filterNot(rms.contains) ++ adds
-        }.toSet
-    }
-    val retained = manifests.map(_._1).zip(liveAt)
-      .filter(_._1 >= keepFrom).flatMap(_._2).toSet
-    val everAdded = manifests.flatMap(_._2).toSet
-    val dead = (everAdded -- retained).toSeq.sorted
-    dead.foreach { name =>
-      val p = Paths.get(root, name)
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
-    }
+    import java.nio.file.Paths
+    val log = TxnLog.read(Paths.get(root, "_log"))
+    val retained = log.map(_.version).filter(_ >= keepFrom)
+      .flatMap(TxnLog.liveAt(log, _)).toSet
+    val dead = (log.flatMap(_.adds).toSet -- retained).toSeq.sorted
+    dead.foreach(name => graft.Staging.deleteTree(Paths.get(root, name)))
     dead
   }
+
+  /** Write the orders with `lo <= o_orderdate < hi` (an absent bound is
+    * open) as one parquet file set at `path` — the date-sliced data
+    * files every staged transaction-log table commits. */
+  private def writeOrders(orders: org.apache.spark.sql.DataFrame, path: String,
+                          lo: Option[String], hi: Option[String]): Unit = {
+    val od = col("o_orderdate")
+    orders.filter((lo.map(od >= lit(_).cast("timestamp")) ++
+        hi.map(od < lit(_).cast("timestamp"))).reduce(_ && _))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  /** One time-travel read: (n_rows, exact cents) over the orders data
+    * files `names` under `root` — the snapshot every transaction-log
+    * query aggregates at a version. */
+  private[graft] def snapshot(s: org.apache.spark.sql.SparkSession, root: String,
+                              names: Seq[String]): org.apache.spark.sql.DataFrame =
+    s.read.parquet(names.map(n => s"$root/$n"): _*)
+      .agg(count(lit(1)).as("n_rows"),
+        sum(round(col("o_totalprice") * 100).cast(LongType)).as("cents"))
 
   /** Stage the multi-writer transaction log ONCE per corpus (pure
     * function of the source): a 4-commit history over orders with a
@@ -124,63 +125,30 @@ object Maintenance {
                              dir: String): String = {
     val (c1, c2) = ("1998-01-01", "2000-01-01")
     graft.Staging.cached("txnlog", dir, rev = 2) { tgt =>
-      import java.nio.file.{Files, FileAlreadyExistsException, Paths}
-      val log = Paths.get(tgt, "_log")
-      Files.createDirectories(log)
+      val log = java.nio.file.Paths.get(tgt, "_log")
+      java.nio.file.Files.createDirectories(log)
       val orders = Tables.orders(s, dir)
-      val range = """"lo":"([^"]*)","hi":"([^"]*)"""".r
-      def tryCommit(v: Int, writer: String, attempt: Int,
-                    adds: Seq[String], lo: String, hi: String,
-                    removes: Seq[String] = Nil): Unit = {
-        val f = log.resolve(f"v$v%03d.json")
-        def arr(xs: Seq[String]) =
-          xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-        val body =
-          s"""{"version":$v,"writer":"$writer","attempt":$attempt,""" +
-            s""""adds":${arr(adds)},"removes":${arr(removes)},""" +
-            s""""lo":"$lo","hi":"$hi"}"""
-        // CREATE_NEW (O_EXCL) is the put-if-absent commit: exactly
-        // one contending writer creates the version file — the
-        // filesystem analog of an object store's conditional PUT.
-        // (NOT rename: POSIX rename() silently replaces, which
-        // would let a losing writer clobber the winner.)
-        try Files.write(f, body.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        catch {
-          case _: FileAlreadyExistsException =>
-            // rebase: ranges of every manifest we lost to must be
-            // disjoint from ours, else the writer must abort (an
-            // append-only writer pair here — the check still runs)
-            val winner = Files.readString(f)
-            val ok = range.findFirstMatchIn(winner).exists { m =>
-              hi <= m.group(1) || m.group(2) <= lo
-            }
-            require(ok, s"$writer: range overlap with committed v$v")
-            tryCommit(v + 1, writer, attempt + 1, adds, lo, hi, removes)
-        }
-      }
-      def writeData(name: String,
-                    df: org.apache.spark.sql.DataFrame): Unit =
-        df.coalesce(1).write.mode("overwrite").parquet(s"$tgt/$name")
-      val od = col("o_orderdate")
-      writeData("base", orders.filter(od < lit(c1).cast("timestamp")))
-      tryCommit(0, "base", 1, Seq("base"), "0000-01-01", c1)
-      writeData("a1", orders.filter(od >= lit(c1).cast("timestamp") &&
-        od < lit(c2).cast("timestamp")))
-      writeData("b1", orders.filter(od >= lit(c2).cast("timestamp")))
-      // both writers hold snapshot v0; A wins v1, B conflicts on
-      // v1 and rebases to v2
-      tryCommit(1, "A", 1, Seq("a1"), c1, c2)
-      tryCommit(1, "B", 1, Seq("b1"), c2, "9999-12-31")
+      def commit(v: Long, writer: String, adds: Seq[String], lo: String,
+                 hi: String, removes: Seq[String] = Nil) =
+        TxnLog.commit(log, TxnLog.Manifest(v, writer, adds, Some(removes),
+          Some(TxnLog.Dates(lo, hi))))
+      writeOrders(orders, s"$tgt/base", None, Some(c1))
+      commit(0, "base", Seq("base"), "0000-01-01", c1)
+      writeOrders(orders, s"$tgt/a1", Some(c1), Some(c2))
+      writeOrders(orders, s"$tgt/b1", Some(c2), None)
+      // both writers hold snapshot v0; A wins v1, B conflicts on v1,
+      // checks its range against A's and rebases to v2 (attempt 2)
+      commit(1, "A", Seq("a1"), c1, c2)
+      commit(1, "B", Seq("b1"), c2, "9999-12-31")
       // OPTIMIZE as a transaction: compact the v2 live set into one
       // file and commit the rewrite as removes+adds — readers at
       // v2 still resolve the old files (time travel is why removed
       // files are only ever unlinked by a later VACUUM, never by
       // the commit), readers at v3 see one file and identical rows
-      writeData("compact0", s.read.parquet(
-        s"$tgt/base", s"$tgt/a1", s"$tgt/b1"))
-      tryCommit(3, "OPT", 1, Seq("compact0"),
-        "0000-01-01", "9999-12-31", removes = Seq("base", "a1", "b1"))
+      s.read.parquet(s"$tgt/base", s"$tgt/a1", s"$tgt/b1")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tgt/compact0")
+      commit(3, "OPT", Seq("compact0"), "0000-01-01", "9999-12-31",
+        removes = Seq("base", "a1", "b1"))
     }
   }
 
@@ -192,8 +160,7 @@ object Maintenance {
     * restoring a 100 TB table costs O(manifest). The restore log lives in
     * its OWN root while data files stay in txnRoot — the metadata/data
     * separation every real lake has (a restore log rewrite never touches
-    * the data plane). The commit goes through the same put-if-absent
-    * CREATE_NEW protocol as every other writer. */
+    * the data plane). The commit is an ordinary [[TxnLog.commit]]. */
   private[graft] def restoreRoot(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String = {
     val base = txnRoot(s, dir)
@@ -203,27 +170,12 @@ object Maintenance {
       Files.createDirectories(log)
       listDir(Paths.get(base, "_log")).sortBy(_.getFileName.toString)
         .foreach(f => Files.copy(f, log.resolve(f.getFileName)))
-      val ms = s.read.json(s"$tgt/_log")
-        .select(col("version").cast(LongType), col("adds"), col("removes"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[String](1), r.getSeq[String](2)))
-        .sortBy(_._1)
-      def liveAt(v: Long): Seq[String] = ms.filter(_._1 <= v)
-        .foldLeft(Seq.empty[String]) { case (acc, (_, adds, rms)) =>
-          acc.filterNot(rms.contains) ++ adds
-        }
-      val (target, head) = (1L, ms.map(_._1).max)
-      val adds = liveAt(target).filterNot(liveAt(head).contains)
-      val removes = liveAt(head).filterNot(liveAt(target).contains)
-      def arr(xs: Seq[String]) =
-        xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val body =
-        s"""{"version":${head + 1},"writer":"RESTORE","attempt":1,""" +
-          s""""adds":${arr(adds)},"removes":${arr(removes)},""" +
-          s""""lo":"0000-01-01","hi":"9999-12-31","restore_of":$target}"""
-      Files.write(log.resolve(f"v${head + 1}%03d.json"),
-        body.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
+      val ms = TxnLog.read(log)
+      val (target, head) = (1L, ms.last.version)
+      val (atTarget, atHead) = (TxnLog.liveAt(ms, target), TxnLog.liveAt(ms, head))
+      TxnLog.commit(log, TxnLog.Manifest(head + 1, "RESTORE",
+        atTarget.filterNot(atHead.contains), Some(atHead.filterNot(atTarget.contains)),
+        Some(TxnLog.Dates("0000-01-01", "9999-12-31")), restoreOf = Some(target)))
     }
   }
 
@@ -232,11 +184,11 @@ object Maintenance {
     * branch whose merge is refused — the Iceberg branch-ref model
     * (branch = named pointer with its own commit chain; merge =
     * disjointness check against main commits since the branch base,
-    * then a normal put-if-absent commit on main).
+    * then a normal put-if-absent [[TxnLog.commit]] on main).
     *
     * Layout: `_log/` main commits, `_log_dev/` + `_log_hot/` branch
-    * commits, `_refs/<name>.json` branch refs (CREATE_NEW — ref
-    * creation is itself put-if-absent), `_refs/hot_merge_rejected.json`
+    * commits, `_refs/<name>.json` branch refs (put-if-absent — ref
+    * creation is itself a race), `_refs/hot_merge_rejected.json`
     * the audit record of the refused merge. Cutoffs as txnRoot:
     * base < 1998-01-01 ≤ mid < 2000-01-01 ≤ tail. */
   private def branchRoot(s: org.apache.spark.sql.SparkSession,
@@ -249,55 +201,39 @@ object Maintenance {
       Seq("_log", "_log_dev", "_log_hot")
         .foreach(d => Files.createDirectories(Paths.get(tgt, d)))
       val orders = Tables.orders(s, dir)
-      def commit(log: String, v: Int, writer: String,
-                 adds: Seq[String], lo: String, hi: String): Unit = {
-        val body =
-          s"""{"version":$v,"writer":"$writer","attempt":1,""" +
-            s""""adds":${adds.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""removes":[],"lo":"$lo","hi":"$hi"}"""
-        Files.write(Paths.get(tgt, log, f"v$v%03d.json"),
-          body.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-      }
-      def writeData(name: String, lo: Option[String],
-                    hi: Option[String]): Unit = {
-        val od = col("o_orderdate")
-        val f = (lo.map(x => od >= lit(x).cast("timestamp")) ++
-          hi.map(x => od < lit(x).cast("timestamp")))
-          .reduce(_ && _)
-        orders.filter(f).coalesce(1).write.mode("overwrite")
-          .parquet(s"$tgt/$name")
+      def commit(log: String, v: Long, writer: String, name: String,
+                 lo: Option[String], hi: Option[String]) = {
+        writeOrders(orders, s"$tgt/$name", lo, hi)
+        TxnLog.commit(Paths.get(tgt, log), TxnLog.Manifest(v, writer,
+          Seq(name), range = Some(TxnLog.Dates(lo.getOrElse("0000-01-01"),
+            hi.getOrElse("9999-12-31")))))
       }
       // main v0 and the two branch refs at base_version 0
-      writeData("base", None, Some(c1))
-      commit("_log", 0, "base", Seq("base"), "0000-01-01", c1)
+      commit("_log", 0, "base", "base", None, Some(c1))
       Seq("dev", "hot").foreach { b =>
-        Files.write(refs.resolve(s"$b.json"),
-          s"""{"name":"$b","base_version":0}""".getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
+        TxnLog.putIfAbsent(refs.resolve(s"$b.json"),
+          s"""{"name":"$b","base_version":0}""")
       }
       // branch commits land in their own chains; main moves on
-      writeData("dev1", Some(c2), None)
-      commit("_log_dev", 1, "dev", Seq("dev1"), c2, "9999-12-31")
-      writeData("hot1", Some(c1), Some(c2)) // overlaps main's m1
-      commit("_log_hot", 1, "hot", Seq("hot1"), c1, c2)
-      writeData("m1", Some(c1), Some(c2))
-      commit("_log", 1, "main", Seq("m1"), c1, c2)
-      // merge dev -> main: every branch range must be disjoint from
+      commit("_log_dev", 1, "dev", "dev1", Some(c2), None)
+      commit("_log_hot", 1, "hot", "hot1", Some(c1), Some(c2)) // overlaps m1
+      commit("_log", 1, "main", "m1", Some(c1), Some(c2))
+      // merge b -> main: every branch range must be disjoint from
       // every main range committed after the branch base
-      def disjoint(aLo: String, aHi: String,
-                   bLo: String, bHi: String): Boolean =
-        aHi <= bLo || bHi <= aLo
-      require(disjoint(c2, "9999-12-31", c1, c2), "dev merge check")
-      commit("_log", 2, "MERGE(dev)", Seq("dev1"), c2, "9999-12-31")
+      def mergeable(b: String): Boolean = {
+        val since = TxnLog.read(Paths.get(tgt, "_log")).filter(_.version > 0)
+        TxnLog.read(Paths.get(tgt, s"_log_$b"))
+          .forall(bm => since.forall(TxnLog.disjoint(bm, _)))
+      }
+      require(mergeable("dev"), "dev merge check")
+      TxnLog.commit(Paths.get(tgt, "_log"), TxnLog.Manifest(2, "MERGE(dev)",
+        Seq("dev1"), range = Some(TxnLog.Dates(c2, "9999-12-31"))))
       // merge hot -> main: [c1,c2) overlaps main v1's [c1,c2) — refuse
       // and leave the audit record a lakehouse surfaces to the user
-      if (!disjoint(c1, c2, c1, c2))
-        Files.write(refs.resolve("hot_merge_rejected.json"),
-          (s"""{"name":"hot","reason":"range [$c1,$c2) overlaps """ +
+      if (!mergeable("hot"))
+        TxnLog.putIfAbsent(refs.resolve("hot_merge_rejected.json"),
+          s"""{"name":"hot","reason":"range [$c1,$c2) overlaps """ +
             s"""main v1 [$c1,$c2) committed after base 0"}""")
-            .getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
     }
   }
 
@@ -308,107 +244,52 @@ object Maintenance {
     * file-granular DELETE), with a compacted snapshot manifest
     * (`vNNN.checkpoint.json`, the full live set at that version)
     * written every 4th commit (v3, v7) and a `_last_checkpoint`
-    * pointer readers load in O(1). Readers resolve a version from the
-    * newest checkpoint ≤ v plus ONLY the tail manifests (cp, v] —
-    * never v0..v. Commits use the same put-if-absent CREATE_NEW
-    * protocol as txnRoot. */
+    * pointer readers load in O(1) ([[TxnLog.checkpoint]]). Readers
+    * resolve a version from the newest checkpoint ≤ v plus ONLY the
+    * tail manifests (cp, v] — never v0..v ([[TxnLog.resolve]]). */
   private[graft] def checkpointRoot(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
     graft.Staging.cached("txncp", dir, rev = 1) { tgt =>
-      import java.nio.file.{Files, Paths}
-      val log = Paths.get(tgt, "_log")
-      Files.createDirectories(log)
+      val log = java.nio.file.Paths.get(tgt, "_log")
+      java.nio.file.Files.createDirectories(log)
       val orders = Tables.orders(s, dir)
-      val od = col("o_orderdate")
-      def writeData(name: String, lo: Option[String],
-                    hi: Option[String]): Unit = {
-        val f = (lo.map(x => od >= lit(x).cast("timestamp")) ++
-          hi.map(x => od < lit(x).cast("timestamp")))
-          .foldLeft(lit(true))(_ && _)
-        orders.filter(f).coalesce(1).write.mode("overwrite")
-          .parquet(s"$tgt/$name")
-      }
-      def arr(xs: Seq[String]) =
-        xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      var live = Seq.empty[String]
-      def commit(v: Int, writer: String, adds: Seq[String],
+      var committed = Vector.empty[TxnLog.Manifest]
+      def commit(v: Long, writer: String, adds: Seq[String],
                  removes: Seq[String] = Nil): Unit = {
-        Files.write(log.resolve(f"v$v%03d.json"),
-          (s"""{"version":$v,"writer":"$writer","attempt":1,""" +
-            s""""adds":${arr(adds)},"removes":${arr(removes)}}""")
-            .getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        live = live.filterNot(removes.contains) ++ adds
+        committed :+= TxnLog.commit(log,
+          TxnLog.Manifest(v, writer, adds, Some(removes)))
         // every 4th commit: compact the fold-so-far into a snapshot
-        // manifest and advance the O(1) pointer (plain overwrite — the
-        // pointer is advisory; losing a race just means one extra tail
-        // manifest for readers, never wrong data)
-        if (v % 4 == 3) {
-          Files.write(log.resolve(f"v$v%03d.checkpoint.json"),
-            s"""{"version":$v,"live":${arr(live)}}""".getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          Files.write(Paths.get(tgt, "_last_checkpoint"),
-            s"""{"version":$v}""".getBytes("UTF-8"))
-        }
+        if (v % 4 == 3) TxnLog.checkpoint(log, v, TxnLog.liveAt(committed))
+      }
+      def year(y: Int, lo: Option[String], hi: Option[String]): String = {
+        writeOrders(orders, s"$tgt/y$y", lo, hi)
+        s"y$y"
       }
       // y1992..y1998 appends with an OPTIMIZE and a DELETE mixed in
-      writeData("y1992", None, Some("1993-01-01"))
-      commit(0, "base", Seq("y1992"))
-      (1993 to 1995).zipWithIndex.foreach { case (y, i) =>
-        writeData(s"y$y", Some(s"$y-01-01"), Some(s"${y + 1}-01-01"))
-        commit(i + 1, s"W$y", Seq(s"y$y"))
+      commit(0, "base", Seq(year(1992, None, Some("1993-01-01"))))
+      (1993 to 1997).zipWithIndex.foreach { case (y, i) =>
+        commit(i + 1, s"W$y",
+          Seq(year(y, Some(s"$y-01-01"), Some(s"${y + 1}-01-01"))))
       }
-      writeData("y1996", Some("1996-01-01"), Some("1997-01-01"))
-      commit(4, "W1996", Seq("y1996"))
-      writeData("y1997", Some("1997-01-01"), Some("1998-01-01"))
-      commit(5, "W1997", Seq("y1997"))
       // OPTIMIZE: rewrite the two oldest files into one (data-equal)
       s.read.parquet(s"$tgt/y1992", s"$tgt/y1993").coalesce(1)
         .write.mode("overwrite").parquet(s"$tgt/c01")
       commit(6, "OPT", Seq("c01"), removes = Seq("y1992", "y1993"))
-      writeData("y1998", Some("1998-01-01"), None)
-      commit(7, "W1998", Seq("y1998"))
+      commit(7, "W1998", Seq(year(1998, Some("1998-01-01"), None)))
       // file-granular DELETE (the Delta remove-file contract): 1994
       // rows leave the table at v8; time travel ≤ v7 still sees them
       commit(8, "DEL", Nil, removes = Seq("y1994"))
     }
 
   /** Checkpoint+tail version resolution over a `checkpointRoot`-style
-    * log: newest `vNNN.checkpoint.json` with version ≤ v (found by
-    * NAME — no content read for skipped manifests), then fold only the
-    * tail manifests (cp, v]. Returns (cpUsed or -1, tail manifest
+    * log ([[TxnLog.resolve]]): returns (cpUsed or -1, tail manifest
     * count, live file names). Reader cost is O(tail), not O(commits) —
     * the `_last_checkpoint` pointer additionally gives head readers
     * the newest checkpoint version in O(1) (spec-pinned equal to the
     * newest checkpoint name). */
   private[graft] def resolveWithCheckpoint(root: String, v: Long)
-      : (Long, Long, Seq[String]) = {
-    import java.nio.file.{Files, Paths}
-    val names = listDir(Paths.get(root, "_log")).map(_.getFileName.toString)
-    val cpRe = """v(\d+)\.checkpoint\.json""".r
-    val cp = names.collect { case cpRe(n) if n.toLong <= v => n.toLong }
-      .maxOption.getOrElse(-1L)
-    val liveRe = """"live":\[([^\]]*)\]""".r
-    val live0 =
-      if (cp < 0) Seq.empty[String]
-      else liveRe.findFirstMatchIn(
-          Files.readString(Paths.get(root, "_log", f"v$cp%03d.checkpoint.json")))
-        .get.group(1).split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-    val arrRe = """"(adds|removes)":\[([^\]]*)\]""".r
-    val tail = ((cp + 1) to v).map { tv =>
-      val body = Files.readString(Paths.get(root, "_log", f"v$tv%03d.json"))
-      val m = arrRe.findAllMatchIn(body)
-        .map(x => x.group(1) -> x.group(2).split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty)).toMap
-      (m.getOrElse("adds", Nil), m.getOrElse("removes", Nil))
-    }
-    val live = tail.foldLeft(live0) { case (acc, (adds, rms)) =>
-      acc.filterNot(rms.contains) ++ adds
-    }
-    (cp, tail.length.toLong, live)
-  }
+      : (Long, Long, Seq[String]) =
+    TxnLog.resolve(java.nio.file.Paths.get(root, "_log"), v)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -524,24 +405,14 @@ object Maintenance {
         // pass through the untouched partition dirs at file level
         import java.nio.file.{Files, Paths}
         val outP = Paths.get(out)
-        if (Files.exists(outP)) { // fresh per JVM, stale only on re-run
-          Files.walk(outP).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.deleteIfExists(f))
-        }
+        graft.Staging.deleteTree(outP) // fresh per JVM, stale only on re-run
         Files.createDirectories(outP)
-        val land = Paths.get(landing)
-        val listing = Files.list(land)
-        try listing.forEach { p =>
+        listDir(Paths.get(landing)).foreach { p =>
           val name = p.getFileName.toString
           if (name.startsWith("ub=") &&
-              !affected(name.stripPrefix("ub=").toLong)) {
-            Files.walk(p).forEach { f =>
-              val tgt = outP.resolve(land.relativize(f).toString)
-              if (Files.isDirectory(f)) Files.createDirectories(tgt)
-              else Files.copy(f, tgt)
-            }
-          }
-        } finally listing.close()
+              !affected(name.stripPrefix("ub=").toLong))
+            graft.Staging.copyTree(p, outP.resolve(name))
+        }
         // re-encode only the affected buckets, minus the tombstoned rows
         if (affected.nonEmpty) {
           s.read.parquet(landing)
@@ -1107,11 +978,12 @@ object Maintenance {
 
     // Multi-writer OPTIMISTIC-CONCURRENCY commit protocol + snapshot
     // isolation (the Delta/Iceberg transaction-log shape, closing the
-    // B51 gap called out in round 6): the table is data files plus an
-    // append-only `_log/vNNN.json` manifest chain; a commit is an
-    // ATOMIC create of the next version file (put-if-absent is the
-    // entire concurrency primitive — object stores offer it as
-    // if-none-match), and a writer that loses the race REBASES:
+    // B51 gap called out in round 6; the protocol is TxnLog's): the
+    // table is data files plus an append-only `_log/vNNN.json` manifest
+    // chain; a commit (TxnLog.commit) is an ATOMIC create of the next
+    // version file (put-if-absent is the entire concurrency primitive —
+    // object stores offer it as if-none-match), and a writer that loses
+    // the race REBASES:
     // re-reads every manifest committed past its snapshot, checks its
     // declared key range is disjoint from theirs, and retries at the
     // next version without rewriting data. Readers get snapshot
@@ -1143,26 +1015,12 @@ object Maintenance {
         val root = txnRoot(s, dir)
         // every run: resolve the log (bounded: one row per commit) and
         // time-travel-read each version from exactly its live files
-        // (fold adds/removes in version order — a removed file stays
-        // readable at earlier versions, the whole point of the log)
-        val ms = s.read.json(s"$root/_log")
-          .select(col("version").cast(LongType), col("writer"),
-            col("adds"), col("removes"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1),
-            r.getSeq[String](2), r.getSeq[String](3)))
-          .sortBy(_._1)
-        ms.map { case (v, w, _, _) =>
-          val live = ms.filter(_._1 <= v)
-            .foldLeft(Seq.empty[String]) { case (acc, (_, _, adds, rms)) =>
-              acc.filterNot(rms.contains) ++ adds
-            }
-            .map(n => s"$root/$n")
-          s.read.parquet(live: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(round(col("o_totalprice") * 100).cast(LongType))
-                .as("cents"))
-            .select(lit(v).as("version"), lit(w).as("writer"),
+        // (a removed file stays readable at earlier versions, the
+        // whole point of the log)
+        val log = TxnLog.read(java.nio.file.Paths.get(root, "_log"))
+        log.map { m =>
+          snapshot(s, root, TxnLog.liveAt(log, m.version))
+            .select(lit(m.version).as("version"), lit(m.writer).as("writer"),
               col("n_rows"), col("cents"))
         }.reduce(_.unionByName(_)).orderBy(col("version"))
       },
@@ -1208,13 +1066,6 @@ object Maintenance {
       "q_snapshot_cdc",
       (s, dir) => {
         val root = txnRoot(s, dir)
-        val ms = s.read.json(s"$root/_log")
-          .select(col("version").cast(LongType), col("writer"),
-            col("adds"), col("removes"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1),
-            r.getSeq[String](2), r.getSeq[String](3)))
-          .sortBy(_._1)
         def stats(names: Seq[String], n: String, c: String) =
           if (names.isEmpty)
             s.range(1).select(lit(0L).as(n), lit(0L).as(c))
@@ -1223,10 +1074,10 @@ object Maintenance {
               .agg(count(lit(1)).as(n),
                 coalesce(sum(round(col("o_totalprice") * 100)
                   .cast(LongType)), lit(0L)).as(c))
-        ms.map { case (v, w, adds, rms) =>
-          stats(adds, "n_inserted", "cents_in")
-            .crossJoin(stats(rms, "n_deleted", "cents_out"))
-            .select(lit(v).as("version"), lit(w).as("writer"),
+        TxnLog.read(java.nio.file.Paths.get(root, "_log")).map { m =>
+          stats(m.adds, "n_inserted", "cents_in")
+            .crossJoin(stats(m.removed, "n_deleted", "cents_out"))
+            .select(lit(m.version).as("version"), lit(m.writer).as("writer"),
               col("n_inserted"), col("n_deleted"),
               (col("n_inserted") - col("n_deleted")).as("net_rows"),
               (col("cents_in") - col("cents_out")).as("net_cents"))
@@ -1285,10 +1136,7 @@ object Maintenance {
         val root = checkpointRoot(s, dir)
         (0L to 8L).map { v =>
           val (cp, tailN, live) = resolveWithCheckpoint(root, v)
-          s.read.parquet(live.map(n => s"$root/$n"): _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(round(col("o_totalprice") * 100).cast(LongType))
-                .as("cents"))
+          snapshot(s, root, live)
             .select(lit(v).as("version"), lit(cp).as("cp_used"),
               lit(tailN).as("tail_read"), col("n_rows"), col("cents"))
         }.reduce(_.unionByName(_)).orderBy(col("version"))
@@ -1346,7 +1194,7 @@ object Maintenance {
     // previously-committed files, no new data dirs on disk).
     //
     // Scale shape: restore cost is O(manifest) — the live-set fold and
-    // the one CREATE_NEW commit; the data plane is untouched. Reads at
+    // the one put-if-absent commit; the data plane is untouched. Reads at
     // any version scan only that version's live files (manifest-planned
     // pruning, as q_snapshot_txn).
     QueryDef(
@@ -1354,26 +1202,12 @@ object Maintenance {
       (s, dir) => {
         val dataRoot = txnRoot(s, dir)
         val logRoot = restoreRoot(s, dir)
-        val ms = s.read.json(s"$logRoot/_log")
-          .select(col("version").cast(LongType), col("writer"),
-            col("adds"), col("removes"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1),
-            r.getSeq[String](2), r.getSeq[String](3)))
-          .sortBy(_._1)
-        ms.map { case (v, w, adds, rms) =>
-          val live = ms.filter(_._1 <= v)
-            .foldLeft(Seq.empty[String]) { case (acc, (_, _, as, rs)) =>
-              acc.filterNot(rs.contains) ++ as
-            }
-            .map(n => s"$dataRoot/$n")
-          s.read.parquet(live: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(round(col("o_totalprice") * 100).cast(LongType))
-                .as("cents"))
-            .select(lit(v).as("version"), lit(w).as("writer"),
-              lit(adds.size.toLong).as("n_add_files"),
-              lit(rms.size.toLong).as("n_rm_files"),
+        val log = TxnLog.read(java.nio.file.Paths.get(logRoot, "_log"))
+        log.map { m =>
+          snapshot(s, dataRoot, TxnLog.liveAt(log, m.version))
+            .select(lit(m.version).as("version"), lit(m.writer).as("writer"),
+              lit(m.adds.size.toLong).as("n_add_files"),
+              lit(m.removed.size.toLong).as("n_rm_files"),
               col("n_rows"), col("cents"))
         }.reduce(_.unionByName(_)).orderBy(col("version"))
       },
@@ -1487,38 +1321,20 @@ object Maintenance {
       "q_snapshot_branch",
       (s, dir) => {
         val root = branchRoot(s, dir)
-        def logOf(sub: String) = {
-          val p = new java.io.File(s"$root/$sub")
-          if (p.listFiles((_, n) => n.endsWith(".json")).isEmpty)
-            Seq.empty
-          else
-            s.read.json(s"$root/$sub")
-              .select(col("version").cast(LongType), col("writer"),
-                col("adds"))
-              .collect()
-              .map(r => (r.getLong(0), r.getString(1),
-                r.getSeq[String](2)))
-              .toSeq.sortBy(_._1)
-        }
-        val main = logOf("_log")
-        def liveMain(v: Long) =
-          main.filter(_._1 <= v).flatMap(_._3)
+        def logOf(sub: String) = TxnLog.read(java.nio.file.Paths.get(root, sub))
         def view(ref: String, v: Long, files: Seq[String]) =
-          s.read.parquet(files.map(n => s"$root/$n"): _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(round(col("o_totalprice") * 100).cast(LongType))
-                .as("cents"))
+          snapshot(s, root, files)
             .select(lit(ref).as("ref"), lit(v).as("version"),
               col("n_rows"), col("cents"))
-        val mainViews = main.map { case (v, _, _) =>
-          view("main", v, liveMain(v)) }
+        val main = logOf("_log")
+        val mainViews = main.map(m =>
+          view("main", m.version, TxnLog.liveAt(main, m.version)))
         val branchViews = Seq("dev", "hot").flatMap { b =>
-          logOf(s"_log_$b").map { case (bv, _, _) =>
-            // base_version is 0 in the staged refs; a general reader
-            // parses it from _refs/<b>.json — the fold is identical
-            view(b, bv, liveMain(0L) ++
-              logOf(s"_log_$b").filter(_._1 <= bv).flatMap(_._3))
-          }
+          val log = logOf(s"_log_$b")
+          // base_version is 0 in the staged refs; a general reader
+          // parses it from _refs/<b>.json — the fold is identical
+          log.map(m => view(b, m.version,
+            TxnLog.liveAt(log, m.version, base = TxnLog.liveAt(main, 0L))))
         }
         (mainViews ++ branchViews).reduce(_.unionByName(_))
           .orderBy(col("ref"), col("version"))
@@ -1615,25 +1431,14 @@ object Maintenance {
         val out = graft.Staging.dir("q_merge_into")
         import java.nio.file.{Files, Paths}
         val outP = Paths.get(out)
-        if (Files.exists(outP)) {
-          Files.walk(outP).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.deleteIfExists(f))
-        }
+        graft.Staging.deleteTree(outP)
         Files.createDirectories(outP)
         // untouched month dirs: file-level passthrough, never decoded
-        val land = Paths.get(landing)
-        val listing = Files.list(land)
-        try listing.forEach { p =>
+        listDir(Paths.get(landing)).foreach { p =>
           val name = p.getFileName.toString
-          if (name.startsWith("ym=") &&
-              !touched(name.stripPrefix("ym="))) {
-            Files.walk(p).forEach { f =>
-              val tgt = outP.resolve(land.relativize(f).toString)
-              if (Files.isDirectory(f)) Files.createDirectories(tgt)
-              else Files.copy(f, tgt)
-            }
-          }
-        } finally listing.close()
+          if (name.startsWith("ym=") && !touched(name.stripPrefix("ym=")))
+            graft.Staging.copyTree(p, outP.resolve(name))
+        }
         // re-encode ONLY the touched months through the merge pipeline
         val live = s.read.parquet(landing)
           .filter(col("ym").isin(touched.toSeq: _*))

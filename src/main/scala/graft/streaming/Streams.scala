@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.QueryDef
+import graft.operators.{Maintenance, TxnLog}
 import graft.sources.Tables
 
 /** Structured Streaming surface (SURVEY §2.B B36-B41).
@@ -23,6 +24,12 @@ import graft.sources.Tables
   * state (windows, dedup keys) is partitioned by key in the state store,
   * and watermarks bound state size — the knobs that matter at 100 TB/day
   * are watermark delay and shuffle partitions, not operator choice.
+  *
+  * The two transaction-log streams — q_stream_txn_sink (a writer) and
+  * q_stream_cdc_apply (a subscriber) — speak the log only through
+  * `graft.operators.TxnLog`, the one owner of its manifest format,
+  * put-if-absent commit, reader and live-set fold, so stream and batch
+  * writers share one table.
   */
 object Streams {
 
@@ -1148,10 +1155,10 @@ object Streams {
     // North star — STREAMING writer through the optimistic-concurrency
     // transaction log (q_snapshot_txn composed with B41): each
     // micro-batch lands its rows as immutable parquet and commits them
-    // by an ATOMIC put-if-absent version-file create — the same
-    // protocol the batch writers use (Maintenance.scala txnRoot), so
-    // stream and batch writers coexist on one table. The run stages the
-    // full conflict story deterministically:
+    // through TxnLog.commit — the ATOMIC put-if-absent version-file
+    // create the batch writers use too, so stream and batch writers
+    // coexist on one table. The run stages the full conflict story
+    // deterministically:
     //   v0 = stream batch 0 (attempt 1);
     //   v1 = a CONCURRENT BATCH writer (side load, disjoint key range)
     //        that wins the race while the stream is between batches;
@@ -1178,45 +1185,18 @@ object Streams {
     QueryDef(
       "q_stream_txn_sink",
       (s, dir) => {
-        import java.nio.file.{Files, Paths, FileAlreadyExistsException}
-        import scala.jdk.CollectionConverters._
         val uniq = sinkSeq.incrementAndGet()
         val root = graft.Staging.dir(s"stream_txn_$uniq")
-        val log = Paths.get(root, "_log")
-        Files.createDirectories(log)
+        val log = java.nio.file.Paths.get(root, "_log")
+        java.nio.file.Files.createDirectories(log)
         lastTxnRoot.set(root)
-        val vre = """"lo":(-?\d+),"hi":(-?\d+)""".r
-        def manifests(): Seq[String] = {
-          val l = Files.list(log)
-          try l.iterator().asScala.toSeq
-            .sortBy(_.getFileName.toString).map(Files.readString)
-          finally l.close()
-        }
-        def tryCommit(v: Int, writer: String, batch: Long, attempt: Int,
-                      adds: Seq[String], lo: Long, hi: Long): Unit = {
-          val body =
-            s"""{"version":$v,"writer":"$writer","batch":$batch,""" +
-              s""""attempt":$attempt,"adds":[${adds.map("\"" + _ + "\"")
-                .mkString(",")}],"lo":$lo,"hi":$hi}"""
-          // CREATE_NEW (O_EXCL) = put-if-absent; NOT rename (POSIX
-          // rename silently replaces — a loser would clobber the winner)
-          try Files.write(log.resolve(f"v$v%03d.json"),
-            body.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          catch {
-            case _: FileAlreadyExistsException =>
-              val winner = Files.readString(log.resolve(f"v$v%03d.json"))
-              val ok = vre.findFirstMatchIn(winner).exists { m =>
-                hi <= m.group(1).toLong || m.group(2).toLong <= lo
-              }
-              require(ok, s"$writer: range overlap with committed v$v")
-              tryCommit(v + 1, writer, batch, attempt + 1, adds, lo, hi)
-          }
-        }
-        def nextVersion(): Int = {
-          val l = Files.list(log)
-          try l.iterator().asScala.count(_ => true) finally l.close()
-        }
+        // stream manifests carry the batch id and an event-time range
+        // and never remove files
+        def commit(v: Long, writer: String, batch: Long, adds: Seq[String],
+                   lo: Long, hi: Long): Unit =
+          TxnLog.commit(log, TxnLog.Manifest(v, writer, adds, removes = None,
+            range = Some(TxnLog.EventTime(lo, hi)), batch = Some(batch)))
+        def nextVersion(): Long = TxnLog.read(log).size.toLong
         // exactly 3 time-ranged landing files → exactly 3 micro-batches
         // under maxFilesPerTrigger=1 (the deterministic batch spine the
         // staged conflict story needs)
@@ -1236,19 +1216,18 @@ object Streams {
                batchId: Long) =>
                 // idempotent replay guard (txnAppId pattern): committed
                 // stream batches are visible in the log
-                val done = manifests().exists(m =>
-                  m.contains("\"writer\":\"stream\"") &&
-                    m.contains(s""""batch":$batchId,"""))
+                val committed = TxnLog.read(log)
+                val done = committed.exists(m =>
+                  m.writer == "stream" && m.batch.contains(batchId))
                 if (!done) {
                   // the side writer carries its OWN idempotence key: a
                   // batch-1 redelivery after the side commit landed but
                   // before the stream's rebased commit did (driver
-                  // crash between the two tryCommits) re-enters with
+                  // crash between the two commits) re-enters with
                   // done=false, and without this guard would commit
                   // "side" at a second version — the log would then
                   // resolve the side file twice
-                  val sideDone = manifests().exists(
-                    _.contains("\"writer\":\"batch_side\""))
+                  val sideDone = committed.exists(_.writer == "batch_side")
                   if (batchId == 1L && !sideDone) {
                     // deterministic CONCURRENT batch writer: wins the
                     // next version while the stream holds its snapshot
@@ -1259,7 +1238,7 @@ object Streams {
                         (lit(Long.MaxValue - 10) + col("id")).as("ts_us"))
                     side.coalesce(1).write.mode("overwrite")
                       .parquet(s"$root/side")
-                    tryCommit(nextVersion(), "batch_side", -1L, 1,
+                    commit(nextVersion(), "batch_side", -1L,
                       Seq("side"), Long.MaxValue - 9, Long.MaxValue)
                     // a CRASHED writer's orphan: data landed, its
                     // commit never did — invisible to readers
@@ -1278,7 +1257,7 @@ object Streams {
                     if (bounds.isNullAt(0)) (0L, 0L)
                     else (bounds.getLong(0), bounds.getLong(1) + 1)
                   batch.write.mode("overwrite").parquet(s"$root/b$batchId")
-                  tryCommit(snapshotV, "stream", batchId, 1,
+                  commit(snapshotV, "stream", batchId,
                     Seq(s"b$batchId"), lo, hi)
                 }
             }
@@ -1287,11 +1266,7 @@ object Streams {
           q.awaitTermination()
         }
         // snapshot read at head: live files resolved from the LOG only
-        val adds = manifests().flatMap(m =>
-          """"adds":\[([^\]]*)\]""".r.findFirstMatchIn(m).toSeq
-            .flatMap(_.group(1).split(",").toSeq)
-            .map(_.replaceAll("\"", "")).filter(_.nonEmpty))
-        s.read.parquet(adds.map(a => s"$root/$a"): _*)
+        s.read.parquet(TxnLog.liveAt(TxnLog.read(log)).map(a => s"$root/$a"): _*)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100).cast(LongType)).as("cents"))
@@ -1330,18 +1305,16 @@ object Streams {
       "q_stream_cdc_apply",
       (s, dir) => {
         import scala.jdk.CollectionConverters._
-        val root = graft.operators.Maintenance.txnRoot(s, dir)
+        val root = Maintenance.txnRoot(s, dir)
         val uniq = sinkSeq.incrementAndGet()
         // (high watermark, live set) + parked out-of-order commits
         val state = new java.util.concurrent.atomic.AtomicReference(
           (-1L, Seq.empty[String]))
-        val pending = new java.util.concurrent.ConcurrentHashMap[
-          Long, (String, Seq[String], Seq[String])]()
+        val pending =
+          new java.util.concurrent.ConcurrentHashMap[Long, TxnLog.Manifest]()
         val results = new java.util.concurrent.ConcurrentLinkedQueue[
           (Long, String, Long, Long)]()
-        val manifestSchema = "version LONG, writer STRING, attempt LONG, " +
-          "adds ARRAY<STRING>, removes ARRAY<STRING>, lo STRING, hi STRING"
-        val q = s.readStream.schema(manifestSchema)
+        val q = s.readStream.schema(TxnLog.schema)
           .option("maxFilesPerTrigger", "1")
           .json(s"$root/_log")
           .writeStream
@@ -1351,24 +1324,17 @@ object Streams {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
              _: Long) =>
               // manifest rows are metadata-sized; park then drain
-              batch.collect().foreach { r =>
-                pending.put(r.getLong(0),
-                  (r.getString(1), r.getSeq[String](3), r.getSeq[String](4)))
-              }
+              batch.collect().map(TxnLog.fromRow)
+                .foreach(m => pending.put(m.version, m))
               var advanced = true
               while (advanced) {
                 val (hw, live) = state.get()
                 Option(pending.remove(hw + 1)) match {
-                  case Some((writer, adds, removes)) =>
-                    val newLive = live.filterNot(removes.contains) ++ adds
+                  case Some(m) =>
+                    val newLive = TxnLog.liveAt(Seq(m), base = live)
                     state.set((hw + 1, newLive))
-                    val agg = s.read
-                      .parquet(newLive.map(n => s"$root/$n"): _*)
-                      .agg(count(lit(1)),
-                        sum(round(col("o_totalprice") * 100)
-                          .cast("long")))
-                      .head()
-                    results.add((hw + 1, writer,
+                    val agg = Maintenance.snapshot(s, root, newLive).head()
+                    results.add((hw + 1, m.writer,
                       agg.getLong(0), agg.getLong(1)))
                   case None => advanced = false
                 }

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * embedding near-dup rule is defined once (`Similarity.nearDupCos`),
   * so its prefilter literal appears in one line of code. The co-purchase
   * graph is derived once (`Graph.coPurchaseEdges`) and symmetrized in one
-  * place (`Graph.bothWays`). */
+  * place (`Graph.bothWays`). The transaction-log format (put-if-absent
+  * commits, manifest fields, the log reader) is known to `TxnLog.scala`
+  * alone. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -87,6 +89,20 @@ class StructureSpec extends AnyFunSuite {
     assert(from >= 0 && to > from)
     assert(hits.size == 1 && hits.head > from && hits.head < to,
       s"${hits.size} both-ways unions, expected one, inside bothWays")
+  }
+
+  test("the transaction-log format is written and read only in TxnLog.scala") {
+    assert(Files.isRegularFile(main.resolve("graft/operators/TxnLog.scala")))
+    val protocol = """CREATE_NEW|"adds"|"removes"|\.read\.json\(.*_log""".r
+    val hits = Seq("CREATE_NEW", "\"adds\"", "\"removes\"", ".read.json(")
+      .flatMap(offenders(main, _, except = Set("TxnLog.scala")))
+      .distinct
+      .filter { h =>
+        val code = h.split(": ", 2)(1)
+        !(code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")) &&
+          protocol.findFirstIn(code).nonEmpty
+      }
+    if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
   }
 
   test("operators read nothing from the environment") {
