@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** `spark.sql.extensions`-style wiring for sessions built outside
   * [[Sessions.build]] (e.g. spark-submit with
   * `--conf spark.sql.extensions=graft.GraftExtensions`): registers the
-  * custom planner strategy, optimizer rule, and EVERY native function
+  * custom planner strategies, optimizer rule, and EVERY native function
   * from [[functions.Functions.specs]] — the same list
   * `Sessions.ensureConfigured` registers, so the two paths expose the
   * identical function/strategy/rule surface.
@@ -23,6 +23,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => plans.TopKStrategy)
+    e.injectPlannerStrategy(_ => plans.SmallSortStrategy)
     e.injectOptimizerRule(_ => plans.RewriteRowNumberTopK)
     functions.Functions.specs.foreach { case (name, cls, builder) =>
       e.injectFunction((

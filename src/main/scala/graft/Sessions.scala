@@ -170,7 +170,7 @@ object Sessions {
   /** Idempotent per-session setup that also works on sessions built
     * OUTSIDE this library (e.g. a test harness's own SparkSession):
     * runtime-settable configs, native function registration, and the
-    * custom strategy/rule via the public `spark.experimental` extension
+    * custom strategies/rule via the public `spark.experimental` extension
     * points (GraftExtensions offers the spark.sql.extensions wiring as
     * the spark-submit alternative). Every declared query calls this, so
     * the library has no hidden session prerequisites. */
@@ -179,9 +179,11 @@ object Sessions {
     // TIMESTAMP(NANOS) column is rejected outright by Spark 4
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     functions.Functions.registerAll(spark)
-    if (!spark.experimental.extraStrategies.contains(plans.TopKStrategy)) {
+    val strategies = Seq(plans.TopKStrategy, plans.SmallSortStrategy)
+      .filterNot(spark.experimental.extraStrategies.contains)
+    if (strategies.nonEmpty) {
       spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ plans.TopKStrategy
+        spark.experimental.extraStrategies ++ strategies
     }
     if (!spark.experimental.extraOptimizations.contains(plans.RewriteRowNumberTopK)) {
       spark.experimental.extraOptimizations =

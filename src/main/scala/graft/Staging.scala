@@ -107,17 +107,8 @@ object Staging {
       build: String => Unit): String = synchronized {
     import java.nio.file.{Files, StandardCopyOption}
     Files.createDirectories(cacheRoot)
-    // reap orphaned build dirs from crashed/killed JVMs: a live build's
-    // tmp dir is freshly created, so anything older than an hour is dead
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
-    val listing = Files.list(cacheRoot)
-    try listing.forEach { p =>
-      if (p.getFileName.toString.startsWith("_build_") &&
-          p.toFile.lastModified() < cutoff)
-        try deleteTree(p) catch { case _: Throwable => () }
-    } finally listing.close()
-    val base =
-      cacheRoot.resolve(s"${name}_${keyOf(dir)}_${stampOf(dir)}_r$rev")
+    val stem = s"${name}_${keyOf(dir)}_${stampOf(dir)}_r"
+    val base = cacheRoot.resolve(s"$stem$rev")
     if (!Files.exists(base)) {
       val tmp = Files.createTempDirectory(cacheRoot, s"_build_")
       try {
@@ -133,16 +124,37 @@ object Staging {
             deleteTree(tmp)
           case _: java.nio.file.NoSuchFileException =>
             // our tmp dir was reaped mid-build (a >1h build tripped the
-            // orphan cutoff above). If a racing winner published `base`
-            // meanwhile, use theirs; otherwise rebuild into a fresh dir —
-            // the recursive call re-checks `base` before building
+            // orphan cutoff of another JVM's reap). If a racing winner
+            // published `base` meanwhile, use theirs; otherwise rebuild
+            // into a fresh dir — the recursive call re-checks `base`
+            // before building
             if (!Files.exists(base)) return cached(name, dir, rev)(build)
         }
       } catch {
         case e: Throwable => deleteTree(tmp); throw e
       }
     }
+    reap(stem, rev)
     base.toString
+  }
+
+  /** Delete what no run reads again from [[cacheRoot]], once it is more
+    * than an hour old: orphaned `_build_` dirs of crashed or killed
+    * JVMs (a live build's dir is freshly created), and the artifacts
+    * `<stem><r>` with `r < rev`, whose recipe revision `rev` has
+    * superseded. The age floor is the orphan cutoff: it spares an older
+    * revision that a run of an older checkout has just built. */
+  private def reap(stem: String, rev: Int): Unit = {
+    val cutoff = System.currentTimeMillis() - 3600L * 1000
+    val listing = java.nio.file.Files.list(cacheRoot)
+    try listing.forEach { p =>
+      val n = p.getFileName.toString
+      val superseded = n.startsWith(stem) &&
+        n.drop(stem.length).toIntOption.exists(_ < rev)
+      if ((superseded || n.startsWith("_build_")) &&
+          p.toFile.lastModified() < cutoff)
+        try deleteTree(p) catch { case _: Throwable => () }
+    } finally listing.close()
   }
 
   /** Table-identifier-safe form of `dir`'s source key (`keyOf(dir)_

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import graft.QueryDef
 import graft.sources.Tables
 
@@ -107,12 +107,19 @@ object Maintenance {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
+  /** The one orders column the time-travel reads aggregate, given to
+    * `s.read` as the schema of the staged data files. Without a schema
+    * Spark infers one from the files' parquet footers with a Spark job
+    * of its own (`ParquetFileFormat.mergeSchemasInParallel`) per read,
+    * while `fn` builds the plan. */
+  private val priceSchema = StructType.fromDDL("o_totalprice DOUBLE")
+
   /** One time-travel read: (n_rows, exact cents) over the orders data
     * files `names` under `root` — the snapshot every transaction-log
     * query aggregates at a version. */
   private[graft] def snapshot(s: org.apache.spark.sql.SparkSession, root: String,
                               names: Seq[String]): org.apache.spark.sql.DataFrame =
-    s.read.parquet(names.map(n => s"$root/$n"): _*)
+    s.read.schema(priceSchema).parquet(names.map(n => s"$root/$n"): _*)
       .agg(count(lit(1)).as("n_rows"),
         sum(round(col("o_totalprice") * 100).cast(LongType)).as("cents"))
 
@@ -1070,7 +1077,7 @@ object Maintenance {
           if (names.isEmpty)
             s.range(1).select(lit(0L).as(n), lit(0L).as(c))
           else
-            s.read.parquet(names.map(x => s"$root/$x"): _*)
+            s.read.schema(priceSchema).parquet(names.map(x => s"$root/$x"): _*)
               .agg(count(lit(1)).as(n),
                 coalesce(sum(round(col("o_totalprice") * 100)
                   .cast(LongType)), lit(0L)).as(c))

@@ -1265,8 +1265,11 @@ object Streams {
             .start()
           q.awaitTermination()
         }
-        // snapshot read at head: live files resolved from the LOG only
-        s.read.parquet(TxnLog.liveAt(TxnLog.read(log)).map(a => s"$root/$a"): _*)
+        // snapshot read at head: live files resolved from the LOG only;
+        // every data file holds the stream's columns, so the read takes
+        // that schema instead of inferring it with a job
+        s.read.schema(eventsJsonSchema)
+          .parquet(TxnLog.liveAt(TxnLog.read(log)).map(a => s"$root/$a"): _*)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100).cast(LongType)).as("cents"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.desc
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver contract must hold on a SparkSession built WITHOUT any
@@ -24,6 +25,13 @@ class BareSessionSpec extends AnyFunSuite {
     assert(SparkEntry.queries("q_similarity_topk")(bare, "/root/testdata/sf0.001").count() > 0)
     // needs TopKStrategy
     assert(SparkEntry.queries("q_topk_per_key")(bare, "/root/testdata/sf0.001").count() > 0)
+    // the queries above configured the session: a small ORDER BY now
+    // sorts in one partition (SmallSortStrategy)
+    val sorted = bare.range(0, 100, 1, 4).toDF().orderBy(desc("id"))
+    assert(sorted.collect().map(_.getLong(0)).toSeq == (0L until 100L).reverse)
+    val plan = sorted.queryExecution.executedPlan.toString
+    assert(plan.contains("Coalesce 1") && !plan.contains("rangepartitioning"), plan)
+    assert(bare.experimental.extraStrategies.count(_ == plans.SmallSortStrategy) == 1)
   }
 
   test("ensureConfigured binds each native function once, over Spark's built-ins") {

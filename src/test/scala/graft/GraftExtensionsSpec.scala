@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A session wired ONLY through `spark.sql.extensions=graft.GraftExtensions`
   * (the spark-submit path) must expose the same surface as one configured
   * by `Sessions.ensureConfigured` — same native SQL functions, same
-  * planner strategy, same optimizer rule. Guards against the two
+  * planner strategies, same optimizer rule. Guards against the two
   * registration paths drifting apart. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -51,6 +51,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
       assert(df.queryExecution.optimizedPlan.toString.contains("TopKPerKey"))
       assert(df.count() > 0)
+
+      // the injected small-sort strategy sorts a small input in one
+      // partition, with no range exchange
+      val sorted = ext.range(0, 100, 1, 4).toDF().orderBy(col("id").desc)
+      assert(sorted.collect().map(_.getLong(0)).toSeq == (0L until 100L).reverse)
+      val plan = sorted.queryExecution.executedPlan.toString
+      assert(plan.contains("Coalesce 1") && !plan.contains("rangepartitioning"), plan)
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -5,7 +5,8 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Staging.deleteTree]] and [[Staging.copyTree]], the one recursive
-  * delete and the one file-level tree copy. */
+  * delete and the one file-level tree copy, and the reaping of superseded
+  * revisions by [[Staging.cached]]. */
 class StagingSpec extends AnyFunSuite {
 
   /** a/x, a/b/y, a/b/c/ (empty), z under a fresh temp dir */
@@ -66,5 +67,29 @@ class StagingSpec extends AnyFunSuite {
     assert(grown < 50, s"$grown file descriptors leaked over 300 failed copies")
     Staging.deleteTree(src)
     Staging.deleteTree(dst)
+  }
+
+  test("cached reaps superseded revs of its own artifact once past the hour") {
+    val src = nested() // the source whose key and stamp name the artifacts
+    val name = s"stagingspec_${System.nanoTime()}"
+    def stage(n: String, rev: Int): Path =
+      Paths.get(Staging.cached(n, src.toString, rev) { t =>
+        Files.write(Paths.get(t, "v"), s"$n r$rev".getBytes)
+      })
+    def age(p: Path): Unit =
+      assert(p.toFile.setLastModified(System.currentTimeMillis() - 7200L * 1000))
+    val r1 = stage(name, 1)
+    val r2 = stage(name, 2)
+    assert(Files.exists(r1), "a superseded rev younger than an hour stays")
+    val r3 = stage(name, 3)
+    val other = stage(s"${name}x", 1)
+    Seq(r1, r3, other).foreach(age)
+    // a cache hit at r2 reaps the old r1, never the newer r3 nor the r1
+    // of another artifact built from the same source
+    assert(stage(name, 2) == r2)
+    assert(!Files.exists(r1))
+    assert(Files.readString(r2.resolve("v")) == s"$name r2")
+    assert(Files.exists(r3) && Files.exists(other))
+    Seq(r2, r3, other, src).foreach(Staging.deleteTree)
   }
 }
