@@ -100,6 +100,15 @@ object Dev {
   private[graft] def mb(bytes: Long): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, bytes / 1048576.0)
 
+  /** The `PROBEJOBSTART` line of a job: its id and who launched it,
+    * the job description (`graft:pin`, `graft:stage:<name>`, ...) when
+    * the launching thread set one, else the short call site. */
+  private[graft] def jobStartLine(j: SparkListenerJobStart): String = {
+    val d = Seq("spark.job.description", "callSite.short").iterator
+      .flatMap(k => Option(j.properties).flatMap(p => Option(p.getProperty(k))))
+    s"PROBEJOBSTART id=${j.jobId} desc=${d.nextOption().getOrElse("").take(160)}"
+  }
+
   private def probe(spark: SparkSession, sfDir: String,
                     names: Seq[String]): Unit = {
     val shufW = new LongAdder; val shufR = new LongAdder
@@ -111,13 +120,7 @@ object Dev {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.increment()
         jobStartNs.put(j.jobId, System.nanoTime())
-        val props = Option(j.properties)
-        val d = props
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .orElse(props.flatMap(p =>
-            Option(p.getProperty("spark.job.description"))))
-          .getOrElse("")
-        System.err.println(s"PROBEJOBSTART id=${j.jobId} desc=${d.take(160)}")
+        System.err.println(jobStartLine(j))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         val t0 = jobStartNs.remove(j.jobId)

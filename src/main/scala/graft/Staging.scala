@@ -1,9 +1,18 @@
 package graft
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Per-JVM unique scratch space for queries that stage intermediate
   * files (CSV/JSON round-trips, file-source streams). Rooted under
   * `java.io.tmpdir`, so concurrent Verify/Bench runs in separate JVMs
-  * never collide and nothing depends on this checkout's layout. */
+  * never collide and nothing depends on this checkout's layout. Also
+  * the one place that cuts a DataFrame's lineage within a run: [[pin]]
+  * and [[cut]]. */
 object Staging {
   lazy val root: String = {
     val p = java.nio.file.Files.createTempDirectory("graft_stage_")
@@ -113,7 +122,8 @@ object Staging {
       val tmp = Files.createTempDirectory(cacheRoot, s"_build_")
       try {
         val t0 = System.nanoTime()
-        build(tmp.toString) // Spark mode("overwrite") writes INTO tmp
+        // Spark mode("overwrite") writes INTO tmp
+        described(s"graft:stage:$name")(build(tmp.toString))
         buildNanos.addAndGet(System.nanoTime() - t0)
         try Files.move(tmp, base, StandardCopyOption.ATOMIC_MOVE)
         catch {
@@ -156,6 +166,71 @@ object Staging {
         try deleteTree(p) catch { case _: Throwable => () }
     } finally listing.close()
   }
+
+  /** Runs `body` with `desc` as the thread's Spark job description, so
+    * every job it starts says who started it (listeners read it as the
+    * job property `spark.job.description`); the thread's previous
+    * description is restored afterwards. Without a session it only runs
+    * `body`. */
+  def described[T](desc: String)(body: => T): T =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(body) { s =>
+        val sc = s.sparkContext
+        val prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(desc)
+        try body finally sc.setJobDescription(prev)
+      }
+
+  /** A frame pinned by [[pin]]: `df` reads the stored rows;
+    * `partitionRows(i)` is the row count of its partition `i`, `rows`
+    * their sum. */
+  final class Pinned private[Staging] (val df: DataFrame,
+      val partitionRows: IndexedSeq[Long], rdd: RDD[InternalRow]) {
+    val rows: Long = partitionRows.sum
+
+    /** Releases the stored rows; `df` must not be read afterwards. An
+      * iterative loop frees each round's pins once the next round's are
+      * stored, or its storage grows with the round count. */
+    def free(): Unit = rdd.unpersist(blocking = false)
+  }
+
+  /** The one checkpoint that cuts a DataFrame's lineage. One job (named
+    * `graft:pin`) runs `df`'s plan, stores its rows as a local
+    * checkpoint and counts each partition's rows and `UnsafeRow` bytes.
+    * The returned leaf reports those totals as its exact
+    * `Statistics(sizeInBytes, rowCount)`, so the planner sizes joins
+    * from the rows it will read: neither the child plan's estimate,
+    * which a self-joining loop squares every round, nor a sizeless
+    * default. The leaf is the one `Dataset.localCheckpoint` builds, so
+    * it keeps the executed plan's output partitioning and ordering
+    * (under AQE that plan reports its partitioning as unknown, as it is
+    * decided at run time). The rows stay in executor storage for the
+    * life of the SparkContext unless [[Pinned.free]] releases them. */
+  def pin(df: DataFrame): Pinned = described("graft:pin") {
+    val ck = df.localCheckpoint(eager = false)
+    val leaf = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val parts = leaf.rdd.sparkContext.runJob(leaf.rdd, (it: Iterator[InternalRow]) => {
+      var n, bytes = 0L
+      it.foreach { r => n += 1; bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes }
+      (n, bytes)
+    })
+    val stats = Statistics(sizeInBytes = parts.map(_._2).sum,
+      rowCount = Some(parts.map(_._1).sum))
+    val exact = leaf.copy()(ck.sparkSession.asInstanceOf[classic.SparkSession],
+      Some(stats), Some(leaf.constraints))
+    new Pinned(GraftBridge.ofRows(ck.sparkSession, exact),
+      parts.map(_._1).toIndexedSeq, leaf.rdd)
+  }
+
+  /** [[pin]]'s frame, for a chain that needs no row count:
+    * `df.transform(Staging.pinned)`. */
+  def pinned(df: DataFrame): DataFrame = pin(df).df
+
+  /** A lineage cut that runs no job of its own: `df`'s rows are stored
+    * by the first job that reads the result, and the leaf keeps the
+    * child plan's size estimate. For a frame whose next reader runs
+    * soon anyway, where a [[pin]]'s job would be one job more. */
+  def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Table-identifier-safe form of `dir`'s source key (`keyOf(dir)_
     * stampOf(dir)` with every non-alphanumeric mapped to `_`), for

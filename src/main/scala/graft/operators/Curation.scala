@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.functions.TextFns
 import graft.sources.Tables
 
@@ -158,6 +158,30 @@ object Curation {
       .withColumn("cum_before", sum(col("n_tokens")).over(w) - col("n_tokens"))
       .withColumn("pack_id",
         floor(col("cum_before") / lit(2048.0)).cast(LongType))
+  }
+
+  /** `df` plus `pos`, each row's 0-based rank in (unique) `key` order,
+    * and the row count — without a single-partition window (the shape
+    * the no-global-window audit exists to forbid). A range exchange
+    * into `parts` partitions, one pin that counts each partition's
+    * rows, then a row_number within each partition plus the rows
+    * before it. The only driver data is one count per partition, so
+    * parallelism is the partition count at any scale. The pin fixes
+    * the sampled range boundaries, so the counts and the numbering see
+    * the SAME row placement. */
+  private def positions(df: org.apache.spark.sql.DataFrame, key: String,
+                        parts: Int): (org.apache.spark.sql.DataFrame, Long) = {
+    val ranged = Staging.pin(df.repartitionByRange(parts, col(key))
+      .withColumn("pid", spark_partition_id()))
+    // exclusive prefix sum: offset of partition i = rows before it
+    val offCol = ranged.partitionRows.scanLeft(0L)(_ + _).init.zipWithIndex
+      .foldLeft(lit(0L)) { case (acc, (o, p)) =>
+        when(col("pid") === p, lit(o)).otherwise(acc)
+      }
+    val wLocal = Window.partitionBy(col("pid")).orderBy(col(key))
+    (ranged.df.withColumn("pos",
+      offCol + row_number().over(wLocal).cast(LongType) - lit(1L)).drop("pid"),
+      ranged.rows)
   }
 
   /** The shared pack derivation as a DuckDB CTE chain ending in
@@ -435,7 +459,7 @@ object Curation {
         val surv = scored.filter(col("quality_score") >= 0.31)
         val survSlim = surv
           .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         // shared staged shingle index restricted to survivors: the df
         // cap is computed over the restricted set, identical to deriving
         // shingles from the survivor docs directly (a doc's shingles
@@ -647,39 +671,12 @@ object Curation {
     ),
 
     // North star — contiguous global ids in doc_id order WITHOUT a
-    // single-partition window (the shape the no-global-window audit
-    // exists to forbid): range-partition by the sort key, number rows
-    // per partition locally, add per-partition offsets computed from
-    // the bounded (= partition-count) count vector. The only driver
-    // data is one count per partition; numbering itself is a
-    // partitioned window over pid, so parallelism is the partition
-    // count at any scale. The `localCheckpoint` pins the sampled range
-    // boundaries so the count pass and the numbering pass see the SAME
-    // row placement.
+    // single-partition window: [[positions]] over 8 range partitions.
     QueryDef(
       "q_global_ids",
       (s, dir) => {
-        val parts = 8
-        val ranged = Tables.documents(s, dir)
-          .select(col("doc_id"))
-          .repartitionByRange(parts, col("doc_id"))
-          .withColumn("pid", spark_partition_id())
-          .localCheckpoint()
-        val counts = ranged.groupBy(col("pid"))
-          .agg(count(lit(1)).as("c"))
-          .collect()
-          .map(r => r.getInt(0) -> r.getLong(1))
-          .sortBy(_._1)
-        // exclusive prefix sum: offset of partition i = rows before it
-        val offsets = counts.map(_._1)
-          .zip(counts.scanLeft(0L)(_ + _._2).init)
-        val offCol = offsets.foldLeft(lit(0L)) { case (acc, (p, o)) =>
-          when(col("pid") === p, lit(o)).otherwise(acc)
-        }
-        val wLocal = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-        ranged
-          .select(col("doc_id"),
-            (offCol + row_number().over(wLocal).cast(LongType)).as("gid"))
+        positions(Tables.documents(s, dir).select(col("doc_id")), "doc_id", 8)
+          ._1.select(col("doc_id"), (col("pos") + lit(1L)).as("gid"))
           .orderBy(col("doc_id"))
       },
       Some(
@@ -974,7 +971,7 @@ object Curation {
         val stats = bucketed.groupBy(col("b"))
           .agg(count(lit(1)).as("rcnt"),
             sum(when(col("lang") === "en", 1L).otherwise(0L)).as("tcnt"))
-          .localCheckpoint() // 64 rows; feeds totals AND the log table
+          .transform(Staging.pinned) // 64 rows; feeds totals AND the log table
         // two bounded scalars (64-row aggregate), the lmscore |V| role
         val tot = stats.agg(sum(col("rcnt")), sum(col("tcnt"))).head()
         val (rTot, tTot) = (tot.getLong(0), tot.getLong(1))
@@ -1068,29 +1065,11 @@ object Curation {
       "q_sample_negatives",
       (s, dir) => {
         val k = 4
-        val parts = 8
-        val ranged = Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("label"))
-          .repartitionByRange(parts, col("vec_id"))
-          .withColumn("pid", spark_partition_id())
-          .localCheckpoint()
-        val counts = ranged.groupBy(col("pid"))
-          .agg(count(lit(1)).as("c"))
-          .collect()
-          .map(r => r.getInt(0) -> r.getLong(1))
-          .sortBy(_._1)
-        val n = counts.map(_._2).sum
-        val offsets = counts.map(_._1)
-          .zip(counts.scanLeft(0L)(_ + _._2).init)
-        val offCol = offsets.foldLeft(lit(0L)) { case (acc, (p, o)) =>
-          when(col("pid") === p, lit(o)).otherwise(acc)
-        }
-        val wLocal = Window.partitionBy(col("pid")).orderBy(col("vec_id"))
-        val pos = ranged
-          .select(col("vec_id"), col("label"),
-            (offCol + row_number().over(wLocal).cast(LongType) - lit(1L))
-              .as("pos"))
-          .localCheckpoint() // feeds the anchor AND corpus sides below
+        val (ranked, n) = positions(
+          Tables.embeddings(s, dir).select(col("vec_id"), col("label")),
+          "vec_id", 8)
+        val pos = ranked
+          .transform(Staging.pinned) // feeds the anchor AND corpus sides below
         // per-slot ring shifts — the same md5 both engines evaluate
         def md5hex(x: String): String =
           java.security.MessageDigest.getInstance("MD5")
@@ -1488,7 +1467,7 @@ object Curation {
               (lit(1.0) + exp(-(col("qa") - col("qb")))), 1.0)
               .otherwise(0.0))
           .select(col("a"), col("b"), col("w"))
-          .localCheckpoint() // 8 GD rounds + the final report read it
+          .transform(Staging.pinned) // 8 GD rounds + the final report read it
         // rating table keyed by the ACTUAL item ids (collected once,
         // bounded by the 64-cap) — keying 0..n-1 would silently drop
         // items on any corpus whose id slice has gaps

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.functions.{TextFns, VectorFns}
 import graft.sources.Tables
 
@@ -312,7 +312,7 @@ object Dedup {
       .select(col("doc_id"),
         array(seeds.map(s =>
           graft.functions.SimHash64(col(textCol), s)): _*).as("sigs"))
-      .localCheckpoint()
+      .transform(Staging.pinned)
     val chunked = sh
       .select(col("doc_id"), col("sigs"),
         posexplode(col("sigs")).as(Seq("tbl", "sig")))
@@ -362,55 +362,17 @@ object Dedup {
   }
 
 
-  /** Free the storage blocks behind a `localCheckpoint`ed DataFrame.
-    * `Dataset.unpersist` only clears cache-manager entries; a local
-    * checkpoint's blocks live on the materialized RDD inside the
-    * resulting `LogicalRDD`, so reclaim there (else an iterative loop's
-    * storage grows linearly with round count until GC gets around to
-    * it). */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** localCheckpoint with the inherited size ESTIMATE dropped.
-    *
-    * `Dataset.localCheckpoint` truncates lineage but PRESERVES the
-    * child plan's estimated `Statistics` in the `LogicalRDD` leaf (so
-    * the optimizer keeps cardinality information across a checkpoint).
-    * In an UNBOUNDED iterative loop whose round plan joins the previous
-    * round's leaf with itself — the pointer-doubling step below — that
-    * inheritance SQUARES `sizeInBytes` every round: the estimate's bit
-    * count doubles per round, and past ~15 rounds the driver spends
-    * minutes per round inside `SizeInBytesOnlyStatsPlanVisitor`
-    * multiplying million-digit BigIntegers (measured on the 10×-probe
-    * clusters CC: >600 s of single-threaded driver BigInteger multiply
-    * while the cluster sat idle — SCALEPROBE r8). The fixed-round
-    * loops (PageRank, k-core, BFS…) never reach the blow-up depth;
-    * convergence-driven CC does.
-    *
-    * Re-wrapping the checkpointed rows through `createDataFrame` drops
-    * the leaf back to `defaultSizeInBytes` — bounded stats at any round
-    * count — at the cost of one Row-conversion pass over the narrow
-    * (id, label) rows per consumer, noise next to the round's join
-    * shuffles. Returns (wrapped, checkpoint handle): compute with the
-    * first, pass the SECOND to [[freeCheckpoint]]. */
-  private[graft] def checkpointCappedStats(df: DataFrame): (DataFrame, DataFrame) = {
-    val ck = df.localCheckpoint()
-    (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), ck)
-  }
-
   /** Row bound up to which the iterative loops ([[connectedComponents]],
-    * the Borůvka MST) force-broadcast their per-round id → label maps.
+    * the Borůvka MST) force-broadcast their per-round id → label maps,
+    * and label propagation and the random walks their edge list and
+    * adjacency.
     * Driver envelope: near the bound each round collects and broadcasts
     * about 100+ MB from the driver, so a corpus near it needs that much
     * driver heap to spare on top of the query's own. */
   private[graft] val BroadcastMapMaxRows = 2000000L
 
-  /** The map-side wrapper for a loop-carried map whose row count the
-    * driver knows is `rows`: broadcast at or under
+  /** The map-side wrapper for a loop-carried table whose row count the
+    * driver knows is `rows` (a pin's): broadcast at or under
     * [[BroadcastMapMaxRows]], the planner's choice above it. */
   private[graft] def boundedBroadcast(rows: Long): DataFrame => DataFrame =
     m => if (rows <= BroadcastMapMaxRows) broadcast(m) else m
@@ -424,8 +386,9 @@ object Dedup {
     * path graph is the worst case, and 100 TB corpora do produce long
     * near-dup chains). Each round is two equi-joins + one
     * partial-combined min-agg, all shuffling on node id — no step ever
-    * materializes a component. `localCheckpoint` cuts per-round lineage
-    * growth and the previous round's blocks are freed explicitly; the
+    * materializes a component. Pinning each round's tables cuts
+    * per-round lineage growth, and the previous round's pins are freed
+    * once the next round's are stored; the
     * per-round driver scalar is the convergence test, not data movement
     * — Σ labels is strictly decreasing while anything still propagates.
     * Deterministic: labels are ids, min is order-free. */
@@ -442,24 +405,20 @@ object Dedup {
   def connectedComponentsWithRounds(nodes: DataFrame, idCol: String,
                           edges: DataFrame, srcCol: String,
                           dstCol: String): (DataFrame, Int) = {
-    // checkpoint the edge list BEFORE symmetrizing: the union's two
-    // branches would otherwise each lazily re-run the (possibly
-    // expensive) pair-derivation plan feeding this. Stats-capped: an
-    // expensive pair derivation (nested candidate joins) can carry an
-    // astronomical size estimate that would then compound per round.
-    val (e0, e0Ck) = checkpointCappedStats(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val sym = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-    var (labels, labelsCk) = checkpointCappedStats(
-      nodes.select(col(idCol).as("id"), col(idCol).as("label")))
-    // the label table is |V| rows for the whole loop — once that is
-    // DRIVER-KNOWN bounded (one count of the materialized checkpoint),
-    // force broadcast on both per-round joins: capped-stats leaves
-    // erase size estimates, so the planner otherwise runs each round's
-    // tiny-map joins as SortMergeJoin — two sorts plus exchanges per
-    // round of job overhead (the r15 MST chase lesson). Above the
-    // bound the planner keeps its choice (100 TB posture).
-    val mapSide = boundedBroadcast(labels.count())
+    // pin the edge list BEFORE symmetrizing: the union's two branches
+    // would otherwise each lazily re-run the (possibly expensive)
+    // pair-derivation plan feeding this
+    val e0 = Staging.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val sym = e0.df.unionAll(e0.df.select(col("dst").as("src"), col("src").as("dst")))
+    var labels = Staging.pin(nodes.select(col(idCol).as("id"), col(idCol).as("label")))
+    // the label table is |V| rows for the whole loop, a count the pin
+    // knows: force broadcast on both per-round joins up to the bound.
+    // The planner's own size threshold stops far below it, and past
+    // that each round's map joins plan as SortMergeJoin — two sorts
+    // plus exchanges per round of job overhead (the r15 MST chase
+    // lesson). Above the bound the planner keeps its choice (100 TB
+    // posture).
+    val mapSide = boundedBroadcast(labels.rows)
     var prevSum = Option.empty[Long]
     var converged = false
     var rounds = 0
@@ -473,41 +432,38 @@ object Dedup {
           s"connectedComponents failed to converge in $maxRounds rounds")
       rounds += 1
       val nbr = sym
-        .join(mapSide(labels.select(col("id").as("src"), col("label"))),
+        .join(mapSide(labels.df.select(col("id").as("src"), col("label"))),
           "src")
         .groupBy(col("dst")).agg(min(col("label")).as("nbr_label"))
         .select(col("dst").as("id"), col("nbr_label"))
-      // checkpoint once: stepped feeds BOTH sides of the doubling
-      // self-join below and would otherwise run the join+agg twice
-      val (stepped, steppedCk) = checkpointCappedStats(
-        labels.join(nbr, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nbr_label"), col("label")))
-              .as("label")))
+      // pin once: stepped feeds BOTH sides of the doubling self-join
+      // below and would otherwise run the join+agg twice
+      val stepped = Staging.pin(labels.df.join(nbr, Seq("id"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("nbr_label"), col("label")))
+            .as("label")))
       // pointer doubling: a label is always some node's id (min over
       // ids), so look up the label THAT node holds and take the min —
       // left join + coalesce only as NULL hygiene
-      val parent = mapSide(stepped
+      val st = stepped.df
+      val parent = mapSide(st
         .select(col("id").as("p_id"), col("label").as("p_label")))
-      val prevCk = labelsCk
-      val next = checkpointCappedStats(
-        stepped.join(parent, stepped("label") === parent("p_id"), "left")
-          .select(stepped("id"),
-            least(stepped("label"), coalesce(col("p_label"), stepped("label")))
-              .as("label")))
-      labels = next._1
-      labelsCk = next._2
-      freeCheckpoint(prevCk)
-      freeCheckpoint(steppedCk)
+      val next = Staging.pin(st.join(parent, st("label") === parent("p_id"), "left")
+        .select(st("id"),
+          least(st("label"), coalesce(col("p_label"), st("label")))
+            .as("label")))
+      labels.free()
+      stepped.free()
+      labels = next
       // coalesce: sum over zero rows is NULL — an empty node set must
       // converge to an empty result, not NPE
-      val s = labels.agg(coalesce(sum(col("label")), lit(0L)))
+      val s = labels.df.agg(coalesce(sum(col("label")), lit(0L)))
         .first().getLong(0)
       converged = prevSum.contains(s)
       prevSum = Some(s)
     }
-    freeCheckpoint(e0Ck)
-    (labels.select(col("id").as(idCol), col("label")), rounds)
+    e0.free()
+    (labels.df.select(col("id").as(idCol), col("label")), rounds)
   }
 
   /** The q_dedup_ngram pair derivation as a reusable DuckDB CTE chain
@@ -614,7 +570,7 @@ object Dedup {
         Tables.documents(s, dir).select(col("doc_id")), "doc_id",
         pairs, "doc_a", "doc_b")
         .withColumnRenamed("label", "group_id")
-        .localCheckpoint()
+        .transform(Staging.pinned)
     }
 
   val defs: Seq[QueryDef] = Seq(

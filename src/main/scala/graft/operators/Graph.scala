@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.{QueryDef, ScaledShuffle}
+import graft.{QueryDef, ScaledShuffle, Staging}
 import graft.sources.Tables
 
 /** Iterative graph analytics over relationship edges derived from the
@@ -117,7 +117,7 @@ object Graph {
       .orderBy(col("d").desc, col("src")).limit(1)
       .head().getLong(0)
     s.range(0, 1, 1, 1).select(lit(hub).as("node"), lit(0L).as("dist"))
-      .localCheckpoint()
+      .transform(Staging.pinned)
   }
 
   /** The edge-Jaccard kernel of q_graph_jaccard (whole graph) and
@@ -183,11 +183,15 @@ object Graph {
   private def labelPropLabels(s: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame = {
     val rounds = 4
-    val edges = edgeList(s, dir).localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint()
+    val edges = Staging.pin(edgeList(s, dir))
+    var labels = edges.df.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")).transform(Staging.pinned)
+    // the edge list is each round's build side up to the bounded-
+    // broadcast bound: streaming the label table keeps the round's
+    // partial min-aggregate to one row per node per label partition
+    val edgeSide = Dedup.boundedBroadcast(edges.rows)(edges.df)
     for (_ <- 1 to rounds) {
-      val fromNbrs = edges
+      val fromNbrs = edgeSide
         .join(labels.select(col("node").as("dst"),
           col("lbl").as("nlbl")), "dst")
         .groupBy(col("src").as("node"))
@@ -196,7 +200,7 @@ object Graph {
         .select(col("node"),
           least(col("lbl"), coalesce(col("minn"), col("lbl")))
             .as("lbl"))
-        .localCheckpoint()
+        .transform(Staging.pinned)
     }
     labels
   }
@@ -245,15 +249,12 @@ object Graph {
         // survives whichever strategy AQE picks for it (broadcast
         // keeps the child's partitioning; a shuffled join reuses it).
         val edges = eraw.repartition(col("src"))
-          .join(deg, "src").localCheckpoint()
-        // node set derived from the CHECKPOINTED edges — exchange-free
-        // (already hash(src)-placed); |V| is a single bounded scalar
-        // (same driver-side role as the CC convergence counter in Dedup)
-        val nodes = edges.select(col("src")).distinct()
-        val n = nodes.count()
+          .join(deg, "src").transform(Staging.pinned)
+        // node set derived from the pinned edges; its pin counts |V|
+        val nodes = Staging.pin(edges.select(col("src").as("node")).distinct())
+        val n = nodes.rows
         val base = 0.15 / n
-        var ranks = nodes.select(col("src").as("node"),
-          (lit(1.0) / n).as("pr")).localCheckpoint()
+        var ranks = nodes.df.withColumn("pr", lit(1.0) / n)
         for (_ <- 1 to Iters) {
           // ranks (|V| rows) is the only moving side: the shuffle-hash
           // hint builds the per-partition hash table from it instead of
@@ -269,7 +270,7 @@ object Graph {
             // cut lineage so the logical plan stays O(1) per round;
             // LAZY: materializes as a side effect of the next round's
             // job instead of paying a dedicated job launch per round
-            .localCheckpoint(eager = false)
+            .transform(Staging.cut)
         }
         ranks
           .select(disp(col("node")).as("node"),
@@ -360,17 +361,17 @@ object Graph {
     QueryDef(
       "q_graph_modularity",
       (s, dir) => {
-        val edges = bothWays(coPurchaseEdges(s, dir)).localCheckpoint()
+        val edges = Staging.pin(bothWays(coPurchaseEdges(s, dir)))
         val labels = Tables.part(s, dir)
           .select(col("p_partkey").cast("long").as("node"),
             col("p_brand").as("lbl"))
-        val m2 = edges.count()
-        val deg = edges.groupBy(col("src").as("node"))
+        val m2 = edges.rows
+        val deg = edges.df.groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("d"))
         val dc = labels.join(deg, "node")
           .groupBy(col("lbl"))
           .agg(sum(col("d")).as("dsum"), count(lit(1)).as("n_nodes"))
-        val ic = edges
+        val ic = edges.df
           .join(labels.select(col("node").as("src"),
             col("lbl").as("la")), "src")
           .join(labels.select(col("node").as("dst"),
@@ -462,7 +463,7 @@ object Graph {
             when(lowFirst, col("v")).otherwise(col("u")).as("t"))
           // consumed three times (adjacency build + both sides of the
           // witness join) — cut the lineage once
-          .localCheckpoint()
+          .transform(Staging.pinned)
         // neighbor lists ride the attach shuffle VARINT-DELTA-PACKED
         // (PackedOps): the |E|-row double-attach is this family's
         // dominant byte volume (~8 B/neighbor as array<long> ⇒
@@ -553,7 +554,7 @@ object Graph {
         // peels in 3.3 s and at 100 TB never reshuffles or rewrites
         // the edge list at all.
         var deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         // k = exact 5th-percentile initial degree ((n−1)·q
         // interpolation, the same definition as DuckDB quantile_cont)
         // — one bounded scalar
@@ -561,7 +562,7 @@ object Graph {
         for (_ <- 1 to rounds) {
           // peeled this round: alive nodes whose induced degree < k
           val drop = deg.where(col("d") < lit(k))
-            .select(col("src").as("dn")).localCheckpoint()
+            .select(col("src").as("dn")).transform(Staging.pinned)
           // degree lost by survivors: their edges into the drop set
           val loss = edges0
             .join(broadcast(drop.select(col("dn").as("dst"))),
@@ -577,7 +578,7 @@ object Graph {
             // and exits the degree table, exactly as an edge-derived
             // recount would have it
             .where(col("d") > 0)
-            .localCheckpoint()
+            .transform(Staging.pinned)
         }
         deg.select(col("src").as("part"), col("d").as("core_deg"))
           .orderBy(col("part"))
@@ -624,7 +625,7 @@ object Graph {
       "q_graph_bfs",
       (s, dir) => {
         val rounds = 4
-        val edges = bothWays(coPurchaseEdges(s, dir)).localCheckpoint()
+        val edges = bothWays(coPurchaseEdges(s, dir)).transform(Staging.pinned)
         // FRONTIER-only expansion: each round joins the edges against
         // the layer reached last round (dist = r − 1), not the whole
         // distance table — on a dense graph the reached set saturates
@@ -641,7 +642,7 @@ object Graph {
             .select(col("dst").as("node")).distinct()
             .join(reached.select(col("node")), Seq("node"), "left_anti")
             .withColumn("dist", lit(r.toLong))
-          reached = reached.unionAll(newf).localCheckpoint()
+          reached = reached.unionAll(newf).transform(Staging.pinned)
         }
         reached.select(col("node").as("part"), col("dist"))
           .orderBy(col("part"))
@@ -697,7 +698,7 @@ object Graph {
         val rounds = 4
         val edges = bothWays(coPurchaseEdges(s, dir)
           .withColumn("w", lit(11) - least(col("shared"), lit(10L))), "w")
-          .localCheckpoint()
+          .transform(Staging.pinned)
         var dist = hubSeed(s, edges)
         for (_ <- 1 to rounds) {
           val relaxed = edges
@@ -706,7 +707,7 @@ object Graph {
             .select(col("dst").as("node"), (col("pd") + col("w")).as("dist"))
           dist = dist.unionAll(relaxed)
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-            .localCheckpoint()
+            .transform(Staging.pinned)
         }
         dist.select(col("node").as("part"), col("dist"))
           .orderBy(col("part"))
@@ -882,19 +883,19 @@ object Graph {
           .where(col("src") % 2 === 0) // the supplier→part direction
           .select((col("src") / 2).cast(LongType).as("sk"),
             ((col("dst") - 1) / 2).cast(LongType).as("pk"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         var hub = pairs.select(col("sk").as("hs")).distinct()
-          .withColumn("h", lit(1).cast(dec)).localCheckpoint()
+          .withColumn("h", lit(1).cast(dec)).transform(Staging.pinned)
         var auth: DataFrame = null
         for (_ <- 1 to 3) {
           auth = pairs.join(broadcast(hub), col("sk") === col("hs"))
             .groupBy(col("pk").as("ap"))
             .agg(sum(col("h")).cast(dec).as("a"))
-            .localCheckpoint()
+            .transform(Staging.pinned)
           hub = pairs.join(broadcast(auth), col("pk") === col("ap"))
             .groupBy(col("sk").as("hs"))
             .agg(sum(col("a")).cast(dec).as("h"))
-            .localCheckpoint()
+            .transform(Staging.pinned)
         }
         // bounded scalars (|S| and |P| row aggregates, the Q15 posture)
         val ht = hub.agg(sum(col("h")), count(lit(1))).head()
@@ -978,25 +979,23 @@ object Graph {
         // w, u, v) with intra-component edges dropped — it SHRINKS
         // every round, and relabeling it needs only the ≤|components|-
         // row contraction map p (broadcast-sized), never a node-level
-        // comp table ⋈ edges join. Every loop-carried table is
-        // checkpointed STATS-CAPPED (the CC post-mortem in CLAUDE.md:
-        // a plain localCheckpoint keeps the child plan's estimated
-        // Statistics, and a table joined into its own successor
-        // compounds the estimate per round until the driver melts in
-        // BigInteger stats arithmetic).
-        var eComp = coPurchaseEdges(s, dir)
+        // comp table ⋈ edges join. Every loop-carried table is pinned,
+        // so its leaf reports the rows' measured size (the CC
+        // post-mortem in CLAUDE.md: a leaf that kept the child plan's
+        // estimate, joined into its own successor, compounds it per
+        // round until the driver melts in BigInteger stats arithmetic).
+        var eComp = Staging.pin(coPurchaseEdges(s, dir)
           .withColumn("w", conv(substring(md5(concat(
             lit("w:"), col("u").cast("string"),
             lit(":"), col("v").cast("string"))), 1, 12), 16, 10)
             .cast(LongType))
           .select(col("u").as("cu"), col("v").as("cv"),
-            col("w"), col("u"), col("v"))
-          .localCheckpoint()
-        // forest edges accumulate as the per-round (already
-        // checkpointed) pick tables; the union is assembled ONCE at
-        // the end instead of re-materializing a growing msf per round
+            col("w"), col("u"), col("v")))
+        // forest edges accumulate as the per-round (already pinned)
+        // pick tables; the union is assembled ONCE at the end instead
+        // of re-materializing a growing msf per round
         val forest = scala.collection.mutable.ArrayBuffer(
-          eComp.limit(0).select(col("u"), col("v"), col("w")))
+          eComp.df.limit(0).select(col("u"), col("v"), col("w")))
         var done = false
         var round = 0
         while (!done) {
@@ -1006,36 +1005,34 @@ object Graph {
           // every component with an external edge picks its min; the
           // struct-min carries the far component so the pick IS the
           // pointer edge of the contraction graph
-          val picks = Dedup.checkpointCappedStats(eComp
+          val picks = Staging.pin(eComp.df
             .select(col("cu").as("c"), struct(col("w"), col("u"),
               col("v"), col("cv").as("q")).as("m"))
-            .unionAll(eComp.select(col("cv").as("c"), struct(col("w"),
+            .unionAll(eComp.df.select(col("cv").as("c"), struct(col("w"),
               col("u"), col("v"), col("cu").as("q")).as("m")))
             .groupBy(col("c")).agg(min(col("m")).as("m"))
             .select(col("c"), col("m.u").as("u"), col("m.v").as("v"),
-              col("m.w").as("w"), col("m.q").as("q")))._1
-          // both counts are one cheap scan each of a just-materialized
-          // checkpoint; picksCnt doubles as the loop-exit test and
-          // both feed the reduce-gate below
-          val picksCnt = picks.count()
-          if (picksCnt == 0L) done = true
+              col("m.w").as("w"), col("m.q").as("q")))
+          // both row counts come with their pins: the picks' count is
+          // the loop-exit test, and both feed the reduce-gate below
+          if (picks.rows == 0L) done = true
           else {
-            val edgeCnt = eComp.count()
-            forest += picks.select(col("u"), col("v"), col("w")).distinct()
+            forest += picks.df.select(col("u"), col("v"), col("w")).distinct()
             // the one-hop maps and the contraction map are
-            // ≤ picksCnt rows — once that is DRIVER-KNOWN bounded,
+            // ≤ picks.rows rows — once that is DRIVER-KNOWN bounded,
             // force broadcast so the chase is one map-only stage and
-            // the relabel never exchanges the edge table (capped-stats
-            // checkpoints erase size estimates, so AQE plans these as
-            // SMJ otherwise: 2 sorts + 2 exchanges of the full edge
-            // list per round, measured the dominant round cost at the
-            // 10× probe). Above the bound (a 100 TB round-1 map can be
-            // |V| rows) fall back to the planner's choice.
-            val mapSide = Dedup.boundedBroadcast(picksCnt)
+            // the relabel never exchanges the edge table. The maps are
+            // join outputs, whose size estimate is the product of their
+            // sides', so the planner alone plans these as SMJ: 2 sorts
+            // + 2 exchanges of the full edge list per round, measured
+            // the dominant round cost at the 10× probe. Above the bound
+            // (a 100 TB round-1 map can be |V| rows) fall back to the
+            // planner's choice.
+            val mapSide = Dedup.boundedBroadcast(picks.rows)
             // break the 2-cycles (q∘q = id ⇔ both sides picked the
             // same edge — each merge tree's unique global-min edge):
             // the smaller id becomes the root
-            val qmap = picks.select(col("c"), col("q"))
+            val qmap = picks.df.select(col("c"), col("q"))
             val broken = qmap.as("a")
               .join(mapSide(qmap.select(col("c").as("q"), col("q").as("qq"))),
                 Seq("q"), "left")
@@ -1071,23 +1068,20 @@ object Graph {
                   (coalesce(col("_n"), col("p")) =!= col("p"))
                     .cast("int").as("moved"))
             }
-            var pm = Dedup.checkpointCappedStats(chase(broken))._1
-            var stable =
-              pm.agg(coalesce(max(col("moved")), lit(0)))
-                .first().getInt(0) == 0
-            var p = pm.select(col("c"), col("np").as("p"))
-            var jumps = 1
+            var p = broken
+            var stable = false
+            var jumps = 0
             while (!stable) {
               jumps += 1
               require(jumps <= 40, "pointer chase must be O(log V)")
-              pm = Dedup.checkpointCappedStats(chase(p))._1
+              val pm = chase(p).transform(Staging.pinned)
               stable = pm.agg(coalesce(max(col("moved")), lit(0)))
                 .first().getInt(0) == 0
               p = pm.select(col("c"), col("np").as("p"))
             }
             // relabel the surviving edges with the contraction map —
             // p is |components|-sized (mapSide-broadcast under the
-            // driver-known picksCnt bound, planner's choice above it)
+            // driver-known picks.rows bound, planner's choice above it)
             // — then REDUCE the contracted multigraph
             // to the min-weight edge per component PAIR (textbook
             // Borůvka contraction: parallel edges are interchangeable
@@ -1100,14 +1094,14 @@ object Graph {
             // Pair normalized (least, greatest); min(struct) keeps the
             // original (u, v, w) of the lightest edge for the forest.
             // GATED on pairs-space < edges (picks ≥ #components, so
-            // picksCnt²/2 bounds the reduced size): early rounds have
+            // picks.rows²/2 bounds the reduced size): early rounds have
             // nearly-unique pairs and the reduce is a multi-million-
             // group hash aggregate that shrinks nothing (measured
             // +50 s at the 10× probe when unconditional) — once the
             // bound crosses, one reduce collapses the table for every
             // later round (10×: round-5 2,904 edges vs 10.4M
             // un-reduced).
-            val relabeled = eComp
+            val relabeled = eComp.df
               .join(mapSide(p.select(col("c").as("cu"),
                 col("p").as("ncu"))), Seq("cu"), "left")
               .join(mapSide(p.select(col("c").as("cv"),
@@ -1117,15 +1111,17 @@ object Graph {
                 col("w"), col("u"), col("v"))
               .filter(col("cu") =!= col("cv"))
             val reduceNow =
-              picksCnt.toDouble * picksCnt / 2 < edgeCnt.toDouble
-            eComp = Dedup.checkpointCappedStats(
+              picks.rows.toDouble * picks.rows / 2 < eComp.rows.toDouble
+            val prev = eComp
+            eComp = Staging.pin(
               if (!reduceNow) relabeled
               else relabeled
                 .groupBy(least(col("cu"), col("cv")).as("cu"),
                   greatest(col("cu"), col("cv")).as("cv"))
                 .agg(min(struct(col("w"), col("u"), col("v"))).as("m"))
                 .select(col("cu"), col("cv"), col("m.w").as("w"),
-                  col("m.u").as("u"), col("m.v").as("v")))._1
+                  col("m.u").as("u"), col("m.v").as("v")))
+            prev.free()
           }
         }
         forest.reduce(_ unionAll _)
@@ -1157,14 +1153,16 @@ object Graph {
     QueryDef(
       "q_graph_walks",
       (s, dir) => {
-        val adj = adjacency(coPurchaseEdges(s, dir))
-          .localCheckpoint() // consumed by the seed and all 4 hops
-        var w = adj.select(col("node").as("start"),
+        val adj = Staging.pin(adjacency(coPurchaseEdges(s, dir)))
+        // the adjacency is every hop's build side up to the bounded-
+        // broadcast bound: one broadcast, reused by all 4 hops
+        val hop = Dedup.boundedBroadcast(adj.rows)(
+          adj.df.select(col("node").as("cur"), col("nbrs"), col("deg")))
+        var w = adj.df.select(col("node").as("start"),
           col("node").as("cur"), col("node").cast("string").as("path"))
         for (r <- 1 to 4) {
           w = w
-            .join(adj.select(col("node").as("cur"), col("nbrs"),
-              col("deg")), "cur")
+            .join(hop, "cur")
             .withColumn("h", conv(substring(md5(concat(
               lit("walk:"), col("start").cast("string"),
               lit(s":$r:"), col("cur").cast("string"))), 1, 12), 16, 10)

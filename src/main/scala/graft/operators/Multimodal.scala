@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.sources.Tables
 
 /** Multimodal (binary) column support (SURVEY §2.B B49 + north star).
@@ -84,7 +84,7 @@ object Multimodal {
             conv(substring(rem, offs(j), widths(j)), 2, 10)
               .cast(LongType)): _*)
         }: _*).as("subss"))
-      .localCheckpoint(false)
+      .transform(Staging.cut)
     def pairs = Seq(
       col("x.phash").as("ha"), col("y.phash").as("hb"),
       (0 until 4).map(i =>

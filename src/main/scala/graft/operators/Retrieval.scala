@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.functions.{TextFns, VectorFns}
 import graft.sources.Tables
 
@@ -272,7 +271,7 @@ object Retrieval {
           .filter(col("rnk") <= 12)
           .select(col("qid"), col("nid"), col("cos"),
             round(col("cos") * 1e6).cast(LongType).as("rel"))
-          .localCheckpoint() // feeds pair sims AND the greedy state
+          .transform(Staging.pinned) // feeds pair sims AND the greedy state
         val cv = cand
           .join(e.select(col("vec_id").as("nid"), col("embedding").as("v")),
             "nid")
@@ -284,11 +283,11 @@ object Retrieval {
           .select(col("qid"), col("a"), col("b"),
             round(round(VectorFns.cosineFast(col("va"), col("vb")), 6) * 1e6)
               .cast(LongType).as("sm"))
-          .localCheckpoint() // joined by every greedy round
+          .transform(Staging.pinned) // joined by every greedy round
         var rem = cand
           .select(col("qid"), col("nid"), col("cos"), col("rel"),
             lit(-1000000L).as("ms"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         val wPick = Window.partitionBy(col("qid"))
           .orderBy((lit(7L) * col("rel") - lit(3L) * col("ms")).desc,
             col("nid"))
@@ -298,7 +297,7 @@ object Retrieval {
             .withColumn("prn", row_number().over(wPick))
             .filter(col("prn") === 1)
             .select(col("qid"), col("nid"), col("cos"))
-            .localCheckpoint() // consumed by the output AND the update
+            .transform(Staging.pinned) // consumed by the output AND the update
           picks += pick.withColumn("rnk", lit(r.toLong))
           if (r < 5)
             rem = rem
@@ -308,7 +307,7 @@ object Retrieval {
                 col("b").as("pnid"), col("sm")), Seq("qid", "nid", "pnid"))
               .select(col("qid"), col("nid"), col("cos"), col("rel"),
                 greatest(col("ms"), col("sm")).as("ms"))
-              .localCheckpoint()
+              .transform(Staging.pinned)
         }
         picks.reduce(_ unionByName _)
           .select(col("qid"), col("rnk"), col("nid"), col("cos"))

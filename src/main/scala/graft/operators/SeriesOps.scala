@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.sources.Tables
 
 /** Time-series repair: densify a sparse per-key series onto a regular
@@ -400,7 +400,7 @@ object SeriesOps {
           .where(col("t") < col("n_tot"))
           .withColumn("absc",
             abs(col("n_tot") * col("cum_c") - col("t") * col("s_tot")))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         val mx = dev.groupBy(col("event_type")).agg(max(col("absc")).as("m"))
         val best = dev.join(mx, "event_type")
           .where(col("absc") === col("m"))
@@ -602,7 +602,6 @@ object SeriesOps {
     QueryDef(
       "q_ts_autocorr",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val hourly = Tables.events(s, dir)
           .groupBy(col("event_type"),
             date_trunc("hour", col("ts")).as("hr"))
@@ -616,7 +615,7 @@ object SeriesOps {
             ((unix_micros(col("hr")) - lit(loMicros)) / lit(3600000000L))
               .cast(LongType).as("idx"),
             coalesce(col("c"), lit(0L)).as("c"))
-          .localCheckpoint() // both sides of every lag join
+          .transform(Staging.pinned) // both sides of every lag join
         val lags = Seq(1, 2, 3, 6, 12, 24)
         val a = dense.withColumn("lag", explode(typedLit(lags)))
           .withColumn("lag", col("lag").cast(LongType))
@@ -707,7 +706,7 @@ object SeriesOps {
             ((unix_micros(col("hr")) - lit(loMicros)) / lit(3600000000L))
               .cast(LongType).as("idx"),
             coalesce(col("c"), lit(0L)).as("c"))
-          .localCheckpoint() // both sides of every lag join
+          .transform(Staging.pinned) // both sides of every lag join
         val lags = List(-3, -2, -1, 0, 1, 2, 3)
         val a = dense.select(col("event_type").as("type_a"),
             col("idx"), col("c"))
@@ -788,7 +787,7 @@ object SeriesOps {
           .groupBy(col("event_type"),
             date_trunc("hour", col("ts")).as("hr"))
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint() // median + deviation paths share it
+          .transform(Staging.pinned) // median + deviation paths share it
         val med = hourly.groupBy(col("event_type"))
           .agg(expr("percentile(c, 0.5)").as("med"))
         val dev = hourly.join(med, "event_type")

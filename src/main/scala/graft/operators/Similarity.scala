@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.functions.VectorFns
 import graft.sources.Tables
 
@@ -133,7 +133,7 @@ object Similarity {
       val subs = e.select(col("vec_id"), posexplode(array(
           (0 until PqM).map(m => slice(col("v"), m * PqD + 1, PqD)): _*))
           .as(Seq("sub", "sv")))
-        .localCheckpoint()
+        .transform(Staging.pinned)
       // TRAIN-ON-SAMPLE (r10, the trainCentroids/q_embed_pca lever —
       // the faiss train/add split): each Lloyd round scores every
       // training row against all K codes through the interpreted HOF
@@ -178,7 +178,7 @@ object Similarity {
         .map { case (id, i) => (id, i.toLong) }.toSeq
       val seeds = subs.join(seedIds.toDF("vec_id", "cell"), "vec_id")
         .select(col("sub"), col("cell"), col("sv").as("cent"))
-      var cents = seeds.localCheckpoint()
+      var cents = seeds.transform(Staging.pinned)
       for (_ <- 1 to 2) {
         cents = trainSubs.join(broadcast(toArrays(cents)), "sub")
           .withColumn("best", argminBest(col("sv"), col("cb")))
@@ -191,7 +191,7 @@ object Similarity {
           .agg(transform(
             array_sort(collect_list(struct(col("pos"), col("m")))),
             p => p.getField("m")).as("cent"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
       }
       // `best` is multi-ref in the output projection (code + sqerr),
       // so it stays a staged attribute — the expression runs once per
@@ -202,7 +202,7 @@ object Similarity {
         .select(col("vec_id"), col("sub"),
           col("best").getField("code").as("code"),
           col("best").getField("sqerr").as("sqerr"))
-        .localCheckpoint()
+        .transform(Staging.pinned)
       (cents, coded)
     }
 
@@ -406,7 +406,7 @@ object Similarity {
       // broadcast would otherwise re-run the full Lloyd lineage
       // (measured 21.8 s vs 10.6 s flat on the 10× probe). nCells rows
       // of 64 doubles — trivially safe to pin
-      val centsP = cents.localCheckpoint()
+      val centsP = cents.transform(Staging.pinned)
       val superCents = trainCentroids(
         centsP.select(col("cell_id").as("sid"), col("cent").as("sv")),
         "sid", "sv", nSuper, iters = 2, corpusN = nCells)
@@ -646,7 +646,7 @@ object Similarity {
       val n = e.count()
       val nCells = ivfCellsFor(n)
       val coarse = trainCentroids(e, "vec_id", "embedding",
-        nCells, iters = 3, corpusN = n).localCheckpoint()
+        nCells, iters = 3, corpusN = n).transform(Staging.pinned)
       // CORPUS side: each vector in its AdcAssignK nearest cells; the
       // exchange and the checkpoint carry AdcAssignK (id, cell) rows
       // per vector, never the 64-double embedding — at 100× a fused
@@ -655,7 +655,7 @@ object Similarity {
       val assigned =
         nearestCells(e, "vec_id", "embedding", coarse, AdcAssignK)
           .select(col("vec_id"), col("cell_id"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
       (coarse, assigned, nCells)
     }
 
@@ -769,7 +769,7 @@ object Similarity {
           sort_array(collect_list(col("cell_id")).over(wSig)))
         .select(col("vec_id"), col("cell_id"), col("probe_rank"),
           col("psig"))
-        .localCheckpoint()
+        .transform(Staging.pinned)
     }
 
   private val clusterGroupsReady = new graft.Memo[DataFrame]
@@ -787,7 +787,7 @@ object Similarity {
   def embedClusterGroups(s: SparkSession, dir: String,
                          bruteMax: Long = ClusterBruteMaxN): DataFrame =
     clusterGroupsReady(s, dir, bruteMax.toString) {
-      embedClusterGroupsUncached(s, dir, bruteMax).localCheckpoint()
+      embedClusterGroupsUncached(s, dir, bruteMax).transform(Staging.pinned)
     }
 
   private def embedClusterGroupsUncached(s: SparkSession, dir: String,
@@ -950,7 +950,7 @@ object Similarity {
           .withColumn("rnk", row_number().over(w))
           .filter(col("rnk") <= 10)
           .select(col("dim_budget"), col("qid"), col("nid"))
-          .localCheckpoint() // consumed twice: as budget rows and as truth
+          .transform(Staging.pinned) // consumed twice: as budget rows and as truth
         val truth = top10.filter(col("dim_budget") === 64)
           .select(col("qid").as("tqid"), col("nid").as("tnid"))
         top10.join(truth,
@@ -1128,7 +1128,7 @@ object Similarity {
           .select(col("vec_id"),
             (col("p") + 1).cast(LongType).as("i"),
             col("xf").cast("double").as("xi"))
-          .localCheckpoint() // both sides of the moment join + means
+          .transform(Staging.pinned) // both sides of the moment join + means
         // n·d² micro-summed second moments: a codegen'd self-join on
         // the sample (the n·64-row side broadcasts) map-combined down
         // to d² rows — ~3× the interpreted transform-closure HOF this
@@ -1328,7 +1328,7 @@ object Similarity {
         // co-partitioned with no further shuffle.
         val probed = ivfProbeAssign(e, "vec_id", "embedding",
           nCells = ivfCellsFor(n),
-          trainIters = 3, nProbe = 6, corpusN = n).localCheckpoint()
+          trainIters = 3, nProbe = 6, corpusN = n).transform(Staging.pinned)
           .repartition(TextAnalysis.postingParts(s), col("cell_id"))
         val a = probed.select(col("cell_id"), col("vec_id").as("qid"),
           col("embedding").as("qvec"))
@@ -1630,7 +1630,7 @@ object Similarity {
           .join(groups, "doc_id")
           .groupBy(col("cluster_id"), col("term"))
           .agg(sum(col("tf")).as("ctf"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         val wTerm = Window.partitionBy(col("term"))
         val tot = grid.agg(
           sum(col("ctf")).as("total_tokens"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.sources.Tables
 
 /** Skew-salting recipe (SURVEY §7 "salting for skewed keys") as a
@@ -52,7 +52,7 @@ object Skew {
     * the localCheckpoint). Use the plain window when groups are
     * bounded; switch to this when one key can reach billions. */
   def saltedWindowCount(df: DataFrame, key: String, out: String): DataFrame = {
-    val staged = df.localCheckpoint(false)
+    val staged = Staging.cut(df)
     val totals = staged.groupBy(col(key)).agg(count(lit(1)).as(out))
     staged.join(totals, Seq(key))
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.functions.TextFns
 import graft.sources.Tables
 
@@ -108,7 +108,7 @@ object TextAnalysis {
           (col("n_chars") / 1000.0).as("x1"),
           (size(array_distinct(ts)).cast("double") / wc).as("x2"),
           (sw.cast("double") / wc).as("x3"))
-        .localCheckpoint() // moment pass + the standardized build
+        .transform(Staging.pinned) // moment pass + the standardized build
       // features are z-SCORED before GD (raw scales differ by 10x,
       // which starves the descent) — the moments come from the same
       // exact micro-sum machinery as the gradients, so both engines
@@ -132,7 +132,7 @@ object TextAnalysis {
           ((col("x1") - mu(0)) / sd(0)).as("x1"),
           ((col("x2") - mu(1)) / sd(1)).as("x2"),
           ((col("x3") - mu(2)) / sd(2)).as("x3"))
-        .localCheckpoint() // 12 GD rounds + the final scoring pass
+        .transform(Staging.pinned) // 12 GD rounds + the final scoring pass
       var w = Array(0.0, 0.0, 0.0, 0.0)
       def sig(z: org.apache.spark.sql.Column) =
         lit(1.0) / (lit(1.0) + exp(-z))
@@ -153,7 +153,7 @@ object TextAnalysis {
           w(k) - eta * ((g.getLong(k + 1).toDouble / 1e9) / n))
       }
       feats.select(col("doc_id"), col("y"), sig(z(w)).as("sg"))
-        .localCheckpoint()
+        .transform(Staging.pinned)
     }
 
   /** The DuckDB twin of [[qualityScored]]: WITH-clause prefix ending in
@@ -234,7 +234,7 @@ object TextAnalysis {
       .filter(col("word").rlike("^[a-z]{2,20}$"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), col("word")).limit(2000)
-      .localCheckpoint()
+      .transform(Staging.pinned)
 
   /** Every (start, len ≤ 4) substring of each word as a candidate
     * piece, in WordPiece surface form ('##' marks continuations). */
@@ -295,7 +295,7 @@ object TextAnalysis {
     val words = wpWordFreqs(s, dir)
     var seqs = words.select(col("word"), col("cnt"),
       concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-        .as("seq")).localCheckpoint()
+        .as("seq")).transform(Staging.pinned)
     for (i <- 1 to rounds) {
       val toks = seqs.select(col("cnt"),
         split(trim(col("seq")), " ").as("ts"))
@@ -313,7 +313,7 @@ object TextAnalysis {
           s"replace(seq, ' ' || ma$i || ' ' || mb$i || ' ', " +
             s"' ' || ma$i || mb$i || ' ')"))
         .drop(s"ma$i", s"mb$i")
-        .localCheckpoint()
+        .transform(Staging.pinned)
     }
     seqs
   }
@@ -1431,7 +1431,7 @@ object TextAnalysis {
             cands.filter(col("l") >= 2)
               .groupBy(col("piece")).agg(sum(col("cnt")).as("wn"))
               .orderBy(desc("wn"), col("piece")).limit(200))
-          .localCheckpoint() // 2 consumers: the total and the probs
+          .transform(Staging.pinned) // 2 consumers: the total and the probs
         val tot = vocabW.agg(sum(col("wn")).as("tot"))
         val vp = vocabW.crossJoin(broadcast(tot))
           .select(col("piece"),
@@ -1741,7 +1741,7 @@ object TextAnalysis {
           .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
         val bc = bigrams.groupBy(col("w1"), col("w2"))
           .agg(count(lit(1)).as("c12"))
-          .localCheckpoint() // reused by ctx, V, and the scoring join
+          .transform(Staging.pinned) // reused by ctx, V, and the scoring join
         val ctx = bc.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
         // continuation-vocabulary size — one bounded scalar (the same
         // driver-side role as |V| in the PageRank loop)
@@ -1796,7 +1796,7 @@ object TextAnalysis {
           .select(explode(TextFns.tokens(col("text"))).as("term"))
           .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("term")).limit(1000)
-          .localCheckpoint() // both sides of the JOIN-rank
+          .transform(Staging.pinned) // both sides of the JOIN-rank
         val b2 = top.select(col("term").as("t2"), col("cnt").as("c2"))
         val pts = top.join(b2,
             col("c2") > col("cnt") ||
@@ -1886,7 +1886,7 @@ object TextAnalysis {
           .select(explode(graft.functions.WordNgrams(col("text"), 2))
             .as("bigram"))
           .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
-          .localCheckpoint() // feeds prefix, suffix, total and the scan
+          .transform(Staging.pinned) // feeds prefix, suffix, total and the scan
         val pre = bc
           .groupBy(split(col("bigram"), " ").getItem(0).as("w1"))
           .agg(sum(col("c12")).as("r1"))
@@ -1977,7 +1977,7 @@ object TextAnalysis {
         val uni = docs
           .select(explode(TextFns.tokens(col("text"))).as("w"))
           .groupBy(col("w")).agg(count(lit(1)).as("cu"))
-          .localCheckpoint() // feeds both unigram attaches + the total
+          .transform(Staging.pinned) // feeds both unigram attaches + the total
         val bi = docs
           .select(explode(graft.functions.WordNgrams(col("text"), 2))
             .as("bigram"))
@@ -2164,7 +2164,7 @@ object TextAnalysis {
             lit(999L)).as("bin"))
           .agg(sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("np"),
             sum(when(col("y") === 1.0, 0L).otherwise(1L)).as("nn"))
-          .localCheckpoint() // feeds the prefix join twice + totals
+          .transform(Staging.pinned) // feeds the prefix join twice + totals
         val below = hist.select(col("bin").as("b2"), col("nn").as("nn2"))
         val cum = hist.join(broadcast(below), col("b2") < col("bin"),
             "left")
@@ -2510,7 +2510,7 @@ object TextAnalysis {
           .select(col("doc_id").as("eval_doc"), col("g"))
         val hits = grams.filter(!isEval)
           .join(broadcast(ev), "g")
-          .localCheckpoint() // feeds the gram rollup AND the doc rollup
+          .transform(Staging.pinned) // feeds the gram rollup AND the doc rollup
         val nGrams = hits.select(col("doc_id"), col("g")).distinct()
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_ngrams"))
         val nDocs = hits.select(col("doc_id"), col("eval_doc")).distinct()

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.QueryDef
-import graft.functions.TextFns
 import graft.sources.Tables
 
 /** Sparse document-to-document similarity — the tf-idf/inverted-index

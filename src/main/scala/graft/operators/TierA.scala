@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.sources.Tables
 
 /** Tier-A batch surface — the operations the reference executes directly
@@ -339,7 +339,7 @@ object TierA {
                  |FROM months LEFT JOIN graft_orders_rec o
                  |  ON CAST(date_trunc('month', o.o_orderdate) AS DATE) = m
                  |GROUP BY m ORDER BY m""".stripMargin)
-              .localCheckpoint()
+              .transform(Staging.pinned)
           } finally s.conf.set(key, saved)
         }
       },

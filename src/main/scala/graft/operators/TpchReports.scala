@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.sources.Tables
 
 /** The multi-way-join TPC-H classics (Q5/Q7/Q10/Q14/Q18 shapes) — the
@@ -270,7 +270,7 @@ object TpchReports {
             col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
           .groupBy(col("l_suppkey"))
           .agg(cents(revenue).as("total_rev_c"))
-          .localCheckpoint() // feeds the max scalar AND the winner filter
+          .transform(Staging.pinned) // feeds the max scalar AND the winner filter
         val maxRev = rev.agg(max(col("total_rev_c"))).head().getLong(0)
         rev.filter(col("total_rev_c") === maxRev)
           .join(broadcast(Tables.supplier(s, dir)

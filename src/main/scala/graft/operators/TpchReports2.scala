@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.sources.Tables
 
 /** Second wave of TPC-H classics (Q3/Q8/Q9/Q12/Q16/Q17/Q19/Q21 shapes),
@@ -322,7 +322,7 @@ object TpchReports2 {
         val brandLines = Tables.lineitem(s, dir)
           .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
           .join(broadcast(p), col("l_partkey") === p("p_partkey"))
-          .localCheckpoint() // feeds the per-part average AND the probe
+          .transform(Staging.pinned) // feeds the per-part average AND the probe
         val pavg = brandLines
           .groupBy(col("l_partkey").as("pk"))
           .agg(sum(round(col("l_quantity") * 100).cast(LongType)).as("qty_c"),
@@ -410,7 +410,7 @@ object TpchReports2 {
             .select(col("o_orderkey"), col("o_orderdate")),
             col("l_orderkey") === col("o_orderkey"))
           .select(col("l_orderkey"), col("l_suppkey"), late.as("is_late"))
-          .localCheckpoint() // feeds the per-order stats AND the probe side
+          .transform(Staging.pinned) // feeds the per-order stats AND the probe side
         val stats = l.groupBy(col("l_orderkey").as("ok"))
           .agg(countDistinct(col("l_suppkey")).as("n_supp"),
             countDistinct(when(col("is_late"), col("l_suppkey"))).as("n_late_supp"))
@@ -526,7 +526,7 @@ object TpchReports2 {
             (col("ps_supplycost_c") * col("ps_availqty")).as("v"))
         val perPart = nat.groupBy(col("ps_partkey"))
           .agg(sum(col("v")).as("value_c"))
-          .localCheckpoint() // feeds the scalar AND the filter
+          .transform(Staging.pinned) // feeds the scalar AND the filter
         val t = perPart.agg(sum(col("value_c")), count(lit(1))).head()
         val (total, np) = (t.getLong(0), t.getLong(1))
         perPart.filter(col("value_c") * np > total)

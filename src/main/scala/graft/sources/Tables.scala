@@ -12,8 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operator goes through this one seam.
   */
 object Tables {
+  /** The table `name`; its schema is inferred by a Spark job named
+    * `graft:schema:<name>`. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.Staging.described(s"graft:schema:$name")(spark.read.parquet(s"$sfDir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructType}
-import graft.QueryDef
+import graft.{QueryDef, Staging}
 import graft.operators.{Maintenance, TxnLog}
 import graft.sources.Tables
 
@@ -396,15 +396,15 @@ object Streams {
         // would reshuffle the whole per-doc index to reproduce it
         val keep = idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
           .filter(col("df") <= 64).select(col("h"))
-          .localCheckpoint() // the same df-64 rule the batch twin uses
+          .transform(Staging.pinned) // the same df-64 rule the batch twin uses
         val shAll = idx.join(keep, "h")
         val sz = shAll.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val standing = shAll.filter(!isBatchDoc)
           .select(col("doc_id").as("doc_a"), col("h"))
-          .localCheckpoint() // joined by every micro-batch
+          .transform(Staging.pinned) // joined by every micro-batch
         val standingSz = sz.filter(!isBatchDoc)
           .select(col("doc_id").as("doc_a"), col("n").as("na"))
-          .localCheckpoint()
+          .transform(Staging.pinned)
         val stream = s.readStream.schema("doc_id LONG, text STRING")
           .option("maxFilesPerTrigger", "1").parquet(path)
         val q = stream.writeStream

@@ -46,6 +46,32 @@ class DevSpec extends AnyFunSuite {
     assert(Dev.parse(Seq("recall")) == Dev.Mode.Recall)
   }
 
+  test("probe's PROBEJOBSTART lines name the pin, stage and schema jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val spark = SparkSpec.session
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        lines.add(Dev.jobStartLine(j))
+    }
+    val src = java.nio.file.Files.createTempDirectory("devspec_src_")
+    spark.sparkContext.addSparkListener(l)
+    val staged = try {
+      Staging.pin(spark.range(0, 10, 1, 2).toDF()).free()
+      val out = Staging.cached("devspec_desc", src.toString, rev = 1) { t =>
+        spark.range(3).write.mode("overwrite").parquet(t)
+      }
+      sources.Tables.table(spark, "/root/testdata/sf0.001", "orders")
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      out
+    } finally spark.sparkContext.removeSparkListener(l)
+    Staging.deleteTree(java.nio.file.Paths.get(staged))
+    Staging.deleteTree(src)
+    val descs = lines.toArray.toSeq.map(_.toString.split(" desc=", 2)(1))
+    Seq("graft:pin", "graft:stage:devspec_desc", "graft:schema:orders")
+      .foreach(d => assert(descs.contains(d), descs.mkString("\n", "\n", "")))
+  }
+
   test("probe prints megabytes with three decimals") {
     assert(Dev.mb(524288L) == "0.500")
     assert(Dev.mb(0L) == "0.000")

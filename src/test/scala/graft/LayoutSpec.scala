@@ -373,12 +373,7 @@ class LayoutSpec extends SparkSpec {
       _ => fail("txn log must already be staged")
     })
     val copy = java.nio.file.Files.createTempDirectory("vacuum_spec_")
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = copy.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t)
-    }
+    Staging.copyTree(src, copy)
     val deleted = operators.Maintenance.vacuumTxnLog(copy.toString, keepFrom = 3L)
     assert(deleted.toSet == Set("base", "a1", "b1"),
       s"v3 retention reclaims exactly the compacted-away files: $deleted")
@@ -390,18 +385,12 @@ class LayoutSpec extends SparkSpec {
     // keepFrom = 0 retains everything: vacuum on the fresh copy with
     // full retention must delete nothing (idempotence guard)
     val copy2 = java.nio.file.Files.createTempDirectory("vacuum_spec0_")
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = copy2.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t)
-    }
+    Staging.copyTree(src, copy2)
     assert(operators.Maintenance.vacuumTxnLog(copy2.toString, 0L).isEmpty)
   }
 
   test("q_snapshot_checkpoint: tail-only reads; checkpoint fold == full fold, incl. post-vacuum") {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val root = operators.Maintenance.checkpointRoot(spark, sf)
     // ground-truth reader: the full v0..v fold over per-commit manifests
     val arrRe = """"(adds|removes)":\[([^\]]*)\]""".r
@@ -442,12 +431,7 @@ class LayoutSpec extends SparkSpec {
     assert(lastCp == newestByName, s"_last_checkpoint $lastCp != $newestByName")
     // post-VACUUM: dead data files gone, metadata resolution unchanged
     val copy = Files.createTempDirectory("cp_vacuum_")
-    val src = Paths.get(root)
-    Files.walk(src).forEach { p =>
-      val t = copy.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t)
-    }
+    Staging.copyTree(Paths.get(root), copy)
     val deleted = operators.Maintenance
       .vacuumTxnLog(copy.toString, keepFrom = 8L)
     assert(deleted.toSet == Set("y1992", "y1993", "y1994"),

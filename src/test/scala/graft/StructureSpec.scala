@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * graph is derived once (`Graph.coPurchaseEdges`) and symmetrized in one
   * place (`Graph.bothWays`). The transaction-log format (put-if-absent
   * commits, manifest fields, the log reader) is known to `TxnLog.scala`
-  * alone. */
+  * alone. A DataFrame's lineage is cut in `Staging.scala` alone
+  * ([[Staging.pin]] and [[Staging.cut]]), so one module decides what a
+  * checkpoint's leaf reports and how its blocks are freed. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -101,6 +103,16 @@ class StructureSpec extends AnyFunSuite {
         val code = h.split(": ", 2)(1)
         !(code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")) &&
           protocol.findFirstIn(code).nonEmpty
+      }
+    if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+  }
+
+  test("localCheckpoint is called only in Staging.scala") {
+    assert(Files.isRegularFile(main.resolve("graft/Staging.scala")))
+    val hits = offenders(main, "localCheckpoint", except = Set("Staging.scala"))
+      .filterNot { h =>
+        val code = h.split(": ", 2)(1)
+        code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
       }
     if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
   }

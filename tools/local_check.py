@@ -3,7 +3,8 @@
 
 Usage:
   python3 tools/local_check.py [sfDir] [outDir] [--no-run]
-                               [--against otherOutDir] [query ...]
+                               [--against otherOutDir [--ordered]]
+                               [query ...]
 
 Runs `graft.Verify <sfDir> <outDir>` via sbt (unless --no-run), then for
 every query with an oracle: executes the oracle SQL in DuckDB over views
@@ -16,12 +17,22 @@ oracle, and column types must match exactly: the check that two builds
 give the same answers. Parquet footers list encodings in hash order, so
 two dumps of the same rows need not be byte-identical.
 
+With --ordered (only with --against), a query whose oracle SQL (in
+outDir/oracle_sql.json) ends in an ORDER BY must also hold its rows in
+the same output order on both sides, part file by part file: the check
+that a change moved no row. Rows that tie on every ORDER BY key may come
+in either order; when a key is not an output column, the whole row is
+the key. q_sketch_quantile and q_stream_quantile are skipped: they are
+randomized KLL sketches whose values differ between two runs of the
+same build.
+
 This is dev tooling only — the engine itself is pure Scala/Spark.
 """
 import glob
 import json
 import math
 import os
+import re
 import subprocess
 import sys
 
@@ -105,6 +116,52 @@ def diff(a, b, type_rule, labels):
     return []
 
 
+UNORDERED = {"q_sketch_quantile", "q_stream_quantile"}
+
+
+def order_keys(sql, cols):
+    """Indexes into `cols` (lowercased output column names) of the keys
+    of the ORDER BY that `sql` ends in; None when it ends in none, []
+    when a key is not an output column name."""
+    m = list(re.finditer(r"\bORDER\s+BY\b", sql, re.I))
+    if not m:
+        return None
+    tail = sql[m[-1].end():]
+    tail = re.sub(r"\s+LIMIT\s+\d+\s*;?\s*$", "", tail, flags=re.I)
+    tail = tail.strip().rstrip(";")
+    if "(" in tail or ")" in tail or "'" in tail:
+        return None if ")" in tail and "(" not in tail else []
+    keys = []
+    for item in tail.split(","):
+        item = re.sub(r"\s+(ASC|DESC)?\s*(NULLS\s+(FIRST|LAST))?\s*$", "",
+                      item.strip(), flags=re.I).strip().strip('"').lower()
+        name = item.split(".")[-1]
+        if name in cols:
+            keys.append(cols.index(name))
+        else:
+            return []
+    return keys
+
+
+def order_diff(a, b, keys):
+    """Failure messages when `b`'s rows are not in `a`'s output order;
+    runs of rows equal on `keys` (all columns when empty) are compared
+    as sets."""
+    def runs(rows):
+        out = []
+        for r in rows:
+            k = tuple(r[i] for i in keys) if keys else r
+            if out and out[-1][0] == k:
+                out[-1][1].append(r)
+            else:
+                out.append((k, [r]))
+        return [(k, sorted(rs, key=repr)) for k, rs in out]
+    for i, (x, y) in enumerate(zip(runs(a[2]), runs(b[2]))):
+        if x != y:
+            return [f"order: run {i} other={x[1][0]!r} this={y[1][0]!r}"]
+    return []
+
+
 def oracle_type_rule(ot, st):
     r = type_mismatch(ot, st)
     return r and (f"{r} (driver hash is width-sensitive; "
@@ -120,6 +177,15 @@ def dump(con, out_dir, name):
         con, f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
 
 
+def dump_ordered(con, out_dir, name):
+    """`dump` with the rows in output order: part files by name, rows by
+    their position in the file."""
+    return fetch_sorted(
+        con, f"SELECT * EXCLUDE (filename, file_row_number) FROM read_parquet("
+             f"'{out_dir}/{name}/*.parquet', filename=true, "
+             f"file_row_number=true) ORDER BY filename, file_row_number")
+
+
 def main():
     argv = sys.argv[1:]
     against = None
@@ -131,6 +197,9 @@ def main():
         del argv[i:i + 2]
     args = [a for a in argv if not a.startswith("--")]
     no_run = "--no-run" in argv
+    ordered = "--ordered" in argv
+    if ordered and not against:
+        sys.exit("--ordered needs --against")
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     out_dir = args[1] if len(args) > 1 else "/tmp/verify_out"
     only = set(args[2:])
@@ -156,6 +225,9 @@ def main():
         def pair(name):
             return dump(con, against, name), dump(con, out_dir, name)
         rule, labels = exact_type_rule, ("other", "this")
+        if ordered:
+            with open(f"{out_dir}/oracle_sql.json") as f:
+                oracles = json.load(f)
     else:
         with open(f"{out_dir}/oracle_sql.json") as f:
             oracles = json.load(f)
@@ -172,6 +244,9 @@ def main():
     for name in names:
         if only and name not in only:
             continue
+        if ordered and name in UNORDERED:
+            print(f"SKIP {name}: a randomized sketch")
+            continue
         try:
             a, b = pair(name)
         except Exception as ex:
@@ -179,12 +254,19 @@ def main():
             n_fail += 1
             continue
         bad = diff(a, b, rule, labels)
+        keys = None
+        if ordered and not bad and name in oracles:
+            keys = order_keys(oracles[name], [c.lower() for c in a[0]])
+            if keys is not None:
+                bad = order_diff(dump_ordered(con, against, name),
+                                 dump_ordered(con, out_dir, name), keys)
         for msg in bad:
             print(f"FAIL {name}: {msg}")
         if bad:
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(a[2])} rows)")
+            how = "" if keys is None else ", in order"
+            print(f"PASS {name} ({len(a[2])} rows{how})")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
