@@ -57,7 +57,7 @@ object Dedup {
         .dropDuplicates("doc_id", "h")
         .write.mode("overwrite").parquet(tgt)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
 
@@ -152,7 +152,7 @@ object Dedup {
             .stripMargin.replaceAll("\n", " "))).as("h"))
         .write.mode("overwrite").parquet(tgt)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** N-gram Jaccard near-dup pairs with a document-frequency cap:
@@ -750,7 +750,8 @@ object Dedup {
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
           .withColumn("nrm", VectorFns.l2Norm(col("embedding")))
-        val cands = Similarity.annCandidates(e, "vec_id", "embedding")
+        val cands = Similarity.annCandidates(e, "vec_id", "embedding",
+            planesPerTable = Similarity.planesFor(Tables.rows(s, dir, "embeddings")))
           .filter(col("qid") < col("nid"))
           .select(col("qid").as("vec_a"), col("nid").as("vec_b"))
         Similarity.nearDupPairs(cands, e)

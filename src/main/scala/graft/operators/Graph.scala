@@ -66,7 +66,7 @@ object Graph {
       val rev = pairs.select((col("pk") * 2 + 1).as("src"), (col("sk") * 2).as("dst"))
       fwd.unionAll(rev).write.mode("overwrite").parquet(tgt)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** The co-purchase graph, staged once per corpus: every distinct pair
@@ -87,7 +87,7 @@ object Graph {
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("shared"))
         .write.mode("overwrite").parquet(tgt)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** Both directed rows (src, dst, carry..) of every undirected (u, v)
@@ -242,12 +242,14 @@ object Graph {
       (s, dir) => {
         val eraw = edgeList(s, dir)
         val deg = eraw.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        // (src, dst, outdeg) partitioned ON THE JOIN KEY and
-        // materialized ONCE: folding outdeg onto the edge makes each
-        // iteration a single join instead of a ranks⋈deg pre-join. The
-        // repartition sits BEFORE the deg attach so the placement
-        // survives whichever strategy AQE picks for it (broadcast
-        // keeps the child's partitioning; a shuffled join reuses it).
+        // (src, dst, outdeg) materialized ONCE: folding outdeg onto
+        // the edge makes each iteration a single join instead of a
+        // ranks⋈deg pre-join. The rows are hash-placed by src before
+        // the pin, but under AQE a pinned leaf reports its partitioning
+        // as unknown (the executed plan decides it at run time), so no
+        // plan below can count on that placement: a shuffled round
+        // join on src and the node-set distinct each plan their own
+        // exchange over the edges.
         val edges = eraw.repartition(col("src"))
           .join(deg, "src").transform(Staging.pinned)
         // node set derived from the pinned edges; its pin counts |V|
@@ -319,11 +321,14 @@ object Graph {
     // shuffles the label vector (|V| rows) into one edge join and one
     // min-aggregate by node; the edge list is checkpointed once and
     // every round starts from a materialized ≤|V| label table
-    // (lineage cut per round, plan never grows). Labels are the long
-    // node ids, so round r's table is |V| (node, label) long pairs —
-    // no strings, no arrays in the loop. The oracle unrolls the same
-    // four rounds as MATERIALIZED CTEs (inlined CTEs re-evaluate per
-    // reference — the q_text_bpe lesson).
+    // (lineage cut per round, plan never grows). That table is hash-
+    // placed by node when it is pinned, but under AQE its pinned leaf
+    // reports an unknown partitioning, so each round's join on node
+    // re-shuffles it. Labels are the long node ids, so round r's
+    // table is |V| (node, label) long pairs — no strings, no arrays
+    // in the loop. The oracle unrolls the same four rounds as
+    // MATERIALIZED CTEs (inlined CTEs re-evaluate per reference — the
+    // q_text_bpe lesson).
     QueryDef(
       "q_graph_labelprop",
       (s, dir) => {

@@ -45,7 +45,7 @@ object Maintenance {
     val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
       "l_quantity", "l_extendedprice", "l_discount")
     val li = Tables.lineitem(s, dir)
-    val exact = li.count() <= exactMax
+    val exact = Tables.rows(s, dir, "lineitem") <= exactMax
     val ndvOf = (c: String) =>
       if (exact) countDistinct(col(c)) else approx_count_distinct(col(c))
     val aggs = cols.flatMap(c => Seq(

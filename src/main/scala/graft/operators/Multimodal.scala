@@ -329,7 +329,7 @@ object Multimodal {
         .toDF("doc_id", "phash")
         .write.mode("overwrite").parquet(tgt)
     }
-    s.read.parquet(hashDir)
+    Tables.read(s, hashDir)
   }
 
   /** REAL 64-bit average-hash (aHash): decode the image, sum each 2×2

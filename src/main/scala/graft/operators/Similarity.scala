@@ -147,7 +147,7 @@ object Similarity {
       // partitioning-invariant); corpora ≤ cap (every spec and bench
       // corpus) train on the full set, so recalls and bench stamps
       // are unchanged.
-      val nVec = e.count()
+      val nVec = Tables.rows(s, dir, "embeddings")
       val trainCap = 64L * PqK
       val trainSubs = if (nVec <= trainCap) subs
         else subs.filter(
@@ -643,7 +643,7 @@ object Similarity {
   def ivfadcIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, Int) =
     ivfadcIdxReady(s, dir) {
       val e = Tables.embeddings(s, dir)
-      val n = e.count()
+      val n = Tables.rows(s, dir, "embeddings")
       val nCells = ivfCellsFor(n)
       val coarse = trainCentroids(e, "vec_id", "embedding",
         nCells, iters = 3, corpusN = n).transform(Staging.pinned)
@@ -711,7 +711,9 @@ object Similarity {
     * state per row at ANY corpus size. */
   def annCandidates(vectors: DataFrame, idCol: String, vecCol: String,
                     nTables: Int = -1, planesPerTable: Int = -1): DataFrame = {
-    // -1 = size the shape to the corpus (one cheap count): planes hold
+    // -1 = size the shape to the corpus (one count job; a caller whose
+    // vectors are a whole table passes `planesFor(Tables.rows(..))`,
+    // read from the footers without a job instead): planes hold
     // bucket population — and with it the self-join — constant as n
     // grows (the cost knob), and the OR-table count rises with the
     // plane count to hold per-pair recall (the quality knob,
@@ -760,7 +762,7 @@ object Similarity {
     semProbesReady(s, dir) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"))
-      val n = e.count()
+      val n = Tables.rows(s, dir, "embeddings")
       val wSig = Window.partitionBy(col("vec_id"))
       ivfProbeAssign(e, "vec_id", "embedding",
           nCells = ivfCellsFor(n), trainIters = 2, nProbe = 4,
@@ -794,7 +796,7 @@ object Similarity {
                          bruteMax: Long): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .withColumn("nrm", VectorFns.l2Norm(col("embedding")))
-    val n = e.count()
+    val n = Tables.rows(s, dir, "embeddings")
     // above bruteMax: q_dedup_semantic's candidates — the shared
     // memoized probe table (semanticProbes — identical quantizer/params
     // as the dedup), emit-once cell pairs, shuffle-hash vector attach
@@ -1002,7 +1004,8 @@ object Similarity {
         // the embeddings relation caps at driver/executor memory. The qid
         // join leaves the stream hash-partitioned on qid, which the
         // top-k window reuses without another exchange.
-        val cands = annCandidates(e, "vec_id", "embedding")
+        val cands = annCandidates(e, "vec_id", "embedding",
+          planesPerTable = planesFor(Tables.rows(s, dir, "embeddings")))
         // shuffle_hash on the vector side: a sort-merge join would SORT
         // the pair stream while it carries 64-float vectors (~560 B
         // rows) — measured as all-core spill at the 30× probe; a
@@ -1316,8 +1319,9 @@ object Similarity {
         // Above 2k vectors the cell count grows with √n (ivfCellsFor)
         // so search can't go quadratic at fixed cells — nProbe stays
         // the recall knob.
-        // one count serves both the cell sizing and the training cap
-        val n = e.count()
+        // one footer row count serves both the cell sizing and the
+        // training cap
+        val n = Tables.rows(s, dir, "embeddings")
         // EXPLICIT cell_id spread on the shared probe table (r15): the
         // checkpointed assignment is ~60 MB at sf0.1, so AQE coalesces
         // every downstream exchange to 1-2 partitions by size while
@@ -1406,8 +1410,8 @@ object Similarity {
           assignToCentroids(corpus, "vec_id", "embedding", cents)
             .write.mode("overwrite").parquet(s"$tgt/assign")
         }
-        val cents = s.read.parquet(s"$standing/cents")
-        val index = s.read.parquet(s"$standing/assign")
+        val cents = Tables.read(s, s"$standing/cents")
+        val index = Tables.read(s, s"$standing/assign")
         val batch = e.filter(isBatch)
           .select(col("vec_id"), col("embedding"))
         val probes = nearestCells(batch, "vec_id", "embedding", cents, 6)

@@ -400,7 +400,7 @@ object TextAnalysis {
 
   private[graft] def tfIndex(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(tfIndexPath(s, dir))
+    Tables.read(s, tfIndexPath(s, dir))
 
   /** EXPLICIT partition count for the posting-index exchange feeding
     * the (query-set × posting) fan-out. Must be a user-specified count:

@@ -37,7 +37,7 @@ object TextSimilarity {
     // doubles bit-exactly.
     val tfIdxPath = TextAnalysis.tfIndexPath(s, dir)
     val weightsPath = graft.Staging.cached("tfidf_w", tfIdxPath, rev = 1) { tgt =>
-      val tf = tfAll.getOrElse(s.read.parquet(tfIdxPath))
+      val tf = tfAll.getOrElse(Tables.read(s, tfIdxPath))
       val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val nDocs = Tables.documents(s, dir).agg(count(lit(1)).as("n_docs"))
       tf.join(dfq, "term")
@@ -57,7 +57,7 @@ object TextSimilarity {
     // doc_id exchange also feeds the norm aggregate (ReuseExchange)
     // and makes the dots⋈norms join AND the (query_id, doc_id)
     // aggregate exchange-free — hash(doc_id) satisfies both.
-    val weights = s.read.parquet(weightsPath)
+    val weights = Tables.read(s, weightsPath)
     val wp = weights.repartition(TextAnalysis.postingParts(s), col("doc_id"))
     val norms = wp.groupBy(col("doc_id"))
       .agg(sum(round(col("w") * col("w") * 1e9).cast(LongType))

@@ -21,7 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * commits, manifest fields, the log reader) is known to `TxnLog.scala`
   * alone. A DataFrame's lineage is cut in `Staging.scala` alone
   * ([[Staging.pin]] and [[Staging.cut]]), so one module decides what a
-  * checkpoint's leaf reports and how its blocks are freed. */
+  * checkpoint's leaf reports and how its blocks are freed. A parquet
+  * read under `operators/` or `sources/` passes its schema, most
+  * through `Tables.read`, except the few reads named with their reason
+  * in `inferringReads`. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -115,6 +118,46 @@ class StructureSpec extends AnyFunSuite {
         code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
       }
     if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+  }
+
+  /** The schema-less parquet reads left under `operators/` and
+    * `sources/`, per file: how many, and why each may infer. Every
+    * other read passes a schema, most through `Tables.read`, so it runs
+    * no schema-inference job. (`Recall.scala`'s read of the bench dumps
+    * lies outside both trees and is bench-only.) */
+  private val inferringReads: Map[String, (Int, String)] = Map(
+    "Maintenance.scala" -> (22, "multi-path and mergeSchema reads, " +
+      "partition discovery, and the layouts its queries rewrite per call"),
+    "Relational.scala" -> (1, "q_join_dpp reads a partitionBy(o_year) " +
+      "directory: partition discovery"),
+    "Reshape.scala" -> (1, "q_nested_roundtrip's read-back of the dir " +
+      "it rewrites per call is the round trip under test"))
+
+  test("parquet reads under operators/ and sources/ pass their schema") {
+    val read = """\.read(\s*\.option\([^)]*\))*\s*\.parquet\(""".r
+    val hits = Seq("graft/operators", "graft/sources").flatMap { d =>
+      val walk = Files.walk(main.resolve(d))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.flatMap { p =>
+      // comment lines blanked, so a match's offset keeps its line number
+      val code = Files.readAllLines(p).asScala.map { l =>
+        val t = l.trim
+        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
+      }.mkString("\n")
+      read.findAllMatchIn(code).map { m =>
+        (p.getFileName.toString,
+          s"${main.relativize(p)}:${code.take(m.start).count(_ == '\n') + 1}")
+      }
+    }.groupBy(_._1)
+    val wrong = (hits.keySet ++ inferringReads.keySet).toSeq.sorted.flatMap { f =>
+      val at = hits.getOrElse(f, Nil).map(_._2)
+      val (allowed, why) = inferringReads.getOrElse(f, (0, "none may infer"))
+      if (at.size == allowed) None
+      else Some(s"$f: ${at.size} schema-less reads, $allowed allowed ($why)" +
+        at.mkString("\n  ", "\n  ", ""))
+    }
+    if (wrong.nonEmpty) fail(wrong.mkString("\n", "\n", ""))
   }
 
   test("operators read nothing from the environment") {
