@@ -11,18 +11,22 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native word-n-gram STRING emitter: lowercases, splits on spaces, and
   * returns the space-joined consecutive n-token windows — the corpus
   * n-gram statistics inner loop in one expression evaluation per row.
+  * It is the one word n-gram construction under `operators/` (text
+  * statistics, repetition, decontamination, winnowing and the
+  * duplicated-span scan); StructureSpec fails on a hand-written window.
   *
   * Same rationale as [[ShingleHashes]]: the composable form
-  * (`transform(sequence(...), i -> concat_ws(element_at...))`) runs
-  * interpreted per ELEMENT — ~300 boxed lambda invocations per document
-  * dominated `q_text_ngrams` at sf0.1. Unlike [[ShingleHashes]] this
+  * (`transform(sequence(...), i -> array_join(slice(...)))`) runs
+  * interpreted per ELEMENT — ~300 boxed lambda invocations per document,
+  * 2× slower on `q_text_ngrams` at sf0.1. Unlike [[ShingleHashes]] this
   * variant keeps the actual strings (reporting/oracle-comparable), not
   * hashed equality tokens.
   *
-  * Token semantics mirror `split(lower(text), ' ')` / DuckDB
-  * `string_split(lower(text), ' ')` exactly (limit -1 keeps trailing
-  * empties), so SQL oracles replay it verbatim. Fewer than `n` tokens ⇒
-  * empty array. Registered as SQL `word_ngrams(text, n)` by
+  * Token semantics are `TextFns.tokens` (`split(lower(text), ' ')`) /
+  * DuckDB `string_split(lower(text), ' ')` exactly (limit -1 keeps
+  * leading and trailing empties; LlmOpsSpec checks it as a property),
+  * so SQL oracles replay it verbatim. Fewer than `n` tokens ⇒ empty
+  * array; null text ⇒ null. Registered as SQL `word_ngrams(text, n)` by
   * [[Functions.registerAll]].
   */
 case class WordNgrams(child: Expression, n: Int)

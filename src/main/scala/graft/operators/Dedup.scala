@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Staging}
-import graft.functions.{TextFns, VectorFns}
+import graft.functions.{TextFns, VectorFns, WordNgrams}
 import graft.sources.Tables
 
 /** Deduplication family over `documents` / `embeddings` (SURVEY §2.B
@@ -137,15 +137,12 @@ object Dedup {
     * to avoid. */
   def winnowIndex(s: SparkSession, dir: String): DataFrame = {
     val path = graft.Staging.cached("winnow_idx", dir, rev = 1) { tgt =>
+      // >= 8 tokens: at least five 4-grams for the first 5-window
+      // (sequence(0, size(g) - 5) counts down below that)
       Tables.documents(s, dir)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
-        .filter(size(col("ts")) >= 8)
-        .select(col("doc_id"), expr(
-          """transform(sequence(1, size(ts) - 3),
-            |  i -> cast(conv(substring(md5(
-            |    array_join(slice(ts, i, 4), ' ')), 1, 12), 16, 10)
-            |    as bigint))""".stripMargin.replaceAll("\n", " "))
-          .as("g"))
+        .filter(size(TextFns.tokens(col("text"))) >= 8)
+        .select(col("doc_id"), transform(WordNgrams(col("text"), 4),
+          g => conv(substring(md5(g), 1, 12), 16, 10).cast("bigint")).as("g"))
         .select(col("doc_id"), explode(expr(
           """array_distinct(transform(sequence(0, size(g) - 5),
             |  j -> array_min(slice(g, j + 1, 5))))"""
@@ -1374,16 +1371,12 @@ object Dedup {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val k = 8
+        // pos is the window's 1-based start token (span_start is 1-based)
         val wins = Tables.documents(s, dir)
-          .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
-          .filter(size(col("ts")) >= k)
-          .select(col("doc_id"), explode(expr(
-            s"""transform(sequence(1, size(ts) - ${k - 1}),
-               |  p -> struct(p AS pos,
-               |    unhex(md5(array_join(slice(ts, p, $k), ' '))) AS wkey))"""
-              .stripMargin.replaceAll("\n", " "))).as("e"))
-          .select(col("doc_id"), col("e.pos").as("pos"),
-            col("e.wkey").as("wkey"))
+          .select(col("doc_id"),
+            posexplode(WordNgrams(col("text"), k)).as(Seq("i", "g")))
+          .select(col("doc_id"), (col("i") + 1).as("pos"),
+            unhex(md5(col("g"))).as("wkey"))
         // corpus frequency per window key AS A PARTITIONED WINDOW
         // (includes same-doc repeats — a self-repeated span is a dup
         // span too): count().over(partitionBy(wkey)) keeps (doc_id,

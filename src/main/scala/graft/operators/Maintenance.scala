@@ -96,6 +96,18 @@ object Maintenance {
     dead
   }
 
+  /** lineitem staged as 24 date tiles (range-partitioned and sorted on
+    * l_shipdate): the layout q_manifest_prune and q_manifest_bloom
+    * build their per-file manifests over. */
+  private def manifestLayout(s: org.apache.spark.sql.SparkSession,
+                             dir: String): org.apache.spark.sql.DataFrame =
+    Tables.read(s, graft.Staging.cached("manifest_layout", dir, rev = 1) { tgt =>
+      Tables.lineitem(s, dir)
+        .repartitionByRange(24, col("l_shipdate"))
+        .sortWithinPartitions(col("l_shipdate"))
+        .write.mode("overwrite").parquet(tgt)
+    })
+
   /** Write the orders with `lo <= o_orderdate < hi` (an absent bound is
     * open) as one parquet file set at `path` — the date-sliced data
     * files every staged transaction-log table commits. */
@@ -570,14 +582,8 @@ object Maintenance {
     QueryDef(
       "q_manifest_prune",
       (s, dir) => {
-        val layout = graft.Staging.cached("manifest_layout", dir, rev = 1) { tgt =>
-          Tables.lineitem(s, dir)
-            .repartitionByRange(24, col("l_shipdate"))
-            .sortWithinPartitions(col("l_shipdate"))
-            .write.mode("overwrite").parquet(tgt)
-        }
         val manifestDir = graft.Staging.dir("q_manifest_prune")
-        s.read.parquet(layout)
+        manifestLayout(s, dir)
           .groupBy(input_file_name().as("file"))
           .agg(min(col("l_shipdate")).as("lo"),
             max(col("l_shipdate")).as("hi"),
@@ -632,13 +638,7 @@ object Maintenance {
     QueryDef(
       "q_manifest_bloom",
       (s, dir) => {
-        val layout = graft.Staging.cached("manifest_layout", dir, rev = 1) { tgt =>
-          Tables.lineitem(s, dir)
-            .repartitionByRange(24, col("l_shipdate"))
-            .sortWithinPartitions(col("l_shipdate"))
-            .write.mode("overwrite").parquet(tgt)
-        }
-        val lay = s.read.parquet(layout)
+        val lay = manifestLayout(s, dir)
         // bounds + sizing scalars (one tiny agg, q_manifest_prune's
         // commit-planning posture)
         val b = lay.agg(count(lit(1)), min(col("l_orderkey")),
@@ -860,7 +860,7 @@ object Maintenance {
         }
         val delta = partials(
           Tables.events(s, dir).filter(col("ts") >= cutoff))
-        s.read.parquet(mv).unionByName(delta)
+        Tables.read(s, mv).unionByName(delta)
           .groupBy(col("event_type"), col("day"))
           .agg(sum(col("n")).as("n_events"), sum(col("cents")).as("cents"))
           .select(col("event_type"), col("day"), col("n_events"),

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import graft.{QueryDef, Staging}
-import graft.functions.TextFns
+import graft.functions.{TextFns, WordNgrams}
 import graft.sources.Tables
 
 /** Text analysis over `documents` (SURVEY §2.B B48 + north star):
@@ -363,6 +363,21 @@ object TextAnalysis {
       .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
+
+  /** Corpus bigram counts `(bigram, c12)`: one explode of the
+    * [[WordNgrams]] windows into a map-combined count, so the shuffle
+    * carries distinct bigrams, not token instances. Every bigram
+    * statistic (top-n, LLR, PMI, the bigram LM) counts through this. */
+  private def bigramCounts(docs: DataFrame): DataFrame =
+    docs.select(explode(WordNgrams(col("text"), 2)).as("bigram"))
+      .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
+
+  /** `df` with its `bigram` split back into words `w1` and `w2` (exact:
+    * a token holds no space). */
+  private def withWords(df: DataFrame): DataFrame = {
+    val w = split(col("bigram"), " ")
+    df.withColumn("w1", w.getItem(0)).withColumn("w2", w.getItem(1))
+  }
 
   /** [[termFrequencies]] staged ONCE per source tree as a persistent
     * parquet artifact (the shingle-index pattern, Dedup.scala) and
@@ -927,18 +942,14 @@ object TextAnalysis {
 
     // North star — corpus n-gram statistics: top-20 bigrams by frequency
     // (the vocabulary/boilerplate profile a pretraining pipeline reports
-    // per shard). Bigrams come from the native WordNgrams expression —
-    // the interpreted per-element HOF form (transform + element_at +
-    // concat_ws) was 2× slower at sf0.1; explode → count is one
-    // partial-combined agg (shuffle carries distinct bigrams, not token
-    // instances); the top-20 is TakeOrderedAndProject — no global sort
-    // of the bigram table.
+    // per shard). The counts are `bigramCounts`, the one map-combined
+    // bigram count every bigram statistic here shares; the top-20 is
+    // TakeOrderedAndProject — no global sort of the bigram table.
     QueryDef(
       "q_text_ngrams",
       (s, dir) => {
-        Tables.documents(s, dir)
-          .select(explode(graft.functions.WordNgrams(col("text"), 2)).as("bigram"))
-          .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
+        bigramCounts(Tables.documents(s, dir))
+          .select(col("bigram"), col("c12").as("n"))
           .orderBy(col("n").desc, col("bigram"))
           .limit(20)
       },
@@ -1591,26 +1602,24 @@ object TextAnalysis {
     // (groupBy(source, term) then groupBy(source)) — never a
     // multi-distinct agg, whose Expand duplicates the exploded token
     // stream per distinct column (the q_table_stats NDV lesson);
-    // bigrams come from the same zip_with slide as the BPE pair scan.
+    // bigrams are the WordNgrams windows of each document.
     // Both levels map-combine; the exchange carries distinct
     // (source, term) rows, not tokens.
     QueryDef(
       "q_eval_diversity",
       (s, dir) => {
-        val base = Tables.documents(s, dir)
-          .select(col("source"), TextFns.tokens(col("text")).as("ts"))
-        val uni = base.select(col("source"), explode(col("ts")).as("t1"))
+        val corpus = Tables.documents(s, dir)
+        val uni = corpus
+          .select(col("source"), explode(TextFns.tokens(col("text"))).as("t1"))
           .groupBy(col("source"), col("t1")).agg(count(lit(1)).as("c"))
           .groupBy(col("source"))
           .agg(sum(col("c")).as("total_1"), count(lit(1)).as("distinct_1"))
-        val bi = base.select(col("source"), explode(zip_with(
-            slice(col("ts"), lit(1), size(col("ts")) - 1),
-            slice(col("ts"), lit(2), size(col("ts")) - 1),
-            (a, b) => concat(a, lit(" "), b))).as("t2"))
+        val bi = corpus
+          .select(col("source"), explode(WordNgrams(col("text"), 2)).as("t2"))
           .groupBy(col("source"), col("t2")).agg(count(lit(1)).as("c"))
           .groupBy(col("source"))
           .agg(sum(col("c")).as("total_2"), count(lit(1)).as("distinct_2"))
-        val docs = Tables.documents(s, dir)
+        val docs = corpus
           .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
         // inner join on source is safe because every fixture doc has
         // >= 2 tokens (so every source produces bigrams); a source of
@@ -1721,7 +1730,7 @@ object TextAnalysis {
     // from the bigram-count table (an aggregate of an aggregate — the
     // raw bigram stream is never re-shuffled for them).
     //
-    // Scale shape: one explode pass feeds the (w1,w2) count shuffle;
+    // Scale shape: one explode pass feeds the bigram count shuffle;
     // context counts and the vocabulary scalar come from that
     // vocabulary-sized table, not the corpus; the scoring join fans the
     // corpus bigrams against vocabulary-sized count tables (AQE handles
@@ -1731,23 +1740,16 @@ object TextAnalysis {
     QueryDef(
       "q_text_lmscore",
       (s, dir) => {
-        val ts = TextFns.tokens(col("text"))
-        def bigrams = Tables.documents(s, dir)
-          .select(col("doc_id"), ts.as("ts"))
-          .filter(size(col("ts")) >= 2)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(1, size(ts) - 1), " +
-              "i -> struct(ts[i - 1] AS w1, ts[i] AS w2))")).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-        val bc = bigrams.groupBy(col("w1"), col("w2"))
-          .agg(count(lit(1)).as("c12"))
-          .transform(Staging.pinned) // reused by ctx, V, and the scoring join
+        val docs = Tables.documents(s, dir)
+        val bc = withWords(bigramCounts(docs)
+          .transform(Staging.pinned)) // reused by ctx, V, and the scoring join
         val ctx = bc.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
         // continuation-vocabulary size — one bounded scalar (the same
         // driver-side role as |V| in the PageRank loop)
         val v = bc.select(col("w2")).distinct().count()
         val enriched = bc.join(ctx, "w1")
-        bigrams.join(enriched, Seq("w1", "w2"))
+        docs.select(col("doc_id"), explode(WordNgrams(col("text"), 2)).as("bigram"))
+          .join(enriched, "bigram")
           .withColumn("lp_micro",
             round(log((col("c12") + lit(1.0)) /
               (col("c1") + lit(v.toDouble))) * 1e6).cast("long"))
@@ -1882,17 +1884,10 @@ object TextAnalysis {
     QueryDef(
       "q_text_llr",
       (s, dir) => {
-        val bc = Tables.documents(s, dir)
-          .select(explode(graft.functions.WordNgrams(col("text"), 2))
-            .as("bigram"))
-          .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
-          .transform(Staging.pinned) // feeds prefix, suffix, total and the scan
-        val pre = bc
-          .groupBy(split(col("bigram"), " ").getItem(0).as("w1"))
-          .agg(sum(col("c12")).as("r1"))
-        val suf = bc
-          .groupBy(split(col("bigram"), " ").getItem(1).as("w2"))
-          .agg(sum(col("c12")).as("c1"))
+        val bc = withWords(bigramCounts(Tables.documents(s, dir))
+          .transform(Staging.pinned)) // feeds prefix, suffix, total and the scan
+        val pre = bc.groupBy(col("w1")).agg(sum(col("c12")).as("r1"))
+        val suf = bc.groupBy(col("w2")).agg(sum(col("c12")).as("c1"))
         val nb = bc.agg(sum(col("c12")).as("nb"))
         def term(k: org.apache.spark.sql.Column,
                  r: org.apache.spark.sql.Column,
@@ -1901,8 +1896,6 @@ object TextAnalysis {
             log((k.cast("double") * col("nb")) /
               (r.cast("double") * c))).otherwise(lit(0.0))
         bc.where(col("c12") >= 5)
-          .withColumn("w1", split(col("bigram"), " ").getItem(0))
-          .withColumn("w2", split(col("bigram"), " ").getItem(1))
           .join(pre, "w1").join(suf, "w2")
           .crossJoin(broadcast(nb))
           .select(col("bigram"), col("c12").as("n"),
@@ -1978,11 +1971,7 @@ object TextAnalysis {
           .select(explode(TextFns.tokens(col("text"))).as("w"))
           .groupBy(col("w")).agg(count(lit(1)).as("cu"))
           .transform(Staging.pinned) // feeds both unigram attaches + the total
-        val bi = docs
-          .select(explode(graft.functions.WordNgrams(col("text"), 2))
-            .as("bigram"))
-          .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
-          .where(col("c12") >= 5)
+        val bi = withWords(bigramCounts(docs).where(col("c12") >= 5))
         val nu = uni.agg(sum(col("cu")).cast("long").as("nu"))
         val nb = docs
           .select((size(TextFns.tokens(col("text"))) - 1).cast("long")
@@ -1990,8 +1979,6 @@ object TextAnalysis {
           .where(col("k") >= 1)
           .agg(sum(col("k")).as("nb"))
         val scored = bi
-          .withColumn("w1", split(col("bigram"), " ").getItem(0))
-          .withColumn("w2", split(col("bigram"), " ").getItem(1))
           .join(uni.select(col("w").as("w1"), col("cu").as("c1")), "w1")
           .join(uni.select(col("w").as("w2"), col("cu").as("c2")), "w2")
           .crossJoin(broadcast(nu))
@@ -2405,12 +2392,7 @@ object TextAnalysis {
       "q_quality_repetition",
       (s, dir) => {
         def grams(n: Int) = Tables.documents(s, dir)
-          .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
-          .filter(size(col("ts")) >= n)
-          .select(col("doc_id"), explode(expr(
-            s"""transform(sequence(1, size(ts) - ${n - 1}),
-               |  i -> array_join(slice(ts, i, $n), ' '))"""
-              .stripMargin.replaceAll("\n", " "))).as("g"))
+          .select(col("doc_id"), explode(WordNgrams(col("text"), n)).as("g"))
           .groupBy(col("doc_id"), col("g"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("doc_id"))
@@ -2500,12 +2482,8 @@ object TextAnalysis {
         val isEval = pmod(col("doc_id"), lit(13L)) === 3L &&
           col("doc_id") < 5000L
         val grams = Tables.documents(s, dir)
-          .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
-          .filter(size(col("ts")) >= 8)
-          .select(col("doc_id"), explode(expr(
-            """array_distinct(transform(sequence(1, size(ts) - 7),
-              |  i -> array_join(slice(ts, i, 8), ' ')))"""
-              .stripMargin.replaceAll("\n", " "))).as("g"))
+          .select(col("doc_id"),
+            explode(array_distinct(WordNgrams(col("text"), 8))).as("g"))
         val ev = grams.filter(isEval)
           .select(col("doc_id").as("eval_doc"), col("g"))
         val hits = grams.filter(!isEval)

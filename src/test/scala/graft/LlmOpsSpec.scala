@@ -987,19 +987,50 @@ class LlmOpsSpec extends SparkSpec {
     }
   }
 
+  // a property over generated text (upper case, runs of spaces, leading
+  // and trailing spaces, tabs, non-ASCII letters, "" and null), n in
+  // {1, 2, 3, 4, 8}
   test("native word_ngrams == the HOF composition (incl. short docs)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val word = Gen.oneOf(Gen.alphaStr.map(_.take(6)),
+      Gen.oneOf("Alpha", "BETA", "x\ty", "İstanbul", "İ", "Σ", "ΟΔΥΣΣΕΥΣ",
+        "aΣ", "ß", "STRASSE", "Straße", "ǅ", "ﬁ"))
+    val sep = Gen.frequency(
+      3 -> Gen.const(" "), 1 -> Gen.oneOf("  ", "   ", "\t", " \t "))
+    val text: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null), 1 -> Gen.const(""),
+      8 -> (for {
+        lead <- Gen.oneOf("", " ", "  ", "\t")
+        ws <- Gen.listOf(word)
+        seps <- Gen.listOfN(ws.size, sep)
+        trail <- Gen.oneOf("", " ", "  ")
+      } yield lead + ws.zip(seps).flatMap { case (w, s) => Seq(s, w) }
+        .drop(1).mkString + trail))
+    val ns = Seq(1, 2, 3, 4, 8)
+    // the reference: the n-token windows of TextFns.tokens, as a HOF
+    def windows(n: Int) = {
+      val ts = functions.TextFns.tokens(col("text"))
+      when(ts.isNotNull,
+        when(size(ts) >= n, transform(sequence(lit(1), size(ts) - (n - 1)),
+          i => array_join(slice(ts, i, lit(n)), " ")))
+          .otherwise(array().cast("array<string>")))
+    }
     import spark.implicits._
-    val docs = Seq("alpha beta gamma delta", "one", "", "x  y", "A B a b")
-      .toDF("text")
-    val toks = split(lower(col("text")), " ")
-    val hof = when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val mismatches = docs
-      .select(functions.WordNgrams(col("text"), 2).as("native"), hof.as("hof"))
-      .filter(col("native") =!= col("hof")).count()
-    assert(mismatches == 0)
+    val prop = Prop.forAll(Gen.nonEmptyListOf(text)) { texts =>
+      val rows = texts.map(Tuple1(_)).toDF("text")
+        .select(col("text") +: ns.flatMap(n => Seq(
+          functions.WordNgrams(col("text"), n), windows(n))): _*)
+        .collect()
+      val wrong = for {
+        r <- rows.toSeq; (n, i) <- ns.zipWithIndex
+        if r.get(1 + 2 * i) != r.get(2 + 2 * i)
+      } yield s"n=$n text=${Option(r.getString(0)).map(t => "\"" + t + "\"")}: " +
+        s"${r.get(1 + 2 * i)} != ${r.get(2 + 2 * i)}"
+      Prop(wrong.isEmpty) :| wrong.mkString("\n")
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(40).withInitialSeed(42L), prop)
+    assert(res.passed, s"$res")
   }
 
   test("native simhash64 signatures == aggregate-form signatures") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.SparkEnv
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftBridge}
@@ -23,19 +21,6 @@ class PinSpec extends SparkSpec {
 
   private def leafRddId(df: DataFrame): Int =
     df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
-
-  /** Jobs started while `body` runs, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    GraftBridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { body; GraftBridge.drainListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   /** 5,000 rows with a variable-length string and an array<float>. */
   private def wide: DataFrame =

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
@@ -29,18 +26,9 @@ class SmallSortSpec extends SparkSpec {
   /** (rows, jobs run, executed plan) of one `collect` of `df`. */
   private def run(df: => DataFrame): (Seq[Row], Int, String) = {
     val d = df
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    GraftBridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val rows = d.collect().toSeq
-      GraftBridge.drainListenerBus(spark)
-      (rows, jobs.get, d.queryExecution.executedPlan.toString)
-    } finally spark.sparkContext.removeSparkListener(l)
+    var rows: Seq[Row] = Nil
+    val jobs = jobsOf { rows = d.collect().toSeq }
+    (rows, jobs, d.queryExecution.executedPlan.toString)
   }
 
   private def ranged(plan: String) =

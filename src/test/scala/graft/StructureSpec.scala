@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,7 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint's leaf reports and how its blocks are freed. A parquet
   * read under `operators/` or `sources/` passes its schema, most
   * through `Tables.read`, except the few reads named with their reason
-  * in `inferringReads`. */
+  * in `inferringReads`. A sliding word n-gram under `operators/` is
+  * `WordNgrams` and a tokenizer is `TextFns.tokens`, except the few
+  * named in `handWindows`. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -126,38 +129,72 @@ class StructureSpec extends AnyFunSuite {
     * no schema-inference job. (`Recall.scala`'s read of the bench dumps
     * lies outside both trees and is bench-only.) */
   private val inferringReads: Map[String, (Int, String)] = Map(
-    "Maintenance.scala" -> (22, "multi-path and mergeSchema reads, " +
+    "Maintenance.scala" -> (19, "multi-path and mergeSchema reads, " +
       "partition discovery, and the layouts its queries rewrite per call"),
     "Relational.scala" -> (1, "q_join_dpp reads a partitionBy(o_year) " +
       "directory: partition discovery"),
     "Reshape.scala" -> (1, "q_nested_roundtrip's read-back of the dir " +
       "it rewrites per call is the round trip under test"))
 
-  test("parquet reads under operators/ and sources/ pass their schema") {
-    val read = """\.read(\s*\.option\([^)]*\))*\s*\.parquet\(""".r
-    val hits = Seq("graft/operators", "graft/sources").flatMap { d =>
+  /** Matches of `re` in the code of the .scala files under `dirs`
+    * (comment lines blanked, so an offset keeps its line number), as
+    * `path:line` locations per file name. */
+  private def codeHits(re: Regex, dirs: String*): Map[String, Seq[String]] =
+    dirs.flatMap { d =>
       val walk = Files.walk(main.resolve(d))
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     }.flatMap { p =>
-      // comment lines blanked, so a match's offset keeps its line number
       val code = Files.readAllLines(p).asScala.map { l =>
         val t = l.trim
         if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
       }.mkString("\n")
-      read.findAllMatchIn(code).map { m =>
+      re.findAllMatchIn(code).map { m =>
         (p.getFileName.toString,
           s"${main.relativize(p)}:${code.take(m.start).count(_ == '\n') + 1}")
       }
-    }.groupBy(_._1)
-    val wrong = (hits.keySet ++ inferringReads.keySet).toSeq.sorted.flatMap { f =>
-      val at = hits.getOrElse(f, Nil).map(_._2)
-      val (allowed, why) = inferringReads.getOrElse(f, (0, "none may infer"))
-      if (at.size == allowed) None
-      else Some(s"$f: ${at.size} schema-less reads, $allowed allowed ($why)" +
+    }.groupBy(_._1).map { case (f, hs) => f -> hs.map(_._2) }
+
+  /** Fails unless every file holds exactly its allowed number of
+    * `hits` (none where `allowed` names no reason). */
+  private def assertAllowed(hits: Map[String, Seq[String]],
+                            allowed: Map[String, (Int, String)], what: String): Unit = {
+    val wrong = (hits.keySet ++ allowed.keySet).toSeq.sorted.flatMap { f =>
+      val at = hits.getOrElse(f, Nil)
+      val (n, why) = allowed.getOrElse(f, (0, "none allowed"))
+      if (at.size == n) None
+      else Some(s"$f: ${at.size} $what, $n allowed ($why)" +
         at.mkString("\n  ", "\n  ", ""))
     }
     if (wrong.nonEmpty) fail(wrong.mkString("\n", "\n", ""))
+  }
+
+  test("parquet reads under operators/ and sources/ pass their schema") {
+    assertAllowed(
+      codeHits("""\.read(\s*\.option\([^)]*\))*\s*\.parquet\(""".r,
+        "graft/operators", "graft/sources"),
+      inferringReads, "schema-less reads")
+  }
+
+  /** Hand-written token windows or inline tokenizers allowed per file
+    * under operators/, with the reason: none of these is a sliding word
+    * n-gram of a document's text. */
+  private val handWindows: Map[String, (Int, String)] = Map(
+    "TextAnalysis.scala" -> (1, "the BPE merge loop pairs the subword " +
+      "symbols of one word (a zip_with of two slices), not words of a text"),
+    "Dedup.scala" -> (2, "q_dedup_lines cuts non-overlapping 8-token " +
+      "segments (its transform(sequence( line and its array_join(slice( " +
+      "line), not sliding windows"))
+
+  test("word n-grams are WordNgrams and tokens are TextFns.tokens under operators/") {
+    // a window joined back to text, two token slices zipped, an index
+    // walk over the tokens, an inline tokenizer (the DuckDB oracles'
+    // string_split( does not match)
+    assertAllowed(
+      codeHits(("""array_join\(slice\(|zip_with\(\s*slice\(|""" +
+        """transform\(sequence\(.*size\((?:col\(")?ts\b|(?<!\w)split\(lower\(""").r,
+        "graft/operators"),
+      handWindows, "hand-written word windows or tokenizers")
   }
 
   test("operators read nothing from the environment") {

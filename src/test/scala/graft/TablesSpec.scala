@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
@@ -35,26 +34,6 @@ class TablesSpec extends SparkSpec {
       .repartition(3)
     df.write.parquet(out)
     (out, df.schema)
-  }
-
-  /** Jobs this thread starts while `body` runs. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("graft.spec") == "tables") jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setLocalProperty("graft.spec", "tables")
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      jobs.get
-    } finally {
-      spark.sparkContext.setLocalProperty("graft.spec", null)
-      spark.sparkContext.removeSparkListener(l)
-    }
   }
 
   test("the footer schema is Spark's inferred schema, nullability included") {

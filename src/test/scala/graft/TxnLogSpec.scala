@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.operators.{Maintenance, TxnLog}
 import graft.operators.TxnLog.{Dates, EventTime, Manifest}
 
@@ -128,28 +126,9 @@ class TxnLogSpec extends SparkSpec {
 
   test("read runs no Spark job") {
     val logs = stagedLogs()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("graft.spec") == "txnlog") jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setLocalProperty("graft.spec", "txnlog")
-    try {
-      // the counter sees the Spark reader's jobs...
-      spark.read.json(logs.head.toString).collect()
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      assert(jobs.get > 0)
-      // ...and none from the JVM reader
-      jobs.set(0)
-      logs.foreach(TxnLog.read)
-      TxnLog.resolve(logs(2), 8L)
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      assert(jobs.get == 0)
-    } finally {
-      spark.sparkContext.setLocalProperty("graft.spec", null)
-      spark.sparkContext.removeSparkListener(l)
-    }
+    // the counter sees the Spark reader's jobs...
+    assert(jobsOf(spark.read.json(logs.head.toString).collect()) > 0)
+    // ...and none from the JVM reader
+    assert(jobsOf { logs.foreach(TxnLog.read); TxnLog.resolve(logs(2), 8L) } == 0)
   }
 }
