@@ -23,7 +23,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - `probe q_name [q_name ...]`: each query twice through a noop sink,
   *    in order, in one JVM. Per pass, one JSON line with the wall time
   *    and the costs the wall clock hides: shuffle bytes read and
-  *    written, spill, jobs, tasks and peak task execution memory. Each
+  *    written, spill, jobs, tasks, peak task execution memory and
+  *    `held_rdds`, the persisted RDDs the pass added and still holds
+  *    (pins a query did not free). Each
   *    job's start and wall time go to stderr (`PROBEJOBSTART` /
   *    `PROBEJOB`), the local-mode stand-in for the UI's Jobs page; a
   *    streaming query also prints one `[batch]` line per micro-batch
@@ -159,6 +161,7 @@ object Dev {
       for (pass <- 1 to 2) {
         Seq(shufW, shufR, spillD, spillM, jobs, tasks).foreach(_.reset())
         peakMem.set(0L)
+        val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
         val t0 = System.nanoTime()
         qd.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
@@ -171,7 +174,8 @@ object Dev {
           s""""spill_disk_mb":${mb(spillD.sum())},""" +
           s""""spill_mem_mb":${mb(spillM.sum())},""" +
           s""""jobs":${jobs.sum()},"tasks":${tasks.sum()},""" +
-          s""""peak_task_mem_mb":${mb(peakMem.get())}}""")
+          s""""peak_task_mem_mb":${mb(peakMem.get())},""" +
+          s""""held_rdds":${spark.sparkContext.getPersistentRDDs.keys.count(!persisted(_))}}""")
       }
     }
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `java.io.tmpdir`, so concurrent Verify/Bench runs in separate JVMs
   * never collide and nothing depends on this checkout's layout. Also
   * the one place that cuts a DataFrame's lineage within a run: [[pin]]
-  * and [[cut]]. */
+  * and [[cut]], and the one driver-side round loop, [[iterate]]. */
 object Staging {
   lazy val root: String = {
     val p = java.nio.file.Files.createTempDirectory("graft_stage_")
@@ -188,9 +188,10 @@ object Staging {
       val partitionRows: IndexedSeq[Long], rdd: RDD[InternalRow]) {
     val rows: Long = partitionRows.sum
 
-    /** Releases the stored rows; `df` must not be read afterwards. An
-      * iterative loop frees each round's pins once the next round's are
-      * stored, or its storage grows with the round count. */
+    /** Releases the stored rows; `df` must not be read afterwards. A
+      * driver-side loop runs through [[iterate]], which frees each
+      * round's pins once the next round's are stored; otherwise its
+      * storage grows with the round count. */
     def free(): Unit = rdd.unpersist(blocking = false)
   }
 
@@ -220,6 +221,67 @@ object Staging {
       Some(stats), Some(leaf.constraints))
     new Pinned(GraftBridge.ofRows(ck.sparkSession, exact),
       parts.map(_._1).toIndexedSeq, leaf.rdd)
+  }
+
+  /** One round of [[iterate]], numbered from 1. The pins it holds are
+    * freed together with the round's input state. */
+  final class Round private[Staging] (val index: Int) {
+    private[Staging] val pins = scala.collection.mutable.ArrayBuffer.empty[Pinned]
+
+    /** Hands `p` to the round, to be freed with its other pins. */
+    def adopt(p: Pinned): Pinned = { pins += p; p }
+
+    /** [[Staging.pin]] for a frame only this round reads. */
+    def pin(df: DataFrame): Pinned = adopt(Staging.pin(df))
+  }
+
+  /** The convergence test of an [[iterate]] loop; `loop` names it in the
+    * error when the ceiling is reached. */
+  final case class Until(loop: String)(val done: Pinned => Boolean)
+
+  /** The one driver-side round loop. Each round calls `step(state,
+    * round)` and pins the frame it returns as the next state; once that
+    * pin is stored, the previous state and every pin the step made
+    * through `round.pin` are freed, so a loop holds one state however
+    * many rounds it runs. Runs exactly `rounds` rounds and returns the
+    * last state's pin with the round count. */
+  def iterate(init: Pinned, rounds: Int)(
+      step: (DataFrame, Round) => DataFrame): (Pinned, Int) =
+    loop(init.df, Some(init), rounds, None)(step)
+
+  /** [[iterate]] until `until.done` holds, tested on `init` and after
+    * every round; at most `rounds` rounds, and reaching them without
+    * converging frees the last state and throws an
+    * IllegalStateException naming the loop. */
+  def iterate(init: Pinned, rounds: Int, until: Until)(
+      step: (DataFrame, Round) => DataFrame): (Pinned, Int) =
+    loop(init.df, Some(init), rounds, Some(until))(step)
+
+  /** [[iterate]] from an unpinned `init`: it is neither tested nor
+    * freed, so the first round always runs. */
+  def iterate(init: DataFrame, rounds: Int, until: Until)(
+      step: (DataFrame, Round) => DataFrame): (Pinned, Int) =
+    loop(init, None, rounds, Some(until))(step)
+
+  private def loop(init: DataFrame, pinned: Option[Pinned], rounds: Int,
+                   until: Option[Until])(
+      step: (DataFrame, Round) => DataFrame): (Pinned, Int) = {
+    var state = pinned
+    var r = 0
+    var done = until.exists(u => pinned.exists(u.done))
+    while (!done && r < rounds) {
+      r += 1
+      val round = new Round(r)
+      val next = pin(step(state.fold(init)(_.df), round))
+      (state ++ round.pins).foreach(_.free())
+      state = Some(next)
+      done = until.exists(_.done(next))
+    }
+    until.filter(_ => !done).foreach { u =>
+      state.foreach(_.free())
+      throw new IllegalStateException(s"${u.loop} did not converge in $rounds rounds")
+    }
+    (state.get, r)
   }
 
   /** [[pin]]'s frame, for a chain that needs no row count:

@@ -384,8 +384,8 @@ object Dedup {
     * near-dup chains). Each round is two equi-joins + one
     * partial-combined min-agg, all shuffling on node id — no step ever
     * materializes a component. Pinning each round's tables cuts
-    * per-round lineage growth, and the previous round's pins are freed
-    * once the next round's are stored; the
+    * per-round lineage growth, and [[Staging.iterate]] frees the
+    * previous round's pins once the next round's are stored; the
     * per-round driver scalar is the convergence test, not data movement
     * — Σ labels is strictly decreasing while anything still propagates.
     * Deterministic: labels are ids, min is order-free. */
@@ -407,7 +407,7 @@ object Dedup {
     // pair-derivation plan feeding this
     val e0 = Staging.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val sym = e0.df.unionAll(e0.df.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = Staging.pin(nodes.select(col(idCol).as("id"), col(idCol).as("label")))
+    val labels0 = Staging.pin(nodes.select(col(idCol).as("id"), col(idCol).as("label")))
     // the label table is |V| rows for the whole loop, a count the pin
     // knows: force broadcast on both per-round joins up to the bound.
     // The planner's own size threshold stops far below it, and past
@@ -415,49 +415,44 @@ object Dedup {
     // plus exchanges per round of job overhead (the r15 MST chase
     // lesson). Above the bound the planner keeps its choice (100 TB
     // posture).
-    val mapSide = boundedBroadcast(labels.rows)
+    val mapSide = boundedBroadcast(labels0.rows)
+    // converged once Σ labels stops falling; the first state has no sum
+    // before it to compare with, so it is not summed. coalesce: sum over
+    // zero rows is NULL — an empty node set must converge to an empty
+    // result, not NPE
     var prevSum = Option.empty[Long]
-    var converged = false
-    var rounds = 0
+    val unchanged = Staging.Until("connectedComponents") { p =>
+      (p ne labels0) && {
+        val s = p.df.agg(coalesce(sum(col("label")), lit(0L))).first().getLong(0)
+        val same = prevSum.contains(s)
+        prevSum = Some(s)
+        same
+      }
+    }
     // defensive ceiling only: with doubling, 64 rounds covers any graph
     // that fits in long ids; Σ-labels monotonicity already guarantees
     // termination, so tripping this means a logic bug, not a big input
-    val maxRounds = 64
-    while (!converged) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponents failed to converge in $maxRounds rounds")
-      rounds += 1
+    val (labels, rounds) = Staging.iterate(labels0, 64, unchanged) { (labels, round) =>
       val nbr = sym
-        .join(mapSide(labels.df.select(col("id").as("src"), col("label"))),
+        .join(mapSide(labels.select(col("id").as("src"), col("label"))),
           "src")
         .groupBy(col("dst")).agg(min(col("label")).as("nbr_label"))
         .select(col("dst").as("id"), col("nbr_label"))
       // pin once: stepped feeds BOTH sides of the doubling self-join
       // below and would otherwise run the join+agg twice
-      val stepped = Staging.pin(labels.df.join(nbr, Seq("id"), "left")
+      val st = round.pin(labels.join(nbr, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label")))
+            .as("label"))).df
       // pointer doubling: a label is always some node's id (min over
       // ids), so look up the label THAT node holds and take the min —
       // left join + coalesce only as NULL hygiene
-      val st = stepped.df
       val parent = mapSide(st
         .select(col("id").as("p_id"), col("label").as("p_label")))
-      val next = Staging.pin(st.join(parent, st("label") === parent("p_id"), "left")
+      st.join(parent, st("label") === parent("p_id"), "left")
         .select(st("id"),
           least(st("label"), coalesce(col("p_label"), st("label")))
-            .as("label")))
-      labels.free()
-      stepped.free()
-      labels = next
-      // coalesce: sum over zero rows is NULL — an empty node set must
-      // converge to an empty result, not NPE
-      val s = labels.df.agg(coalesce(sum(col("label")), lit(0L)))
-        .first().getLong(0)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
+            .as("label"))
     }
     e0.free()
     (labels.df.select(col("id").as(idCol), col("label")), rounds)

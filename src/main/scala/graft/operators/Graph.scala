@@ -21,16 +21,17 @@ import graft.sources.Tables
   *    (the packed edge-Jaccard kernel) and [[hubSeed]] (the bfs/sssp
   *    start table at the hub part).
   *
-  * Scale shape (the part that must survive 100 TB): each iteration is
-  * ONE shuffle of the edge list by source plus one aggregation by
-  * destination — the irreducible PageRank traffic. The edge list and
-  * degree table are partitioned on the join key once and
-  * `localCheckpoint`ed, so every iteration reshuffles only the rank
-  * vector (|V| rows, ≪ |E|); the plan never grows with iteration count
-  * (each round starts from a materialized rank table, the same lineage
-  * cut as the connected-components loop in Dedup). Iteration count is
-  * FIXED, not convergence-polled — no per-round driver round-trips
-  * beyond the checkpoint barrier itself.
+  * Scale shape (the part that must survive 100 TB): a round joins the
+  * pinned edge list with a |V|-row state table (ranks, labels, scores,
+  * degrees, distances) and aggregates by node. The plan never grows
+  * with the round count: every round starts from a stored state, which
+  * [[Staging.iterate]] pins and frees round by round (PageRank's
+  * job-free `Staging.cut` per round is the one hand-written loop). A
+  * pinned edge leaf reports no partitioning under AQE, so a round whose
+  * edge join is not broadcast exchanges the edges again, not only the
+  * state. Round counts are FIXED, not convergence-polled, except in
+  * MST, whose Borůvka rounds and pointer chase run to convergence like
+  * the connected-components loop in Dedup.
   */
 object Graph {
 
@@ -112,12 +113,11 @@ object Graph {
     * the distance table, and its empty partitions would each cost a
     * task per scan. */
   private def hubSeed(s: org.apache.spark.sql.SparkSession,
-                      edges: DataFrame): DataFrame = {
+                      edges: DataFrame): Staging.Pinned = {
     val hub = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("src")).limit(1)
       .head().getLong(0)
-    s.range(0, 1, 1, 1).select(lit(hub).as("node"), lit(0L).as("dist"))
-      .transform(Staging.pinned)
+    Staging.pin(s.range(0, 1, 1, 1).select(lit(hub).as("node"), lit(0L).as("dist")))
   }
 
   /** The edge-Jaccard kernel of q_graph_jaccard (whole graph) and
@@ -184,26 +184,39 @@ object Graph {
                               dir: String): DataFrame = {
     val rounds = 4
     val edges = Staging.pin(edgeList(s, dir))
-    var labels = edges.df.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).transform(Staging.pinned)
+    val labels0 = Staging.pin(edges.df.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     // the edge list is each round's build side up to the bounded-
     // broadcast bound: streaming the label table keeps the round's
     // partial min-aggregate to one row per node per label partition
     val edgeSide = Dedup.boundedBroadcast(edges.rows)(edges.df)
-    for (_ <- 1 to rounds) {
+    Staging.iterate(labels0, rounds) { (labels, _) =>
       val fromNbrs = edgeSide
         .join(labels.select(col("node").as("dst"),
           col("lbl").as("nlbl")), "dst")
         .groupBy(col("src").as("node"))
         .agg(min(col("nlbl")).as("minn"))
-      labels = labels.join(fromNbrs, Seq("node"), "left_outer")
+      labels.join(fromNbrs, Seq("node"), "left_outer")
         .select(col("node"),
           least(col("lbl"), coalesce(col("minn"), col("lbl")))
             .as("lbl"))
-        .transform(Staging.pinned)
-    }
-    labels
+    }._1.df
   }
+
+  /** The shared DuckDB CTE head of the co-purchase oracles, the SQL
+    * form of [[coPurchaseEdges]] and [[bothWays]]: `op` (distinct
+    * order/part pairs), `eu` (distinct u < v edges) and `e0` (both
+    * directed rows of every edge). Appended to by the modularity, k-core
+    * and bfs oracles. */
+  private val CoPurchaseOracleCtes: String =
+    """WITH op AS MATERIALIZED (
+      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+      |eu AS MATERIALIZED (
+      |  SELECT DISTINCT a.pk AS u, b.pk AS v
+      |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk),
+      |e0 AS MATERIALIZED (
+      |  SELECT u AS src, v AS dst FROM eu
+      |  UNION ALL SELECT v, u FROM eu)""".stripMargin
 
   /** The shared DuckDB CTE chain for the label propagation: `edges`
     * (directed-both-ways long ids) through `l4` (node, lbl). Appended
@@ -244,14 +257,15 @@ object Graph {
         val deg = eraw.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
         // (src, dst, outdeg) materialized ONCE: folding outdeg onto
         // the edge makes each iteration a single join instead of a
-        // ranks⋈deg pre-join. The rows are hash-placed by src before
-        // the pin, but under AQE a pinned leaf reports its partitioning
-        // as unknown (the executed plan decides it at run time), so no
-        // plan below can count on that placement: a shuffled round
-        // join on src and the node-set distinct each plan their own
-        // exchange over the edges.
-        val edges = eraw.repartition(col("src"))
-          .join(deg, "src").transform(Staging.pinned)
+        // ranks⋈deg pre-join. Under AQE a pinned leaf reports its
+        // partitioning as unknown (the executed plan decides it at run
+        // time), so no plan below could count on a placement by src:
+        // a shuffled round join on src and the node-set distinct each
+        // plan their own exchange over the edges. So the edges are
+        // pinned as the degree join leaves them: a repartition by src
+        // first would be one more shuffle of the edges that no plan
+        // below reads.
+        val edges = eraw.join(deg, "src").transform(Staging.pinned)
         // node set derived from the pinned edges; its pin counts |V|
         val nodes = Staging.pin(edges.select(col("src").as("node")).distinct())
         val n = nodes.rows
@@ -393,16 +407,8 @@ object Graph {
                 (col("dsum").cast("double") / m2)), 6).as("q_contrib"))
           .orderBy(col("community"))
       },
-      Some(
-        """WITH op AS MATERIALIZED (
-          |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-          |eu AS MATERIALIZED (
-          |  SELECT DISTINCT a.pk AS u, b.pk AS v
-          |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk),
-          |e0 AS MATERIALIZED (
-          |  SELECT u AS src, v AS dst FROM eu
-          |  UNION ALL SELECT v, u FROM eu),
-          |lab AS MATERIALIZED (
+      Some(CoPurchaseOracleCtes + ",\n" +
+        """lab AS MATERIALIZED (
           |  SELECT p_partkey AS node, p_brand AS lbl FROM part),
           |m2 AS (SELECT count(*) AS m2 FROM e0),
           |deg AS (SELECT src AS node, count(*) AS d FROM e0 GROUP BY 1),
@@ -533,14 +539,15 @@ object Graph {
     // engines execute the exact same four peels so the surviving edge
     // set is identical even if it has not converged.
     //
-    // Scale shape: each round is one degree aggregate (|E| rows,
-    // map-combined to |V|) plus two semi joins of the edge list
-    // against the |V|-row survivor set — the same per-round traffic
-    // class as a PageRank iteration. The edge list shrinks
-    // monotonically and is localCheckpoint'ed per round, so the plan
-    // stays O(1) per round and later rounds scan only the surviving
-    // edges. The oracle unrolls the rounds as MATERIALIZED CTEs
-    // (the q_text_bpe lesson: inlined CTEs re-evaluate per reference).
+    // Scale shape: the loop state is the |V|-row degree table, pinned
+    // per round; the edge list stays the static staged one. A round
+    // pins its drop set, semi-joins the edges against it map-side
+    // (broadcast) to count each survivor's lost degree (|E| rows
+    // scanned, map-combined to |V|) and subtracts that from the
+    // degree table, so only |V|-sized rows are shuffled. The oracle
+    // unrolls the rounds over a shrinking edge list as MATERIALIZED
+    // CTEs (the q_text_bpe lesson: inlined CTEs re-evaluate per
+    // reference); both peel the same node sets.
     QueryDef(
       "q_graph_kcore",
       (s, dir) => {
@@ -558,22 +565,21 @@ object Graph {
         // 9.1 s at sf0.1; this form runs the same four synchronous
         // peels in 3.3 s and at 100 TB never reshuffles or rewrites
         // the edge list at all.
-        var deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .transform(Staging.pinned)
+        val deg0 = Staging.pin(edges0.groupBy(col("src")).agg(count(lit(1)).as("d")))
         // k = exact 5th-percentile initial degree ((n−1)·q
         // interpolation, the same definition as DuckDB quantile_cont)
         // — one bounded scalar
-        val k = deg.agg(expr("percentile(d, 0.05)")).head().getDouble(0)
-        for (_ <- 1 to rounds) {
+        val k = deg0.df.agg(expr("percentile(d, 0.05)")).head().getDouble(0)
+        val (deg, _) = Staging.iterate(deg0, rounds) { (deg, round) =>
           // peeled this round: alive nodes whose induced degree < k
-          val drop = deg.where(col("d") < lit(k))
-            .select(col("src").as("dn")).transform(Staging.pinned)
+          val drop = round.pin(deg.where(col("d") < lit(k))
+            .select(col("src").as("dn"))).df
           // degree lost by survivors: their edges into the drop set
           val loss = edges0
             .join(broadcast(drop.select(col("dn").as("dst"))),
               Seq("dst"), "left_semi")
             .groupBy(col("src")).agg(count(lit(1)).as("lost"))
-          deg = deg
+          deg
             .join(broadcast(drop.select(col("dn").as("src"))),
               Seq("src"), "left_anti")
             .join(loss, Seq("src"), "left_outer")
@@ -583,22 +589,13 @@ object Graph {
             // and exits the degree table, exactly as an edge-derived
             // recount would have it
             .where(col("d") > 0)
-            .transform(Staging.pinned)
         }
-        deg.select(col("src").as("part"), col("d").as("core_deg"))
+        deg.df.select(col("src").as("part"), col("d").as("core_deg"))
           .orderBy(col("part"))
       },
       Some {
-        val head =
-          """WITH op AS MATERIALIZED (
-            |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-            |eu AS MATERIALIZED (
-            |  SELECT DISTINCT a.pk AS u, b.pk AS v
-            |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk),
-            |e0 AS MATERIALIZED (
-            |  SELECT u AS src, v AS dst FROM eu
-            |  UNION ALL SELECT v, u FROM eu),
-            |kv AS MATERIALIZED (
+        val head = CoPurchaseOracleCtes + ",\n" +
+          """kv AS MATERIALIZED (
             |  SELECT quantile_cont(d, 0.05) AS kk
             |  FROM (SELECT count(*) AS d FROM e0 GROUP BY src))""".stripMargin
         val roundCtes = (1 to 4).map { i =>
@@ -639,30 +636,22 @@ object Graph {
         // win grows with the graph since saturated rounds ship an EMPTY
         // frontier). Unweighted BFS layers ≡ the min-merge, so the
         // oracle's min-merge unroll is unchanged.
-        var reached = hubSeed(s, edges)
-        for (r <- 1 to rounds) {
+        val (reached, _) = Staging.iterate(hubSeed(s, edges), rounds) { (reached, round) =>
+          val r = round.index
           val newf = edges
             .join(reached.where(col("dist") === r - 1)
               .select(col("node").as("src")), "src")
             .select(col("dst").as("node")).distinct()
             .join(reached.select(col("node")), Seq("node"), "left_anti")
             .withColumn("dist", lit(r.toLong))
-          reached = reached.unionAll(newf).transform(Staging.pinned)
+          reached.unionAll(newf)
         }
-        reached.select(col("node").as("part"), col("dist"))
+        reached.df.select(col("node").as("part"), col("dist"))
           .orderBy(col("part"))
       },
       Some {
-        val head =
-          """WITH op AS MATERIALIZED (
-            |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-            |eu AS MATERIALIZED (
-            |  SELECT DISTINCT a.pk AS u, b.pk AS v
-            |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk),
-            |e0 AS MATERIALIZED (
-            |  SELECT u AS src, v AS dst FROM eu
-            |  UNION ALL SELECT v, u FROM eu),
-            |seed AS MATERIALIZED (
+        val head = CoPurchaseOracleCtes + ",\n" +
+          """seed AS MATERIALIZED (
             |  SELECT src AS node FROM e0 GROUP BY src
             |  ORDER BY count(*) DESC, src LIMIT 1),
             |d0 AS MATERIALIZED (
@@ -704,17 +693,15 @@ object Graph {
         val edges = bothWays(coPurchaseEdges(s, dir)
           .withColumn("w", lit(11) - least(col("shared"), lit(10L))), "w")
           .transform(Staging.pinned)
-        var dist = hubSeed(s, edges)
-        for (_ <- 1 to rounds) {
+        val (dist, _) = Staging.iterate(hubSeed(s, edges), rounds) { (dist, _) =>
           val relaxed = edges
             .join(dist.select(col("node").as("src"),
               col("dist").as("pd")), "src")
             .select(col("dst").as("node"), (col("pd") + col("w")).as("dist"))
-          dist = dist.unionAll(relaxed)
+          dist.unionAll(relaxed)
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-            .transform(Staging.pinned)
         }
-        dist.select(col("node").as("part"), col("dist"))
+        dist.df.select(col("node").as("part"), col("dist"))
           .orderBy(col("part"))
       },
       Some {
@@ -889,19 +876,22 @@ object Graph {
           .select((col("src") / 2).cast(LongType).as("sk"),
             ((col("dst") - 1) / 2).cast(LongType).as("pk"))
           .transform(Staging.pinned)
-        var hub = pairs.select(col("sk").as("hs")).distinct()
+        val hub0 = pairs.select(col("sk").as("hs")).distinct()
           .withColumn("h", lit(1).cast(dec)).transform(Staging.pinned)
-        var auth: DataFrame = null
-        for (_ <- 1 to 3) {
-          auth = pairs.join(broadcast(hub), col("sk") === col("hs"))
+        def authOf(hub: DataFrame) =
+          pairs.join(broadcast(hub), col("sk") === col("hs"))
             .groupBy(col("pk").as("ap"))
             .agg(sum(col("h")).cast(dec).as("a"))
-            .transform(Staging.pinned)
-          hub = pairs.join(broadcast(auth), col("pk") === col("ap"))
+        def hubOf(auth: DataFrame) =
+          pairs.join(broadcast(auth), col("pk") === col("ap"))
             .groupBy(col("sk").as("hs"))
             .agg(sum(col("a")).cast(dec).as("h"))
-            .transform(Staging.pinned)
+        // the loop state is auth; each round's hub is a round pin
+        val (authP, _) = Staging.iterate(Staging.pin(authOf(hub0)), 2) {
+          (auth, round) => authOf(round.pin(hubOf(auth)).df)
         }
+        val auth = authP.df
+        val hub = hubOf(auth).transform(Staging.pinned)
         // bounded scalars (|S| and |P| row aggregates, the Q15 posture)
         val ht = hub.agg(sum(col("h")), count(lit(1))).head()
         val at = auth.agg(sum(col("a")), count(lit(1))).head()
@@ -989,7 +979,7 @@ object Graph {
         // post-mortem in CLAUDE.md: a leaf that kept the child plan's
         // estimate, joined into its own successor, compounds it per
         // round until the driver melts in BigInteger stats arithmetic).
-        var eComp = Staging.pin(coPurchaseEdges(s, dir)
+        val edges0 = Staging.pin(coPurchaseEdges(s, dir)
           .withColumn("w", conv(substring(md5(concat(
             lit("w:"), col("u").cast("string"),
             lit(":"), col("v").cast("string"))), 1, 12), 16, 10)
@@ -999,137 +989,124 @@ object Graph {
         // forest edges accumulate as the per-round (already pinned)
         // pick tables; the union is assembled ONCE at the end instead
         // of re-materializing a growing msf per round
-        val forest = scala.collection.mutable.ArrayBuffer(
-          eComp.df.limit(0).select(col("u"), col("v"), col("w")))
-        var done = false
-        var round = 0
-        while (!done) {
-          round += 1
-          require(round <= 20,
-            "Borůvka must converge in log2(V) rounds — logic bug")
+        val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        // done once no edge joins two components: exactly when a
+        // round's picks would be empty. The test sees every state just
+        // before the round that reads it, so it also keeps that state's
+        // row count for the reduce gate below
+        var eRows = 0L
+        val merged = Staging.Until("Borůvka") { e => eRows = e.rows; eRows == 0L }
+        val (last, _) = Staging.iterate(edges0, 20, merged) { (eComp, round) =>
           // every component with an external edge picks its min; the
           // struct-min carries the far component so the pick IS the
           // pointer edge of the contraction graph
-          val picks = Staging.pin(eComp.df
+          val picks = Staging.pin(eComp
             .select(col("cu").as("c"), struct(col("w"), col("u"),
               col("v"), col("cv").as("q")).as("m"))
-            .unionAll(eComp.df.select(col("cv").as("c"), struct(col("w"),
+            .unionAll(eComp.select(col("cv").as("c"), struct(col("w"),
               col("u"), col("v"), col("cu").as("q")).as("m")))
             .groupBy(col("c")).agg(min(col("m")).as("m"))
             .select(col("c"), col("m.u").as("u"), col("m.v").as("v"),
               col("m.w").as("w"), col("m.q").as("q")))
-          // both row counts come with their pins: the picks' count is
-          // the loop-exit test, and both feed the reduce-gate below
-          if (picks.rows == 0L) done = true
-          else {
-            forest += picks.df.select(col("u"), col("v"), col("w")).distinct()
-            // the one-hop maps and the contraction map are
-            // ≤ picks.rows rows — once that is DRIVER-KNOWN bounded,
-            // force broadcast so the chase is one map-only stage and
-            // the relabel never exchanges the edge table. The maps are
-            // join outputs, whose size estimate is the product of their
-            // sides', so the planner alone plans these as SMJ: 2 sorts
-            // + 2 exchanges of the full edge list per round, measured
-            // the dominant round cost at the 10× probe. Above the bound
-            // (a 100 TB round-1 map can be |V| rows) fall back to the
-            // planner's choice.
-            val mapSide = Dedup.boundedBroadcast(picks.rows)
-            // break the 2-cycles (q∘q = id ⇔ both sides picked the
-            // same edge — each merge tree's unique global-min edge):
-            // the smaller id becomes the root
-            val qmap = picks.df.select(col("c"), col("q"))
-            val broken = qmap.as("a")
-              .join(mapSide(qmap.select(col("c").as("q"), col("q").as("qq"))),
-                Seq("q"), "left")
+          forest += picks.df.select(col("u"), col("v"), col("w")).distinct()
+          // the one-hop maps and the contraction map are
+          // ≤ picks.rows rows — once that is DRIVER-KNOWN bounded,
+          // force broadcast so the chase is one map-only stage and
+          // the relabel never exchanges the edge table. The maps are
+          // join outputs, whose size estimate is the product of their
+          // sides', so the planner alone plans these as SMJ: 2 sorts
+          // + 2 exchanges of the full edge list per round, measured
+          // the dominant round cost at the 10× probe. Above the bound
+          // (a 100 TB round-1 map can be |V| rows) fall back to the
+          // planner's choice.
+          val mapSide = Dedup.boundedBroadcast(picks.rows)
+          // break the 2-cycles (q∘q = id ⇔ both sides picked the
+          // same edge — each merge tree's unique global-min edge):
+          // the smaller id becomes the root
+          val qmap = picks.df.select(col("c"), col("q"))
+          val broken = qmap.as("a")
+            .join(mapSide(qmap.select(col("c").as("q"), col("q").as("qq"))),
+              Seq("q"), "left")
+            .select(col("c"),
+              when(coalesce(col("qq"), col("c")) === col("c"),
+                least(col("c"), col("q"))).otherwise(col("q")).as("p"))
+          // pointer chase to the roots by CHAINED LOOKUPS: one
+          // materialization applies `chainK` successive left-joins
+          // against the SAME one-hop map in a single linear plan —
+          // the broadcast build of the map is deduped by exchange
+          // reuse, so a whole round's chase costs ONE checkpoint +
+          // ONE stability aggregate instead of log₂(depth) pairs
+          // (the r15 probe measured this loop at ~30 scheduler jobs
+          // per round with the join work itself in the milliseconds
+          // — job count, not data, is what the chase pays for). The
+          // first pass chases the 2-cycle-broken pick map directly;
+          // if any pointer is still off-root (depth > chainK+1) the
+          // next pass chases the COMPRESSED map, so coverage grows
+          // ×(chainK+1) per materialization — log_k rounds on the
+          // adversarially-deep chain, one round typically.
+          val chainK = 15
+          def chase(m: DataFrame): DataFrame = {
+            val lookup =
+              mapSide(m.select(col("c").as("p"), col("p").as("_n")))
+            var t = m
+            for (_ <- 1 until chainK) {
+              t = t.join(lookup, Seq("p"), "left")
+                .select(col("c"), coalesce(col("_n"), col("p")).as("p"))
+            }
+            t.join(lookup, Seq("p"), "left")
               .select(col("c"),
-                when(coalesce(col("qq"), col("c")) === col("c"),
-                  least(col("c"), col("q"))).otherwise(col("q")).as("p"))
-            // pointer chase to the roots by CHAINED LOOKUPS: one
-            // materialization applies `chainK` successive left-joins
-            // against the SAME one-hop map in a single linear plan —
-            // the broadcast build of the map is deduped by exchange
-            // reuse, so a whole round's chase costs ONE checkpoint +
-            // ONE stability aggregate instead of log₂(depth) pairs
-            // (the r15 probe measured this loop at ~30 scheduler jobs
-            // per round with the join work itself in the milliseconds
-            // — job count, not data, is what the chase pays for). The
-            // first pass chases the 2-cycle-broken pick map directly;
-            // if any pointer is still off-root (depth > chainK+1) the
-            // next pass chases the COMPRESSED map, so coverage grows
-            // ×(chainK+1) per materialization — log_k rounds on the
-            // adversarially-deep chain, one round typically.
-            val chainK = 15
-            def chase(m: DataFrame): DataFrame = {
-              val lookup =
-                mapSide(m.select(col("c").as("p"), col("p").as("_n")))
-              var t = m
-              for (_ <- 1 until chainK) {
-                t = t.join(lookup, Seq("p"), "left")
-                  .select(col("c"), coalesce(col("_n"), col("p")).as("p"))
-              }
-              t.join(lookup, Seq("p"), "left")
-                .select(col("c"),
-                  coalesce(col("_n"), col("p")).as("np"),
-                  (coalesce(col("_n"), col("p")) =!= col("p"))
-                    .cast("int").as("moved"))
-            }
-            var p = broken
-            var stable = false
-            var jumps = 0
-            while (!stable) {
-              jumps += 1
-              require(jumps <= 40, "pointer chase must be O(log V)")
-              val pm = chase(p).transform(Staging.pinned)
-              stable = pm.agg(coalesce(max(col("moved")), lit(0)))
-                .first().getInt(0) == 0
-              p = pm.select(col("c"), col("np").as("p"))
-            }
-            // relabel the surviving edges with the contraction map —
-            // p is |components|-sized (mapSide-broadcast under the
-            // driver-known picks.rows bound, planner's choice above it)
-            // — then REDUCE the contracted multigraph
-            // to the min-weight edge per component PAIR (textbook
-            // Borůvka contraction: parallel edges are interchangeable
-            // for connectivity, so only the lightest between two
-            // supernodes can ever be picked or survive into the MSF —
-            // the exchange argument swaps any heavier parallel edge
-            // out). Without this the state table barely shrinks on a
-            // dense graph: the r15 probe measured 1.06M surviving
-            // parallel edges between just 18 components at round 5.
-            // Pair normalized (least, greatest); min(struct) keeps the
-            // original (u, v, w) of the lightest edge for the forest.
-            // GATED on pairs-space < edges (picks ≥ #components, so
-            // picks.rows²/2 bounds the reduced size): early rounds have
-            // nearly-unique pairs and the reduce is a multi-million-
-            // group hash aggregate that shrinks nothing (measured
-            // +50 s at the 10× probe when unconditional) — once the
-            // bound crosses, one reduce collapses the table for every
-            // later round (10×: round-5 2,904 edges vs 10.4M
-            // un-reduced).
-            val relabeled = eComp.df
-              .join(mapSide(p.select(col("c").as("cu"),
-                col("p").as("ncu"))), Seq("cu"), "left")
-              .join(mapSide(p.select(col("c").as("cv"),
-                col("p").as("ncv"))), Seq("cv"), "left")
-              .select(coalesce(col("ncu"), col("cu")).as("cu"),
-                coalesce(col("ncv"), col("cv")).as("cv"),
-                col("w"), col("u"), col("v"))
-              .filter(col("cu") =!= col("cv"))
-            val reduceNow =
-              picks.rows.toDouble * picks.rows / 2 < eComp.rows.toDouble
-            val prev = eComp
-            eComp = Staging.pin(
-              if (!reduceNow) relabeled
-              else relabeled
-                .groupBy(least(col("cu"), col("cv")).as("cu"),
-                  greatest(col("cu"), col("cv")).as("cv"))
-                .agg(min(struct(col("w"), col("u"), col("v"))).as("m"))
-                .select(col("cu"), col("cv"), col("m.w").as("w"),
-                  col("m.u").as("u"), col("m.v").as("v")))
-            prev.free()
+                coalesce(col("_n"), col("p")).as("p"),
+                (coalesce(col("_n"), col("p")) =!= col("p"))
+                  .cast("int").as("moved"))
           }
+          val rooted = Staging.Until("pointer chase") { pm =>
+            pm.df.agg(coalesce(max(col("moved")), lit(0))).first().getInt(0) == 0
+          }
+          val (p, _) = Staging.iterate(broken, 40, rooted)((m, _) => chase(m))
+          round.adopt(p)
+          // relabel the surviving edges with the contraction map —
+          // p is |components|-sized (mapSide-broadcast under the
+          // driver-known picks.rows bound, planner's choice above it)
+          // — then REDUCE the contracted multigraph
+          // to the min-weight edge per component PAIR (textbook
+          // Borůvka contraction: parallel edges are interchangeable
+          // for connectivity, so only the lightest between two
+          // supernodes can ever be picked or survive into the MSF —
+          // the exchange argument swaps any heavier parallel edge
+          // out). Without this the state table barely shrinks on a
+          // dense graph: the r15 probe measured 1.06M surviving
+          // parallel edges between just 18 components at round 5.
+          // Pair normalized (least, greatest); min(struct) keeps the
+          // original (u, v, w) of the lightest edge for the forest.
+          // GATED on pairs-space < edges (picks ≥ #components, so
+          // picks.rows²/2 bounds the reduced size): early rounds have
+          // nearly-unique pairs and the reduce is a multi-million-
+          // group hash aggregate that shrinks nothing (measured
+          // +50 s at the 10× probe when unconditional) — once the
+          // bound crosses, one reduce collapses the table for every
+          // later round (10×: round-5 2,904 edges vs 10.4M
+          // un-reduced).
+          val relabeled = eComp
+            .join(mapSide(p.df.select(col("c").as("cu"),
+              col("p").as("ncu"))), Seq("cu"), "left")
+            .join(mapSide(p.df.select(col("c").as("cv"),
+              col("p").as("ncv"))), Seq("cv"), "left")
+            .select(coalesce(col("ncu"), col("cu")).as("cu"),
+              coalesce(col("ncv"), col("cv")).as("cv"),
+              col("w"), col("u"), col("v"))
+            .filter(col("cu") =!= col("cv"))
+          val reduceNow =
+            picks.rows.toDouble * picks.rows / 2 < eRows.toDouble
+          if (!reduceNow) relabeled
+          else relabeled
+            .groupBy(least(col("cu"), col("cv")).as("cu"),
+              greatest(col("cu"), col("cv")).as("cv"))
+            .agg(min(struct(col("w"), col("u"), col("v"))).as("m"))
+            .select(col("cu"), col("cv"), col("m.w").as("w"),
+              col("m.u").as("u"), col("m.v").as("v"))
         }
-        forest.reduce(_ unionAll _)
+        (last.df.limit(0).select(col("u"), col("v"), col("w")) +: forest)
+          .reduce(_ unionAll _)
           .orderBy(col("w").desc, col("u"), col("v")).limit(50)
           .select(col("u"), col("v"), col("w"))
       },

@@ -284,31 +284,35 @@ object Retrieval {
             round(round(VectorFns.cosineFast(col("va"), col("vb")), 6) * 1e6)
               .cast(LongType).as("sm"))
           .transform(Staging.pinned) // joined by every greedy round
-        var rem = cand
+        val rem0 = Staging.pin(cand
           .select(col("qid"), col("nid"), col("cos"), col("rel"),
-            lit(-1000000L).as("ms"))
-          .transform(Staging.pinned)
+            lit(-1000000L).as("ms")))
         val wPick = Window.partitionBy(col("qid"))
           .orderBy((lit(7L) * col("rel") - lit(3L) * col("ms")).desc,
             col("nid"))
         val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        for (r <- 1 to 5) {
-          val pick = rem
+        // the pick of round r; pinned: consumed by the output AND the update
+        def pick(rem: DataFrame, r: Int): DataFrame = {
+          val p = rem
             .withColumn("prn", row_number().over(wPick))
             .filter(col("prn") === 1)
             .select(col("qid"), col("nid"), col("cos"))
-            .transform(Staging.pinned) // consumed by the output AND the update
-          picks += pick.withColumn("rnk", lit(r.toLong))
-          if (r < 5)
-            rem = rem
-              .join(pick.select(col("qid"), col("nid").as("pnid")), "qid")
-              .filter(col("nid") =!= col("pnid"))
-              .join(pairs.select(col("qid"), col("a").as("nid"),
-                col("b").as("pnid"), col("sm")), Seq("qid", "nid", "pnid"))
-              .select(col("qid"), col("nid"), col("cos"), col("rel"),
-                greatest(col("ms"), col("sm")).as("ms"))
-              .transform(Staging.pinned)
+            .transform(Staging.pinned)
+          picks += p.withColumn("rnk", lit(r.toLong))
+          p
         }
+        // the state is the remaining candidates: four updates, then the
+        // fifth pick from the last of them
+        val (rem, _) = Staging.iterate(rem0, 4) { (rem, round) =>
+          rem
+            .join(pick(rem, round.index).select(col("qid"), col("nid").as("pnid")), "qid")
+            .filter(col("nid") =!= col("pnid"))
+            .join(pairs.select(col("qid"), col("a").as("nid"),
+              col("b").as("pnid"), col("sm")), Seq("qid", "nid", "pnid"))
+            .select(col("qid"), col("nid"), col("cos"), col("rel"),
+              greatest(col("ms"), col("sm")).as("ms"))
+        }
+        pick(rem.df, 5)
         picks.reduce(_ unionByName _)
           .select(col("qid"), col("rnk"), col("nid"), col("cos"))
           .orderBy(col("qid"), col("rnk"))

@@ -178,9 +178,8 @@ object Similarity {
         .map { case (id, i) => (id, i.toLong) }.toSeq
       val seeds = subs.join(seedIds.toDF("vec_id", "cell"), "vec_id")
         .select(col("sub"), col("cell"), col("sv").as("cent"))
-      var cents = seeds.transform(Staging.pinned)
-      for (_ <- 1 to 2) {
-        cents = trainSubs.join(broadcast(toArrays(cents)), "sub")
+      val cents = Staging.iterate(Staging.pin(seeds), 2) { (cents, _) =>
+        trainSubs.join(broadcast(toArrays(cents)), "sub")
           .withColumn("best", argminBest(col("sv"), col("cb")))
           .select(col("sub"),
             col("best").getField("code").as("cell"),
@@ -191,8 +190,7 @@ object Similarity {
           .agg(transform(
             array_sort(collect_list(struct(col("pos"), col("m")))),
             p => p.getField("m")).as("cent"))
-          .transform(Staging.pinned)
-      }
+      }._1.df
       // `best` is multi-ref in the output projection (code + sqerr),
       // so it stays a staged attribute — the expression runs once per
       // (vec, sub) row (the r9 single-consumer CollapseProject trap

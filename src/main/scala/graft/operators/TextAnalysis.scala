@@ -293,10 +293,11 @@ object TextAnalysis {
     // shared with the WordPiece/unigram family (one derivation, one
     // oracle CTE text — a cap/regex/tie-break retune applies to all)
     val words = wpWordFreqs(s, dir)
-    var seqs = words.select(col("word"), col("cnt"),
+    val seqs0 = Staging.pin(words.select(col("word"), col("cnt"),
       concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-        .as("seq")).transform(Staging.pinned)
-    for (i <- 1 to rounds) {
+        .as("seq")))
+    Staging.iterate(seqs0, rounds) { (seqs, round) =>
+      val i = round.index
       val toks = seqs.select(col("cnt"),
         split(trim(col("seq")), " ").as("ts"))
       val pairs = toks
@@ -308,14 +309,12 @@ object TextAnalysis {
         .agg(sum(col("cnt")).as("n"))
       val best = pairs.orderBy(desc("n"), col("a"), col("b")).limit(1)
         .select(col("a").as(s"ma$i"), col("b").as(s"mb$i"))
-      seqs = seqs.crossJoin(broadcast(best))
+      seqs.crossJoin(broadcast(best))
         .withColumn("seq", expr(
           s"replace(seq, ' ' || ma$i || ' ' || mb$i || ' ', " +
             s"' ' || ma$i || mb$i || ' ')"))
         .drop(s"ma$i", s"mb$i")
-        .transform(Staging.pinned)
-    }
-    seqs
+    }._1.df
   }
 
   /** The shared DuckDB CTE chain for the BPE train (MATERIALIZED — see

@@ -12,8 +12,10 @@ import org.scalatest.time.SpanSugar._
 
 /** [[Staging.pin]], the one checkpoint: one job per pin, a leaf whose
   * statistics are the stored rows' exact count and bytes, the input's
-  * partitioning kept, bounded statistics in a self-joining loop, and
-  * blocks released by `free()`. */
+  * partitioning kept, and blocks released by `free()`. [[Staging.iterate]],
+  * the one round loop: bounded statistics in a self-joining loop, the
+  * convergence test and its ceiling, and every round's pins freed once
+  * the next state is stored. */
 class PinSpec extends SparkSpec {
 
   private def leafStats(df: DataFrame): Statistics =
@@ -70,26 +72,79 @@ class PinSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  /** Ids of the RDDs persisted in the session now. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("a 30-round self-joining loop keeps bounded statistics and finishes in seconds") {
     val t0 = System.nanoTime()
-    var t = Staging.pin(spark.range(0, 300, 1, 2)
+    val before = persisted
+    val init = Staging.pin(spark.range(0, 300, 1, 2)
       .select(col("id").as("a"), (col("id") % 10).as("b")))
-    for (_ <- 1 to 30) {
-      val x = t.df.as("x")
-      val y = t.df.select(col("a").as("a2"), col("b").as("b2"))
+    val (t, rounds) = Staging.iterate(init, 30) { (t, _) =>
+      val x = t.as("x")
+      val y = t.select(col("a").as("a2"), col("b").as("b2"))
       val joined = x.join(y, col("a") === col("a2"))
         .select(col("a"), least(col("b"), col("b2") + 1).as("b"))
       // the round's plan is sized from two exact leaves, never from a
       // compounded estimate
       assert(joined.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1L << 40))
-      val next = Staging.pin(joined)
-      t.free()
-      t = next
-      assert(t.rows == 300L)
-      assert(leafStats(t.df).sizeInBytes == BigInt(300L * 24))
+      assert(leafStats(t).sizeInBytes == BigInt(300L * 24))
+      joined
     }
+    assert(rounds == 30 && t.rows == 300L)
+    assert(leafStats(t.df).sizeInBytes == BigInt(300L * 24))
+    // every earlier state was freed: the last one is all the loop holds
+    assert(persisted -- before == Set(leafRddId(t.df)))
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec < 60.0, s"30 rounds took $sec s")
+    t.free()
+  }
+
+  /** 0..9 in two partitions, pinned. */
+  private def digits: Staging.Pinned = Staging.pin(spark.range(0, 10, 1, 2).toDF())
+
+  test("iterate stops once until holds, tested on init and after every round") {
+    val shrink = (t: DataFrame, _: Staging.Round) => t.where(col("id") > t.agg(min("id")).first().getLong(0))
+    val (t, rounds) = Staging.iterate(digits, 20, Staging.Until("shrink")(_.rows == 3L))(shrink)
+    assert(rounds == 7 && t.df.collect().map(_.getLong(0)).toSeq == Seq(7L, 8L, 9L))
+    t.free()
+    // a converged init runs no round and comes back as the state
+    val init = digits
+    val (same, none) = Staging.iterate(init, 20, Staging.Until("shrink")(_.rows == 10L))(shrink)
+    assert(none == 0 && (same eq init))
+    same.free()
+  }
+
+  test("iterate throws with the loop's name when the ceiling is reached unconverged") {
+    val before = persisted
+    val e = intercept[IllegalStateException] {
+      Staging.iterate(digits, 3, Staging.Until("the spinning loop")(_ => false))((t, _) => t)
+    }
+    assert(e.getMessage.contains("the spinning loop") && e.getMessage.contains("3 rounds"))
+    // an unpinned init is neither tested nor freed: the first round runs
+    var tested = 0
+    val (t, rounds) = Staging.iterate(spark.range(0, 10, 1, 2).toDF(), 3,
+      Staging.Until("from a frame") { _ => tested += 1; true })((t, _) => t)
+    assert(rounds == 1 && tested == 1 && t.rows == 10L)
+    t.free()
+    // the loop that threw freed every state it stored
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("a round.pin is freed once the next state is stored, not before") {
+    val mine = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val (t, rounds) = Staging.iterate(digits, 3) { (t, round) =>
+      // the earlier rounds' pins are gone when the next round starts
+      assert((persisted & mine.toSet).isEmpty)
+      val p = round.pin(t.select((col("id") + round.index).as("id")))
+      mine += leafRddId(p.df)
+      assert(persisted.contains(mine.last))
+      // the next state reads only the round pin, so its own pin job
+      // fails if that pin is freed before the state is stored
+      p.df
+    }
+    assert(rounds == 3 && t.df.agg(sum("id")).first().getLong(0) == 45L + 10 * 6)
+    assert((persisted & mine.toSet).isEmpty)
     t.free()
   }
 

@@ -27,7 +27,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * through `Tables.read`, except the few reads named with their reason
   * in `inferringReads`. A sliding word n-gram under `operators/` is
   * `WordNgrams` and a tokenizer is `TextFns.tokens`, except the few
-  * named in `handWindows`. */
+  * named in `handWindows`. A driver-side loop under `operators/` or
+  * `streaming/` that cuts lineage per round is a [[Staging.iterate]],
+  * never a hand-written `for` or `while`. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -136,24 +138,61 @@ class StructureSpec extends AnyFunSuite {
     "Reshape.scala" -> (1, "q_nested_roundtrip's read-back of the dir " +
       "it rewrites per call is the round trip under test"))
 
-  /** Matches of `re` in the code of the .scala files under `dirs`
-    * (comment lines blanked, so an offset keeps its line number), as
-    * `path:line` locations per file name. */
-  private def codeHits(re: Regex, dirs: String*): Map[String, Seq[String]] =
+  /** The code of each .scala file under `dirs`, comment lines blanked
+    * so an offset keeps its line number. */
+  private def code(dirs: Seq[String]): Seq[(Path, String)] =
     dirs.flatMap { d =>
       val walk = Files.walk(main.resolve(d))
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    }.flatMap { p =>
-      val code = Files.readAllLines(p).asScala.map { l =>
+    }.map { p =>
+      p -> Files.readAllLines(p).asScala.map { l =>
         val t = l.trim
         if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
       }.mkString("\n")
-      re.findAllMatchIn(code).map { m =>
-        (p.getFileName.toString,
-          s"${main.relativize(p)}:${code.take(m.start).count(_ == '\n') + 1}")
-      }
+    }
+
+  /** The offsets `starts` finds in each file's code under `dirs`, as
+    * `path:line` locations per file name. */
+  private def located(dirs: Seq[String])(starts: String => Iterator[Int]) =
+    code(dirs).flatMap { case (p, c) =>
+      starts(c).map(at => (p.getFileName.toString,
+        s"${main.relativize(p)}:${c.take(at).count(_ == '\n') + 1}"))
     }.groupBy(_._1).map { case (f, hs) => f -> hs.map(_._2) }
+
+  /** Matches of `re` in the code under `dirs`, as `path:line` locations
+    * per file name. */
+  private def codeHits(re: Regex, dirs: String*): Map[String, Seq[String]] =
+    located(dirs)(c => re.findAllMatchIn(c).map(_.start))
+
+  /** Offset of the bracket closing the one at `open`. */
+  private def closing(c: String, open: Int): Int = {
+    val (o, x) = (c(open), if (c(open) == '(') ')' else '}')
+    var (i, depth) = (open, 0)
+    do {
+      if (c(i) == o) depth += 1 else if (c(i) == x) depth -= 1
+      i += 1
+    } while (depth > 0)
+    i - 1
+  }
+
+  /** The `for (` and `while (` loops under `dirs` whose body (the braced
+    * block after the header, else the rest of the header's line)
+    * matches `re`, as the loops' `path:line` locations per file name. */
+  private def loopHits(re: Regex, dirs: String*): Map[String, Seq[String]] =
+    located(dirs) { c =>
+      """\b(?:for|while) \(""".r.findAllMatchIn(c).map(_.start).filter { at =>
+        val header = closing(c, c.indexOf('(', at))
+        val from = c.indexWhere(!_.isWhitespace, header + 1)
+        val body =
+          if (from >= 0 && c(from) == '{') c.substring(from, closing(c, from))
+          else c.substring(header + 1, c.indexOf('\n', header + 1) match {
+            case -1 => c.length
+            case eol => eol
+          })
+        re.findFirstIn(body).nonEmpty
+      }
+    }
 
   /** Fails unless every file holds exactly its allowed number of
     * `hits` (none where `allowed` names no reason). */
@@ -195,6 +234,15 @@ class StructureSpec extends AnyFunSuite {
         """transform\(sequence\(.*size\((?:col\(")?ts\b|(?<!\w)split\(lower\(""").r,
         "graft/operators"),
       handWindows, "hand-written word windows or tokenizers")
+  }
+
+  test("no for or while loop under operators/ or streaming/ pins per round: loops go through Staging.iterate") {
+    assertAllowed(
+      loopHits("""Staging\.(?:pin\(|pinned\b|cut\b)""".r,
+        "graft/operators", "graft/streaming"),
+      Map("Graph.scala" -> (1, "q_graph_pagerank's per-round Staging.cut " +
+        "runs no job of its own; a pin per round would add five")),
+      "loops that cut lineage per round")
   }
 
   test("operators read nothing from the environment") {
