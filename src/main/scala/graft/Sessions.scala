@@ -167,6 +167,18 @@ object Sessions {
       case (k, v) => spark.conf.set(k, v)
     }
 
+  /** Runs `body` with each of `confs` set on the session. Afterwards
+    * each key gets back the value it had, or is unset if it had none,
+    * so a query's conf never leaks into the next query on a shared
+    * session. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val current = spark.conf.getAll
+    val saved = confs.map { case (k, _) => k -> current.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Idempotent per-session setup that also works on sessions built
     * OUTSIDE this library (e.g. a test harness's own SparkSession):
     * runtime-settable configs, native function registration, and the

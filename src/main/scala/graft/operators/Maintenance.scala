@@ -36,6 +36,19 @@ object Maintenance {
     * the switch, pass `tableStatsPlan(exactMax =)`. */
   val NdvExactMaxN: Long = 100000L
 
+  /** The user hash-bucket of the purge queries' lake: one of 16. */
+  private def purgeBucket(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    pmod(xxhash64(c, lit(7L)), lit(16L))
+
+  /** The lake q_purge_rewrite and q_purge_dv purge: the events table
+    * partitioned by [[purgeBucket]] of its user (`ub=` dirs). */
+  private def purgeLanding(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.Staging.cached("purge_landing", dir, rev = 1) { tgt =>
+      Tables.events(s, dir)
+        .withColumn("ub", purgeBucket(col("user_id")))
+        .write.mode("overwrite").partitionBy("ub").parquet(tgt)
+    }
+
   /** q_table_stats body — see the QueryDef comment. `exactMax` is the
     * NDV switch, parameterized so the spec can force the approx path
     * at fixture scale and pin its plan shape. */
@@ -400,7 +413,7 @@ object Maintenance {
     // a table format (Delta/Iceberg) runs on delete: at 100 TB the
     // deletion list is thousands of users but the rewrite touches a
     // bounded bucket subset, not the lake. The affected-bucket list is
-    // manifest-scale (≤ nBuckets rows), so computing it driver-side is
+    // manifest-scale (≤ 16 rows), so computing it driver-side is
     // commit planning, not data-plane work; the rewrite itself is a
     // distributed broadcast anti-join over just the affected buckets
     // (partition-pruned scan). Oracle: the purged copy must equal the
@@ -408,18 +421,11 @@ object Maintenance {
     QueryDef(
       "q_purge_rewrite",
       (s, dir) => {
-        val nBuckets = 16
-        def bucket(c: org.apache.spark.sql.Column) =
-          pmod(xxhash64(c, lit(7L)), lit(nBuckets.toLong))
-        val landing = graft.Staging.cached("purge_landing", dir, rev = 1) { tgt =>
-          Tables.events(s, dir)
-            .withColumn("ub", bucket(col("user_id")))
-            .write.mode("overwrite").partitionBy("ub").parquet(tgt)
-        }
+        val landing = purgeLanding(s, dir)
         val out = graft.Staging.dir("q_purge_rewrite")
         val tombstones = Tables.events(s, dir).select(col("user_id"))
           .filter(col("user_id") % 7 === 3).distinct()
-        val affected = tombstones.select(bucket(col("user_id")).as("ub"))
+        val affected = tombstones.select(purgeBucket(col("user_id")).as("ub"))
           .distinct().collect().map(_.getLong(0)).toSet
         // pass through the untouched partition dirs at file level
         import java.nio.file.{Files, Paths}
@@ -471,14 +477,7 @@ object Maintenance {
     QueryDef(
       "q_purge_dv",
       (s, dir) => {
-        val nBuckets = 16
-        def bucket(c: org.apache.spark.sql.Column) =
-          pmod(xxhash64(c, lit(7L)), lit(nBuckets.toLong))
-        val landing = graft.Staging.cached("purge_landing", dir, rev = 1) { tgt =>
-          Tables.events(s, dir)
-            .withColumn("ub", bucket(col("user_id")))
-            .write.mode("overwrite").partitionBy("ub").parquet(tgt)
-        }
+        val landing = purgeLanding(s, dir)
         // build the vectors: one sidecar row per file that contains a
         // tombstoned row — positions sorted so the apply-side probe
         // (and any bitmap encoding of it) is deterministic

@@ -317,17 +317,15 @@ object TierA {
           // the data's actual span so the query never hits a
           // data-dependent cliff. The limit is read when the plan
           // EXECUTES, so force execution (localCheckpoint — the spine is
-          // months-of-span rows, tiny) and restore the session value in
-          // finally: a shared long-lived session must not silently keep
-          // the raised ceiling for every later query.
+          // months-of-span rows, tiny) inside Sessions.withConfs, which
+          // restores the session value: a shared long-lived session must
+          // not silently keep the raised ceiling for every later query.
           val span = java.time.temporal.ChronoUnit.MONTHS.between(
             lo.toLocalDate.withDayOfMonth(1), hi.toLocalDate.withDayOfMonth(1)
           ).toInt + 1
-          val lim = math.max(120, span + 16)
           val key = "spark.sql.cteRecursionLevelLimit"
-          val saved = s.conf.get(key, "100")
-          if (saved.toInt < lim) s.conf.set(key, lim.toString)
-          try {
+          val lim = math.max(math.max(120, span + 16), s.conf.get(key, "100").toInt)
+          graft.Sessions.withConfs(s, key -> lim.toString) {
             s.sql(
               s"""WITH RECURSIVE months(m) AS (
                  |  SELECT CAST(date_trunc('month', DATE'$lo') AS DATE)
@@ -340,7 +338,7 @@ object TierA {
                  |  ON CAST(date_trunc('month', o.o_orderdate) AS DATE) = m
                  |GROUP BY m ORDER BY m""".stripMargin)
               .transform(Staging.pinned)
-          } finally s.conf.set(key, saved)
+          }
         }
       },
       Some(

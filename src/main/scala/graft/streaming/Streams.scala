@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Paths
+
+import org.apache.spark.sql.{DataFrame, Dataset, RelationalGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StructType}
-import graft.{QueryDef, Staging}
-import graft.operators.{Maintenance, TxnLog}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
+import graft.{QueryDef, Sessions, Staging}
+import graft.operators.{Dedup, Maintenance, TxnLog}
 import graft.sources.Tables
 
 /** Structured Streaming surface (SURVEY §2.B B36-B41).
@@ -19,6 +21,18 @@ import graft.sources.Tables
   * (`app.py:131-134`). Watermarks/session windows/stateful dedup are
   * capabilities the reference lacks but its substrate advertises
   * (SURVEY §2 B38-B40) — batch-equivalence + StreamsSpec cover those.
+  *
+  * Every feed is a [[Landing]], defined once and staged once per source
+  * dir; the events feed is one wide parquet projection that each query
+  * reads with its own narrower schema. Every AvailableNow query runs
+  * through one harness, [[run]]: it names the sink and checkpoint
+  * uniquely, holds the query's session confs (state partitions, state
+  * store provider) only while the query runs, waits for it to end and
+  * then deletes its checkpoint. Queries reach it as [[drain]] (memory
+  * sink) or [[eachBatch]] (foreachBatch). q_stream_cron alone starts
+  * its own query: the cron cadence (`ProcessingTime`, a durable
+  * partitioned JSON sink, `processAllAvailable` then `stop`) is its
+  * operator under test.
   *
   * Scale: streaming aggs shuffle once per micro-batch on the group key;
   * state (windows, dedup keys) is partitioned by key in the state store,
@@ -41,100 +55,115 @@ object Streams {
     * Test observability only; the query never reads it. */
   val lastTxnRoot = new java.util.concurrent.atomic.AtomicReference[String]()
 
-  /** Stage `df` as JSON files and open them as a file-source stream —
-    * the test-data stand-in for the reference's S3 landing bucket. The
-    * staged frames are pure functions of (query, source dir), so the
-    * write happens once per key and every later run (bench second pass,
-    * future JVMs) re-reads the cached files — each stream query still
-    * reprocesses from scratch (fresh sink + temp checkpoint per call);
-    * only the producer side of the harness is cached. */
-  def stageAndStream(s: SparkSession, df: DataFrame, name: String,
-                     schema: StructType, dir: String,
-                     options: Map[String, String] = Map.empty): DataFrame = {
-    val path = graft.Staging.cached(name, dir, rev = 1) { tgt =>
-      df.write.mode("overwrite").json(tgt) }
-    s.readStream.schema(schema).options(options).json(path)
+  /** A staged landing zone — the test-data stand-in for the reference's
+    * S3 landing bucket. `stage(s, dir, target)` writes it; its contents
+    * are a pure function of the source dir, so the write happens once
+    * per (name, dir, rev) and every later run (bench second pass, future
+    * JVMs) re-reads the cached files. Each stream query still
+    * reprocesses from scratch (fresh sink + checkpoint per call); only
+    * the producer side is cached. Parquet is the landing format of
+    * every query whose operator under test is state/windows/watermarks,
+    * not the landing format — a columnar landing zone is also what a
+    * 100 TB stream reads, since every micro-batch re-parses its input.
+    * The JSON landings are the reference's drop (q_stream_ingest), the
+    * cron's producer drops and the interval joins' feed. */
+  private final class Landing(name: String, format: String, rev: Int,
+                              stage: (SparkSession, String, String) => Unit) {
+    /** The landing zone of `dir`, staged if it is not yet, opened as a
+      * file-source stream. */
+    def stream(s: SparkSession, dir: String, schema: StructType,
+               options: (String, String)*): DataFrame =
+      s.readStream.schema(schema).options(options.toMap).format(format)
+        .load(Staging.cached(name, dir, rev)(stage(s, dir, _)))
   }
 
-  /** [[stageAndStream]] with a parquet landing zone — for stream
-    * queries whose operator under test is state/windows/watermarks, not
-    * the landing format (those keep JSON: q_stream_ingest = the
-    * reference's JSON drop, q_stream_cron = the partitioned JSON sink).
-    * A columnar landing zone is also what a 100 TB stream actually
-    * reads — every micro-batch re-parses its input, and text parse is
-    * the first thing a production pipeline moves off the hot path. */
-  def stageAndStreamParquet(s: SparkSession, df: DataFrame, name: String,
-                            schema: StructType, dir: String,
-                            options: Map[String, String] = Map.empty,
-                            rev: Int = 1): DataFrame = {
-    val path = graft.Staging.cached(s"${name}_pq", dir, rev) { tgt =>
-      df.write.mode("overwrite").parquet(tgt) }
-    s.readStream.schema(schema).options(options).parquet(path)
+  /** The landing zone `name` holding `frame`'s rows, written once in
+    * `format`. */
+  private def landing(name: String, format: String)(
+      frame: (SparkSession, String) => DataFrame): Landing =
+    new Landing(name, format, rev = 1, (s, dir, tgt) =>
+      frame(s, dir).write.mode("overwrite").format(format).save(tgt))
+
+  /** The events table as the feeds carry it: `cols`, then the event time
+    * as epoch µs `ts_us`. */
+  private def eventRows(s: SparkSession, dir: String,
+                        cols: Seq[String] = Seq("event_id", "event_type", "value")): DataFrame =
+    Tables.events(s, dir).select(cols.map(col) :+ unix_micros(col("ts")).as("ts_us"): _*)
+
+  private val eventsSchema =
+    StructType.fromDDL("event_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
+
+  /** The columns of [[eventsFeedSchema]] ahead of `ts_us`. */
+  private val userEventCols = Seq("event_id", "user_id", "event_type", "value")
+
+  private val eventsFeedSchema =
+    StructType.fromDDL(
+      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
+
+  /** The one staged events feed (one row per event, [[eventsFeedSchema]])
+    * read by every stream query over plain events: window, quantile,
+    * rocksdb, sliding, state, jdbc and enrich. Each reads it with its
+    * own narrower schema; parquet reads only the columns a query
+    * uses. */
+  private val eventsFeed = landing("q_stream_events", "parquet") { (s, dir) =>
+    eventRows(s, dir, userEventCols) }
+
+  /** The reference's JSON drop, landed as it arrives. */
+  private val ingestDrop = landing("q_stream_ingest", "json")(eventRows(_, _))
+
+  /** Every event delivered twice: the at-least-once redelivery both
+    * dedup queries must suppress. */
+  private val doubledFeed = landing("q_stream_dedup_pq", "parquet") { (s, dir) =>
+    val once = eventRows(s, dir)
+    once.unionAll(once)
   }
+
+  /** Exactly 3 time-ranged landing files → exactly 3 micro-batches under
+    * maxFilesPerTrigger=1 (the deterministic batch spine q_stream_txn_sink's
+    * staged conflict story needs). */
+  private val txnFeed = landing("q_stream_txn_pq", "parquet") { (s, dir) =>
+    eventRows(s, dir).repartitionByRange(3, col("ts_us")) }
+
+  /** Five staged "minutely" producer drops, the cron's input. */
+  private val cronDrops = landing("q_stream_cron_in", "json") { (s, dir) =>
+    eventRows(s, dir).repartition(5) }
 
   /** One staged parquet landing zone of the documents table, shared by
     * every stream query whose operator under test is sketch/agg state
     * over docs (q_stream_topk, q_stream_hll) — one corpus copy, N
     * stream consumers (each still reprocesses from scratch with its
     * own checkpoint). */
-  private def streamedDocs(s: SparkSession, dir: String): DataFrame =
-    stageAndStreamParquet(s,
-      Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text")),
-      "q_stream_docs",
-      StructType.fromDDL("doc_id LONG, source STRING, text STRING"), dir)
+  private val docsFeed = landing("q_stream_docs_pq", "parquet") { (s, dir) =>
+    Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text")) }
 
-  /** Run `body` (which must START its streaming query inside) with
-    * streaming state partitions sized to STATE VOLUME instead of the
-    * session's scan-width default: every micro-batch inits/commits one
-    * state store per shuffle partition per stateful operator, so
-    * near-empty state partitions are pure fixed overhead. The count is
-    * pinned into the query's (fresh) checkpoint at start; results are
-    * partition-count-invariant. On a 100 TB/day stream this is the
-    * same knob pointed the other way — sized UP to keep per-partition
-    * state inside the state-store budget. */
-  def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private val docsSchema = StructType.fromDDL("doc_id LONG, source STRING, text STRING")
+
+  /** The docs q_stream_dedup_index screens as arrivals: every fifth. */
+  private def isBatchDoc = pmod(col("doc_id"), lit(5L)) === 0L
+
+  /** The arriving docs in three doc-id-ranged files, one micro-batch
+    * each under maxFilesPerTrigger=1. */
+  private val arrivingDocs = landing("q_stream_dedup_idx", "parquet") { (s, dir) =>
+    Tables.documents(s, dir).filter(isBatchDoc)
+      .select(col("doc_id"), col("text"))
+      .repartitionByRange(3, col("doc_id"))
   }
 
-  /** Drain a streaming query into a memory sink and return its
-    * contents (AvailableNow ⇒ terminates after the backlog). The sink
-    * name is uniquified per call so re-running a query inside one JVM
-    * (bench warm-up + measure) never races a previous sink; the plan is
-    * resolved and the name unregistered so repeated invocations don't
-    * pin every past sink in the catalog for the session's lifetime. */
-  private def drain(s: SparkSession, df: DataFrame, sinkName: String,
-                    mode: String): DataFrame = {
-    val unique = s"${sinkName}_${sinkSeq.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory").queryName(unique)
-      // a memory sink is non-durable, so a disk-fsync'd checkpoint
-      // protects nothing that outlives the query — keep the offset/
-      // commit/state logs on tmpfs (per-micro-batch fsyncs become
-      // memcpys). Durable sinks (q_stream_cron) keep real checkpoints.
-      .option("checkpointLocation", graft.Staging.fastDir(unique))
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = s.table(unique)
-    s.catalog.dropTempView(unique)
-    out
+  /** The purchase and click events of the interval joins, in one
+    * event-time-sorted file: arrival order is monotonic in event time,
+    * the same shape a log-structured landing zone delivers — so a
+    * REALISTIC watermark is exact, not just a
+    * drain-everything-before-anything-is-late accident. Only the two
+    * joined types can contribute — staging the rest would just be dead
+    * IO through both stream reads. */
+  private val joinFeed = landing("q_stream_join", "json") { (s, dir) =>
+    eventRows(s, dir, Seq("event_id", "user_id", "event_type"))
+      .filter(col("event_type").isin("purchase", "click"))
+      .repartition(1).sortWithinPartitions(col("ts_us"))
   }
 
-  /** Complete-mode drain (streaming aggregations). */
-  def drainComplete(s: SparkSession, agg: DataFrame, sinkName: String): DataFrame =
-    drain(s, agg, sinkName, "complete")
-
-  /** Append-mode drain (joins, watermarked appends). */
-  def drainAppend(s: SparkSession, df: DataFrame, sinkName: String): DataFrame =
-    drain(s, df, sinkName, "append")
-
-  /** Update-mode drain (mapGroupsWithState et al.) — one row per (key,
-    * micro-batch-with-updates); callers reduce to the final row per key. */
-  def drainUpdate(s: SparkSession, df: DataFrame, sinkName: String): DataFrame =
-    drain(s, df, sinkName, "update")
+  private val joinSchema =
+    StructType.fromDDL("event_id LONG, user_id LONG, event_type STRING, ts_us LONG")
 
   /** Typed row for the custom-state query. */
   final case class UserEvent(event_id: Long, user_id: Long, ts_us: Long)
@@ -162,11 +191,9 @@ object Streams {
     * staging reproduces that contract explicitly by stamping strictly
     * increasing mtimes in range order. Range slice k = part-fileNNNN k
     * (range partition i is written by task i). */
-  private def sessionFeedPath(s: SparkSession, dir: String): String =
-    graft.Staging.cached("q_stream_session_pq", dir, rev = 3) { tgt =>
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("value"),
-          unix_micros(col("ts")).as("ts_us"))
+  private val sessionFeed = new Landing("q_stream_session_pq", "parquet", rev = 3,
+    stage = (s, dir, tgt) => {
+      eventRows(s, dir, Seq("event_id", "user_id", "value"))
         .repartitionByRange(3, col("ts_us"))
         .write.mode("overwrite").parquet(tgt)
       val base = System.currentTimeMillis() - 3600L * 1000
@@ -174,7 +201,177 @@ object Streams {
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
         .zipWithIndex
         .foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
+    })
+
+  /** q_stream_late_drop's feed: three in-order time slices, then the
+    * held-back late slice, one file each with increasing mtimes (the
+    * query's comment has the construction). */
+  private val lateFeed = new Landing("q_stream_late", "parquet", rev = 2,
+    stage = (s, dir, tgt) => {
+      val src = eventRows(s, dir)
+      val b = src.agg(min(col("ts_us")), max(col("ts_us"))).head()
+      val (lo, mx) = (b.getLong(0), b.getLong(1))
+      val b1 = lo + (mx - lo) / 3
+      val b2 = lo + 2L * ((mx - lo) / 3)
+      val draw = conv(substring(
+        md5(concat(lit("late:"), col("event_id").cast("string"))), 1, 4),
+        16, 10).cast("long") % 10L === 0L
+      val held = draw && col("ts_us") < b1 - 1200000000L
+      val main = src.filter(!held)
+      def slice(name: String, df: DataFrame, order: Int, base: Long): Unit = {
+        val tmp = s"$tgt/_build_$name"
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val d = new java.io.File(tmp)
+        val part = d.listFiles().filter(_.getName.startsWith("part-")).head
+        val out = new java.io.File(tgt, s"slice-$order-$name.parquet")
+        require(part.renameTo(out), s"stage $name")
+        d.listFiles().foreach(_.delete()); d.delete()
+        out.setLastModified(base + order * 2000L)
+      }
+      val base = System.currentTimeMillis() - 3600L * 1000
+      slice("t1", main.filter(col("ts_us") < b1), 0, base)
+      slice("t2", main.filter(col("ts_us") >= b1 && col("ts_us") < b2), 1, base)
+      slice("t3", main.filter(col("ts_us") >= b2), 2, base)
+      slice("late", src.filter(held), 3, base)
+    })
+
+  /** The one run of an AvailableNow stream query: `df` written through
+    * `sink` under a unique query name and checkpoint (re-running a query
+    * inside one JVM — bench warm-up + measure — never races a previous
+    * run), with `confs` set on the session while the query starts and
+    * runs and restored once it has ended. Returns the query name.
+    *
+    * A non-`durable` checkpoint (a memory sink's: the sink itself is
+    * non-durable, so an fsync'd checkpoint protects nothing that
+    * outlives the query) lives on tmpfs, where per-micro-batch
+    * offset/commit/state fsyncs become memcpys. Either kind is deleted
+    * once the query has ended without error — Spark's own rule for a
+    * temporary checkpoint — so a run leaves only the outputs its
+    * returned frame reads. */
+  private def run(df: DataFrame, name: String, mode: String,
+                  confs: Seq[(String, String)], durable: Boolean)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): String = {
+    val unique = s"${name}_${sinkSeq.incrementAndGet()}"
+    val checkpoint =
+      if (durable) Staging.dir(s"${unique}_ck") else Staging.fastDir(unique)
+    Sessions.withConfs(df.sparkSession, confs: _*) {
+      sink(df.writeStream.queryName(unique)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
     }
+    Staging.deleteTree(Paths.get(checkpoint))
+    unique
+  }
+
+  /** The session conf that sizes a stream's state partitions. Every
+    * micro-batch inits/commits one state store per shuffle partition
+    * per stateful operator, so near-empty state partitions are pure
+    * fixed overhead: a drain sizes them to STATE VOLUME (8) instead of
+    * the session's scan-width default. The count is pinned into the
+    * query's fresh checkpoint at start; results are
+    * partition-count-invariant. On a 100 TB/day stream this is the same
+    * knob pointed the other way — sized UP to keep per-partition state
+    * inside the state-store budget. */
+  private def statePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
+
+  /** Runs `df` into a memory sink (AvailableNow ⇒ it ends after the
+    * backlog) with 8 state partitions plus `confs`, and returns the
+    * sink's contents. `mode` is the output mode: complete for streaming
+    * aggregations, append for joins and watermarked appends, update for
+    * mapGroupsWithState et al. (one row per key and micro-batch with
+    * updates; callers reduce to the final row per key). The sink's view
+    * is resolved and dropped, so repeated runs don't pin every past sink
+    * in the catalog for the session's lifetime. */
+  def drain(df: DataFrame, mode: String, name: String,
+            confs: (String, String)*): DataFrame = {
+    val s = df.sparkSession
+    val sink = run(df, name, mode, statePartitions(8) +: confs, durable = false)(
+      _.format("memory"))
+    val out = s.table(sink)
+    s.catalog.dropTempView(sink)
+    out
+  }
+
+  /** Runs `df` into `f`, called once per micro-batch with the batch and
+    * its id (full batch semantics inside the sink), with `confs` set. */
+  private def eachBatch(df: DataFrame, name: String, mode: String,
+                        confs: (String, String)*)(f: (DataFrame, Long) => Unit): Unit =
+    run(df, name, mode, confs, durable = true)(
+      _.foreachBatch((batch: Dataset[Row], batchId: Long) => f(batch, batchId)))
+
+  /** The rows and exact cents of each group (per-row cents, summed — the
+    * money-sum rule). */
+  private def rollup(g: RelationalGroupedDataset, n: String = "n",
+                     cents: String = "sum_cents"): DataFrame =
+    g.agg(count(lit(1)).as(n), sum(round(col("value") * 100).cast("long")).as(cents))
+
+  /** The events' per-type [[rollup]], the batch answer of every stream
+    * that must deliver each event exactly once. */
+  private val PerTypeOracle =
+    """SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
+      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** The batch answer of the per-type [[rollup]] over 6-hour tumbling
+    * event-time buckets. */
+  private val SixHourOracle =
+    """SELECT CAST(epoch(time_bucket(INTERVAL '6 hours', ts)) AS BIGINT) AS bucket_s,
+      |       event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** The per-type [[rollup]] of the events feed over event-time windows
+    * `width` long starting every `slide`, drained as `name` with
+    * `confs`, one row per (window start in epoch s, type). */
+  private def windowRollup(s: SparkSession, dir: String, name: String,
+                           width: String, slide: String,
+                           confs: (String, String)*): DataFrame = {
+    val stream = eventsFeed.stream(s, dir, eventsSchema)
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+    drain(rollup(stream.groupBy(window(col("ts"), width, slide), col("event_type"))),
+      "complete", name, confs: _*)
+      .select(col("window.start").cast("long").as("bucket_s"),
+        col("event_type"), col("n"), col("sum_cents"))
+      .orderBy(col("bucket_s"), col("event_type"))
+  }
+
+  /** The [[rollup]] of each user's 30-minute-gap sessions in
+    * `stream`, drained as `name` in `mode`, one row per (user, session
+    * start in epoch µs). */
+  private def sessionRollup(stream: DataFrame, mode: String, name: String): DataFrame =
+    drain(rollup(stream.groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))),
+      mode, name)
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("session_start_us"),
+        col("n"), col("sum_cents"))
+      .orderBy(col("user_id"), col("session_start_us"))
+
+  /** One side of the purchase/click interval joins: the join feed's
+    * `tpe` events as (`user`, `id`, `ts`). 4 h = join interval (2 h) +
+    * 2 h disorder slack — the watermark a production copy of these
+    * queries would declare. With monotonic arrival nothing is ever late,
+    * and stream-stream join state is bounded at watermark + interval
+    * (~6 h of rows per user), which survives 100 TB/day; real late-drop
+    * semantics are pinned by StreamsSpec with controlled multi-batch
+    * input. */
+  private def joinSide(s: SparkSession, dir: String, tpe: String,
+                       user: String, id: String, ts: String): DataFrame =
+    joinFeed.stream(s, dir, joinSchema)
+      .filter(col("event_type") === tpe)
+      .select(col("user_id").as(user), col("event_id").as(id),
+        timestamp_micros(col("ts_us")).as(ts))
+      .withWatermark(ts, "4 hours")
+
+  /** Purchases joined (`joinType`) to same-user clicks up to 2 hours
+    * earlier, as (purchase_id, click_id, user_id). */
+  private def purchaseClicks(s: SparkSession, dir: String,
+                             joinType: String): DataFrame =
+    joinSide(s, dir, "purchase", "p_user", "purchase_id", "p_ts")
+      .join(joinSide(s, dir, "click", "c_user", "click_id", "c_ts"),
+        expr("p_user = c_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 2 HOURS"),
+        joinType)
+      .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
 
   /** Idempotent warehouse-upsert kernel for one partition of an
     * update-mode aggregate batch: per key DELETE + INSERT of the
@@ -208,17 +405,6 @@ object Streams {
       } finally conn.close()
     }
 
-  private val eventsJsonSchema =
-    StructType.fromDDL("event_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
-
-  private val eventsUserJsonSchema =
-    StructType.fromDDL(
-      "event_id LONG, user_id LONG, event_type STRING, ts_us LONG")
-
-  private val eventsEnrichSchema =
-    StructType.fromDDL(
-      "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
-
   val defs: Seq[QueryDef] = Seq(
 
     // B36/A17 — file-arrival ingestion, end to end through a real
@@ -226,43 +412,19 @@ object Streams {
     // rows: exactly-once file-source semantics make them identical.
     QueryDef(
       "q_stream_ingest",
-      (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStream(s, src, "q_stream_ingest", eventsJsonSchema, dir)
-        val agg = stream.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(drainComplete(s, agg, "q_stream_ingest_sink"))
-          .orderBy(col("event_type"))
-      },
-      Some(
-        """SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+      (s, dir) =>
+        drain(rollup(ingestDrop.stream(s, dir, eventsSchema).groupBy(col("event_type"))),
+          "complete", "q_stream_ingest_sink")
+          .orderBy(col("event_type")),
+      Some(PerTypeOracle)
     ),
 
     // B37 — tumbling event-time window aggregation, run as a real
     // streaming query; oracle via DuckDB time_bucket.
     QueryDef(
       "q_stream_window",
-      (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_window", eventsJsonSchema, dir)
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-        val agg = stream
-          .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(drainComplete(s, agg, "q_stream_window_sink"))
-          .select(col("window.start").cast("long").as("bucket_s"),
-            col("event_type"), col("n"), col("sum_cents"))
-          .orderBy(col("bucket_s"), col("event_type"))
-      },
-      Some(
-        """SELECT CAST(epoch(time_bucket(INTERVAL '6 hours', ts)) AS BIGINT) AS bucket_s,
-          |       event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+      (s, dir) => windowRollup(s, dir, "q_stream_window_sink", "6 hours", "6 hours"),
+      Some(SixHourOracle)
     ),
 
     // B37/B16 — streaming MERGEABLE QUANTILE sketch: the percentile-
@@ -279,17 +441,11 @@ object Streams {
     QueryDef(
       "q_stream_quantile",
       (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_window",
-          eventsJsonSchema, dir)
-        val agg = stream
+        val agg = eventsFeed.stream(s, dir, eventsSchema)
           .groupBy(col("event_type"))
           .agg(graft.functions.KllFns.sketchAgg(col("value"), 200).as("sk"),
             count(lit(1)).as("n_rows"))
-        withStatePartitions(s, 8)(
-          drainComplete(s, agg, "q_stream_quantile_sink"))
+        drain(agg, "complete", "q_stream_quantile_sink")
           .select(col("event_type"),
             round(graft.functions.KllFns.quantile(col("sk"), 0.5), 2)
               .as("est_p50"),
@@ -319,11 +475,10 @@ object Streams {
     QueryDef(
       "q_stream_topk",
       (s, dir) => {
-        val tokens = streamedDocs(s, dir).select(col("source"),
+        val tokens = docsFeed.stream(s, dir, docsSchema).select(col("source"),
           explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
-        val merged = withStatePartitions(s, 8)(
-          drainComplete(s, graft.operators.Aggregates.topkAccumulate(tokens),
-            "q_stream_topk_sink"))
+        val merged = drain(graft.operators.Aggregates.topkAccumulate(tokens),
+          "complete", "q_stream_topk_sink")
         graft.operators.Aggregates.topkEstimate(merged)
           .orderBy(col("rnk"))
       },
@@ -348,11 +503,10 @@ object Streams {
     QueryDef(
       "q_stream_hll",
       (s, dir) => {
-        val merged = withStatePartitions(s, 8)(
-          drainComplete(s,
-            graft.operators.Aggregates.hllPerSource(
-              streamedDocs(s, dir).select(col("source"), col("doc_id"))),
-            "q_stream_hll_sink"))
+        val merged = drain(
+          graft.operators.Aggregates.hllPerSource(
+            docsFeed.stream(s, dir, docsSchema).select(col("source"), col("doc_id"))),
+          "complete", "q_stream_hll_sink")
         graft.operators.Aggregates.hllEstimate(merged)
       },
       None
@@ -381,69 +535,52 @@ object Streams {
     QueryDef(
       "q_stream_dedup_index",
       (s, dir) => {
-        val uniq = sinkSeq.incrementAndGet()
-        val outDir = graft.Staging.dir(s"stream_dedup_idx_out_$uniq")
-        val isBatchDoc = pmod(col("doc_id"), lit(5L)) === 0L
-        val path = graft.Staging.cached("q_stream_dedup_idx", dir, rev = 1) { tgt =>
-          Tables.documents(s, dir).filter(isBatchDoc)
-            .select(col("doc_id"), col("text"))
-            .repartitionByRange(3, col("doc_id"))
-            .write.mode("overwrite").parquet(tgt)
-        }
-        val idx = graft.operators.Dedup.shingleIndex(s, dir)
+        val outDir = Staging.dir(s"stream_dedup_idx_out_${sinkSeq.incrementAndGet()}")
+        val stream = arrivingDocs.stream(s, dir,
+          StructType.fromDDL("doc_id LONG, text STRING"), "maxFilesPerTrigger" -> "1")
+        val idx = Dedup.shingleIndex(s, dir)
         // the df-cap KEY SET computed directly from the index (one
         // aggregate) — re-deriving it as distinct(h) of the capped join
         // would reshuffle the whole per-doc index to reproduce it
-        val keep = idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 64).select(col("h"))
-          .transform(Staging.pinned) // the same df-64 rule the batch twin uses
-        val shAll = idx.join(keep, "h")
+        val keep = Staging.pin(idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
+          .filter(col("df") <= 64).select(col("h"))) // the same df-64 rule the batch twin uses
+        val shAll = idx.join(keep.df, "h")
         val sz = shAll.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val standing = shAll.filter(!isBatchDoc)
-          .select(col("doc_id").as("doc_a"), col("h"))
-          .transform(Staging.pinned) // joined by every micro-batch
-        val standingSz = sz.filter(!isBatchDoc)
-          .select(col("doc_id").as("doc_a"), col("n").as("na"))
-          .transform(Staging.pinned)
-        val stream = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", "1").parquet(path)
-        val q = stream.writeStream
-          .outputMode("append")
-          .option("checkpointLocation",
-            graft.Staging.dir(s"stream_dedup_idx_ck_$uniq"))
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              val bsh = batch.select(col("doc_id"),
-                  explode(graft.functions.ShingleHashes(col("text"), 3))
-                    .as("h"))
-                .dropDuplicates("doc_id", "h")
-                .join(keep, "h") // df-cap, same rule as the batch twin
-              val nb = bsh.groupBy(col("doc_id"))
-                .agg(count(lit(1)).as("nb"))
-                .select(col("doc_id").as("doc_b"), col("nb"))
-              // the screen itself is the SHARED pipeline (Dedup
-              // .screenReport) — the batch and streaming twins cannot
-              // drift on cap/threshold/report shape
-              graft.operators.Dedup.screenReport(
-                  batchSh = bsh.select(col("doc_id").as("doc_b"), col("h")),
-                  standing = standing, na = standingSz, nb = nb,
-                  batchDocs = batch.select(col("doc_id")))
-                // idempotent under batch REPLAY: each micro-batch
-                // overwrites its own batch-id-keyed directory, so a
-                // crash between sink commit and the streaming commit
-                // log re-running the batch rewrites the same files
-                // instead of appending duplicates (the q_stream_jdbc
-                // idempotent-sink discipline)
-                .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        val standing = Staging.pin(shAll.filter(!isBatchDoc)
+          .select(col("doc_id").as("doc_a"), col("h"))) // joined by every micro-batch
+        val standingSz = Staging.pin(sz.filter(!isBatchDoc)
+          .select(col("doc_id").as("doc_a"), col("n").as("na")))
+        // the pins serve the micro-batches only: freed once the stream
+        // has ended, as the returned frame reads the batch outputs
+        try eachBatch(stream, "q_stream_dedup_index", "append") { (batch, batchId) =>
+          val bsh = batch.select(col("doc_id"),
+              explode(graft.functions.ShingleHashes(col("text"), 3))
+                .as("h"))
+            .dropDuplicates("doc_id", "h")
+            .join(keep.df, "h") // df-cap, same rule as the batch twin
+          val nb = bsh.groupBy(col("doc_id"))
+            .agg(count(lit(1)).as("nb"))
+            .select(col("doc_id").as("doc_b"), col("nb"))
+          // the screen itself is the SHARED pipeline (Dedup
+          // .screenReport) — the batch and streaming twins cannot
+          // drift on cap/threshold/report shape
+          Dedup.screenReport(
+              batchSh = bsh.select(col("doc_id").as("doc_b"), col("h")),
+              standing = standing.df, na = standingSz.df, nb = nb,
+              batchDocs = batch.select(col("doc_id")))
+            // idempotent under batch REPLAY: each micro-batch
+            // overwrites its own batch-id-keyed directory, so a
+            // crash between sink commit and the streaming commit
+            // log re-running the batch rewrites the same files
+            // instead of appending duplicates (the q_stream_jdbc
+            // idempotent-sink discipline)
+            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+        } finally Seq(keep, standing, standingSz).foreach(_.free())
         s.read.option("recursiveFileLookup", "true").parquet(outDir)
           .orderBy(col("doc_id"))
       },
       // the batch twin's oracle VERBATIM — shared constant, cannot drift
-      Some(graft.operators.Dedup.IncrementalOracleSql)
+      Some(Dedup.IncrementalOracleSql)
     ),
 
     // B41 at the production state backend — the SAME tumbling-window
@@ -454,37 +591,14 @@ object Streams {
     // provider-invariant, which is exactly what the shared DuckDB
     // oracle proves (same SQL as q_stream_window); Streams2Spec
     // additionally proves the provider really engages (RocksDB
-    // state metrics in the operator progress). Conf is restored
-    // afterwards — the provider choice must not leak into the fleet.
+    // state metrics in the operator progress). The provider is set only
+    // while the query runs — the choice must not leak into the fleet.
     QueryDef(
       "q_stream_rocksdb",
-      (s, dir) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-        try {
-          val src = Tables.events(s, dir)
-            .select(col("event_id"), col("event_type"), col("value"),
-              unix_micros(col("ts")).as("ts_us"))
-          val stream = stageAndStreamParquet(s, src, "q_stream_window",
-            eventsJsonSchema, dir)
-            .withColumn("ts", timestamp_micros(col("ts_us")))
-          val agg = stream
-            .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-          withStatePartitions(s, 8)(
-            drainComplete(s, agg, "q_stream_rocksdb_sink"))
-            .select(col("window.start").cast("long").as("bucket_s"),
-              col("event_type"), col("n"), col("sum_cents"))
-            .orderBy(col("bucket_s"), col("event_type"))
-        } finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
-      },
-      Some(
-        """SELECT CAST(epoch(time_bucket(INTERVAL '6 hours', ts)) AS BIGINT) AS bucket_s,
-          |       event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+      (s, dir) => windowRollup(s, dir, "q_stream_rocksdb_sink", "6 hours", "6 hours",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      Some(SixHourOracle)
     ),
 
     // B37 — SLIDING event-time windows (6 h window, 3 h slide): each
@@ -495,21 +609,7 @@ object Streams {
     // within 6 h.
     QueryDef(
       "q_stream_sliding",
-      (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_sliding", eventsJsonSchema, dir)
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-        val agg = stream
-          .groupBy(window(col("ts"), "6 hours", "3 hours"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(
-          drainComplete(s, agg, "q_stream_sliding_sink"))
-          .select(col("window.start").cast("long").as("bucket_s"),
-            col("event_type"), col("n"), col("sum_cents"))
-          .orderBy(col("bucket_s"), col("event_type"))
-      },
+      (s, dir) => windowRollup(s, dir, "q_stream_sliding_sink", "6 hours", "3 hours"),
       Some(
         """WITH w AS (
           |  SELECT event_type, value,
@@ -531,22 +631,13 @@ object Streams {
     // watermarked variant).
     QueryDef(
       "q_stream_dedup",
-      (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val doubled = src.unionAll(src)
-        val stream = stageAndStreamParquet(s, doubled, "q_stream_dedup", eventsJsonSchema, dir)
-        val agg = stream
-          .dropDuplicates("event_id")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(drainComplete(s, agg, "q_stream_dedup_sink"))
-          .orderBy(col("event_type"))
-      },
-      Some(
-        """SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+      (s, dir) =>
+        drain(rollup(doubledFeed.stream(s, dir, eventsSchema)
+            .dropDuplicates("event_id")
+            .groupBy(col("event_type"))),
+          "complete", "q_stream_dedup_sink")
+          .orderBy(col("event_type")),
+      Some(PerTypeOracle)
     ),
 
     // B39 — watermark LATE-DROP as a declared, oracled query (the
@@ -571,45 +662,11 @@ object Streams {
     QueryDef(
       "q_stream_late_drop",
       (s, dir) => {
-        val path = graft.Staging.cached("q_stream_late", dir, rev = 2) { tgt =>
-          val src = Tables.events(s, dir)
-            .select(col("event_id"), col("event_type"), col("value"),
-              unix_micros(col("ts")).as("ts_us"))
-          val b = src.agg(min(col("ts_us")), max(col("ts_us"))).head()
-          val (lo, mx) = (b.getLong(0), b.getLong(1))
-          val b1 = lo + (mx - lo) / 3
-          val b2 = lo + 2L * ((mx - lo) / 3)
-          val draw = conv(substring(
-            md5(concat(lit("late:"), col("event_id").cast("string"))), 1, 4),
-            16, 10).cast("long") % 10L === 0L
-          val held = draw && col("ts_us") < b1 - 1200000000L
-          val main = src.filter(!held)
-          def slice(name: String, df: org.apache.spark.sql.DataFrame,
-                    order: Int, base: Long): Unit = {
-            val tmp = s"$tgt/_build_$name"
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            val d = new java.io.File(tmp)
-            val part = d.listFiles().filter(_.getName.startsWith("part-")).head
-            val out = new java.io.File(tgt, s"slice-$order-$name.parquet")
-            require(part.renameTo(out), s"stage $name")
-            d.listFiles().foreach(_.delete()); d.delete()
-            out.setLastModified(base + order * 2000L)
-          }
-          val base = System.currentTimeMillis() - 3600L * 1000
-          slice("t1", main.filter(col("ts_us") < b1), 0, base)
-          slice("t2", main.filter(col("ts_us") >= b1 && col("ts_us") < b2), 1, base)
-          slice("t3", main.filter(col("ts_us") >= b2), 2, base)
-          slice("late", src.filter(held), 3, base)
-        }
-        val stream = s.readStream.schema(eventsJsonSchema)
-          .option("maxFilesPerTrigger", 1).parquet(path)
+        val stream = lateFeed.stream(s, dir, eventsSchema, "maxFilesPerTrigger" -> "1")
           .withColumn("ts", timestamp_micros(col("ts_us")))
           .withWatermark("ts", "10 minutes")
-        val agg = stream
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(
-          drainAppend(s, agg, "q_stream_late_drop_sink"))
+        drain(rollup(stream.groupBy(window(col("ts"), "1 hour"), col("event_type"))),
+          "append", "q_stream_late_drop_sink")
           .select(unix_micros(col("window.start")).as("bucket_us"),
             col("event_type"), col("n"), col("sum_cents"))
           .orderBy(col("bucket_us"), col("event_type"))
@@ -650,26 +707,15 @@ object Streams {
     // by StreamsSpec on a controlled multi-batch feed.
     QueryDef(
       "q_stream_dedup_wm",
-      (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val doubled = src.unionAll(src)
-        val stream = stageAndStreamParquet(s, doubled, "q_stream_dedup",
-          eventsJsonSchema, dir)
-        val agg = stream
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("event_id")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(
-          drainComplete(s, agg, "q_stream_dedup_wm_sink"))
-          .orderBy(col("event_type"))
-      },
-      Some(
-        """SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+      (s, dir) =>
+        drain(rollup(doubledFeed.stream(s, dir, eventsSchema)
+            .withColumn("ts", timestamp_micros(col("ts_us")))
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark("event_id")
+            .groupBy(col("event_type"))),
+          "complete", "q_stream_dedup_wm_sink")
+          .orderBy(col("event_type")),
+      Some(PerTypeOracle)
     ),
 
     // B36-41 — watermarked stream-stream interval join: purchases joined
@@ -681,40 +727,9 @@ object Streams {
     // retained only within the watermark + interval bound.
     QueryDef(
       "q_stream_join",
-      (s, dir) => {
-        val path = graft.Staging.cached("q_stream_join", dir, rev = 1) { tgt =>
-          Tables.events(s, dir)
-            // only the two joined types can contribute — staging the rest
-            // would just be dead IO through both stream reads
-            .filter(col("event_type").isin("purchase", "click"))
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              unix_micros(col("ts")).as("ts_us"))
-            // one event-time-sorted file: arrival order is monotonic in
-            // event time, the same shape a log-structured landing zone
-            // delivers — so a REALISTIC watermark is exact, not just a
-            // drain-everything-before-anything-is-late accident
-            .repartition(1).sortWithinPartitions(col("ts_us"))
-            .write.mode("overwrite").json(tgt)
-        }
-        // 4 h = join interval (2 h) + 2 h disorder slack — the watermark a
-        // production copy of this query would declare. With monotonic
-        // arrival nothing is ever late, and stream-stream join state is
-        // bounded at watermark + interval (~6 h of rows per user), which
-        // survives 100 TB/day; real late-drop semantics are pinned by
-        // StreamsSpec with controlled multi-batch input
-        def side(tpe: String, user: String, id: String, ts: String) =
-          s.readStream.schema(eventsUserJsonSchema).json(path)
-            .filter(col("event_type") === tpe)
-            .select(col("user_id").as(user), col("event_id").as(id),
-              timestamp_micros(col("ts_us")).as(ts))
-            .withWatermark(ts, "4 hours")
-        val joined = side("purchase", "p_user", "purchase_id", "p_ts")
-          .join(side("click", "c_user", "click_id", "c_ts"),
-            expr("p_user = c_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 2 HOURS"))
-          .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
-        withStatePartitions(s, 8)(drainAppend(s, joined, "q_stream_join_sink"))
-          .orderBy(col("purchase_id"), col("click_id"))
-      },
+      (s, dir) =>
+        drain(purchaseClicks(s, dir, "inner"), "append", "q_stream_join_sink")
+          .orderBy(col("purchase_id"), col("click_id")),
       Some(
         """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
           |FROM events p JOIN events c
@@ -738,31 +753,9 @@ object Streams {
     // cleared the final watermark (min of both sides' max ts − 4 h).
     QueryDef(
       "q_stream_join_outer",
-      (s, dir) => {
-        val path = graft.Staging.cached("q_stream_join", dir, rev = 1) { tgt =>
-          Tables.events(s, dir)
-            .filter(col("event_type").isin("purchase", "click"))
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              unix_micros(col("ts")).as("ts_us"))
-            .repartition(1).sortWithinPartitions(col("ts_us"))
-            .write.mode("overwrite").json(tgt)
-        }
-        def side(tpe: String, user: String, id: String, ts: String) =
-          s.readStream.schema(eventsUserJsonSchema).json(path)
-            .filter(col("event_type") === tpe)
-            .select(col("user_id").as(user), col("event_id").as(id),
-              timestamp_micros(col("ts_us")).as(ts))
-            .withWatermark(ts, "4 hours")
-        val joined = side("purchase", "p_user", "purchase_id", "p_ts")
-          .join(side("click", "c_user", "click_id", "c_ts"),
-            expr("p_user = c_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 2 HOURS"),
-            "left_outer")
-          .select(col("purchase_id"), col("click_id"),
-            col("p_user").as("user_id"))
-        withStatePartitions(s, 8)(
-          drainAppend(s, joined, "q_stream_join_outer_sink"))
-          .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
-      },
+      (s, dir) =>
+        drain(purchaseClicks(s, dir, "left_outer"), "append", "q_stream_join_outer_sink")
+          .orderBy(col("purchase_id"), col("click_id").asc_nulls_first),
       Some(
         """WITH p AS (
           |  SELECT event_id, user_id, ts FROM events
@@ -808,19 +801,12 @@ object Streams {
         val n = sinkSeq.incrementAndGet()
         // input drops are a pure function of the source dir — staged
         // once and reused; the sink + checkpoint are the operator under
-        // test and stay unique per run
-        val in = graft.Staging.cached("q_stream_cron_in", dir, rev = 1) { tgt =>
-            Tables.events(s, dir)
-              .select(col("event_id"), col("event_type"), col("value"),
-                unix_micros(col("ts")).as("ts_us"))
-              .repartition(5) // five staged "minutely" producer drops
-              .write.mode("overwrite").json(tgt)
-        }
-        val out = graft.Staging.dir(s"q_stream_cron_out_$n")
-        val ckpt = graft.Staging.dir(s"q_stream_cron_ckpt_$n")
-        val q = s.readStream.schema(eventsJsonSchema)
-          .option("maxFilesPerTrigger", 1) // one drop per tick, like the cron
-          .json(in)
+        // test and stay unique per run. The one stream query outside
+        // the harness: its ProcessingTime cadence is what it tests
+        val out = Staging.dir(s"q_stream_cron_out_$n")
+        val ckpt = Staging.dir(s"q_stream_cron_ckpt_$n")
+        val q = cronDrops.stream(s, dir, eventsSchema,
+            "maxFilesPerTrigger" -> "1") // one drop per tick, like the cron
           .writeStream
           .format("json").option("path", out)
           .option("checkpointLocation", ckpt)
@@ -831,14 +817,10 @@ object Streams {
         q.stop()
         // schema is in hand — skip the inference pass; event_type (the
         // partition column) resolves from directory names against it
-        s.read.schema(eventsJsonSchema).json(out)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
+        rollup(s.read.schema(eventsSchema).json(out).groupBy(col("event_type")))
           .orderBy(col("event_type"))
       },
-      Some(
-        """SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+      Some(PerTypeOracle)
     ),
 
     // The reference's trigger is at-least-once: a redelivered S3 event
@@ -854,9 +836,7 @@ object Streams {
     QueryDef(
       "q_replay_upsert",
       (s, dir) => {
-        val base = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), unix_micros(col("ts")).as("ts_us"))
+        val base = eventRows(s, dir, userEventCols)
         val redelivered = base.filter(pmod(col("event_id"), lit(7)) === 0)
         val updated = base.filter(pmod(col("event_id"), lit(11)) === 0)
           .withColumn("value", col("value") + 10)
@@ -907,11 +887,9 @@ object Streams {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_state",
-          StructType.fromDDL("event_id LONG, user_id LONG, ts_us LONG"), dir)
-        val updates = stream.as[UserEvent]
+        val updates = eventsFeed.stream(s, dir,
+            StructType.fromDDL("event_id LONG, user_id LONG, ts_us LONG"))
+          .as[UserEvent]
           .groupByKey(_.user_id)
           .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
             (uid: Long, events: Iterator[UserEvent], st: GroupState[(Long, Long)]) =>
@@ -922,8 +900,7 @@ object Streams {
               (uid, n, last)
           }
           .toDF("user_id", "n", "last_ts_us")
-        withStatePartitions(s, 8)(
-          drainUpdate(s, updates, "q_stream_state_sink"))
+        drain(updates, "update", "q_stream_state_sink")
           .groupBy(col("user_id"))
           .agg(max(struct(col("n"), col("last_ts_us"))).as("m"))
           .select(col("user_id"), col("m.n").as("n"),
@@ -948,20 +925,10 @@ object Streams {
     // StreamsSpec pins the session-window state operator in the plan.
     QueryDef(
       "q_stream_session",
-      (s, dir) => {
-        val stream = s.readStream.schema(sessionFeedSchema)
-          .parquet(sessionFeedPath(s, dir))
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-        val agg = stream
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(
-          drainComplete(s, agg, "q_stream_session_sink"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("session_start_us"),
-            col("n"), col("sum_cents"))
-          .orderBy(col("user_id"), col("session_start_us"))
-      },
+      (s, dir) => sessionRollup(
+        sessionFeed.stream(s, dir, sessionFeedSchema)
+          .withColumn("ts", timestamp_micros(col("ts_us"))),
+        "complete", "q_stream_session_sink"),
       Some(
         """WITH marked AS (
           |  SELECT user_id, ts, value,
@@ -986,7 +953,7 @@ object Streams {
     // state is evicted (complete mode above retains every session
     // forever — fine for a bounded replay, an OOM on an unbounded
     // 100 TB/day stream). Determinism: the staged feed arrives
-    // time-ordered (see [[sessionFeedPath]] — the landing-zone contract
+    // time-ordered (see [[sessionFeed]] — the landing-zone contract
     // a watermarked consumer depends on), so no event is ever late, and
     // with Trigger.AvailableNow the engine keeps running batches until
     // no stateful operator needs another pass — the final watermark is
@@ -999,25 +966,14 @@ object Streams {
     // (emit-once, state rows removed) on a controlled multi-batch input.
     QueryDef(
       "q_stream_session_evict",
-      (s, dir) => {
-        // same staged files as q_stream_session (same name ⇒ same key);
-        // one time-sliced file per micro-batch so the watermark
-        // genuinely advances across batches instead of in one jump
-        val stream = s.readStream.schema(sessionFeedSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(sessionFeedPath(s, dir))
+      // same staged files as q_stream_session; one time-sliced file
+      // per micro-batch so the watermark genuinely advances across
+      // batches instead of in one jump
+      (s, dir) => sessionRollup(
+        sessionFeed.stream(s, dir, sessionFeedSchema, "maxFilesPerTrigger" -> "1")
           .withColumn("ts", timestamp_micros(col("ts_us")))
-          .withWatermark("ts", "10 minutes")
-        val agg = stream
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(
-          drainAppend(s, agg, "q_stream_session_evict_sink"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("session_start_us"),
-            col("n"), col("sum_cents"))
-          .orderBy(col("user_id"), col("session_start_us"))
-      },
+          .withWatermark("ts", "10 minutes"),
+        "append", "q_stream_session_evict_sink"),
       Some(
         """WITH marked AS (
           |  SELECT user_id, ts, value,
@@ -1062,9 +1018,8 @@ object Streams {
         // (upsert kernel: [[jdbcUpsertPartition]] — deterministic
         // latest-state per key, so foreachBatch replays converge;
         // StreamsSpec proves re-applying a batch is a no-op)
-        System.setProperty("derby.system.home", graft.Staging.root)
-        val uniq = sinkSeq.incrementAndGet()
-        val db = graft.Staging.dir(s"stream_jdbc_db_$uniq")
+        System.setProperty("derby.system.home", Staging.root)
+        val db = Staging.dir(s"stream_jdbc_db_${sinkSeq.incrementAndGet()}")
         val url = s"jdbc:derby:$db;create=true"
         val c0 = java.sql.DriverManager.getConnection(url)
         try {
@@ -1075,32 +1030,9 @@ object Streams {
               |  n BIGINT, sum_cents BIGINT)""".stripMargin)
           finally st.close()
         } finally c0.close()
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_jdbc",
-          eventsJsonSchema, dir)
-        val agg = stream.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 4) {
-          val q = agg.writeStream
-            .outputMode("update")
-            // durable external sink ⇒ durable checkpoint (tmpfs is for
-            // memory-sink drains only)
-            .option("checkpointLocation",
-              graft.Staging.dir(s"stream_jdbc_ck_$uniq"))
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               _: Long) =>
-                batch.foreachPartition {
-                  (rows: Iterator[org.apache.spark.sql.Row]) =>
-                    jdbcUpsertPartition(url, rows)
-                }
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+        eachBatch(rollup(eventsFeed.stream(s, dir, eventsSchema).groupBy(col("event_type"))),
+          "q_stream_jdbc", "update", statePartitions(4)) { (batch, _) =>
+          batch.foreachPartition((rows: Iterator[Row]) => jdbcUpsertPartition(url, rows))
         }
         val props = new java.util.Properties()
         props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -1109,9 +1041,7 @@ object Streams {
             col("sum_cents"))
           .orderBy(col("event_type"))
       },
-      Some(
-        """SELECT event_type, count(*) AS n, CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+      Some(PerTypeOracle)
     ),
 
     // B36-41 — stream-STATIC enrichment join: the landed event stream
@@ -1129,20 +1059,12 @@ object Streams {
     QueryDef(
       "q_stream_enrich",
       (s, dir) => {
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), unix_micros(col("ts")).as("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_enrich",
-          eventsEnrichSchema, dir)
         val dim = Tables.customer(s, dir)
           .select(col("c_custkey"), col("c_mktsegment"))
-        val enriched = stream
+        val enriched = eventsFeed.stream(s, dir, eventsFeedSchema)
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        withStatePartitions(s, 8)(
-          drainComplete(s, enriched, "q_stream_enrich_sink"))
+        drain(rollup(enriched, n = "n_events"), "complete", "q_stream_enrich_sink")
           .orderBy(col("c_mktsegment"))
       },
       Some(
@@ -1185,8 +1107,7 @@ object Streams {
     QueryDef(
       "q_stream_txn_sink",
       (s, dir) => {
-        val uniq = sinkSeq.incrementAndGet()
-        val root = graft.Staging.dir(s"stream_txn_$uniq")
+        val root = Staging.dir(s"stream_txn_${sinkSeq.incrementAndGet()}")
         val log = java.nio.file.Paths.get(root, "_log")
         java.nio.file.Files.createDirectories(log)
         lastTxnRoot.set(root)
@@ -1197,82 +1118,61 @@ object Streams {
           TxnLog.commit(log, TxnLog.Manifest(v, writer, adds, removes = None,
             range = Some(TxnLog.EventTime(lo, hi)), batch = Some(batch)))
         def nextVersion(): Long = TxnLog.read(log).size.toLong
-        // exactly 3 time-ranged landing files → exactly 3 micro-batches
-        // under maxFilesPerTrigger=1 (the deterministic batch spine the
-        // staged conflict story needs)
-        val src = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            unix_micros(col("ts")).as("ts_us"))
-          .repartitionByRange(3, col("ts_us"))
-        val stream = stageAndStreamParquet(s, src, "q_stream_txn",
-          eventsJsonSchema, dir,
-          options = Map("maxFilesPerTrigger" -> "1"))
-        withStatePartitions(s, 4) {
-          val q = stream.writeStream
-            .option("checkpointLocation",
-              graft.Staging.dir(s"stream_txn_ck_$uniq"))
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               batchId: Long) =>
-                // idempotent replay guard (txnAppId pattern): committed
-                // stream batches are visible in the log
-                val committed = TxnLog.read(log)
-                val done = committed.exists(m =>
-                  m.writer == "stream" && m.batch.contains(batchId))
-                if (!done) {
-                  // the side writer carries its OWN idempotence key: a
-                  // batch-1 redelivery after the side commit landed but
-                  // before the stream's rebased commit did (driver
-                  // crash between the two commits) re-enters with
-                  // done=false, and without this guard would commit
-                  // "side" at a second version — the log would then
-                  // resolve the side file twice
-                  val sideDone = committed.exists(_.writer == "batch_side")
-                  if (batchId == 1L && !sideDone) {
-                    // deterministic CONCURRENT batch writer: wins the
-                    // next version while the stream holds its snapshot
-                    val side = s.range(1, 6)
-                      .select((col("id") + 1000000L).as("event_id"),
-                        lit("side_load").as("event_type"),
-                        (col("id") * 10.0).as("value"),
-                        (lit(Long.MaxValue - 10) + col("id")).as("ts_us"))
-                    side.coalesce(1).write.mode("overwrite")
-                      .parquet(s"$root/side")
-                    commit(nextVersion(), "batch_side", -1L,
-                      Seq("side"), Long.MaxValue - 9, Long.MaxValue)
-                    // a CRASHED writer's orphan: data landed, its
-                    // commit never did — invisible to readers
-                    side.withColumn("event_type", lit("orphan"))
-                      .coalesce(1).write.mode("overwrite")
-                      .parquet(s"$root/orphan")
-                  }
-                  // the stream writer commits AT ITS SNAPSHOT version:
-                  // for batch 1 that version was just taken by the
-                  // side writer, forcing the real conflict + rebase
-                  val snapshotV =
-                    nextVersion() - (if (batchId == 1L) 1 else 0)
-                  val bounds = batch.agg(
-                    min(col("ts_us")), max(col("ts_us"))).head()
-                  val (lo, hi) =
-                    if (bounds.isNullAt(0)) (0L, 0L)
-                    else (bounds.getLong(0), bounds.getLong(1) + 1)
-                  batch.write.mode("overwrite").parquet(s"$root/b$batchId")
-                  commit(snapshotV, "stream", batchId,
-                    Seq(s"b$batchId"), lo, hi)
-                }
+        val stream = txnFeed.stream(s, dir, eventsSchema, "maxFilesPerTrigger" -> "1")
+        eachBatch(stream, "q_stream_txn_sink", "append", statePartitions(4)) { (batch, batchId) =>
+          // idempotent replay guard (txnAppId pattern): committed
+          // stream batches are visible in the log
+          val committed = TxnLog.read(log)
+          val done = committed.exists(m =>
+            m.writer == "stream" && m.batch.contains(batchId))
+          if (!done) {
+            // the side writer carries its OWN idempotence key: a
+            // batch-1 redelivery after the side commit landed but
+            // before the stream's rebased commit did (driver
+            // crash between the two commits) re-enters with
+            // done=false, and without this guard would commit
+            // "side" at a second version — the log would then
+            // resolve the side file twice
+            val sideDone = committed.exists(_.writer == "batch_side")
+            if (batchId == 1L && !sideDone) {
+              // deterministic CONCURRENT batch writer: wins the
+              // next version while the stream holds its snapshot
+              val side = s.range(1, 6)
+                .select((col("id") + 1000000L).as("event_id"),
+                  lit("side_load").as("event_type"),
+                  (col("id") * 10.0).as("value"),
+                  (lit(Long.MaxValue - 10) + col("id")).as("ts_us"))
+              side.coalesce(1).write.mode("overwrite")
+                .parquet(s"$root/side")
+              commit(nextVersion(), "batch_side", -1L,
+                Seq("side"), Long.MaxValue - 9, Long.MaxValue)
+              // a CRASHED writer's orphan: data landed, its
+              // commit never did — invisible to readers
+              side.withColumn("event_type", lit("orphan"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$root/orphan")
             }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            // the stream writer commits AT ITS SNAPSHOT version:
+            // for batch 1 that version was just taken by the
+            // side writer, forcing the real conflict + rebase
+            val snapshotV =
+              nextVersion() - (if (batchId == 1L) 1 else 0)
+            val bounds = batch.agg(
+              min(col("ts_us")), max(col("ts_us"))).head()
+            val (lo, hi) =
+              if (bounds.isNullAt(0)) (0L, 0L)
+              else (bounds.getLong(0), bounds.getLong(1) + 1)
+            batch.write.mode("overwrite").parquet(s"$root/b$batchId")
+            commit(snapshotV, "stream", batchId,
+              Seq(s"b$batchId"), lo, hi)
+          }
         }
         // snapshot read at head: live files resolved from the LOG only;
         // every data file holds the stream's columns, so the read takes
         // that schema instead of inferring it with a job
-        s.read.schema(eventsJsonSchema)
-          .parquet(TxnLog.liveAt(TxnLog.read(log)).map(a => s"$root/$a"): _*)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(round(col("value") * 100).cast(LongType)).as("cents"))
+        rollup(s.read.schema(eventsSchema)
+            .parquet(TxnLog.liveAt(TxnLog.read(log)).map(a => s"$root/$a"): _*)
+            .groupBy(col("event_type")), cents = "cents")
           .orderBy(col("event_type"))
       },
       Some(
@@ -1309,7 +1209,6 @@ object Streams {
       (s, dir) => {
         import scala.jdk.CollectionConverters._
         val root = Maintenance.txnRoot(s, dir)
-        val uniq = sinkSeq.incrementAndGet()
         // (high watermark, live set) + parked out-of-order commits
         val state = new java.util.concurrent.atomic.AtomicReference(
           (-1L, Seq.empty[String]))
@@ -1317,35 +1216,27 @@ object Streams {
           new java.util.concurrent.ConcurrentHashMap[Long, TxnLog.Manifest]()
         val results = new java.util.concurrent.ConcurrentLinkedQueue[
           (Long, String, Long, Long)]()
-        val q = s.readStream.schema(TxnLog.schema)
+        val manifests = s.readStream.schema(TxnLog.schema)
           .option("maxFilesPerTrigger", "1")
           .json(s"$root/_log")
-          .writeStream
-          .option("checkpointLocation",
-            graft.Staging.dir(s"cdc_apply_ck_$uniq"))
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) =>
-              // manifest rows are metadata-sized; park then drain
-              batch.collect().map(TxnLog.fromRow)
-                .foreach(m => pending.put(m.version, m))
-              var advanced = true
-              while (advanced) {
-                val (hw, live) = state.get()
-                Option(pending.remove(hw + 1)) match {
-                  case Some(m) =>
-                    val newLive = TxnLog.liveAt(Seq(m), base = live)
-                    state.set((hw + 1, newLive))
-                    val agg = Maintenance.snapshot(s, root, newLive).head()
-                    results.add((hw + 1, m.writer,
-                      agg.getLong(0), agg.getLong(1)))
-                  case None => advanced = false
-                }
-              }
+        eachBatch(manifests, "q_stream_cdc_apply", "append") { (batch, _) =>
+          // manifest rows are metadata-sized; park then drain
+          batch.collect().map(TxnLog.fromRow)
+            .foreach(m => pending.put(m.version, m))
+          var advanced = true
+          while (advanced) {
+            val (hw, live) = state.get()
+            Option(pending.remove(hw + 1)) match {
+              case Some(m) =>
+                val newLive = TxnLog.liveAt(Seq(m), base = live)
+                state.set((hw + 1, newLive))
+                val agg = Maintenance.snapshot(s, root, newLive).head()
+                results.add((hw + 1, m.writer,
+                  agg.getLong(0), agg.getLong(1)))
+              case None => advanced = false
+            }
           }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }
         import s.implicits._
         results.iterator().asScala.toSeq
           .toDF("version", "writer", "n_rows", "cents")

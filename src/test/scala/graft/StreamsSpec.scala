@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -35,7 +37,7 @@ class StreamsSpec extends SparkSpec {
 
     val agg = spark.readStream.schema(schema).json(dir)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val streamed = streaming.Streams.drainComplete(spark, agg, "equiv_sink")
+    val streamed = streaming.Streams.drain(agg, "complete", "equiv_sink")
       .orderBy(col("event_type")).collect().toSeq
     assert(streamed == batch)
   }
@@ -192,7 +194,7 @@ class StreamsSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"))
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("start_us"), col("n"))
-    val q = streaming.Streams.withStatePartitions(spark, 2) {
+    val q = Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> "2") {
       agg.writeStream.format("memory").queryName("evict_sink")
         .outputMode("append").start()
     }
@@ -240,6 +242,25 @@ class StreamsSpec extends SparkSpec {
       assert(finalTotal == 1,
         s"expected 1 session left in state, got $finalTotal")
     } finally q.stop()
+  }
+
+  test("a drained stream deletes its checkpoint once it has ended") {
+    // the harness holds a checkpoint only while its query runs: two
+    // calls each of a default-provider and a RocksDB drain leave nothing
+    // new under the tmpfs root, and a rerun returns the same rows
+    val root = Paths.get(Staging.fastRoot)
+    def entries(): Set[String] = {
+      val l = Files.list(root)
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+    val before = entries()
+    Seq("q_stream_session", "q_stream_rocksdb").foreach { name =>
+      val first = q(name).collect().toSeq
+      assert(first.nonEmpty, name)
+      assert(q(name).collect().toSeq == first, s"$name: a rerun changed its rows")
+    }
+    val left = entries() -- before
+    assert(left.isEmpty, s"checkpoints left under ${Staging.fastRoot}: $left")
   }
 
   test("A18: rate source drives the producer analog (cron -> records)") {

@@ -29,7 +29,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `WordNgrams` and a tokenizer is `TextFns.tokens`, except the few
   * named in `handWindows`. A driver-side loop under `operators/` or
   * `streaming/` that cuts lineage per round is a [[Staging.iterate]],
-  * never a hand-written `for` or `while`. */
+  * never a hand-written `for` or `while`. A stream query starts in one
+  * harness (`Streams.run`), q_stream_cron excepted, and each staged
+  * artifact or landing zone is named at one call site. */
 class StructureSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -243,6 +245,41 @@ class StructureSpec extends AnyFunSuite {
       Map("Graph.scala" -> (1, "q_graph_pagerank's per-round Staging.cut " +
         "runs no job of its own; a pin per round would add five")),
       "loops that cut lineage per round")
+  }
+
+  test("stream queries start only in the Streams harness, q_stream_cron excepted") {
+    // the harness is the body of `Streams.run`; a start or writeStream
+    // anywhere else under operators/ or streaming/ is a hand-written run
+    val harness = """private def run\(df: DataFrame""".r
+    assertAllowed(
+      located(Seq("graft/operators", "graft/streaming")) { c =>
+        val (from, to) = harness.findFirstMatchIn(c).fold((0, -1)) { m =>
+          val open = c.indexOf("= {", m.start) + 2
+          (open, closing(c, open))
+        }
+        """\.writeStream\b|\.start\(\)""".r.findAllMatchIn(c).map(_.start)
+          .filterNot(at => at > from && at < to)
+      },
+      Map("Streams.scala" -> (2, "q_stream_cron's writeStream and start(): " +
+        "its ProcessingTime cadence, processAllAvailable and stop are the " +
+        "operator under test")),
+      "stream starts outside the harness")
+  }
+
+  test("each staged artifact and landing zone name is written at one call site") {
+    // the name literal passed to Staging.cached or to a landing-zone
+    // builder (`landing`, `new Landing`, `stageAndStream(Parquet)`); a
+    // second site is a second copy of one artifact
+    val named = ("""(?:Staging\.cached|\bstageAndStream(?:Parquet)?|\blanding|""" +
+      """new Landing)\([^")]*?"([^"]+)"""").r
+    val sites = code(Seq("graft")).flatMap { case (p, c) =>
+      named.findAllMatchIn(c).map(m =>
+        m.group(1) -> s"${main.relativize(p)}:${c.take(m.start).count(_ == '\n') + 1}")
+    }.groupBy(_._1).filter(_._2.size > 1)
+    if (sites.nonEmpty)
+      fail(sites.toSeq.sortBy(_._1).map { case (n, at) =>
+        s"$n x${at.size}" + at.map(_._2).mkString("\n  ", "\n  ", "")
+      }.mkString("\n", "\n", ""))
   }
 
   test("operators read nothing from the environment") {
